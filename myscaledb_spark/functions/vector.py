@@ -54,8 +54,26 @@ def _as_double_array(col: Column | str) -> Column:
     return col.cast("array<double>")
 
 
+def _double_sql(x: float) -> str:
+    """A SQL double literal that parses back to exactly ``x``: ``repr`` is
+    the shortest round-tripping decimal; NaN and ±inf have no literal form."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return repr(x) + "D"
+
+
+def double_array_sql(values: Sequence[float]) -> str:
+    """SQL text of an ``array<double>`` literal holding ``values``."""
+    return "array(" + ", ".join(_double_sql(x) for x in values) + ")"
+
+
 def _query_literal(qvec: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in qvec])
+    # one parsed expression, one JVM call: F.array(*F.lit(...)) costs two
+    # py4j round trips per component (~33 ms for a 64-d query)
+    return F.expr(double_array_sql(qvec))
 
 
 def l2_squared_distance(col: Column | str, qvec: Sequence[float]) -> Column:

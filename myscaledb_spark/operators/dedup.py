@@ -473,6 +473,8 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     from pyspark import StorageLevel
     from pyspark.sql import Observation
 
+    from myscaledb_spark.session import observed_metrics
+
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     bidir = edges.unionAll(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -499,7 +501,8 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             obs = Observation(f"dedup_clusters_round_{i}")
             labels = labels.observe(obs, F.sum("label").alias("s"))
             labels = labels.localCheckpoint()  # cut the iterative lineage
-            s = obs.get["s"]
+            got = observed_metrics(obs)
+            s = got["s"] if got is not None else labels.agg(F.sum("label")).first()[0]
             if s == prev_sum:
                 break
             prev_sum = s

@@ -33,7 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from myscaledb_spark.functions.vector import distance
+from myscaledb_spark.functions.vector import distance, double_array_sql
 from myscaledb_spark.operators.topk import vector_topk
 
 
@@ -328,34 +328,43 @@ def append_to_ivf_index(
     inserted rows are assigned to the EXISTING centroids and appended to the
     inverted lists, so search serves old+new data immediately; a periodic
     full rebuild (build_ivf_index) re-trains centroids like a part merge
-    rebuild. Assignment is a pure JVM expression over the broadcast
-    centroids — one pass, no Python."""
+    rebuild.  Cost is O(batch), linear in the number of lists.
+
+    Assignment (``_with_list_id``) is one JVM pass over the batch, no
+    Python."""
     reg = IndexRegistry(artifact_dir)
     rec = reg.get(name)
     if rec is None or rec.get("status") != "Built":
         raise RuntimeError(f"index {name!r} not built")
     centroids = json.load(open(rec["centroids"]))
-
-    a = F.col(vec_col).cast("array<double>")
-    best_d, best_i = None, None
-    for i, c in enumerate(centroids):
-        cl = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(a, cl, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        if best_d is None:
-            best_d, best_i = d, F.lit(i)
-        else:
-            cond = d < best_d
-            best_i = F.when(cond, F.lit(i)).otherwise(best_i)
-            best_d = F.when(cond, d).otherwise(best_d)
-
-    assigned = new_df.withColumn("list_id", best_i.cast("int"))
+    assigned = _with_list_id(new_df, vec_col, centroids)
     assigned.write.mode("append").partitionBy("list_id").parquet(rec["inverted"])
     reg.set_status(name, "Built")
     return reg.get(name)
+
+
+def _with_list_id(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
+    """``df`` plus ``list_id``, the index of the nearest centroid by squared
+    L2.  The centroids are one ``array<array<double>>`` literal, one
+    ``transform`` computes the distance to each, and
+    ``array_position(d, array_min(d)) - 1`` picks the list; the distances
+    are materialised once (two-level select), so the argmin does not
+    recompute them.  The first minimum wins ties; NaN counts as the largest
+    distance (Spark's double ordering); a NULL vector goes to list 0."""
+    a = F.col(vec_col).cast("array<double>")
+    cents = F.expr("array(" + ", ".join(double_array_sql(c) for c in centroids) + ")")
+    d = F.transform(cents, lambda c: F.aggregate(
+        F.zip_with(a, c, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    ))
+    return (
+        df.withColumn("_ivf_d", d)
+        .withColumn("list_id", F.coalesce(
+            F.array_position("_ivf_d", F.array_min("_ivf_d")) - 1, F.lit(0)
+        ).cast("int"))
+        .drop("_ivf_d")
+    )
 
 
 def _nearest_lists(centroids: list[list[float]], qvec: Sequence[float], nprobe: int, metric: str) -> list[int]:
