@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from myscaledb_spark.session import estimated_bytes
+
 TABLES = (
     "region",
     "nation",
@@ -141,8 +143,8 @@ def fan_out(df: DataFrame, spark: SparkSession) -> DataFrame:
     "tiny scan vs big scan" (r10).  Falls back to the exact probe when
     stats are unavailable."""
     target = spark.sparkContext.defaultParallelism
+    est = estimated_bytes(df)
     try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         mpb = _parse_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
         )

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from myscaledb_spark.errors import InvalidSearchQuery, MAX_SEARCH_RESULT_WINDOW
+from myscaledb_spark.session import estimated_bytes
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -197,10 +198,10 @@ def _resident_toked(df: DataFrame, text_col: str, tokenizer: str, spec):
     builds its own entry; capped FIFO so a session cycling many corpora
     doesn't pin them all."""
     spark = df.sparkSession
+    est = estimated_bytes(df)
+    if est <= 0 or est > _TOKED_MEMO_MAX_BYTES:
+        return None
     try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        if est <= 0 or est > _TOKED_MEMO_MAX_BYTES:
-            return None
         key = (
             int(df._jdf.queryExecution().analyzed().semanticHash()),
             text_col, tokenizer, repr(spec),

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from myscaledb_spark import session
 from myscaledb_spark.operators.dedup import md5_48, shingle_sets
 
 
@@ -41,19 +42,16 @@ def pack_sequences(
     totals collected (num_partitions rows — the only driver traffic),
     offsets broadcast back, intra-partition window cumsum. No global-order
     window, no full shuffle to one partition — except below the
-    `spark.myscaledb.pack.smallInputBytes` cost gate (default 256 MB),
-    where a single-partition window IS the cheaper plan: one action, one
-    linear task, instead of the prefix sum's 8-10 fixed scheduling jobs.
+    ``session.SMALL_INPUT_BYTES`` estimate gate (256 MB), where a
+    single-partition window IS the cheaper plan: one action, one linear
+    task, instead of the prefix sum's 8-10 fixed scheduling jobs.
     """
     cnt = F.col(count_col) if isinstance(count_col, str) else count_col
     narrow = df.select(F.col(id_col), *[F.col(c) for c in order_cols], cnt.alias("_n"))
     nshuf = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = 0
+    est = session.estimated_bytes(df)
     # Small-input path: below this size the distributed prefix sum's fixed
     # job count (checkpoint + bounds + bucket totals + packing ≈ 8-10 AQE
     # jobs) costs more wall-clock than just running the textbook global
@@ -62,14 +60,8 @@ def pack_sequences(
     # same (order_cols, id) ROWS-frame order, nulls first / NaN last, the
     # same cum-before arithmetic (the oracle pins it).  Scale-adaptive per
     # the optimization guide §2: the gate reads optimizer size stats, so any
-    # real corpus takes the distributed path; the threshold is a conf knob
-    # (bytes) so clusters can tune the crossover, 0 disables the small path.
-    small = int(
-        df.sparkSession.conf.get(
-            "spark.myscaledb.pack.smallInputBytes", str(256 << 20)
-        )
-    )
-    if 0 < est <= small:
+    # real corpus takes the distributed path.
+    if 0 < est <= session.SMALL_INPUT_BYTES:
         w = (
             Window.orderBy(*order_cols, id_col)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -34,6 +34,7 @@ from pyspark.sql import Window
 from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.functions.text import text_search
 from myscaledb_spark.functions.vector import METRIC_ASCENDING
+from myscaledb_spark.session import collect_small, values_relation
 
 DEFAULT_FUSION_K = 60  # src/Core/Settings.h:920
 DEFAULT_FUSION_WEIGHT = 0.5  # src/Core/Settings.h:919
@@ -324,48 +325,13 @@ def _fuse_local(
                 nrm = 1.0 if mx == mn else (s - mn) / (mx - mn)
                 scores[i] = scores.get(i, 0.0) + nrm * float(fusion_weight)
     top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    local = _values_df(spark, id_type, top, id_col, score_name)
-    if local is not None:
-        return local
+    top = [(i, float(s)) for i, s in top]
     schema = StructType([
         StructField(id_col, id_type, True),
         StructField(score_name, DoubleType(), True),
     ])
-    return spark.createDataFrame([(i, float(s)) for i, s in top], schema)
-
-
-def _values_df(spark, id_type, top: list, id_col: str, score_name: str):
-    """Materialize the ≤k-row fused result as a SQL VALUES LocalRelation —
-    collect() on a LocalTableScan runs NO Spark job, vs createDataFrame's
-    parallelize path (1-task job + pickle round-trip ≈ 0.2 s per query).
-    Returns None for id types the literal syntax doesn't cover (caller
-    falls back to createDataFrame)."""
-    import math
-
-    from pyspark.sql.types import IntegerType, LongType, ShortType, StringType
-
-    tname = id_type.simpleString().upper()
-    if isinstance(id_type, (IntegerType, LongType, ShortType)):
-        def fmt(v):
-            return f"CAST({int(v)} AS {tname})"
-    elif isinstance(id_type, StringType):
-        def fmt(v):
-            s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{s}'"
-    else:
-        return None
-    if any(not math.isfinite(float(s)) for _, s in top):
-        return None
-    cols = f"(`{id_col}`, `{score_name}`)"
-    if not top:
-        return spark.sql(
-            f"SELECT * FROM (VALUES (CAST(NULL AS {tname}), CAST(NULL AS DOUBLE)))"
-            f" AS t{cols} WHERE FALSE"
-        )
-    rows = ", ".join(
-        f"({fmt(i)}, CAST({float(s)!r} AS DOUBLE))" for i, s in top
-    )
-    return spark.sql(f"SELECT * FROM (VALUES {rows}) AS t{cols}")
+    local = values_relation(spark, schema, top)
+    return spark.createDataFrame(top, schema) if local is None else local
 
 
 def fuse_candidates(
@@ -530,42 +496,16 @@ def hybrid_search_indexed(
             F.lit(1).alias("_leg"),
         )
     )
-    rows = _collect_small(spark, tagged)
+    # AQE off and one shuffle partition below the estimate gate: AQE's
+    # per-stage re-planning jobs cost more than a ≤2k′-row fuse's whole
+    # data path; at 100 TB a selective-term postings subtree exceeds the
+    # gate and the adaptive plan runs unchanged
+    rows = collect_small(tagged, **{"spark.sql.shuffle.partitions": "1"})
+    if rows is None:
+        rows = tagged.collect()
     vec_rows = [(r[0], r[1]) for r in rows if r[2] == 0]
     txt_rows = [(r[0], r[1]) for r in rows if r[2] == 1]
     return _fuse_local(
         spark, id_type, vec_rows, txt_rows, k,
         id_col, ft, metric, fusion_weight, fusion_k, score_name,
     )
-
-
-def _collect_small(spark, df: DataFrame) -> list:
-    """Collect a candidate-list frame, executing under a scoped AQE-off /
-    single-shuffle-partition SETTINGS block when the optimizer estimates
-    the subtree small (guide §2: AQE's per-stage re-planning jobs cost
-    more than a ≤2k′-row fuse's whole data path — same stats-gated shape
-    as the r10 agg_state/pack_sequences scopes).  Gate:
-    ``spark.myscaledb.hybrid.smallInputBytes`` (default 256 MB, 0
-    disables); execution confs only, so results are identical either way
-    — at 100 TB a selective-term postings subtree exceeds the gate and
-    the adaptive plan runs unchanged."""
-    small = int(
-        spark.conf.get("spark.myscaledb.hybrid.smallInputBytes", str(256 << 20))
-    )
-    if small > 0:
-        try:
-            est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:
-            est = 0
-        if 0 < est <= small:
-            from myscaledb_spark.session import session_settings
-
-            with session_settings(
-                spark,
-                **{
-                    "spark.sql.adaptive.enabled": "false",
-                    "spark.sql.shuffle.partitions": "1",
-                },
-            ):
-                return df.collect()
-    return df.collect()

@@ -20,6 +20,7 @@ from myscaledb_spark.functions.special import (
     normal_two_sided_p_expr,
     t_two_sided_p_expr,
 )
+from myscaledb_spark.session import collect_small, estimated_bytes
 
 
 def _two_sample_moments(df: DataFrame, value: Column, is_a: Column):
@@ -203,12 +204,7 @@ def rank_corr(
     # is re-checked by the capped exact collect in axis_rank, and above
     # 1 GB estimated input the full HLL is worth one linear pass to also
     # enable the broadcast-join middle tier.
-    try:
-        est_bytes = int(
-            base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est_bytes = 0
+    est_bytes = estimated_bytes(base)
     full_acd = est_bytes >= 1024**3
     # The stats row is MEMOIZED per (session, analyzed-plan semantic hash):
     # repeated rank_corr over the same immutable input (the steady state —
@@ -465,20 +461,14 @@ def rank_corr(
         if not vx and not vy:
             aggs.append(F.sum(F.col("lx") * F.col("ly")).alias("slxy"))
         cells_df = frame.groupBy(kx, ky).agg(*aggs)
-        if 0 < est_bytes <= (256 << 20):
-            # small inputs: AQE's per-stage re-planning jobs cost more than
-            # this query's whole data path (3 jobs → 1); parallelism is
-            # unaffected — the window tier's explicit repartition(nshuf)
-            # pins the sort width either way (that pinned A/B was about
-            # AQE COALESCING the CPU-heavy sort, which the explicit
-            # repartition already prevents).  Execution confs only.
-            from myscaledb_spark.session import session_settings
-
-            with session_settings(
-                spark, **{"spark.sql.adaptive.enabled": "false"}
-            ):
-                cells = cells_df.collect()
-        else:
+        # small inputs: AQE's per-stage re-planning jobs cost more than
+        # this query's whole data path (3 jobs → 1); parallelism is
+        # unaffected — the window tier's explicit repartition(nshuf) pins
+        # the sort width either way (that pinned A/B was about AQE
+        # COALESCING the CPU-heavy sort, which the explicit repartition
+        # already prevents).  Execution confs only.
+        cells = collect_small(cells_df, base)
+        if cells is None:
             cells = cells_df.collect()
         import math as _math
 
@@ -1130,13 +1120,7 @@ def tdigest_quantiles_by(
         # r8 VERDICT finding #2). The partial-digest path pays off once the
         # raw-row shuffle payload dominates: ≥8 GB estimated input (~64
         # default splits). Below that the single-shuffle shape wins the A/B.
-        try:
-            est_bytes = int(
-                src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est_bytes = 0
-        mode = "partial" if est_bytes >= 8 * 1024**3 else "single"
+        mode = "partial" if estimated_bytes(src) >= 8 * 1024**3 else "single"
 
     if mode == "single":
         def per_group(pdf):

@@ -82,7 +82,7 @@ def _cluster_centroids(cents: np.ndarray, num_top: int, iters: int = 25) -> np.n
 def _small_driver_build(
     df, vec_col, id_col, num_leaves, m, ef_construction, seed, n_total, base
 ):
-    """Small-input build path (same row gate as vector_index.small_kmeans_rows):
+    """Small-input build path (same row gate, vector_index.SMALL_KMEANS_ROWS):
     collect (id, vec), cluster with the deterministic numpy Lloyd's the PQ
     codebooks use, build every leaf's NSW graph driver-side, write the
     partitioned graph in one job.  MLlib KMeans.fit alone costs ~10-15
@@ -91,11 +91,10 @@ def _small_driver_build(
     when the gate does not fire (the 100 TB distributed path runs
     unchanged)."""
     from myscaledb_spark.plans.pq_index import _kmeans_np
-    from myscaledb_spark.plans.vector_index import small_kmeans_rows
+    from myscaledb_spark.plans.vector_index import SMALL_KMEANS_ROWS
 
     spark = df.sparkSession
-    gate = small_kmeans_rows(spark)
-    if gate <= 0 or n_total > gate:
+    if n_total > SMALL_KMEANS_ROWS:
         return None
     try:
         pairs = df.select(

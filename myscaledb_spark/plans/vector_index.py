@@ -182,20 +182,14 @@ class IndexRegistry:
         return sorted(recs, key=lambda r: (r.get("seq", 0), r.get("name") or ""))
 
 
-def small_kmeans_rows(spark) -> int:
-    """Row gate for the driver-side k-means build path
-    (``spark.myscaledb.kmeans.smallInputRows``, default 65536, 0 disables).
-    MLlib KMeans.fit costs ~10-15 Spark jobs of fixed overhead (RDD
-    conversion, k-means|| init, per-iteration aggregates) — on reference
-    test tables of a few thousand rows that is seconds of scheduling for
-    milliseconds of math.  Below the gate the vectors are collected and
-    clustered with the same deterministic numpy Lloyd's the PQ codebooks
-    already use; above it (the 100 TB shape) the distributed MLlib path
-    runs unchanged."""
-    try:
-        return int(spark.conf.get("spark.myscaledb.kmeans.smallInputRows", "65536"))
-    except Exception:
-        return 65536
+#: Row gate for the driver-side k-means build path.  MLlib KMeans.fit costs
+#: ~10-15 Spark jobs of fixed overhead (RDD conversion, k-means|| init,
+#: per-iteration aggregates) — on reference test tables of a few thousand
+#: rows that is seconds of scheduling for milliseconds of math.  At or below
+#: the gate the vectors are collected and clustered with the same
+#: deterministic numpy Lloyd's the PQ codebooks already use; above it (the
+#: 100 TB shape) the distributed MLlib path runs unchanged.
+SMALL_KMEANS_ROWS = 65536
 
 
 def _small_kmeans_assign(
@@ -213,8 +207,7 @@ def _small_kmeans_assign(
     (None, None) when the gate does not fire or the input shape is not
     collectable (ragged/duplicate-id inputs keep the MLlib path)."""
     spark = df.sparkSession
-    gate = small_kmeans_rows(spark)
-    if gate <= 0 or n_total > gate:
+    if n_total > SMALL_KMEANS_ROWS:
         return None, None
     try:
         import numpy as np

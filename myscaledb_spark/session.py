@@ -8,10 +8,15 @@ shuffle partitioning, Arrow for every pandas-UDF boundary, UTC session time.
 
 from __future__ import annotations
 
+import math
 import os
+import threading
 import time
+import weakref as _weakref
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Configs that are safe & beneficial at every scale. At 100 TB the only knobs
 # that change are shuffle partition count (set ~2-3x total cores, AQE coalesces
@@ -60,7 +65,10 @@ def get_spark(app_name: str = "myscaledb-spark", master: str | None = None) -> S
     return builder.getOrCreate()
 
 
-from contextlib import contextmanager
+#: one lock per session: a scope holds it from its first ``conf.set`` to its
+#: last restore, so two overlapping scopes on one session cannot interleave
+#: their saves and restores (reentrant, so scopes still nest)
+_SCOPE_LOCKS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
 
 
 @contextmanager
@@ -73,25 +81,114 @@ def session_settings(spark: SparkSession, **confs: str):
     materialized inside the ``with`` block (``df.localCheckpoint(True)``
     or an action) — a lazily returned plan executes under whatever the
     session has later.  Keys may use the short form (no ``spark.sql.``
-    prefix is added — pass full keys)."""
-    old: dict[str, str | None] = {}
-    for k, v in confs.items():
+    prefix is added — pass full keys).
+
+    Scopes on one session are serialized by a per-session lock, so every
+    conf ends at the value it had before any of them began.  SQLConf is
+    still session-global: a query that another thread runs on the same
+    session WITHOUT a scope, while a scope is open, executes under the
+    scope's confs.  Every scope sets execution confs only, so that query
+    returns the same rows; only its plan shape differs."""
+    with _SCOPE_LOCKS.setdefault(spark, threading.RLock()):
+        old: dict[str, str | None] = {}
+        for k, v in confs.items():
+            try:
+                old[k] = spark.conf.get(k)
+            except Exception:
+                old[k] = None
+            spark.conf.set(k, str(v))
         try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, str(v))
+            yield spark
+        finally:
+            for k, prev in old.items():
+                if prev is None:
+                    try:
+                        spark.conf.unset(k)
+                    except Exception:
+                        pass
+                else:
+                    spark.conf.set(k, prev)
+
+
+#: the estimate gate of every small-input path: at or below it AQE's
+#: per-stage re-planning jobs cost more than the query's whole data path, so
+#: the query runs with AQE off (``collect_small``) or picks its single-task
+#: plan (``pack_sequences``).  Any real corpus estimates above it and keeps
+#: the adaptive plan.
+SMALL_INPUT_BYTES = 256 << 20
+
+
+def estimated_bytes(df: DataFrame) -> int:
+    """The optimizer's ``sizeInBytes`` estimate for ``df``, or 0 when the
+    stats raise.  RDD-backed relations report Long.MaxValue ("unknown")."""
     try:
-        yield spark
-    finally:
-        for k, prev in old.items():
-            if prev is None:
-                try:
-                    spark.conf.unset(k)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(k, prev)
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return 0
+
+
+def collect_small(
+    df: DataFrame, sized: DataFrame | None = None, **confs: str
+) -> list | None:
+    """``df.collect()`` under a scope with AQE off (plus ``confs``) when the
+    estimate of ``sized`` (default ``df``) is in ``(0, SMALL_INPUT_BYTES]``;
+    None otherwise, and the caller runs its adaptive plan.  Execution confs
+    only, so the rows are the ones the adaptive plan returns."""
+    est = estimated_bytes(df if sized is None else sized)
+    if not 0 < est <= SMALL_INPUT_BYTES:
+        return None
+    with session_settings(
+        df.sparkSession, **{"spark.sql.adaptive.enabled": "false", **confs}
+    ):
+        return df.collect()
+
+
+_NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+
+
+def _sql_literal(dtype: T.DataType):
+    """``value -> SQL literal`` for one field type, or None when the type has
+    no emitter.  Strings go through a UTF-8 hex literal, which reads the
+    same under either ``spark.sql.parser.escapedStringLiterals`` setting."""
+    t = dtype.simpleString()
+    if isinstance(dtype, T.StringType):
+        return lambda v: f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
+    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return lambda v: f"CAST({int(v)} AS {t})"
+    if isinstance(dtype, T.DoubleType):
+        def double(v):
+            v = float(v)
+            if math.isfinite(v):
+                return f"{v!r}D"  # repr round-trips; -0.0D keeps the sign
+            return f"CAST('{_NON_FINITE[repr(v)]}' AS DOUBLE)"
+
+        return double
+    return None
+
+
+def values_relation(
+    spark: SparkSession, schema: T.StructType, rows: list
+) -> DataFrame | None:
+    """``rows`` (collected from a frame with ``schema``) as a SQL VALUES
+    LocalRelation with the same field names and types.  collect() on it
+    runs no Spark job, where createDataFrame pays a 1-task job and a pickle
+    round trip.  None when a field type has no literal emitter."""
+    emit = [_sql_literal(f.dataType) for f in schema.fields]
+    if any(e is None for e in emit):
+        return None
+    cols = ", ".join("`" + f.name.replace("`", "``") + "`" for f in schema.fields)
+
+    def row_sql(r):
+        return "(" + ", ".join(
+            f"CAST(NULL AS {f.dataType.simpleString()})" if v is None else e(v)
+            for f, e, v in zip(schema.fields, emit, r)
+        ) + ")"
+
+    if not rows:
+        nulls = row_sql([None] * len(schema.fields))
+        return spark.sql(f"SELECT * FROM (VALUES {nulls}) AS t({cols}) WHERE FALSE")
+    body = ", ".join(row_sql(r) for r in rows)
+    return spark.sql(f"SELECT * FROM (VALUES {body}) AS t({cols})")
 
 
 #: how long observed_metrics waits for an Observation's metrics.  Measured
@@ -122,8 +219,6 @@ def observed_metrics(obs) -> dict | None:
     except Py4JJavaError:  # the observed action failed: fall back to the collect
         return None
 
-
-import weakref as _weakref
 
 _TUNED_SESSIONS: "_weakref.WeakSet" = _weakref.WeakSet()
 

@@ -39,6 +39,7 @@ from myscaledb_spark.operators.agg_state import (
     uniq_state,
     uniq_states,
 )
+from myscaledb_spark.session import collect_small, session_settings, values_relation
 from myscaledb_spark.suite import register
 
 #: DuckDB longhand for the portable-HLL register → estimate math (the exact
@@ -83,20 +84,20 @@ def agg_state_merge_orders(spark, sf_dir):
     one-shot aggregate (state associativity end-to-end).  best_cust is
     deterministic because the max price is untied in this data at every SF.
 
-    Small inputs execute under a per-query SETTINGS scope (AQE off +
-    stats-derived shuffle partitions, materialized inside the scope) —
-    the same shape uniq_hll_state_events uses: both aggregation levels
-    together shuffle ~|status × month| state rows, so AQE's per-stage
-    re-planning jobs cost more than the whole data path (r10 A/B: 3 jobs
-    → 2, steady 0.78 → 0.58 s at sf0.1).  The gate is input-size-based
-    (`spark.myscaledb.aggstate.smallInputBytes`, default 256 MB, 0
-    disables): at 100 TB the stats estimate exceeds the gate and the
-    plan runs under AQE unchanged.  Results are identical either way —
-    the scope changes execution confs only, and every state column is
-    partitioning-insensitive (sorted arrays, untied min_by/max_by).
+    Small inputs execute under a per-query SETTINGS scope (AQE off + 8
+    shuffle partitions, materialized inside the scope) — the same shape
+    uniq_hll_state_events uses: both aggregation levels together shuffle
+    ~|status × month| state rows, so AQE's per-stage re-planning jobs
+    cost more than the whole data path (r10 A/B: 3 jobs → 2, steady
+    0.78 → 0.58 s at sf0.1).  The gate is the orders estimate against
+    ``session.SMALL_INPUT_BYTES``: at 100 TB the estimate exceeds it and
+    the plan runs under AQE unchanged.  Results are identical either way
+    — the scope changes execution confs only, and every state column is
+    partitioning-insensitive (sorted arrays, untied min_by/max_by).  The
+    ≤|status| rows re-emit as a VALUES LocalRelation: the r10
+    localCheckpoint shape paid one more job for the checkpoint scan on
+    the caller's collect (2 jobs → 1).
     """
-    from myscaledb_spark.session import session_settings
-
     o = load_table(spark, sf_dir, "orders").withColumn(
         "price", F.col("o_totalprice").cast("decimal(18,2)")
     )
@@ -116,47 +117,9 @@ def agg_state_merge_orders(spark, sf_dir):
         finalize_state("argMax", merge_state("argMax", "am")).alias("best_cust"),
         merge_finalize("uniqExact", "ue").alias("ndv"),
     )
-    small = int(
-        spark.conf.get(
-            "spark.myscaledb.aggstate.smallInputBytes", str(256 << 20)
-        )
-    )
-    if small > 0:
-        est = int(
-            o._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if 0 < est <= small:
-            n = max(8, est // (64 << 20) + 1)
-            with session_settings(
-                spark,
-                **{
-                    "spark.sql.adaptive.enabled": "false",
-                    "spark.sql.shuffle.partitions": str(n),
-                },
-            ):
-                rows = merged.collect()
-            # r11: ≤|status| rows re-emitted as a VALUES LocalRelation —
-            # the r10 localCheckpoint shape paid one more job for the
-            # checkpoint scan on the caller's collect (2 jobs → 1)
-            from myscaledb_spark.suite.relational import _sql_str, _values_rows
-
-            local = _values_rows(
-                spark, rows,
-                "(`o_orderstatus`, `cnt`, `sum_price`, `avg_price`,"
-                " `min_price`, `best_cust`, `ndv`)",
-                lambda r: (
-                    "(" + _sql_str(r[0]) + f", CAST({int(r[1])} AS BIGINT)"
-                    + "".join(f", CAST({float(r[i])!r} AS DOUBLE)" for i in (2, 3, 4))
-                    + f", CAST({int(r[5])} AS BIGINT)"
-                    + f", CAST({int(r[6])} AS BIGINT))"
-                ),
-                "(CAST(NULL AS STRING), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),"
-                " CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT),"
-                " CAST(NULL AS BIGINT))",
-            )
-            if local is not None:
-                return local
-    return merged
+    rows = collect_small(merged, o, **{"spark.sql.shuffle.partitions": "8"})
+    local = None if rows is None else values_relation(spark, merged.schema, rows)
+    return merged if local is None else local
 
 
 @register(
@@ -201,8 +164,6 @@ def uniq_hll_state_events(spark, sf_dir):
     100 TB the same query would instead RAISE the partition count with
     the input — the scope expresses exactly the per-query override
     ClickHouse's SETTINGS clause does."""
-    from myscaledb_spark.session import session_settings
-
     ev = load_table(spark, sf_dir, "events")
 
     def _cell(hcol: str, offset: int) -> str:

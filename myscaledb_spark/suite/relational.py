@@ -11,33 +11,8 @@ from pyspark.sql import Window
 
 from myscaledb_spark.catalog import load_table
 from myscaledb_spark.operators.relational import asof_join, final_dedup, limit_by
+from myscaledb_spark.session import collect_small, values_relation
 from myscaledb_spark.suite import register
-
-
-def _sql_str(v) -> str:
-    if v is None:
-        # raising routes _values_rows to its fallback (the original plan)
-        # instead of silently emitting the string 'None'
-        raise ValueError("NULL string in VALUES re-emit")
-    s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-    return f"'{s}'"
-
-
-def _values_rows(spark, rows, cols_sql: str, fmt, empty_row_sql: str):
-    """Tiny collected result → SQL VALUES LocalRelation (collect() on a
-    LocalTableScan runs NO Spark job; createDataFrame's parallelize path
-    costs a 1-task job + pickle round-trip per invocation).  Returns None
-    if any row contains a value the formatter cannot emit (caller keeps
-    the original plan)."""
-    try:
-        if not rows:
-            return spark.sql(
-                f"SELECT * FROM (VALUES {empty_row_sql}) AS t{cols_sql} WHERE FALSE"
-            )
-        body = ", ".join(fmt(r) for r in rows)
-        return spark.sql(f"SELECT * FROM (VALUES {body}) AS t{cols_sql}")
-    except Exception:
-        return None
 
 
 def _dec2(c):
@@ -119,46 +94,13 @@ def pricing_summary(spark, sf_dir):
     # the ≤|groups×partitions|-row exchanges cost more than the whole data
     # path, and the ≤|flag×status| result re-emits as a VALUES
     # LocalRelation so the caller's collect runs no job.  ONE job total.
-    # Gate: spark.myscaledb.pricing.smallInputBytes (default 256 MB, 0
-    # disables) on the lineitem estimate — at 100 TB the adaptive plan
-    # runs unchanged.  Execution confs only; equivalence pinned by
+    # Gated on the lineitem estimate (session.SMALL_INPUT_BYTES) — at
+    # 100 TB the adaptive plan runs unchanged.  Execution confs only;
+    # equivalence pinned by
     # tests/test_opt_r11.py::test_pricing_small_input_scope_equals_adaptive.
-    small = int(
-        spark.conf.get("spark.myscaledb.pricing.smallInputBytes", str(256 << 20))
-    )
-    if small > 0:
-        try:
-            est = int(li._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:
-            est = 0
-        if 0 < est <= small:
-            from myscaledb_spark.session import session_settings
-
-            n = max(8, est // (64 << 20) + 1)
-            with session_settings(
-                spark,
-                **{
-                    "spark.sql.adaptive.enabled": "false",
-                    "spark.sql.shuffle.partitions": str(n),
-                },
-            ):
-                rows = out.collect()
-            local = _values_rows(
-                spark, rows,
-                "(`l_returnflag`, `l_linestatus`, `sum_qty`, `sum_base_price`,"
-                " `sum_disc_price`, `avg_qty`, `count_order`)",
-                lambda r: (
-                    "(" + _sql_str(r[0]) + ", " + _sql_str(r[1])
-                    + "".join(f", CAST({float(r[i])!r} AS DOUBLE)" for i in (2, 3, 4, 5))
-                    + f", CAST({int(r[6])} AS BIGINT))"
-                ),
-                "(CAST(NULL AS STRING), CAST(NULL AS STRING), CAST(NULL AS DOUBLE),"
-                " CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),"
-                " CAST(NULL AS BIGINT))",
-            )
-            if local is not None:
-                return local
-    return out
+    rows = collect_small(out, li, **{"spark.sql.shuffle.partitions": "8"})
+    local = None if rows is None else values_relation(spark, out.schema, rows)
+    return out if local is None else local
 
 
 # --- multi-way join with broadcast dims (HashJoin.cpp / GLOBAL JOIN ≈
@@ -236,53 +178,28 @@ def revenue_by_nation(spark, sf_dir):
     # (including the projected FACT side, whose estimate fits the 64 MB
     # threshold at this scale) plus AQE stage jobs — for a ≤25-row result.
     # Under the scope (AQE off, auto-broadcast off so the fact join runs
-    # shuffled-hash via preferSortMergeJoin=false, stats-derived shuffle
-    # partitions) the same dims-first plan is THREE jobs: the two hinted
-    # dim broadcasts (nation/region, O(25) rows) and one main job.
+    # shuffled-hash via preferSortMergeJoin=false, 8 shuffle partitions)
+    # the same dims-first plan is THREE jobs: the two hinted dim
+    # broadcasts (nation/region, O(25) rows) and one main job.
     # Interleaved A/B at sf0.1: 0.92 s median -> 0.53 s, rows identical
     # (execution confs only — inner-join strategy and partition count
-    # cannot change a sum).  Gate: spark.myscaledb.revenue.smallInputBytes
-    # (default 256 MB, 0 disables) against the lineitem scan estimate —
-    # at 100 TB the estimate exceeds the gate and the adaptive dims-first
-    # plan runs unchanged (plans/r11/revenue_by_nation_after.txt captures
-    # it with the scope disabled).
-    small = int(
-        spark.conf.get("spark.myscaledb.revenue.smallInputBytes", str(256 << 20))
+    # cannot change a sum).  Gated on the lineitem scan estimate
+    # (session.SMALL_INPUT_BYTES) — at 100 TB the estimate exceeds the
+    # gate and the adaptive dims-first plan runs unchanged
+    # (plans/r11/revenue_by_nation_after.txt captures it with the scope
+    # disabled).  The ≤|nations| rows re-emit as a VALUES LocalRelation
+    # (no job on the caller's collect) instead of localCheckpoint, whose
+    # materialization + checkpoint-scan cost two more tiny jobs.
+    rows = collect_small(
+        out, li,
+        **{
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.join.preferSortMergeJoin": "false",
+            "spark.sql.shuffle.partitions": "8",
+        },
     )
-    if small > 0:
-        try:
-            est = int(li._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:
-            est = 0
-        if 0 < est <= small:
-            from myscaledb_spark.session import session_settings
-
-            n = max(8, est // (64 << 20) + 1)
-            with session_settings(
-                spark,
-                **{
-                    "spark.sql.adaptive.enabled": "false",
-                    "spark.sql.autoBroadcastJoinThreshold": "-1",
-                    "spark.sql.join.preferSortMergeJoin": "false",
-                    "spark.sql.shuffle.partitions": str(n),
-                },
-            ):
-                rows = out.collect()
-            # ≤|nations| rows: re-emit as a VALUES LocalRelation (no job on
-            # the caller's collect) instead of localCheckpoint, whose
-            # materialization + checkpoint-scan cost two more tiny jobs
-            local = _values_rows(
-                spark, rows,
-                "(`n_name`, `revenue`, `n_items`)",
-                lambda r: (
-                    "(" + _sql_str(r[0]) + ", CAST(" + repr(float(r[1]))
-                    + " AS DOUBLE), CAST(" + str(int(r[2])) + " AS BIGINT))"
-                ),
-                "(CAST(NULL AS STRING), CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT))",
-            )
-            if local is not None:
-                return local
-    return out
+    local = None if rows is None else values_relation(spark, out.schema, rows)
+    return out if local is None else local
 
 
 # --- top-k after join+agg (TakeOrderedAndProject ≈ partial sort + merge with

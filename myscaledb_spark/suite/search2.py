@@ -74,12 +74,12 @@ def _recall_indicator(spark, got, exact, k: int, floor: float):
         exact.select(F.col(exact.columns[0]).alias("_id"), F.lit(1).alias("_leg"))
     )
     rows = tagged.collect()
-    g = {r[0] for r in rows if r[1] == 0}
+    got_ids = [r[0] for r in rows if r[1] == 0]
     e = {r[0] for r in rows if r[1] == 1}
-    ok = 1 if len(g & e) / float(k) >= floor else 0
+    ok = 1 if len(set(got_ids) & e) / float(k) >= floor else 0
     return spark.sql(
         f"SELECT CAST({int(k)} AS INT) AS k,"
-        f" CAST({len(g)} AS BIGINT) AS n_results,"
+        f" CAST({len(got_ids)} AS BIGINT) AS n_results,"
         f" CAST({ok} AS INT) AS recall_ok"
     )
 

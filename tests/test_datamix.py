@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from myscaledb_spark import session
 from myscaledb_spark.operators.datamix import (
     contamination_check,
     pack_sequences,
@@ -12,12 +13,12 @@ from myscaledb_spark.operators.datamix import (
 )
 
 
-def test_pack_sequences_equals_sequential(spark):
+def test_pack_sequences_equals_sequential(spark, monkeypatch):
     rows = [(i, (i * 37) % 90 + 10) for i in range(500)]
     df = spark.createDataFrame(rows, "id int, n int")
     # disable the small-input gate so the distributed offset machinery
     # actually runs, and force many range partitions
-    spark.conf.set("spark.myscaledb.pack.smallInputBytes", "0")
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
     try:
         packed = {
             r.id: (r.seq_id, r.offset_in_seq)
@@ -26,14 +27,14 @@ def test_pack_sequences_equals_sequential(spark):
             ).collect()
         }
     finally:
-        spark.conf.unset("spark.myscaledb.pack.smallInputBytes")
+        monkeypatch.undo()
     cum = 0
     for i, n in rows:
         assert packed[i] == (cum // 256, cum % 256), i
         cum += n
 
 
-def test_pack_sequences_small_input_path_equals_distributed(spark):
+def test_pack_sequences_small_input_path_equals_distributed(spark, monkeypatch):
     """The cost-gated small-input plan (single global-order window, one
     action) must lay out every document exactly like the distributed prefix
     sum — numeric and non-numeric order keys, including an overflow doc."""
@@ -49,14 +50,14 @@ def test_pack_sequences_small_input_path_equals_distributed(spark):
     # the small plan is one Window, no checkpointed-RDD scan
     plan = small._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan and "ExistingRDD" not in plan
-    spark.conf.set("spark.myscaledb.pack.smallInputBytes", "0")
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
     try:
         dist = pack_sequences(df, "id", "n", 256, ["id"], num_partitions=7)
         assert sorted(map(tuple, small.collect())) == sorted(
             map(tuple, dist.collect())
         )
     finally:
-        spark.conf.unset("spark.myscaledb.pack.smallInputBytes")
+        monkeypatch.undo()
     # non-numeric (string) order key with ties: both paths, same layout
     sdf = spark.range(50).select(
         F.col("id"),
@@ -64,11 +65,11 @@ def test_pack_sequences_small_input_path_equals_distributed(spark):
         (F.col("id") + 100).alias("n"),
     )
     small = sorted(map(tuple, pack_sequences(sdf, "id", "n", 256, ["k"]).collect()))
-    spark.conf.set("spark.myscaledb.pack.smallInputBytes", "0")
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
     try:
         dist = sorted(map(tuple, pack_sequences(sdf, "id", "n", 256, ["k"]).collect()))
     finally:
-        spark.conf.unset("spark.myscaledb.pack.smallInputBytes")
+        monkeypatch.undo()
     assert small == dist
 
 

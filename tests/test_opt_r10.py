@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from myscaledb_spark import session
 from myscaledb_spark.functions.vector import distance, distance_defined
 
 
@@ -165,7 +166,7 @@ def test_minhash_excludes_short_docs_without_prefilter(spark):
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs] == [(1, 2, 1.0)]
 
 
-def test_agg_state_small_input_scope_equals_distributed(spark):
+def test_agg_state_small_input_scope_equals_distributed(spark, monkeypatch):
     """The r10 small-input execution scope (AQE off + stats-derived shuffle
     partitions, materialized inside the scope) must return exactly the rows
     the unscoped AQE plan returns — the scope changes execution confs only."""
@@ -178,7 +179,7 @@ def test_agg_state_small_input_scope_equals_distributed(spark):
     # rows as a VALUES LocalRelation (LocalTableScan, zero jobs on collect)
     plan = scoped._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan or "LocalTableScan" in plan
-    spark.conf.set("spark.myscaledb.aggstate.smallInputBytes", "0")
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
     try:
         dist = agg_state_merge_orders(spark, sf)
         dplan = dist._jdf.queryExecution().executedPlan().toString()
@@ -187,4 +188,4 @@ def test_agg_state_small_input_scope_equals_distributed(spark):
             map(tuple, dist.collect()), key=repr
         )
     finally:
-        spark.conf.unset("spark.myscaledb.aggstate.smallInputBytes")
+        monkeypatch.undo()

@@ -7,6 +7,7 @@ returns row-for-row identical results to the un-scoped / un-fused shape.
 
 from __future__ import annotations
 
+from myscaledb_spark import session
 from tests.conftest import SF_DIR
 
 
@@ -14,22 +15,18 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_revenue_small_input_scope_equals_adaptive(spark):
+def test_revenue_small_input_scope_equals_adaptive(spark, monkeypatch):
     """The scoped (AQE off / no auto-broadcast / shuffled-hash / stats-derived
     partitions) small-input execution must equal the adaptive plan
     row-for-row — execution confs only, so anything else is a bug."""
     import myscaledb_spark.suite.relational as rel
 
     scoped = _rows(rel.revenue_by_nation(spark, SF_DIR))
-    old = spark.conf.get("spark.myscaledb.revenue.smallInputBytes", None)
-    spark.conf.set("spark.myscaledb.revenue.smallInputBytes", "0")
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
     try:
         adaptive = _rows(rel.revenue_by_nation(spark, SF_DIR))
     finally:
-        if old is None:
-            spark.conf.unset("spark.myscaledb.revenue.smallInputBytes")
-        else:
-            spark.conf.set("spark.myscaledb.revenue.smallInputBytes", old)
+        monkeypatch.undo()
     assert scoped == adaptive
 
 
@@ -91,19 +88,15 @@ def test_hybrid_indexed_fusion_equals_thread_legs(spark, tmp_path):
     assert [tuple(r) for r in out] == [tuple(r) for r in want]
 
 
-def test_pricing_small_input_scope_equals_adaptive(spark):
+def test_pricing_small_input_scope_equals_adaptive(spark, monkeypatch):
     import myscaledb_spark.suite.relational as rel
 
     scoped = _rows(rel.pricing_summary(spark, SF_DIR))
-    old = spark.conf.get("spark.myscaledb.pricing.smallInputBytes", None)
-    spark.conf.set("spark.myscaledb.pricing.smallInputBytes", "0")
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
     try:
         adaptive = _rows(rel.pricing_summary(spark, SF_DIR))
     finally:
-        if old is None:
-            spark.conf.unset("spark.myscaledb.pricing.smallInputBytes")
-        else:
-            spark.conf.set("spark.myscaledb.pricing.smallInputBytes", old)
+        monkeypatch.undo()
     assert scoped == adaptive
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from myscaledb_spark import session
 from myscaledb_spark.operators.skew import salted_agg, salted_join
 from myscaledb_spark.plan_audit import (
     assert_broadcast_join,
@@ -120,24 +121,20 @@ def test_nlq_plan_no_python(spark):
     assert_take_ordered(df)
 
 
-def test_join_broadcasts_dims(spark):
+def test_join_broadcasts_dims(spark, monkeypatch):
     import __spark_entry__ as m
 
     # the r11 small-input scope pre-materializes the ≤25-row result as a
     # VALUES LocalRelation — the join-shape audit is about the underlying
     # plan, so disable the scope for this check (equivalence of the two
     # executions is pinned by test_opt_r11.py)
-    old = spark.conf.get("spark.myscaledb.revenue.smallInputBytes", None)
-    spark.conf.set("spark.myscaledb.revenue.smallInputBytes", "0")
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
     try:
         df = m.queries()["revenue_by_nation"](spark, SF_DIR)
         assert_broadcast_join(df)
         assert_no_python_in_plan(df)
     finally:
-        if old is None:
-            spark.conf.unset("spark.myscaledb.revenue.smallInputBytes")
-        else:
-            spark.conf.set("spark.myscaledb.revenue.smallInputBytes", old)
+        monkeypatch.undo()
 
 
 def test_funnel_plan_no_python(spark):

@@ -798,3 +798,19 @@ def test_reference_sql_file_passes(spark, fname):
 
     status, detail = conformance.run_file(spark, os.path.join(REF_DIR, fname))
     assert status == "PASS", f"{fname}: {status} — {detail}"
+
+
+def test_temp_views_skips_permanent_views(spark):
+    """File cleanup drops what _temp_views lists, so it must list temp views
+    only — never a permanent view in the current database."""
+    import conformance
+
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW tv_cleanup_probe AS SELECT 1 AS x")
+    spark.sql("CREATE OR REPLACE VIEW pv_cleanup_probe AS SELECT 1 AS x")
+    try:
+        names = conformance._temp_views(spark)
+        assert "tv_cleanup_probe" in names
+        assert "pv_cleanup_probe" not in names
+    finally:
+        spark.sql("DROP VIEW IF EXISTS tv_cleanup_probe")
+        spark.sql("DROP VIEW IF EXISTS pv_cleanup_probe")

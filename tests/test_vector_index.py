@@ -156,3 +156,16 @@ def test_vector_index_event_log(spark, tmp_path):
         "DefinitionCreated", "BuildStart", "LoadStart", "LoadSucceed",
         "BuildSucceed", "DefinitionDroped",
     ]
+
+
+def test_recall_indicator_counts_returned_rows(spark):
+    """n_results counts the rows the search returned, duplicates included;
+    only the overlap with the exact top-k is taken over distinct ids."""
+    from myscaledb_spark.suite.search2 import _recall_indicator
+
+    got = spark.createDataFrame([(1,), (1,), (2,)], "vec_id int")
+    exact = spark.createDataFrame([(1,), (3,), (4,)], "vec_id int")
+    row = _recall_indicator(spark, got, exact, 3, 0.3).collect()[0]
+    assert (row["k"], row["n_results"], row["recall_ok"]) == (3, 3, 1)
+    row = _recall_indicator(spark, got, exact, 3, 0.5).collect()[0]
+    assert row["recall_ok"] == 0

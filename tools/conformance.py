@@ -305,8 +305,12 @@ def _temp_views(spark) -> set:
     """Temp-view names via SHOW VIEWS — 4x faster than
     spark.catalog.listTables(), which materializes per-table metadata
     objects over py4j (measured 0.285 vs 0.074 s/call; ×2 calls ×619
-    pinned files ≈ 4 min of the suite's budget)."""
-    return {r["viewName"] for r in spark.sql("SHOW VIEWS").collect()}
+    pinned files ≈ 4 min of the suite's budget).  SHOW VIEWS also lists
+    the current database's permanent views; cleanup must never drop
+    those, so they are filtered out."""
+    return {
+        r["viewName"] for r in spark.sql("SHOW VIEWS").collect() if r["isTemporary"]
+    }
 
 
 def _cleanup_file_state(spark, art: str, pre_views: set) -> None:
