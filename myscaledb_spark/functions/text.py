@@ -22,8 +22,11 @@ Scale design: scoring needs only (a) one tiny global aggregate row
 no shuffle of tokens) cross-joined broadcast-style into (b) a per-row
 expression computing tf from the token array. Everything is JVM higher-order
 functions inside codegen; the only wide op is the final top-k
-(TakeOrderedAndProject). For repeated querying over a static corpus, persist
-doc-length + posting stats once (plans/fts_index.py) instead of re-scanning.
+(TakeOrderedAndProject). A corpus under 8 GB stays resident per session in
+tokenized form (`_resident_toked`), with N, avgdl and the df of every token
+computed once (`_corpus_stats`), so a repeated query is one scoring job.
+For repeated querying at scale, persist doc-length + posting stats once
+(plans/fts_index.py) instead of re-scanning.
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from myscaledb_spark.errors import InvalidSearchQuery, MAX_SEARCH_RESULT_WINDOW
-from myscaledb_spark.session import estimated_bytes
+from myscaledb_spark.session import collect_small, estimated_bytes
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -174,7 +177,8 @@ def tokenize_query(
 #: per-session resident tokenized corpora (weak keys: stopped sessions
 #: collect).  Each value is an insertion-ordered dict capped at
 #: _TOKED_MEMO_SLOTS entries — several corpora/tokenizers legitimately
-#: coexist in one session (simple + stopword-spec + CJK gates).
+#: coexist in one session (simple + stopword-spec + CJK gates).  An entry is
+#: (persisted frame, BM25 stats record), so the stats leave with the corpus.
 import weakref as _weakref
 
 _TOKED_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
@@ -186,79 +190,174 @@ _TOKED_MEMO_SLOTS = 8
 _TOKED_MEMO_MAX_BYTES = 8 << 30
 
 
-def _resident_toked(df: DataFrame, text_col: str, tokenizer: str, spec):
-    """(df.*, _toks, _dl) with a per-session resident cache, or None when
-    the corpus is too big / unhashable and the caller should stream.
+def _input_fingerprint(df: DataFrame) -> tuple | None:
+    """(path, size, mtime) of every file ``df`` reads, sorted, from its
+    Hadoop FileSystem status (any scheme), or None when one of them cannot
+    be stat'ed.  The analyzed plan of a re-registered view over an
+    overwritten directory hashes the same as before; its files do not."""
+    spark = df.sparkSession
+    out = []
+    try:
+        conf = spark._jsc.hadoopConfiguration()
+        Path = spark._jvm.org.apache.hadoop.fs.Path
+        for f in sorted(df.inputFiles()):
+            path = Path(f)
+            st = path.getFileSystem(conf).getFileStatus(path)
+            out.append((f, st.getLen(), st.getModificationTime()))
+    except Exception:
+        return None
+    return tuple(out)
+
+
+def _resident_toked(
+    df: DataFrame, text_col: str, tokenizer: str, spec, create: bool = True
+):
+    """(df.* + _toks + _dl persisted, its BM25 stats record) from a
+    per-session resident cache, or None when the corpus is too big /
+    unhashable / unfingerprintable and the caller should stream.  With
+    ``create=False`` a corpus without an entry streams too.
 
     The reference's tantivy index keeps the analyzed corpus resident; the
     direct (index-less) scan re-tokenized per query — and the per-query
     regexp/HOF tokenization was the whole cost of the direct BM25 gates
     (r9 VERDICT finding #4).  Keyed by the ANALYZED input plan + the full
-    analyzer config, so a different corpus, column, or tokenizer chain
-    builds its own entry; capped FIFO so a session cycling many corpora
-    doesn't pin them all."""
+    analyzer config + the input files' fingerprint, so a different corpus,
+    column, or tokenizer chain builds its own entry, and a rewritten input
+    replaces its entry; capped FIFO so a session cycling many corpora
+    doesn't pin them all.  An entry of the same plan over other files is
+    unpersisted on every call, also one that streams: Spark's cache manager
+    would otherwise serve the streaming plan (the same tokenize projection)
+    from the old cached data."""
     spark = df.sparkSession
-    est = estimated_bytes(df)
-    if est <= 0 or est > _TOKED_MEMO_MAX_BYTES:
-        return None
     try:
-        key = (
+        corpus = (
             int(df._jdf.queryExecution().analyzed().semanticHash()),
             text_col, tokenizer, repr(spec),
         )
         sess = _TOKED_MEMO.setdefault(spark, {})
     except Exception:
         return None
+    est = estimated_bytes(df)
+    fp = _input_fingerprint(df) if 0 < est <= _TOKED_MEMO_MAX_BYTES else None
+    key = corpus + (fp,)
+    for stale in [k for k in sess if k[:-1] == corpus and k != key]:
+        sess.pop(stale)[0].unpersist()
+    if fp is None or (key not in sess and not create):
+        return None
     if key not in sess:
         from pyspark import StorageLevel
 
         while len(sess) >= _TOKED_MEMO_SLOTS:
-            old = next(iter(sess))
-            sess.pop(old).unpersist()
-            _BM25_STATS_MEMO.get(spark, {}).pop(old, None)
+            sess.pop(next(iter(sess)))[0].unpersist()
         toked = df.withColumn(
             "_toks", tokenize(text_col, tokenizer, spec=spec)
         ).withColumn("_dl", F.size("_toks").cast("double"))
-        sess[key] = toked.persist(StorageLevel.MEMORY_AND_DISK)
-    return sess[key], key
+        sess[key] = (toked.persist(StorageLevel.MEMORY_AND_DISK), {})
+    return sess[key]
 
 
-#: per-session BM25 corpus statistics (N, avgdl, df per clause) for the
-#: resident corpora — the reference's index serves precomputed stats the
-#: same way (BM25InfoInDataParts.h).  {corpus_key: {"n":…, "avgdl":…,
-#: "df": {clause_key: df}}}; the df dict is capped so a session streaming
-#: novel queries can't grow it unboundedly.
-_BM25_STATS_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+#: default ``resident`` argument of the scorers: look the corpus up
+_LOOKUP = object()
+
+#: bound on the per-clause df memo of one resident corpus — phrase clauses,
+#: plus single terms of a corpus without a complete-stats map — so a
+#: session streaming novel queries can't grow it unboundedly
 _BM25_STATS_MAX_TERMS = 4096
 
+#: bound on the complete-stats map of one resident corpus: the map costs
+#: about 100 bytes of driver memory a token (488 KB for a 4,829-token
+#: corpus), so at most ~6.5 MB per memo slot; a larger vocabulary keeps
+#: the per-clause path
+_CORPUS_STATS_MAX_TERMS = 1 << 16
 
-def _resident_stats(resident: DataFrame, ckey, clauses) -> tuple:
-    """(n_docs, avgdl, [df per clause]) from the per-session stats memo,
-    computing only the MISSING clauses' df in one agg pass over the
-    resident corpus.  ``clauses`` is a list of (cache_key, tf_column)."""
-    spark = resident.sparkSession
-    memo = _BM25_STATS_MEMO.setdefault(spark, {})
-    base = memo.get(ckey)
+
+def _corpus_stats(resident: DataFrame) -> tuple | None:
+    """(N, avgdl, {token: df}) of ``resident`` in one job — one group-by over
+    each doc's distinct tokens — or None above the small-input gate or with
+    more than ``_CORPUS_STATS_MAX_TERMS`` tokens (the collect stops one row
+    past the bound, on one shuffle partition so it stays one job).  Each
+    doc also counts once, with its length, on its first exploded row
+    (``posexplode_outer`` keeps a token-less doc as one NULL-token row), so
+    the groups' partial counts and length sums add up to N and avgdl.  The
+    lengths are integers, so the sum is exact and avgdl is bit-identical to
+    ``avg(_dl)``."""
+    ex = resident.select(
+        F.posexplode_outer(F.array_distinct("_toks")).alias("_p", "_t"), "_dl"
+    )
+    first = F.col("_p").isNull() | (F.col("_p") == 0)
+    dl = F.when(first, F.col("_dl"))
+    rows = collect_small(
+        ex.groupBy("_t").agg(
+            F.count(F.lit(1)).cast("double").alias("_df"),
+            F.count(F.when(first, 1)).alias("_n"),
+            F.count(dl).alias("_ndl"),
+            F.sum(dl).alias("_sdl"),
+        ).limit(_CORPUS_STATS_MAX_TERMS + 1),
+        sized=resident,
+        **{"spark.sql.shuffle.partitions": "1"},
+    )
+    if rows is None or len(rows) > _CORPUS_STATS_MAX_TERMS:
+        return None
+    n = float(sum(r["_n"] for r in rows))
+    ndl = sum(r["_ndl"] for r in rows)
+    sdl = sum(r["_sdl"] for r in rows if r["_sdl"] is not None)
+    terms = {r["_t"]: r["_df"] for r in rows if r["_t"] is not None}
+    return n, (sdl / ndl if ndl else None), terms
+
+
+def _resident_stats(resident: DataFrame, record: dict, keys, tf_of) -> tuple:
+    """(n_docs, avgdl, [df per clause]) for a resident corpus, memoized in
+    its stats record — the reference's index serves precomputed stats the
+    same way (BM25InfoInDataParts.h).
+
+    ``keys`` name the clauses: a str is a single token, a tuple a phrase;
+    ``tf_of(key)`` builds a clause's tf column, only for a clause whose df
+    is computed here.
+
+    The first request on a corpus within the small-input gate and the
+    vocabulary bound computes N, avgdl and the df of EVERY token in one job
+    (``_corpus_stats``), so no later single-token lookup runs a job; a
+    token absent from the map has df 0.0, exactly what ``sum(tf > 0)``
+    gives.  df values are integer
+    counts and the group-by's avgdl sums the same integer doc lengths as
+    ``avg(_dl)``, so scores are bit-identical to a per-query stats pass.
+    Phrase clauses (tuple keys), and every clause of a corpus without that
+    map, take the per-clause path: their missing df in one agg over the
+    resident corpus, kept in a dict bounded by ``_BM25_STATS_MAX_TERMS``."""
+    if "n" not in record:
+        full = _corpus_stats(resident)
+        if full is not None:  # one update: a reader never sees "n" alone
+            record.update(zip(("n", "avgdl", "terms"), full))
+    terms = record.get("terms")
+    memo = record.setdefault("clauses", {})
     need = [
-        (ck, tfc) for ck, tfc in clauses
-        if base is None or ck not in base["df"]
+        ck for ck in dict.fromkeys(keys)
+        if not (terms is not None and isinstance(ck, str)) and ck not in memo
     ]
-    if base is None or need:
+    if "n" not in record or need:
         aggs = [
             F.count(F.lit(1)).cast("double").alias("_n"),
             F.avg("_dl").alias("_avg"),
         ] + [
-            F.sum(F.when(tfc > 0, 1).otherwise(0)).cast("double").alias(f"_d{i}")
-            for i, (_, tfc) in enumerate(need)
+            F.sum(F.when(tf_of(ck) > 0, 1).otherwise(0)).cast("double")
+            .alias(f"_d{i}")
+            for i, ck in enumerate(need)
         ]
         row = resident.agg(*aggs).collect()[0]
-        if base is None:
-            base = memo[ckey] = {"n": row["_n"], "avgdl": row["_avg"], "df": {}}
-        if len(base["df"]) + len(need) > _BM25_STATS_MAX_TERMS:
-            base["df"].clear()
-        for i, (ck, _) in enumerate(need):
-            base["df"][ck] = row[f"_d{i}"]
-    return base["n"], base["avgdl"], [base["df"][ck] for ck, _ in clauses]
+        record.setdefault("n", row["_n"])
+        record.setdefault("avgdl", row["_avg"])
+        if len(memo) + len(need) > _BM25_STATS_MAX_TERMS:
+            kept = {ck: memo[ck] for ck in keys if ck in memo}  # this query's
+            memo.clear()
+            memo.update(kept)
+        memo.update((ck, row[f"_d{i}"]) for i, ck in enumerate(need))
+
+    def df_of(ck):
+        if terms is not None and isinstance(ck, str):
+            return terms.get(ck, 0.0)
+        return memo[ck]
+
+    return record["n"], record["avgdl"], [df_of(ck) for ck in keys]
 
 
 def bm25_scores(
@@ -269,6 +368,7 @@ def bm25_scores(
     operator: str = "OR",
     score_name: str = "bm25_score",
     spec=None,
+    resident=_LOOKUP,
 ) -> DataFrame:
     """Score every matching row with table-global BM25; no top-k applied.
 
@@ -279,19 +379,24 @@ def bm25_scores(
     ``spec`` (TokenizerSpec) carries the reference's per-column config —
     stop_word_filters / stem_languages / length_limit — through both the
     document and the query analyzer.
+
+    ``resident`` is the caller's ``_resident_toked`` result for ``df``
+    (None streams); by default it is looked up here.
     """
     terms = tokenize_query(query, tokenizer, spec=spec)
     if not terms:
         raise InvalidSearchQuery("empty text-search query after tokenization")
 
-    res = _resident_toked(df, text_col, tokenizer, spec)
+    res = resident
+    if res is _LOOKUP:
+        res = _resident_toked(df, text_col, tokenizer, spec)
     if res is not None:
         # tf from the cached token arrays (integer counts) + literal stats
         # from the resident memo: a repeated query is ONE job — scoring +
         # top-k — with no stats pass and no broadcast build
-        resident, ckey = res
+        resident, record = res
         stats = _resident_stats(
-            resident, ckey, [(t, term_tf("_toks", t)) for t in terms]
+            resident, record, terms, lambda t: term_tf("_toks", t)
         )
         tfed = resident.select(
             "*",
@@ -353,8 +458,8 @@ def bm25_scores(
 
 def term_tf(toks: Column | str, term: str) -> Column:
     """Per-row term frequency over a token-array column — THE tf definition
-    every BM25 path shares (direct, pretokenized, single-scan hybrid), so
-    the scorers can never diverge.
+    every BM25 path shares (direct, pretokenized, resident-corpus stats),
+    so the scorers can never diverge.
 
     NB: F.filter's two-arg lambda form means (element, index) — bind the
     term via closure, single-arg lambda only."""
@@ -369,8 +474,8 @@ def bm25_scores_pretokenized(
     score_name: str = "bm25_score",
 ) -> DataFrame:
     """BM25 over a DataFrame that already carries `_toks` (array<string>) and
-    `_dl` (double) — the shared scorer behind bm25_scores and the
-    single-scan hybrid path."""
+    `_dl` (double) — bm25_scores' scorer for a corpus it tokenizes per
+    query."""
     tfed = toked.select(
         "*", *[term_tf("_toks", t).alias(f"_tf_{i}") for i, t in enumerate(terms)]
     )
@@ -410,9 +515,8 @@ def bm25_scores_from_tf(
 ) -> DataFrame:
     """BM25 from precomputed per-term frequencies: expects `_dl` (double)
     and `_tf_0.._tf_{n-1}` (double) columns. This is the narrowest corpus
-    projection that can answer BM25 — fixed-width scalars, no token arrays —
-    so callers (operators/hybrid.py) can persist it cheaply and scan the
-    corpus exactly once. df_t = Σ [tf_t > 0] equals the array_contains count
+    projection that can answer BM25 — fixed-width scalars, no token arrays.
+    df_t = Σ [tf_t > 0] equals the array_contains count
     of the tokenized form, so scores are bit-identical to bm25_scores.
 
     ``stats`` = (n_docs, avgdl, [df_0..df_{n-1}]) injects precomputed
@@ -599,13 +703,15 @@ def nlq_scores(
     res = _resident_toked(df, text_col, tokenizer, None)
     lit_stats = None
     if res is not None:
-        toked, ckey = res
-        # a clause's df memo key is its token tuple (phrase-tagged), so
-        # repeated NLQ queries reuse stats exactly like plain-term BM25
+        toked, record = res
+        # a single-token clause is keyed by its token (the complete-stats
+        # map answers it); a phrase by its token tuple, so repeated NLQ
+        # queries reuse stats exactly like plain-term BM25
         lit_stats = _resident_stats(
-            toked, ckey,
-            [(("p",) + tuple(c["tokens"]), _clause_tf("_toks", c["tokens"]))
+            toked, record,
+            [c["tokens"][0] if len(c["tokens"]) == 1 else tuple(c["tokens"])
              for c in pos],
+            lambda ck: _clause_tf("_toks", [ck] if isinstance(ck, str) else list(ck)),
         )
     else:
         toked = df.withColumn("_toks", tokenize(text_col, tokenizer)).withColumn(
@@ -700,6 +806,7 @@ def text_search(
     artifact_dir: str | None = None,
     index_name: str = "fts",
     where=None,
+    resident=_LOOKUP,
 ) -> DataFrame:
     """`textsearch` top-k: BM25 scores, ORDER BY score DESC LIMIT k
     (direction fixed-DESC as the reference enforces, TreeRewriter.cpp:1738).
@@ -712,7 +819,8 @@ def text_search(
     exists (MergeTreeIndexTantivy; the direct scan is the index-less
     fallback). Indexed and direct scores are bit-identical by construction
     (fts_search keeps the same term-ordered float summation). A missing or
-    unbuilt index falls back to the direct path."""
+    unbuilt index falls back to the direct path, which takes ``resident``
+    as ``bm25_scores`` does."""
     if k is None or k <= 0:
         raise InvalidSearchQuery("text search requires a positive LIMIT (top-k)")
     if k > MAX_SEARCH_RESULT_WINDOW:
@@ -741,7 +849,7 @@ def text_search(
                 F.col(score_name).desc(), F.col(id_col).asc()
             ).limit(k)
     # NOTE (r5 experiment, reverted): a single-tokenization variant (persist
-    # the narrow (id, dl, tf) sliver like operators/hybrid.py, then broadcast-
+    # the narrow (id, dl, tf) sliver, then broadcast-
     # join the top-k ids back for full rows) was measured at sf0.1 and did
     # NOT pay: cheap analyzers are a wash (0.81 vs 0.80 s) and derived
     # corpora (the CJK gate derives its text column per scan) REGRESS ~20%
@@ -749,7 +857,10 @@ def text_search(
     # checkpoint/join overhead stays. The two-scan plan below is the better
     # default; the artifact path (fts_index / artifact_dir routing above) is
     # the real answer when tokenization dominates.
-    scored = bm25_scores(df, text_col, query, tokenizer, operator, score_name, spec=spec)
+    scored = bm25_scores(
+        df, text_col, query, tokenizer, operator, score_name, spec=spec,
+        resident=resident,
+    )
     if where is not None:
         # ``where`` is the reference's filtered-search shape: BM25 stats
         # (df/N/avgdl) stay CORPUS-GLOBAL — the tantivy index computed them

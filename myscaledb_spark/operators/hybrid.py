@@ -16,11 +16,16 @@ Reference parity (`src/VectorIndex/Utils/HybridSearchUtils.cpp`):
         norm_dist for DESC metrics (IP) and (1 - norm_dist) for ASC metrics
         (L2/Cosine); w = fusion_weight default 0.5 (`Settings.h:919`).
 
-Spark design: the two candidate DataFrames (each already top-k′, tiny —
-≤ 3k×10000 rows) are fused with a full-outer join on the id, window-free
-min-max via a broadcast one-row agg, then global top-k. Candidate generation
-is where all the data-scale work happens and it reuses vector_topk /
-text_search (scan-local, no wide shuffle); fusion cost is O(k′).
+Spark design: candidate generation is where all the data-scale work
+happens, and it reuses the single-search primitives.  The default path
+(`hybrid_search`) runs the exact distance top-k′ and `text_search` over the
+resident tokenized corpus that text search keeps, with its complete BM25
+statistics, and collects both legs in one tagged-union job
+(`_collect_legs`); the indexed path (`hybrid_search_indexed`) takes its
+legs from the IVF/HNSW/MSTG and FTS artifacts and collects them the same
+way.  Fusion of the two ≤k′-row lists runs on the driver (`_fuse_local`),
+as the reference fuses in memory on one node; `fuse_candidates` is the
+DataFrame fusion for per-part fusion and pre-built candidate frames.
 """
 
 from __future__ import annotations
@@ -32,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from myscaledb_spark.errors import InvalidSearchQuery
-from myscaledb_spark.functions.text import text_search
+from myscaledb_spark.functions.text import _resident_toked, text_search
 from myscaledb_spark.functions.vector import METRIC_ASCENDING
 from myscaledb_spark.session import collect_small, values_relation
 
@@ -118,29 +123,21 @@ def hybrid_search(
     scans) — the reference's transparent index use once the table declares
     one; a missing/unbuilt artifact falls back to the single-scan default.
 
-    Plan shape (single corpus scan, CONCURRENT legs): one narrow projection
-    (id, distance, doc_len, per-term tf) is computed and persisted
-    (MEMORY_AND_DISK, spills at scale). The vector top-k′ leg and the text
-    leg (one-row BM25 stats agg, then scored top-k′ from the cached sliver)
-    run on two threads over the same session (r7 VERDICT ask #1) — the
-    stats job overlaps the vector scan, and the persisted sliver is
-    computed exactly once (block-level getOrElseUpdate).
-    Fusion then runs driver-side over the two ≤k′-row lists — the
-    reference fuses in-memory on one node too (HybridSearchUtils.cpp), and
-    k′ is bounded by max_search_result_window, so this is result-scale,
-    never data-scale. The indexed variant (`hybrid_search_indexed`)
-    remains the no-corpus-scan scale path.
+    Plan shape: both legs read the resident tokenized corpus that
+    ``text_search`` keeps (``text._resident_toked``) — the reference runs
+    both searches against resident index structures
+    (MergeTreeHybridSearchManager.cpp:114-151).  The vector leg is the
+    exact distance top-k′ over that frame; the text leg is ``text_search``
+    itself, whose BM25 statistics come from the corpus's complete stats
+    record, so a repeated query runs no stats pass.  Both legs are
+    collected by ONE tagged-union job (``_collect_legs``), then fused
+    driver-side over the two ≤k′-row lists — result-scale, never
+    data-scale.  A corpus above the resident gate, and a filtered frame
+    without an entry (a WHERE per query), stream both legs from ``df``, the
+    text leg with its stats pass over the filtered rows; the indexed variant (`hybrid_search_indexed`) is the
+    no-corpus-scan scale path.
     """
-    from pyspark import StorageLevel
-
-    from myscaledb_spark.functions.text import (
-        BM25_B,
-        BM25_K1,
-        term_tf,
-        tokenize,
-        tokenize_query,
-    )
-    from myscaledb_spark.functions.vector import distance
+    from myscaledb_spark.functions.vector import distance, distance_defined
     from myscaledb_spark.operators.topk import _order, _validate_k
 
     ft = fusion_type.lower()
@@ -170,108 +167,71 @@ def hybrid_search(
     kprime = k * candidate_multiple
     _validate_k(kprime)
 
-    terms = tokenize_query(qtext, tokenizer)
-    if not terms:
-        raise InvalidSearchQuery("empty text-search query after tokenization")
-
-    # narrowest projection that answers both sides: id, distance, doc length,
-    # and one tf per query term — fixed-width scalars (the token array is
-    # consumed inside the scan and never materialized), so the persisted set
-    # is a sliver of the corpus even at 100 TB
-    # TWO-level select so the token array is computed ONCE per row: a single
-    # select with size(toks) + one term_tf(toks) per term inlines the whole
-    # split/filter tokenization into every consumer (n_terms+1 evaluations
-    # per row — HOFs run interpreted, nothing de-duplicates them), while an
-    # aliased _toks referenced several times is kept as its own Project by
-    # CollapseProject's non-cheap-expression guard (measured: 4 tokenize
-    # evals/row → 1 at 3 query terms).
-    toked = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        tokenize(text_col, tokenizer).alias("_toks"),
+    # looked up here and passed to the text leg.  A filtered frame (the SQL
+    # path filters by WHERE first) gets no new entry: one per literal would
+    # tokenize and cache every filtered copy and evict other corpora, so
+    # it streams unless something else made it resident
+    res = _resident_toked(df, text_col, tokenizer, None, create=False)
+    if res is None and not _filtered(df):
+        res = _resident_toked(df, text_col, tokenizer, None)
+    corpus = df if res is None else res[0]
+    # NULL/malformed vectors have no distance and would sort FIRST
+    # ascending — the structural guard drops them, as vector_topk does
+    vec_cand = (
+        corpus.filter(distance_defined(vec_col, qvec, metric))
+        .select(F.col(id_col), distance(vec_col, qvec, metric).alias("_vdist"))
+        .orderBy(*_order(F.col("_vdist"), F.col(id_col), metric))
+        .limit(kprime)
     )
-    tf_cols = [
-        term_tf(F.col("_toks"), t).alias(f"_tf_{i}") for i, t in enumerate(terms)
-    ]
-    narrow = toked.select(
-        F.col(id_col),
-        distance(vec_col, qvec, metric).alias("_vdist"),
-        F.size("_toks").cast("double").alias("_dl"),
-        *tf_cols,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # CONCURRENT legs (r7 VERDICT ask #1): the vector top-k′ and the
-        # text leg run on two threads over the same session, so their job
-        # latencies overlap instead of serializing. Each leg keeps its
-        # terminal orderBy().limit().collect() — Spark's single-stage
-        # executeTake path (a mid-plan union would force each top-k through
-        # a shuffle). The text leg's stats agg is its own job that overlaps
-        # the vector scan; both compute the SAME persisted narrow sliver,
-        # and block-level getOrElseUpdate guarantees each partition is
-        # computed exactly once. Scoring literals are byte-identical to the
-        # r6 observe design (same agg exprs, same IEEE op order).
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _vec_leg() -> list:
-            # NULL distances (malformed vectors) would sort FIRST ascending
-            # and crowd out real neighbors — drop them, as vector_topk does.
-            return [
-                (r[0], r[1]) for r in
-                narrow.filter(F.col("_vdist").isNotNull())
-                .orderBy(*_order(F.col("_vdist"), F.col(id_col), metric))
-                .limit(kprime)
-                .select(id_col, "_vdist")
-                .collect()
-            ]
-
-        def _txt_leg() -> list:
-            stat_aggs = [
-                F.count(F.lit(1)).cast("double").alias("_n_docs"),
-                F.avg("_dl").alias("_avgdl"),
-            ] + [
-                F.sum(F.when(F.col(f"_tf_{i}") > 0, 1).otherwise(0))
-                .cast("double").alias(f"_df_{i}")
-                for i in range(len(terms))
-            ]
-            st = narrow.agg(*stat_aggs).collect()[0]
-            if st["_n_docs"] == 0.0:
-                return []
-            # same formula / float sequence as bm25_scores_from_tf, with
-            # the corpus stats inlined as literals
-            score = F.lit(0.0)
-            match_any = F.lit(False)
-            for i in range(len(terms)):
-                tf = F.col(f"_tf_{i}")
-                idf = F.log(
-                    F.lit(1.0)
-                    + (F.lit(st["_n_docs"]) - F.lit(st[f"_df_{i}"]) + F.lit(0.5))
-                    / (F.lit(st[f"_df_{i}"]) + F.lit(0.5))
-                )
-                norm = tf * (BM25_K1 + 1.0) / (
-                    tf + BM25_K1
-                    * (1.0 - BM25_B + BM25_B * F.col("_dl") / F.lit(st["_avgdl"]))
-                )
-                score = score + F.when(tf > 0, idf * norm).otherwise(F.lit(0.0))
-                match_any = match_any | (tf > 0)
-            return [
-                (r[0], r[1]) for r in
-                narrow.withColumn("_bm25", score)
-                .filter(match_any)
-                .orderBy(F.col("_bm25").desc(), F.col(id_col).asc())
-                .limit(kprime)
-                .select(id_col, "_bm25")
-                .collect()
-            ]
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            vf, tf_ = pool.submit(_vec_leg), pool.submit(_txt_leg)
-            vec_rows, txt_rows = vf.result(), tf_.result()
-    finally:
-        narrow.unpersist()
+    txt_cand = text_search(
+        df, text_col, qtext, kprime, id_col, tokenizer, score_name="_bm25",
+        resident=res,
+    ).select(id_col, "_bm25")
+    id_type, vec_rows, txt_rows = _collect_legs(vec_cand, txt_cand, id_col)
     return _fuse_local(
-        df.sparkSession, df.schema[id_col].dataType, vec_rows, txt_rows, k,
+        df.sparkSession, id_type, vec_rows, txt_rows, k,
         id_col, ft, metric, fusion_weight, fusion_k, score_name,
     )
+
+
+def _filtered(df: DataFrame) -> bool:
+    """Whether ``df``'s analyzed plan filters rows (True when unknown)."""
+    try:
+        jvm = df.sparkSession._jvm
+        pattern = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.FILTER()
+        return bool(df._jdf.queryExecution().analyzed().containsPattern(pattern))
+    except Exception:
+        return True
+
+
+def _collect_legs(vec_cand: DataFrame, txt_cand: DataFrame, id_col: str):
+    """(id type, [(id, _vdist)], [(id, _bm25)]) of two candidate frames,
+    collected by ONE job.  The legs are tiny top-k subtrees; collecting
+    them separately paid two job schedulings and two py4j round trips per
+    query.  A tagged union keeps each leg's own top-k (per-leg semantics
+    and normalization order unchanged — rows are re-split by the tag), so
+    the two lists are exactly what two collects return.  Below the
+    small-input gate the job runs with AQE off and one shuffle partition:
+    AQE's per-stage re-planning jobs cost more than a ≤2k′-row result's
+    whole data path; above it the adaptive plan runs unchanged."""
+    id_type = vec_cand.schema[id_col].dataType
+    tagged = vec_cand.select(
+        F.col(id_col).alias("_id"),
+        F.col("_vdist").alias("_score"),
+        F.lit(0).alias("_leg"),
+    ).unionAll(
+        txt_cand.select(
+            F.col(id_col).cast(id_type).alias("_id"),
+            F.col("_bm25").alias("_score"),
+            F.lit(1).alias("_leg"),
+        )
+    )
+    rows = collect_small(tagged, **{"spark.sql.shuffle.partitions": "1"})
+    if rows is None:
+        rows = tagged.collect()
+    vec_rows = [(r[0], r[1]) for r in rows if r[2] == 0]
+    txt_rows = [(r[0], r[1]) for r in rows if r[2] == 1]
+    return id_type, vec_rows, txt_rows
 
 
 def _fuse_local(
@@ -419,8 +379,8 @@ def hybrid_search_indexed(
     prebuilt IVF/HNSW/MSTG artifact (partition-pruned / graph search instead
     of a full scan); text candidates from the FTS postings artifact when
     ``fts_name`` is given (term-pruned postings scan, `plans/fts_index.py` —
-    then NO query touches the corpus at all, vs the default path's 3 corpus
-    scans), else direct BM25 over ``df``. Fusion is identical to
+    then NO query touches the corpus at all, vs the default path's scan of
+    the resident corpus), else direct BM25 over ``df``. Fusion is identical to
     hybrid_search. search_params pass through (nprobe=, ef_search=,
     probe_top=...). With exhaustive search params (nprobe=ncentroids) both
     candidate lists equal the brute-force lists bit-for-bit, which is how
@@ -468,43 +428,10 @@ def hybrid_search_indexed(
         txt_cand = text_search(
             df, text_col, qtext, kprime, id_col, tokenizer, score_name="_bm25"
         ).select(id_col, "_bm25")
-    # ONE fused job for both candidate legs (r10 VERDICT ask #1): the legs
-    # are tiny top-k subtrees over different artifact frames, and running
-    # them as two thread-concurrent collects paid two full job schedulings
-    # + two py4j collect round-trips per query — the 8-core bench beating
-    # 32 cores proved the cost was scheduling, not compute.  A tagged
-    # union keeps each leg's own TakeOrderedAndProject (per-leg top-k
-    # semantics and normalization order unchanged — rows are re-split by
-    # the tag before fusion, so _fuse_local sees exactly the two lists the
-    # two collects produced), while the driver schedules ONE job and pulls
-    # ONE ≤2k′-row result. Driver-side fusion (_fuse_local: identical
-    # float sequence to fuse_candidates) stays — distributing a
-    # ≤max_search_result_window-row fuse costs ~4 extra Spark jobs per
-    # query, exactly as the r6 default-path rework measured.
     ft = fusion_type.lower()
     if ft not in ("rsf", "rrf"):
         raise InvalidSearchQuery(f"fusion_type must be rsf|rrf, got {fusion_type!r}")
-    id_type = vec_cand.schema[id_col].dataType
-    tagged = vec_cand.select(
-        F.col(id_col).alias("_id"),
-        F.col("_vdist").alias("_score"),
-        F.lit(0).alias("_leg"),
-    ).unionAll(
-        txt_cand.select(
-            F.col(id_col).cast(id_type).alias("_id"),
-            F.col("_bm25").alias("_score"),
-            F.lit(1).alias("_leg"),
-        )
-    )
-    # AQE off and one shuffle partition below the estimate gate: AQE's
-    # per-stage re-planning jobs cost more than a ≤2k′-row fuse's whole
-    # data path; at 100 TB a selective-term postings subtree exceeds the
-    # gate and the adaptive plan runs unchanged
-    rows = collect_small(tagged, **{"spark.sql.shuffle.partitions": "1"})
-    if rows is None:
-        rows = tagged.collect()
-    vec_rows = [(r[0], r[1]) for r in rows if r[2] == 0]
-    txt_rows = [(r[0], r[1]) for r in rows if r[2] == 1]
+    id_type, vec_rows, txt_rows = _collect_legs(vec_cand, txt_cand, id_col)
     return _fuse_local(
         spark, id_type, vec_rows, txt_rows, k,
         id_col, ft, metric, fusion_weight, fusion_k, score_name,

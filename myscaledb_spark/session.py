@@ -25,14 +25,18 @@ ENGINE_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # PySpark 4 captures the Python call site for EVERY DataFrame API call
-    # (pyspark.errors.utils._capture_call_site walks the stack) to decorate
-    # error messages with a query context.  On plan-building-heavy paths
-    # this is a pure driver-side tax — measured 31% of the dialect INSERT
-    # path (0.70 → 0.48 s) and ~17% of a cProfile of ch_script.  Errors
-    # keep their full JVM message; only the DataFrame call-site decoration
-    # is dropped.
+    # DataFrame query context: error messages decorated with the call site
+    # of the DataFrame API call.  Two switches.  The JVM one stops Catalyst
+    # from attaching the context.  The Python one stops PySpark 4's
+    # ``_with_origin`` wrapper, which on EVERY Column function walks the
+    # stack (``pyspark.errors.utils._capture_call_site``) and sends the
+    # call site to the JVM — extra py4j calls on every call (building a SQL
+    # textsearch plan over a 5,000-doc view: 1,263 py4j calls with it, 332
+    # without).  PySpark reads the Python switch from the active session
+    # once per process.  Errors keep their full JVM message; only the
+    # call-site decoration is dropped.
     "spark.sql.dataFrameQueryContext.enabled": "false",
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",

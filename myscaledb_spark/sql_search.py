@@ -32,7 +32,9 @@ Semantics notes:
     ``1``/``2`` without quoting).
 
 Everything executes as the operators' DataFrame plans — Catalyst sees the
-same declarative shape as the API path; this module is parsing only.
+same declarative shape as the API path; this module is parsing only.  The
+one exception is an ORDER BY over an already-local result (a hybrid search's
+fused rows), which sorts on the driver with Spark's ordering.
 """
 
 from __future__ import annotations
@@ -385,14 +387,62 @@ def _apply_order(df: DataFrame, alias: str, order_text: str | None, id_col: str)
             f"first ORDER BY key must be {alias} DESC (scores rank "
             "descending; ASC would invert the metric direction)"
         )
-    cols = [F.col(alias).desc()]
+    keys = [(alias, True)]
     for p in parts[1:]:
         om = re.fullmatch(r"(" + _IDENT + r")(?:\s+(ASC|DESC))?", p, re.IGNORECASE)
         if om is None:
             raise ChSqlError(f"unsupported ORDER BY key {p!r}")
-        c = F.col(om.group(1))
-        cols.append(c.desc() if (om.group(2) or "").upper() == "DESC" else c.asc())
-    return df.orderBy(*cols)
+        keys.append((om.group(1), (om.group(2) or "").upper() == "DESC"))
+    local = _sorted_local(df, keys)
+    if local is not None:
+        return local
+    return df.orderBy(*[F.col(c).desc() if d else F.col(c).asc() for c, d in keys])
+
+
+def _sort_key(v):
+    """Spark's ascending order of one value: NULL first, NaN after every
+    other double, -0.0 equal to 0.0 (``v + 0.0`` folds the sign)."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float):
+        return (2,) if v != v else (1, v + 0.0)
+    return (1, v)
+
+
+def _sorted_local(df: DataFrame, keys: list) -> DataFrame | None:
+    """``df`` sorted by ``keys`` [(column, descending)] on the driver and
+    re-emitted as a VALUES relation, when ``df`` is already a local relation
+    (the fused rows of a hybrid search) — Spark would plan an adaptive
+    range-partitioned sort of ≤k rows, three jobs.  Ordering is Spark's:
+    ASC NULLS FIRST, DESC NULLS LAST, NaN largest, -0.0 equal to 0.0; rows
+    that tie on every key keep their order.  None when ``df`` is not local
+    or a key is not one of its string/integral/double columns."""
+    from myscaledb_spark.session import values_relation
+    from pyspark.sql import types as T
+
+    try:
+        qe = df._jdf.queryExecution()
+        # the analyzed plan's one leaf first: no optimizer run for a scan
+        leaves = qe.analyzed().collectLeaves()
+        if leaves.size() != 1 or leaves.head().nodeName() != "LocalRelation":
+            return None
+        if qe.optimizedPlan().nodeName() != "LocalRelation":
+            return None
+    except Exception:
+        return None
+    names = df.columns
+    sortable = (T.StringType, T.ByteType, T.ShortType, T.IntegerType,
+                T.LongType, T.DoubleType)
+    if len(set(names)) != len(names) or any(
+        c not in names or not isinstance(df.schema[c].dataType, sortable)
+        for c, _ in keys
+    ):
+        return None
+    rows = df.collect()
+    for c, desc in reversed(keys):  # stable sorts, last key first
+        i = names.index(c)
+        rows.sort(key=lambda r: _sort_key(r[i]), reverse=desc)
+    return values_relation(df.sparkSession, df.schema, rows)
 
 
 def _fts_text_frame(spark: SparkSession, table: str, df: DataFrame):
@@ -793,10 +843,6 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
             from myscaledb_spark.functions.vector import distance
             from myscaledb_spark.plans.table_ddl import EXISTS, ISEQ, TABLES
 
-            qvec = _parse_vec_literal(args[2])
-            vec_col = _ident_arg(args[0], "hybridsearch vector column")
-            text_col = _ident_arg(args[1], "hybridsearch text column")
-            qtext = _text_arg(spark, args[3], "hybridsearch")
             from pyspark.sql import Window
 
             store_df = spark.table(f"{table}__store").withColumn(

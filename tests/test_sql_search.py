@@ -145,3 +145,191 @@ def test_search_sql_rejects_trailing_text_after_limit(spark):
             "SELECT id, textsearch(doc, 'a') AS b FROM t_search "
             "ORDER BY b DESC LIMIT 3 OFFSET 2",
         )
+
+
+def _jobs(spark, group: str, fn):
+    """(result of fn, Spark jobs it ran): its job group plus any job started
+    meanwhile without a group (a thread that did not inherit it)."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    before = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    ids = set(st.getJobIdsForGroup(group)) | (set(st.getJobIdsForGroup(None)) - before)
+    return out, len(ids)
+
+
+_WORDS = ("ancient", "artistic", "strategic", "wisdom", "empires", "cultures",
+          "campaigns", "philosophies", "military", "rise")
+
+
+def _pin_view(spark, name, path):
+    """A 40-doc parquet-backed view (a frame built from a Python list is an
+    RDD scan of unknown size, which never gets a resident corpus)."""
+    rows = [
+        (i, " ".join(_WORDS[(i * j) % len(_WORDS)] for j in range(1, 4 + i % 5)),
+         [float(i % 7), float(i % 3), float(i % 5)])
+        for i in range(40)
+    ]
+    spark.createDataFrame(
+        rows, "id long, doc string, vector array<double>"
+    ).coalesce(1).write.parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView(name)
+
+
+def _textsearch_sql(view, words):
+    return (f"SELECT id, textsearch(doc, '{words}') AS s FROM {view} "
+            "ORDER BY s DESC LIMIT 5")
+
+
+def _hybridsearch_sql(view, words):
+    return (f"SELECT id, hybridsearch('fusion_type=rsf')(vector, doc, "
+            f"[1.0, 2.0, 0.5], '{words}') AS s FROM {view} "
+            "ORDER BY s DESC, id LIMIT 5")
+
+
+def test_sql_text_and_hybrid_search_run_one_job(spark, tmp_path):
+    """After a warm-up query on a table, SQL textsearch and hybridsearch with
+    fresh terms run exactly one Spark job each: both read the resident
+    tokenized corpus with its complete BM25 stats, hybridsearch collects its
+    legs in one job, and the ORDER BY over its fused rows sorts on the
+    driver.  The first text op builds the corpus and its stats in one more
+    job.  (A per-query stats pass, a two-thread hybrid and a Spark sort of
+    the fused rows ran 4 jobs there, then 3 and 8 per query.)"""
+    _pin_view(spark, "t_pin_jobs", str(tmp_path / "t_pin_jobs"))
+    first, n_first = _jobs(
+        spark, "pin-first",
+        lambda: ch_sql(spark, _textsearch_sql("t_pin_jobs", "ancient")).collect(),
+    )
+    assert first and n_first <= 2
+    _, n_text = _jobs(
+        spark, "pin-text",
+        lambda: ch_sql(spark, _textsearch_sql("t_pin_jobs", "wisdom rise")).collect(),
+    )
+    _, n_hybrid = _jobs(
+        spark, "pin-hybrid",
+        lambda: ch_sql(spark, _hybridsearch_sql("t_pin_jobs", "military cultures")).collect(),
+    )
+    assert (n_text, n_hybrid) == (1, 1)
+
+
+def _key_groups(rows, idx):
+    """Rows split into runs that tie on every key; -0.0 and 0.0 tie, NaN
+    ties with NaN.  Each run is its key plus its rows as a sorted list."""
+    def norm(v):
+        return repr(v + 0.0) if isinstance(v, float) else repr(v)
+
+    out = []
+    for r in rows:
+        key = tuple(norm(r[i]) for i in idx)
+        if out and out[-1][0] == key:
+            out[-1][1].append(repr(tuple(r)))
+        else:
+            out.append((key, [repr(tuple(r))]))
+    return [(k, sorted(v)) for k, v in out]
+
+
+def test_driver_order_by_equals_spark_sort(spark):
+    """_apply_order over a local relation sorts on the driver with Spark's
+    ordering (ASC NULLS FIRST, DESC NULLS LAST, NaN largest, -0.0 == 0.0)
+    and runs no job; the rows equal Spark's Sort of the same VALUES rows."""
+    from pyspark.sql import types as T
+
+    from myscaledb_spark.session import values_relation
+    from myscaledb_spark.sql_search import _apply_order
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()), T.StructField("s", T.DoubleType()),
+        T.StructField("name", T.StringType()),
+    ])
+    nan = float("nan")
+    rows = [(3, 1.0, "a"), (None, 1.0, "b"), (1, nan, "c"), (2, -0.0, "d"),
+            (5, 0.0, "e"), (4, None, "f"), (7, 1.0, "g"), (6, nan, "h"),
+            (None, None, "i"), (8, 2.5, "é"), (9, -3.0, "a"), (10, 1.0, None),
+            (None, nan, "k"), (-1, 0.0, "d")]
+    local = values_relation(spark, schema, rows)
+    for order, keys in [
+        ("s DESC", [("s", True)]),
+        ("s DESC, id", [("s", True), ("id", False)]),
+        ("s DESC, id ASC", [("s", True), ("id", False)]),
+        ("s DESC, id DESC", [("s", True), ("id", True)]),
+        ("s DESC, name DESC, id", [("s", True), ("name", True), ("id", False)]),
+    ]:
+        got, n = _jobs(
+            spark, "pin-order", lambda: _apply_order(local, "s", order, "id").collect()
+        )
+        assert n == 0
+        want = spark.createDataFrame(rows, schema).repartition(3).orderBy(
+            *[F.col(c).desc() if d else F.col(c).asc() for c, d in keys]
+        ).collect()
+        idx = [schema.names.index(c) for c, _ in keys]
+        assert _key_groups(got, idx) == _key_groups(want, idx)
+
+
+def test_resident_corpus_follows_rewritten_input(spark, tmp_path, monkeypatch):
+    """Overwriting a view's parquet through Spark and re-registering the view
+    must not serve the old corpus's BM25 stats: textsearch and hybridsearch
+    equal a run that streams the corpus with no resident entry."""
+    from myscaledb_spark.functions import text as T
+
+    path = str(tmp_path / "t_fresh")
+    schema = "id long, doc string, vec array<double>"
+    docs = [(1, "apple pie", [1.0, 0.0]), (2, "banana split", [0.0, 1.0]),
+            (3, "cherry tart", [1.0, 1.0]), (4, "date loaf", [0.5, 0.5])]
+    text_q = "SELECT id, textsearch(doc, 'apple') AS s FROM t_fresh ORDER BY s DESC LIMIT 3"
+    hybrid_q = ("SELECT id, hybridsearch('fusion_type=rsf')(vec, doc, [1.0, 0.0], "
+                "'apple') AS s FROM t_fresh ORDER BY s DESC, id LIMIT 3")
+
+    def run():
+        return [[tuple(r) for r in ch_sql(spark, q).collect()] for q in (text_q, hybrid_q)]
+
+    spark.createDataFrame(docs, schema).write.mode("overwrite").parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView("t_fresh")
+    run()
+    docs.append((5, "apple crumble with apple", [0.9, 0.1]))
+    spark.createDataFrame(docs, schema).write.mode("overwrite").parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView("t_fresh")
+    after = run()
+    monkeypatch.setattr(T, "_TOKED_MEMO_MAX_BYTES", 0)  # no resident corpus
+    assert after == run()
+    assert after[0][0][0] == 5
+
+
+def test_per_part_hybridsearch_evaluates_text_subquery_once(spark, monkeypatch):
+    """A hybridsearch over a 2-part ch_ddl table with a scalar-subquery text
+    argument evaluates the subquery once."""
+    from myscaledb_spark import sql_search
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    calls = []
+    text_arg = sql_search._text_arg
+    monkeypatch.setattr(
+        sql_search, "_text_arg",
+        lambda *a: calls.append(a[1]) or text_arg(*a),
+    )
+    spark.createDataFrame([("ancient",)], "kw string").createOrReplaceTempView("t_pp_kw")
+    ch_script(
+        spark,
+        """
+        DROP TABLE IF EXISTS t_pp;
+        CREATE TABLE t_pp(id UInt64, vector Array(Float32), doc String,
+            INDEX inv_idx(doc) TYPE fts GRANULARITY 1) ENGINE = MergeTree ORDER BY id;
+        INSERT INTO t_pp VALUES (0, [0,0,0], 'ancient empires rise'), (1, [1,1,1], 'artistic cultures');
+        INSERT INTO t_pp VALUES (2, [2,2,2], 'ancient wisdom'), (3, [3,3,3], 'military campaigns');
+        """,
+    )
+    try:
+        rows = ch_sql(
+            spark,
+            "SELECT id, hybridsearch('fusion_type=rsf')(vector, doc, [1.0, 1, 1], "
+            "(SELECT kw FROM t_pp_kw LIMIT 1)) AS s FROM t_pp "
+            "ORDER BY s DESC, id LIMIT 3",
+        ).collect()
+    finally:
+        ch_script(spark, "DROP TABLE t_pp")
+    assert rows and len(calls) == 1

@@ -353,3 +353,258 @@ def test_hybrid_search_indexed_matches_bruteforce(spark, tmp_path):
     assert [(r.doc_id, r.fusion_score) for r in brute] == [
         (r.doc_id, r.fusion_score) for r in indexed
     ]
+
+
+def _hybrid_corpus(spark):
+    """documents ⋈ embeddings plus a NULL-vector row and a short-vector row
+    whose texts match the query (the structural guard must drop both)."""
+    d = spark.table("documents")
+    e = spark.table("embeddings")
+    base = d.join(e, d.doc_id == e.vec_id).select("doc_id", "text", "embedding")
+    extra = spark.sql(
+        "SELECT CAST(1000000 AS BIGINT) AS doc_id, 'vector search fast' AS text, "
+        "CAST(NULL AS ARRAY<FLOAT>) AS embedding UNION ALL "
+        "SELECT CAST(1000001 AS BIGINT), 'fast vector search engine', "
+        "array_repeat(CAST(0.5 AS FLOAT), 63)"
+    )
+    return base.unionByName(extra)
+
+
+@pytest.mark.parametrize("kind", ["rsf", "rrf"])
+def test_hybrid_search_equals_fused_independent_legs(spark, kind):
+    """hybrid_search (resident corpus, one tagged-union collect) equals
+    _fuse_local over separately collected vector_topk and text_search legs,
+    bit for bit — including a query term absent from the corpus."""
+    from myscaledb_spark.operators.hybrid import _fuse_local
+    from myscaledb_spark.operators.topk import vector_topk
+
+    from myscaledb_spark.functions.text import _resident_toked
+
+    df = _hybrid_corpus(spark)
+    assert _resident_toked(df, "text", "simple", None) is not None
+    q = np.random.default_rng(11).standard_normal(64).tolist()
+    k = 8
+    for query in (QUERY, QUERY + " zzqabsentterm"):
+        got = hybrid_search(
+            df, "embedding", "text", q, query, k, "doc_id", fusion_type=kind
+        ).collect()
+        vec = [(r["doc_id"], r["dist"]) for r in
+               vector_topk(df, "embedding", q, k, id_col="doc_id").collect()]
+        txt = [(r["doc_id"], r["bm25_score"]) for r in
+               text_search(df, "text", query, k, id_col="doc_id").collect()]
+        assert 1_000_000 not in {i for i, _ in vec}
+        assert 1_000_001 not in {i for i, _ in vec}
+        want = _fuse_local(
+            spark, df.schema["doc_id"].dataType, vec, txt, k, "doc_id", kind
+        ).collect()
+        assert [(r[0], r[1]) for r in got] == [(r[0], r[1]) for r in want]
+
+
+def test_complete_stats_record_equals_per_term_agg(spark):
+    """The first stats request on a resident corpus records N, avgdl and the
+    df of every token; each equals the per-term agg over the resident frame
+    bit for bit, and an absent term has df 0.0."""
+    from pyspark.sql import functions as F
+
+    from myscaledb_spark.functions import text as T
+
+    # its own entry, with a NULL text, an empty one and one without tokens
+    df = spark.table("documents").filter("doc_id % 3 = 0").select("doc_id", "text")
+    df = df.unionByName(spark.sql(
+        "SELECT CAST(-1 AS BIGINT) AS doc_id, CAST(NULL AS STRING) AS text "
+        "UNION ALL SELECT CAST(-2 AS BIGINT), '' UNION ALL SELECT CAST(-3 AS BIGINT), '!?'"
+    ))
+    resident, record = T._resident_toked(df, "text", "simple", None)
+    n, avgdl, dfs = T._resident_stats(
+        resident, record, ["vector", "zzqabsentterm"],
+        lambda t: T.term_tf("_toks", t),
+    )
+    vocab = sorted(r[0] for r in resident.select(F.explode("_toks")).distinct().collect())
+    assert sorted(record["terms"]) == vocab
+    base = resident.agg(
+        F.count(F.lit(1)).cast("double"), F.avg("_dl"),
+        F.sum(F.when(T.term_tf("_toks", "zzqabsentterm") > 0, 1).otherwise(0)).cast("double"),
+    ).collect()[0]
+    assert (record["n"], record["avgdl"]) == (base[0], base[1])
+    assert (n, avgdl) == (base[0], base[1])
+    assert dfs[1] == base[2] == 0.0
+    for lo in range(0, len(vocab), 200):
+        chunk = vocab[lo:lo + 200]
+        row = resident.agg(*[
+            F.sum(F.when(T.term_tf("_toks", t) > 0, 1).otherwise(0)).cast("double")
+            for t in chunk
+        ]).collect()[0]
+        assert [record["terms"][t] for t in chunk] == list(row)
+    assert dfs[0] == record["terms"]["vector"]
+
+
+def test_resident_scores_equal_streaming_scores(spark, monkeypatch):
+    """Scores from the resident corpus (complete stats, phrase clauses on the
+    per-clause path) equal the streaming plan's per-query stats pass, for
+    plain BM25 and for an NLQ query with a phrase, bit for bit."""
+    from myscaledb_spark.functions import text as T
+
+    df = spark.table("documents")
+    queries = [("bm25", QUERY), ("nlq", '"merge join" fast +spark'),
+               ("nlq", '"data slow" window -vector')]
+
+    def run():
+        out = []
+        for kind, q in queries:
+            if kind == "bm25":
+                s = T.text_search(df, "text", q, 20, id_col="doc_id")
+            else:
+                s = T.nlq_search(df, "text", q, 20, id_col="doc_id")
+            out.append([(r["doc_id"], r["bm25_score"]) for r in s.collect()])
+        return out
+
+    assert T._resident_toked(df, "text", "simple", None) is not None
+    resident = run()
+    monkeypatch.setattr(T, "_TOKED_MEMO_MAX_BYTES", 0)  # stream every query
+    assert T._resident_toked(df, "text", "simple", None) is None
+    assert resident == run()
+    assert all(resident)
+
+
+def test_textsearch_plan_skips_call_site_capture(spark, monkeypatch):
+    """The session turns off PySpark's per-call stack capture: building a
+    textsearch plan never calls _capture_call_site."""
+    import pyspark.errors.utils as eu
+
+    calls = []
+    monkeypatch.setattr(eu, "_enable_debugging_cache", None)  # re-read the conf
+    monkeypatch.setattr(
+        eu, "_capture_call_site", lambda depth: calls.append(depth) or ""
+    )
+    text_search(spark.table("documents"), "text", QUERY, 5, id_col="doc_id")
+    assert calls == []
+
+
+def test_stats_memo_bound_keeps_current_query_clauses(spark, monkeypatch):
+    """When the per-clause df memo overflows its bound mid-query, the
+    clauses of the current query that were already memoized survive the
+    eviction (clearing them raised KeyError)."""
+    from myscaledb_spark.functions import text as T
+
+    monkeypatch.setattr(T, "_BM25_STATS_MAX_TERMS", 2)
+    df = spark.table("documents").filter("doc_id % 5 = 1")  # its own entry
+    want = {}
+    for q in ('"data slow"', '"data slow" "merge join" "scan a"'):
+        want[q] = [(r["doc_id"], r["bm25_score"])
+                   for r in T.nlq_search(df, "text", q, 10, id_col="doc_id").collect()]
+    assert all(want.values())
+    monkeypatch.setattr(T, "_TOKED_MEMO_MAX_BYTES", 0)  # streaming reference
+    for q, rows in want.items():
+        assert rows == [(r["doc_id"], r["bm25_score"])
+                        for r in T.nlq_search(df, "text", q, 10, id_col="doc_id").collect()]
+
+
+def test_input_fingerprint_tracks_rewrites(spark, tmp_path):
+    """The resident-corpus fingerprint lists every input file with its size
+    and mtime, and changes when the input is rewritten."""
+    from myscaledb_spark.functions.text import _input_fingerprint
+
+    path = str(tmp_path / "fp")
+    spark.range(3).write.parquet(path)
+    before = _input_fingerprint(spark.read.parquet(path))
+    assert [f for f, _, _ in before] == sorted(spark.read.parquet(path).inputFiles())
+    assert all(size > 0 and mtime > 0 for _, size, mtime in before)
+    spark.range(5).write.mode("overwrite").parquet(path)
+    assert _input_fingerprint(spark.read.parquet(path)) != before
+
+
+def test_corpus_stats_over_the_vocabulary_bound_keep_scores(spark, monkeypatch):
+    """A corpus with more tokens than the complete-stats bound records no
+    token map (the collect stops one row past the bound) and answers from
+    the per-clause path; scores equal the streaming plan's, bit for bit."""
+    from myscaledb_spark.functions import text as T
+
+    monkeypatch.setattr(T, "_CORPUS_STATS_MAX_TERMS", 3)
+    df = spark.table("documents").filter("doc_id % 7 = 2")  # its own entry
+    queries = [("bm25", QUERY), ("nlq", '"merge join" fast +spark')]
+
+    def run():
+        out = []
+        for kind, q in queries:
+            search = T.text_search if kind == "bm25" else T.nlq_search
+            s = search(df, "text", q, 20, id_col="doc_id")
+            out.append([(r["doc_id"], r["bm25_score"]) for r in s.collect()])
+        return out
+
+    resident, record = T._resident_toked(df, "text", "simple", None)
+    assert T._corpus_stats(resident) is None
+    capped = run()
+    assert "terms" not in record and record["n"] > 0
+    monkeypatch.setattr(T, "_TOKED_MEMO_MAX_BYTES", 0)  # stream every query
+    assert capped == run()
+    assert all(capped)
+
+
+def test_unfingerprintable_rewrite_drops_the_stale_corpus(spark, tmp_path, monkeypatch):
+    """An input rewritten outside Spark whose files cannot be fingerprinted
+    streams, and its old resident entry is unpersisted first: otherwise
+    Spark's cache manager serves the streaming NLQ plan (the same tokenize
+    projection over the same root path) from the old cached corpus."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from myscaledb_spark.functions import text as T
+
+    path = tmp_path / "t_nofp"
+    path.mkdir()
+    docs = [(1, "apple pie"), (2, "banana split"), (3, "cherry tart"),
+            (4, "date loaf")]
+    q = '"apple crumble" apple'
+
+    def write(name):
+        for f in os.listdir(path):
+            os.remove(path / f)
+        ids, texts = zip(*docs)
+        pq.write_table(pa.table({"id": list(ids), "doc": list(texts)}),
+                       str(path / name))
+
+    def run():
+        df = spark.read.parquet(str(path))
+        return [(r["id"], r["bm25_score"]) for r in
+                T.nlq_search(df, "doc", q, 5, id_col="id").collect()]
+
+    write("a.parquet")
+    assert T._resident_toked(spark.read.parquet(str(path)), "doc", "simple", None)
+    before = run()
+    docs.append((5, "apple crumble with apple"))
+    write("b.parquet")
+    monkeypatch.setattr(T, "_input_fingerprint", lambda df: None)
+    after = run()
+    for entry in T._TOKED_MEMO.pop(spark, {}).values():
+        entry[0].unpersist()
+    spark.catalog.clearCache()
+    assert after == run() != before
+    assert after[0][0] == 5
+
+
+def test_filtered_hybrid_search_streams_without_an_entry(spark):
+    """hybrid_search over a filtered frame without a resident entry streams
+    both legs (no new entry: a WHERE per query would cache every filtered
+    copy), with its BM25 stats over the filtered rows, and equals _fuse_local
+    over independently collected legs of that frame."""
+    from myscaledb_spark.functions import text as T
+    from myscaledb_spark.operators.hybrid import _fuse_local
+    from myscaledb_spark.operators.topk import vector_topk
+
+    df = _hybrid_corpus(spark).filter("doc_id % 2 = 0")
+    entries = dict(T._TOKED_MEMO.get(spark, {}))
+    q = np.random.default_rng(12).standard_normal(64).tolist()
+    k = 8
+    got = hybrid_search(df, "embedding", "text", q, QUERY, k, "doc_id").collect()
+    assert dict(T._TOKED_MEMO.get(spark, {})) == entries
+    vec = [(r["doc_id"], r["dist"]) for r in
+           vector_topk(df, "embedding", q, k, id_col="doc_id").collect()]
+    txt = [(r["doc_id"], r["bm25_score"]) for r in
+           T.text_search(df, "text", QUERY, k, id_col="doc_id",
+                         resident=None).collect()]
+    want = _fuse_local(
+        spark, df.schema["doc_id"].dataType, vec, txt, k, "doc_id", "rsf"
+    ).collect()
+    assert [(r[0], r[1]) for r in got] == [(r[0], r[1]) for r in want]
