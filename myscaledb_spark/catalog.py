@@ -8,10 +8,12 @@ partitioned Delta/Parquet tables registered in a metastore.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from myscaledb_spark import memo
 from myscaledb_spark.session import estimated_bytes
 
 TABLES = (
@@ -61,34 +63,29 @@ def _tz_normalize(dt):
     return dt, False
 
 
-#: per-session plan memo: building the scan plan (footer read + schema
-#: normalization + py4j round trips) costs ~0.1-0.15 s per call — pure
-#: fixed overhead the bench pays on EVERY gate invocation (multi-join
-#: gates paid it 5×). DataFrames are immutable plans, so reuse is safe;
-#: WeakKeyDictionary lets a stopped session's entries be collected.
-_LOAD_MEMO = None
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    global _LOAD_MEMO
-    import weakref
+    """The normalized scan of ``<sf_dir>/<name>.parquet``.  Building it
+    (footer read + schema normalization + py4j round trips) costs about
+    0.1-0.15 s, which every gate invocation would pay per table, so the
+    plan is memoized per session under the file's listing (``memo.py``)."""
+    from myscaledb_spark.plans.frame_cache import data_files
 
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    files = data_files(path) if os.path.exists(path) else None  # remote: no memo
+    key = (os.path.abspath(sf_dir), name)
+    build = functools.partial(_load, spark, path, name)
+    return memo.get(spark, "load_table", key, files, build, slots=64) or build()
+
+
+def _load(spark: SparkSession, path: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
-
-    if _LOAD_MEMO is None:
-        _LOAD_MEMO = weakref.WeakKeyDictionary()
-    per_session = _LOAD_MEMO.setdefault(spark, {})
-    key = (os.path.abspath(sf_dir), name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
 
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(path)
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         # Legacy path only: applies if the data generator ever emits
         # TIMESTAMP(NANOS) (read as ns-long under nanosAsLong).  Current
@@ -104,7 +101,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         new_type, changed = _tz_normalize(f.dataType)
         if changed:
             df = df.withColumn(f.name, F.col(f.name).cast(new_type))
-    per_session[key] = df
     return df
 
 

@@ -23,8 +23,9 @@ no shuffle of tokens) cross-joined broadcast-style into (b) a per-row
 expression computing tf from the token array. Everything is JVM higher-order
 functions inside codegen; the only wide op is the final top-k
 (TakeOrderedAndProject). A corpus under 8 GB stays resident per session in
-tokenized form (`_resident_toked`), with N, avgdl and the df of every token
-computed once (`_corpus_stats`), so a repeated query is one scoring job.
+tokenized form (`_resident_toked`; the memo layer is `memo.py`), with N,
+avgdl and the df of every token computed once (`_corpus_stats`), so a
+repeated query is one scoring job.
 For repeated querying at scale, persist doc-length + posting stats once
 (plans/fts_index.py) instead of re-scanning.
 """
@@ -36,6 +37,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from myscaledb_spark import memo
 from myscaledb_spark.errors import InvalidSearchQuery, MAX_SEARCH_RESULT_WINDOW
 from myscaledb_spark.session import collect_small, estimated_bytes
 
@@ -174,95 +176,49 @@ def tokenize_query(
     return list(seen)
 
 
-#: per-session resident tokenized corpora (weak keys: stopped sessions
-#: collect).  Each value is an insertion-ordered dict capped at
-#: _TOKED_MEMO_SLOTS entries — several corpora/tokenizers legitimately
-#: coexist in one session (simple + stopword-spec + CJK gates).  An entry is
-#: (persisted frame, BM25 stats record), so the stats leave with the corpus.
-import weakref as _weakref
-
-_TOKED_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-_TOKED_MEMO_SLOTS = 8
 #: only corpora under this estimated input size get a resident cache —
 #: the same cost-gate shape as the grouped-t-digest auto switch.  Above
 #: it, direct search stays a streaming scan (the FTS postings artifact is
 #: the intended scale path for repeated queries — build the index).
-_TOKED_MEMO_MAX_BYTES = 8 << 30
-
-
-def _input_fingerprint(df: DataFrame) -> tuple | None:
-    """(path, size, mtime) of every file ``df`` reads, sorted, from its
-    Hadoop FileSystem status (any scheme), or None when one of them cannot
-    be stat'ed.  The analyzed plan of a re-registered view over an
-    overwritten directory hashes the same as before; its files do not."""
-    spark = df.sparkSession
-    out = []
-    try:
-        conf = spark._jsc.hadoopConfiguration()
-        Path = spark._jvm.org.apache.hadoop.fs.Path
-        for f in sorted(df.inputFiles()):
-            path = Path(f)
-            st = path.getFileSystem(conf).getFileStatus(path)
-            out.append((f, st.getLen(), st.getModificationTime()))
-    except Exception:
-        return None
-    return tuple(out)
+_RESIDENT_MAX_BYTES = 8 << 30
 
 
 def _resident_toked(
     df: DataFrame, text_col: str, tokenizer: str, spec, create: bool = True
 ):
-    """(df.* + _toks + _dl persisted, its BM25 stats record) from a
-    per-session resident cache, or None when the corpus is too big /
-    unhashable / unfingerprintable and the caller should stream.  With
-    ``create=False`` a corpus without an entry streams too.
+    """(df.* + _toks + _dl persisted, its BM25 stats record) from the
+    session's memo (``memo.py``), or None when the corpus is too big or
+    unfingerprintable and the caller should stream.  With ``create=False``
+    a corpus without an entry streams too.
 
     The reference's tantivy index keeps the analyzed corpus resident; the
     direct (index-less) scan re-tokenized per query — and the per-query
     regexp/HOF tokenization was the whole cost of the direct BM25 gates
-    (r9 VERDICT finding #4).  Keyed by the ANALYZED input plan + the full
-    analyzer config + the input files' fingerprint, so a different corpus,
-    column, or tokenizer chain builds its own entry, and a rewritten input
-    replaces its entry; capped FIFO so a session cycling many corpora
-    doesn't pin them all.  An entry of the same plan over other files is
-    unpersisted on every call, also one that streams: Spark's cache manager
-    would otherwise serve the streaming plan (the same tokenize projection)
-    from the old cached data."""
-    spark = df.sparkSession
-    try:
-        corpus = (
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-            text_col, tokenizer, repr(spec),
-        )
-        sess = _TOKED_MEMO.setdefault(spark, {})
-    except Exception:
-        return None
-    est = estimated_bytes(df)
-    fp = _input_fingerprint(df) if 0 < est <= _TOKED_MEMO_MAX_BYTES else None
-    key = corpus + (fp,)
-    for stale in [k for k in sess if k[:-1] == corpus and k != key]:
-        sess.pop(stale)[0].unpersist()
-    if fp is None or (key not in sess and not create):
-        return None
-    if key not in sess:
+    (r9 VERDICT finding #4).  Keyed by the analyzed input plan + the full
+    analyzer config, under the input files' fingerprint, so a different
+    corpus, column, or tokenizer chain builds its own entry, and a rewritten
+    input replaces its entry, also when the query then streams."""
+
+    def build():
         from pyspark import StorageLevel
 
-        while len(sess) >= _TOKED_MEMO_SLOTS:
-            sess.pop(next(iter(sess)))[0].unpersist()
         toked = df.withColumn(
             "_toks", tokenize(text_col, tokenizer, spec=spec)
         ).withColumn("_dl", F.size("_toks").cast("double"))
-        sess[key] = (toked.persist(StorageLevel.MEMORY_AND_DISK), {})
-    return sess[key]
+        return toked.persist(StorageLevel.MEMORY_AND_DISK), {}
+
+    est = estimated_bytes(df)
+    fp = memo.fingerprint(df) if 0 < est <= _RESIDENT_MAX_BYTES else None
+    key = (memo.plan_key(df), text_col, tokenizer, repr(spec))
+    # 8 slots: several corpora/tokenizers legitimately coexist in a session
+    # (simple + stopword-spec + CJK gates)
+    return memo.get(
+        df.sparkSession, "text", key, fp, build if create else None, slots=8
+    )
 
 
 #: default ``resident`` argument of the scorers: look the corpus up
 _LOOKUP = object()
-
-#: bound on the per-clause df memo of one resident corpus — phrase clauses,
-#: plus single terms of a corpus without a complete-stats map — so a
-#: session streaming novel queries can't grow it unboundedly
-_BM25_STATS_MAX_TERMS = 4096
 
 #: bound on the complete-stats map of one resident corpus: the map costs
 #: about 100 bytes of driver memory a token (488 KB for a 4,829-token
@@ -323,18 +279,14 @@ def _resident_stats(resident: DataFrame, record: dict, keys, tf_of) -> tuple:
     ``avg(_dl)``, so scores are bit-identical to a per-query stats pass.
     Phrase clauses (tuple keys), and every clause of a corpus without that
     map, take the per-clause path: their missing df in one agg over the
-    resident corpus, kept in a dict bounded by ``_BM25_STATS_MAX_TERMS``."""
+    resident corpus, kept in a per-term memo (``memo.terms``)."""
     if "n" not in record:
         full = _corpus_stats(resident)
         if full is not None:  # one update: a reader never sees "n" alone
             record.update(zip(("n", "avgdl", "terms"), full))
     terms = record.get("terms")
-    memo = record.setdefault("clauses", {})
-    need = [
-        ck for ck in dict.fromkeys(keys)
-        if not (terms is not None and isinstance(ck, str)) and ck not in memo
-    ]
-    if "n" not in record or need:
+
+    def fetch(need):
         aggs = [
             F.count(F.lit(1)).cast("double").alias("_n"),
             F.avg("_dl").alias("_avg"),
@@ -346,16 +298,18 @@ def _resident_stats(resident: DataFrame, record: dict, keys, tf_of) -> tuple:
         row = resident.agg(*aggs).collect()[0]
         record.setdefault("n", row["_n"])
         record.setdefault("avgdl", row["_avg"])
-        if len(memo) + len(need) > _BM25_STATS_MAX_TERMS:
-            kept = {ck: memo[ck] for ck in keys if ck in memo}  # this query's
-            memo.clear()
-            memo.update(kept)
-        memo.update((ck, row[f"_d{i}"]) for i, ck in enumerate(need))
+        return {ck: row[f"_d{i}"] for i, ck in enumerate(need)}
+
+    clauses = memo.terms(
+        record.setdefault("clauses", {}),
+        [ck for ck in keys if terms is None or not isinstance(ck, str)],
+        fetch,
+    )
+    if "n" not in record:
+        fetch([])
 
     def df_of(ck):
-        if terms is not None and isinstance(ck, str):
-            return terms.get(ck, 0.0)
-        return memo[ck]
+        return clauses[ck] if ck in clauses else terms.get(ck, 0.0)
 
     return record["n"], record["avgdl"], [df_of(ck) for ck in keys]
 

@@ -5,6 +5,8 @@ as DataFrames over the Spark catalog + our index registries.
 
 from __future__ import annotations
 
+import collections
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -66,8 +68,10 @@ def system_vector_indices(spark: SparkSession, artifact_dir: str) -> DataFrame:
 #: ch_sql statement log — ≈ system.query_log (the reference records every
 #: query with its normalized form; we record the CH statement, the Spark SQL
 #: it rewrote to, and the rewrite/planning wall time. Execution time lives
-#: with the action, which Spark's own listener/UI already tracks.)
-QUERY_LOG: list[dict] = []
+#: with the action, which Spark's own listener/UI already tracks.)  The
+#: newest QUERY_LOG_MAX_ROWS statements are kept.
+QUERY_LOG_MAX_ROWS = 4096
+QUERY_LOG: collections.deque = collections.deque(maxlen=QUERY_LOG_MAX_ROWS)
 
 
 def log_query(statement: str, translated: str, rewrite_ms: float, kind: str = "select") -> None:

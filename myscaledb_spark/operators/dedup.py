@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from myscaledb_spark import memo
 from myscaledb_spark.session import estimated_bytes
 
 
@@ -247,12 +248,6 @@ def exact_jaccard(
     )
 
 
-#: per-session resident MinHash sliver (weak keys: stopped sessions collect)
-import weakref as _weakref
-
-_MH_SLIVER_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -287,30 +282,8 @@ def minhash_dedup_pairs(
     from myscaledb_spark.catalog import fan_out
 
     spark = df.sparkSession
-    # The persisted sliver + signature frames are MEMOIZED per (session,
-    # input plan, params) — like the reference keeping its MinHash index
-    # resident. Without this, every invocation stacked two NEW persisted
-    # frames (never unpersisted — the returned pairs frame is lazy), so
-    # repeated gate runs slowed 1.24 s → 1.95 s from cache-memory
-    # pressure; with it, steady-state re-runs skip the tokenize and
-    # 12-hash aggregation stages entirely. The key hashes the ANALYZED
-    # input plan (immutable parquet + expressions), so a different corpus
-    # or tokenizer builds fresh; stale entries are unpersisted on miss.
-    try:
-        memo_key = (
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-            str(tokens_col), id_col, n, num_hashes, bands, max_bucket,
-        )
-        sess = _MH_SLIVER_MEMO.setdefault(spark, {})
-    except Exception:
-        memo_key, sess = None, {}
-    if memo_key is not None and memo_key in sess:
-        pre, _sig, candsz = sess[memo_key]
-        sh = pre.select(F.col(id_col), F.explode("_set").alias("sh"))
-    else:
-        for old_key in list(sess):
-            for frame in sess.pop(old_key):
-                frame.unpersist()
+
+    def build():
         # Cache-partition sizing: AQE cannot re-coalesce through a cached
         # relation, so every downstream stage inherits the sliver's
         # partition count verbatim. Size it by the INPUT's estimated bytes
@@ -346,7 +319,7 @@ def minhash_dedup_pairs(
         # ndocs gates the hot-bucket pre-pass below; counting here also
         # materializes the index frame as its own job (cheap: npart tasks)
         ndocs = pre_f.count()
-        sh = pre_f.select(F.col(id_col), F.explode("_set").alias("sh"))
+
         def _seeded(s: int):
             # MUST be a one-arg lambda: F.transform inspects arity, and a
             # second parameter (even a default like s=s) is bound to the
@@ -397,8 +370,14 @@ def minhash_dedup_pairs(
                            F.col("_setn").alias("n_b")), "id_b")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if memo_key is not None:
-            sess[memo_key] = (pre, sig, candsz)
+        return pre, sig, candsz
+
+    # the resident index: one entry per input and params (memo.py)
+    key = (memo.plan_key(df), str(tokens_col), id_col, n, num_hashes, bands,
+           max_bucket)
+    fp = memo.fingerprint(df)
+    pre, _sig, candsz = memo.get(spark, "minhash", key, fp, build, slots=1) or build()
+    sh = pre.select(F.col(id_col), F.explode("_set").alias("sh"))
     jac = exact_jaccard(sh, candsz)
     return jac.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from myscaledb_spark import memo
 from myscaledb_spark.functions.special import (
     SparkOps,
     normal_two_sided_p_expr,
@@ -155,13 +156,6 @@ def mann_whitney_u(df: DataFrame, value: Column | str, is_a: Column) -> DataFram
     )
 
 
-#: per-session rank_corr stats memo (an engine's table-statistics cache) —
-#: weak keys let stopped sessions collect
-import weakref as _weakref
-
-_RC_STATS_MEMO: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-
-
 def rank_corr(
     df: DataFrame, x: Column | str, y: Column | str, grid: int = 256
 ) -> DataFrame:
@@ -206,22 +200,10 @@ def rank_corr(
     # enable the broadcast-join middle tier.
     est_bytes = estimated_bytes(base)
     full_acd = est_bytes >= 1024**3
-    # The stats row is MEMOIZED per (session, analyzed-plan semantic hash):
-    # repeated rank_corr over the same immutable input (the steady state —
-    # parquet scans) runs ONE job instead of two.  Staleness is harmless
-    # by construction: bounds only shape the bucket grid (width_bucket
-    # returns ordered 0 / n+1 ids for out-of-range values, so offsets
-    # still compose exactly) and cardinality only picks a strategy whose
-    # own capped collect re-validates — every tier is exact regardless.
-    try:
-        memo_key = (grid, int(base._jdf.queryExecution().analyzed().semanticHash()))
-        sess_memo = _RC_STATS_MEMO.setdefault(spark, {})
-    except Exception:
-        memo_key, sess_memo = None, {}
-    st = sess_memo.get(memo_key) if memo_key is not None else None
-    if st is None:
+
+    def stats():
         sampled = base.withColumn("_smp", F.rand(42) < 0.02)
-        st = sampled.agg(
+        return {"st": sampled.agg(
             F.min("x").alias("_xmn"), F.max("x").alias("_xmx"),
             F.min("y").alias("_ymn"), F.max("y").alias("_ymx"),
             F.approx_count_distinct(
@@ -231,9 +213,14 @@ def rank_corr(
                 F.when(F.col("_smp") | F.lit(full_acd), F.col("y"))
             ).alias("_dy"),
             F.count(F.lit(1)).alias("_n"),
-        ).collect()[0]
-        if memo_key is not None:
-            sess_memo[memo_key] = st
+        ).collect()[0]}
+
+    # the stats row and the literal tier's rank tables: one record per input (memo.py)
+    record = memo.get(
+        spark, "rank_corr", (grid, memo.plan_key(base)),
+        memo.fingerprint(base), stats, slots=8,
+    ) or stats()
+    st = record["st"]
 
     one = F.lit(1)
     #: a rank table of ≤ this many distinct values broadcasts comfortably
@@ -266,19 +253,14 @@ def rank_corr(
         the axis's bucket column collapses to a constant (fewer cells)."""
         import math as _math
 
-        # memoized per (session, plan-semantic-hash, axis) exactly like the
-        # stats row above (same immutable-input staleness argument): the
-        # steady state loses the per-invocation rank-table job — 3 jobs/run
-        # → 2 (r10 VERDICT item 5's rank_corr re-examination)
-        rt_key = (memo_key, "ranktab", axis) if memo_key is not None else None
-        rows = sess_memo.get(rt_key) if rt_key is not None else None
+        rows = record.get(axis)
         if rows is None:
             rows = (
                 base.groupBy(axis).agg(F.count(one).alias("_w"))
                 .limit(16385).collect()
             )
-            if rt_key is not None and len(rows) <= 16384:
-                sess_memo[rt_key] = rows
+            if len(rows) <= 16384:
+                record[axis] = rows
         if len(rows) > 16384:
             return None
         # Spark sort order: NULLs first, NaN last

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from myscaledb_spark import memo
 from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.functions.text import BM25_B, BM25_K1, tokenize, tokenize_query
 from myscaledb_spark.plans.frame_cache import cached_parquet, data_files
@@ -73,36 +74,23 @@ def _cached_index_frames(spark: SparkSession, base: str):
     return postings, cached_parquet(spark, os.path.join(base, "doclens")), None
 
 
-#: per-build document-frequency memo: {(base, stats mtime): {term: df|None}}
-#: (None = term absent from the index).  The r8 fast path collected the
-#: pruned dfreq rows on EVERY query — one whole Spark job per search just
-#: to fetch ≤|terms| floats; repeated terms now resolve driver-side.
-#: Keyed by (base, stats.json mtime): append/rebuild rewrites stats.json,
-#: which invalidates the stale entry.
-_DFMAP_CACHE: dict[tuple, dict] = {}
-_DFMAP_MAX_TERMS = 4096
-
-
 def _cached_dfmap(dfreq, base: str, terms: list[str]) -> dict:
     """{term: df} for the terms PRESENT in the index (absent terms omitted,
-    matching the pruned-collect behavior), collecting only cache misses."""
-    key = (base, os.path.getmtime(os.path.join(base, "stats.json")))
-    for stale in [k for k in _DFMAP_CACHE if k[0] == base and k != key]:
-        _DFMAP_CACHE.pop(stale)
-    memo = _DFMAP_CACHE.setdefault(key, {})
-    need = [t for t in set(terms) if t not in memo]
-    if need:
-        if len(memo) + len(need) > _DFMAP_MAX_TERMS:
-            # eviction drops previously-cached terms of THIS query too, so
-            # the whole term set must be re-collected, not just the misses
-            # (r10 ADVICE: memo[t] below would KeyError otherwise)
-            memo.clear()
-            need = list(set(terms))
-        for r in dfreq.filter(F.col("term").isin(need)).collect():
-            memo[r["term"]] = float(r["df"])
-        for t in need:
-            memo.setdefault(t, None)
-    return {t: memo[t] for t in set(terms) if memo[t] is not None}
+    matching the pruned-collect behavior), collecting only the terms not
+    yet in the artifact's memo (``memo.py``; keyed by base under the
+    stats.json mtime, which an append or a rebuild rewrites).  The r8 fast
+    path collected the pruned dfreq rows on EVERY query — one whole Spark
+    job per search just to fetch ≤|terms| floats."""
+
+    def fetch(need):
+        got = {r["term"]: float(r["df"])
+               for r in dfreq.filter(F.col("term").isin(need)).collect()}
+        return {t: got.get(t) for t in need}  # None: absent from the index
+
+    mtime = os.path.getmtime(os.path.join(base, "stats.json"))
+    table = memo.get(dfreq.sparkSession, "fts_dfmap", base, mtime, dict, slots=16)
+    dfs = memo.terms(table, terms, fetch)
+    return {t: v for t, v in dfs.items() if v is not None}
 
 
 def _spec_to_json(spec) -> dict | None:

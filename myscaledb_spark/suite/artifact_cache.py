@@ -19,7 +19,6 @@ import time
 from collections.abc import Callable
 
 _ARTIFACTS: dict[tuple[str, str], str] = {}
-_COUNTS: dict[tuple[str, str], int] = {}
 
 #: build wall-seconds per kind, exported into bench.py's JSON line
 BUILD_SECONDS: dict[str, float] = {}
@@ -55,13 +54,3 @@ def cached_value(sf_dir: str, key: str, fn: Callable[[], object]) -> object:
     if k not in _VALUES:
         _VALUES[k] = fn()
     return _VALUES[k]
-
-
-def cached_count(df, sf_dir: str, table: str) -> int:
-    """Corpus row count, computed once per (sf_dir, table) — exhaustive-mode
-    gate queries need it for candidate_multiple but must not pay a count()
-    scan on every invocation."""
-    key = (sf_dir, table)
-    if key not in _COUNTS:
-        _COUNTS[key] = df.count()
-    return _COUNTS[key]

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from myscaledb_spark.catalog import load_table
 from myscaledb_spark.suite import register
-from myscaledb_spark.suite.artifact_cache import cached_artifact, cached_count
+from myscaledb_spark.suite.artifact_cache import cached_artifact, cached_value
 from myscaledb_spark.suite.search import QV, QV2, sql_ip, sql_l2
 
 
@@ -34,7 +34,7 @@ def pq_rerank_topk(spark, sf_dir):
         sf_dir, "pq_m8_ks16",
         lambda d: build_pq_index(emb, "embedding", "vec_id", d, m=8, ks=16),
     )
-    n = cached_count(emb, sf_dir, "embeddings")
+    n = cached_value(sf_dir, "embeddings_count", emb.count)
     # candidates ≥ corpus ⇒ re-rank is exact ⇒ result == exact top-k oracle
     out = pq_search(spark, art, QV, 6, candidate_multiple=(n // 6) + 1)
     return out.select("vec_id", F.round("dist", 4).alias("dist"))
@@ -58,7 +58,7 @@ def sq_rerank_topk(spark, sf_dir):
     art = cached_artifact(
         sf_dir, "sq", lambda d: build_sq_index(emb, "embedding", "vec_id", d)
     )
-    n = cached_count(emb, sf_dir, "embeddings")
+    n = cached_value(sf_dir, "embeddings_count", emb.count)
     out = sq_search(spark, art, QV, 6, candidate_multiple=(n // 6) + 1)
     return out.select("vec_id", F.round("dist", 4).alias("dist"))
 

@@ -1,4 +1,4 @@
-"""r11 ADVICE regression pins (fts dfmap eviction, fan_out stats parsing)."""
+"""r11 ADVICE regression pins (fan_out stats parsing)."""
 
 from __future__ import annotations
 
@@ -12,37 +12,6 @@ def test_parse_bytes_suffixes():
     assert _parse_bytes("1g") == 1 << 30
     assert _parse_bytes(" 512kb ") == 512 * 1024
     assert _parse_bytes("64b") == 64
-
-
-def test_cached_dfmap_eviction_keeps_current_query_terms(spark, tmp_path):
-    """ADVICE medium: when the memo evicts, terms of the CURRENT query that
-    were already cached must be re-collected — the old code cleared the memo
-    after computing the miss list and then KeyError'd on the cached terms."""
-    import json
-    import os
-
-    import myscaledb_spark.plans.fts_index as fts
-
-    base = str(tmp_path / "fts")
-    os.makedirs(base, exist_ok=True)
-    json.dump({"n_docs": 3, "avgdl": 2.0, "tokenizer": "simple"},
-              open(os.path.join(base, "stats.json"), "w"))
-    dfreq = spark.createDataFrame(
-        [("alpha", 2), ("beta", 1), ("gamma", 3)], "term string, df long"
-    )
-    old_cap = fts._DFMAP_MAX_TERMS
-    fts._DFMAP_CACHE.clear()
-    fts._DFMAP_MAX_TERMS = 2
-    try:
-        first = fts._cached_dfmap(dfreq, base, ["alpha"])
-        assert first == {"alpha": 2.0}
-        # alpha is cached; adding beta+gamma overflows the 2-slot cap and
-        # forces eviction mid-query — alpha must survive in the result
-        mixed = fts._cached_dfmap(dfreq, base, ["alpha", "beta", "gamma"])
-        assert mixed == {"alpha": 2.0, "beta": 1.0, "gamma": 3.0}
-    finally:
-        fts._DFMAP_MAX_TERMS = old_cap
-        fts._DFMAP_CACHE.clear()
 
 
 def test_fan_out_in_memory_frame_fires(spark):

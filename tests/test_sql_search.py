@@ -295,7 +295,7 @@ def test_resident_corpus_follows_rewritten_input(spark, tmp_path, monkeypatch):
     spark.createDataFrame(docs, schema).write.mode("overwrite").parquet(path)
     spark.read.parquet(path).createOrReplaceTempView("t_fresh")
     after = run()
-    monkeypatch.setattr(T, "_TOKED_MEMO_MAX_BYTES", 0)  # no resident corpus
+    monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # no resident corpus
     assert after == run()
     assert after[0][0][0] == 5
 

@@ -183,6 +183,7 @@ def test_query_log_records_statements(spark):
     from myscaledb_spark.introspection import QUERY_LOG, system_query_log
     from myscaledb_spark.sql_dialect import ch_sql
 
+    QUERY_LOG.clear()  # a full log (it is bounded) would not grow
     n0 = len(QUERY_LOG)
     spark.createDataFrame([(1,)], "x int").createOrReplaceTempView("_ql_t")
     ch_sql(spark, "SELECT toInt64(x) AS x FROM _ql_t").collect()

@@ -460,7 +460,7 @@ def test_resident_scores_equal_streaming_scores(spark, monkeypatch):
 
     assert T._resident_toked(df, "text", "simple", None) is not None
     resident = run()
-    monkeypatch.setattr(T, "_TOKED_MEMO_MAX_BYTES", 0)  # stream every query
+    monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # stream every query
     assert T._resident_toked(df, "text", "simple", None) is None
     assert resident == run()
     assert all(resident)
@@ -484,16 +484,17 @@ def test_stats_memo_bound_keeps_current_query_clauses(spark, monkeypatch):
     """When the per-clause df memo overflows its bound mid-query, the
     clauses of the current query that were already memoized survive the
     eviction (clearing them raised KeyError)."""
+    from myscaledb_spark import memo
     from myscaledb_spark.functions import text as T
 
-    monkeypatch.setattr(T, "_BM25_STATS_MAX_TERMS", 2)
+    monkeypatch.setattr(memo, "MAX_TERMS", 2)
     df = spark.table("documents").filter("doc_id % 5 = 1")  # its own entry
     want = {}
     for q in ('"data slow"', '"data slow" "merge join" "scan a"'):
         want[q] = [(r["doc_id"], r["bm25_score"])
                    for r in T.nlq_search(df, "text", q, 10, id_col="doc_id").collect()]
     assert all(want.values())
-    monkeypatch.setattr(T, "_TOKED_MEMO_MAX_BYTES", 0)  # streaming reference
+    monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # streaming reference
     for q, rows in want.items():
         assert rows == [(r["doc_id"], r["bm25_score"])
                         for r in T.nlq_search(df, "text", q, 10, id_col="doc_id").collect()]
@@ -502,15 +503,15 @@ def test_stats_memo_bound_keeps_current_query_clauses(spark, monkeypatch):
 def test_input_fingerprint_tracks_rewrites(spark, tmp_path):
     """The resident-corpus fingerprint lists every input file with its size
     and mtime, and changes when the input is rewritten."""
-    from myscaledb_spark.functions.text import _input_fingerprint
+    from myscaledb_spark.memo import fingerprint
 
     path = str(tmp_path / "fp")
     spark.range(3).write.parquet(path)
-    before = _input_fingerprint(spark.read.parquet(path))
+    before = fingerprint(spark.read.parquet(path))
     assert [f for f, _, _ in before] == sorted(spark.read.parquet(path).inputFiles())
     assert all(size > 0 and mtime > 0 for _, size, mtime in before)
     spark.range(5).write.mode("overwrite").parquet(path)
-    assert _input_fingerprint(spark.read.parquet(path)) != before
+    assert fingerprint(spark.read.parquet(path)) != before
 
 
 def test_corpus_stats_over_the_vocabulary_bound_keep_scores(spark, monkeypatch):
@@ -535,7 +536,7 @@ def test_corpus_stats_over_the_vocabulary_bound_keep_scores(spark, monkeypatch):
     assert T._corpus_stats(resident) is None
     capped = run()
     assert "terms" not in record and record["n"] > 0
-    monkeypatch.setattr(T, "_TOKED_MEMO_MAX_BYTES", 0)  # stream every query
+    monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # stream every query
     assert capped == run()
     assert all(capped)
 
@@ -550,6 +551,7 @@ def test_unfingerprintable_rewrite_drops_the_stale_corpus(spark, tmp_path, monke
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from myscaledb_spark import memo
     from myscaledb_spark.functions import text as T
 
     path = tmp_path / "t_nofp"
@@ -575,13 +577,19 @@ def test_unfingerprintable_rewrite_drops_the_stale_corpus(spark, tmp_path, monke
     before = run()
     docs.append((5, "apple crumble with apple"))
     write("b.parquet")
-    monkeypatch.setattr(T, "_input_fingerprint", lambda df: None)
+    monkeypatch.setattr(memo, "fingerprint", lambda df: None)
     after = run()
-    for entry in T._TOKED_MEMO.pop(spark, {}).values():
-        entry[0].unpersist()
+    for entry in memo._STORES.pop(spark, {}).values():
+        memo._release(entry)
     spark.catalog.clearCache()
     assert after == run() != before
     assert after[0][0] == 5
+
+
+def _text_entries(spark):
+    from myscaledb_spark import memo
+
+    return {k: v for k, v in memo._STORES.get(spark, {}).items() if k[0] == "text"}
 
 
 def test_filtered_hybrid_search_streams_without_an_entry(spark):
@@ -594,11 +602,11 @@ def test_filtered_hybrid_search_streams_without_an_entry(spark):
     from myscaledb_spark.operators.topk import vector_topk
 
     df = _hybrid_corpus(spark).filter("doc_id % 2 = 0")
-    entries = dict(T._TOKED_MEMO.get(spark, {}))
+    entries = _text_entries(spark)
     q = np.random.default_rng(12).standard_normal(64).tolist()
     k = 8
     got = hybrid_search(df, "embedding", "text", q, QUERY, k, "doc_id").collect()
-    assert dict(T._TOKED_MEMO.get(spark, {})) == entries
+    assert _text_entries(spark) == entries
     vec = [(r["doc_id"], r["dist"]) for r in
            vector_topk(df, "embedding", q, k, id_col="doc_id").collect()]
     txt = [(r["doc_id"], r["bm25_score"]) for r in
