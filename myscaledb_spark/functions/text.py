@@ -25,13 +25,15 @@ functions inside codegen; the only wide op is the final top-k
 (TakeOrderedAndProject). A corpus under 8 GB stays resident per session in
 tokenized form (`_resident_toked`; the memo layer is `memo.py`), with N,
 avgdl and the df of every token computed once (`_corpus_stats`), so a
-repeated query is one scoring job.
-For repeated querying at scale, persist doc-length + posting stats once
-(plans/fts_index.py) instead of re-scanning.
+repeated query is one scoring job.  Every path — streaming, resident,
+NLQ and the postings index (plans/fts_index.py, the scale path for
+repeated querying) — computes its per-clause tf and dl its own way and
+scores in ``bm25_scores_from_tf``, the one place the formula is written.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -140,7 +142,22 @@ def tokenize_query(
     spec=None,
 ) -> list[str]:
     """Query-side analyzer — must mirror ``tokenize``'s chain exactly so
-    query terms land in the same normalized space as the indexed tokens."""
+    query terms land in the same normalized space as the indexed tokens.
+    Unique, order-preserving: tantivy dedups identical query terms."""
+    return list(dict.fromkeys(_analyze(
+        query, tokenizer, stop_words, length_limit, stem_languages, spec
+    )))
+
+
+def _analyze(
+    query: str,
+    tokenizer: str = "simple",
+    stop_words: list[str] | None = None,
+    length_limit: int | None = None,
+    stem_languages: list[str] | None = None,
+    spec=None,
+) -> list[str]:
+    """``tokenize``'s chain on one driver-side string, repeats kept."""
     from myscaledb_spark.functions.tokenizer_spec import STEM_SUFFIX_RULES
 
     if spec is not None:
@@ -157,6 +174,9 @@ def tokenize_query(
         from myscaledb_spark.functions.zh_tokenize import fmm_tokenize
 
         toks = fmm_tokenize(query) or []
+    elif tokenizer == "chinese_char":
+        spaced = re.sub("([一-鿿])", r" \1 ", query.lower())
+        toks = [t for t in re.split("[^a-z0-9一-鿿]+", spaced) if t]
     else:
         toks = [t for t in re.split(_TOKEN_SPLIT, query.lower()) if t]
     if length_limit:
@@ -169,11 +189,14 @@ def tokenize_query(
             if lang not in STEM_SUFFIX_RULES:
                 raise InvalidSearchQuery(f"unknown stem_language {lang!r}")
             toks = [re.sub(STEM_SUFFIX_RULES[lang], "", t) for t in toks]
-    # unique, order-preserving (tantivy dedups identical query terms)
-    seen: dict[str, None] = {}
-    for t in toks:
-        seen.setdefault(t)
-    return list(seen)
+    return toks
+
+
+def _toked(df: DataFrame, text_col: str, tokenizer: str, spec) -> DataFrame:
+    """``df`` plus its token array ``_toks`` and doc length ``_dl``."""
+    return df.withColumn(
+        "_toks", tokenize(text_col, tokenizer, spec=spec)
+    ).withColumn("_dl", F.size("_toks").cast("double"))
 
 
 #: only corpora under this estimated input size get a resident cache —
@@ -202,9 +225,7 @@ def _resident_toked(
     def build():
         from pyspark import StorageLevel
 
-        toked = df.withColumn(
-            "_toks", tokenize(text_col, tokenizer, spec=spec)
-        ).withColumn("_dl", F.size("_toks").cast("double"))
+        toked = _toked(df, text_col, tokenizer, spec)
         return toked.persist(StorageLevel.MEMORY_AND_DISK), {}
 
     est = estimated_bytes(df)
@@ -344,24 +365,7 @@ def bm25_scores(
     res = resident
     if res is _LOOKUP:
         res = _resident_toked(df, text_col, tokenizer, spec)
-    if res is not None:
-        # tf from the cached token arrays (integer counts) + literal stats
-        # from the resident memo: a repeated query is ONE job — scoring +
-        # top-k — with no stats pass and no broadcast build
-        resident, record = res
-        stats = _resident_stats(
-            resident, record, terms, lambda t: term_tf("_toks", t)
-        )
-        tfed = resident.select(
-            "*",
-            *[term_tf("_toks", t).alias(f"_tf_{i}") for i, t in enumerate(terms)],
-        )
-        return bm25_scores_from_tf(
-            tfed, len(terms), operator, score_name, stats=stats,
-            match_col=match_predicate("_toks", terms, operator),
-        ).drop("_toks")
-
-    if tokenizer == "simple" and spec is None and all(
+    if res is None and tokenizer == "simple" and spec is None and all(
         re.fullmatch("[a-z0-9]+", t) for t in terms
     ):
         # the [a-z0-9]+ validation is structural for the simple analyzer
@@ -404,39 +408,33 @@ def bm25_scores(
             tfed, len(terms), operator, score_name, match_col=match
         ).drop("_low")
 
-    toked = df.withColumn("_toks", tokenize(text_col, tokenizer, spec=spec)).withColumn(
-        "_dl", F.size("_toks").cast("double")
+    stats = None
+    if res is not None:
+        # tf from the cached token arrays (integer counts) + literal stats
+        # from the resident memo: a repeated query is ONE job — scoring +
+        # top-k — with no stats pass and no broadcast build
+        toked, record = res
+        stats = _resident_stats(toked, record, terms, lambda t: term_tf("_toks", t))
+    else:
+        toked = _toked(df, text_col, tokenizer, spec)
+    tfed = toked.select(
+        "*", *[term_tf("_toks", t).alias(f"_tf_{i}") for i, t in enumerate(terms)]
     )
-    return bm25_scores_pretokenized(toked, terms, operator, score_name)
+    return bm25_scores_from_tf(
+        tfed, len(terms), operator, score_name, stats=stats,
+        match_col=match_predicate("_toks", terms, operator),
+    ).drop("_toks")
 
 
 def term_tf(toks: Column | str, term: str) -> Column:
     """Per-row term frequency over a token-array column — THE tf definition
-    every BM25 path shares (direct, pretokenized, resident-corpus stats),
-    so the scorers can never diverge.
+    every token-array BM25 path shares (streaming, resident-corpus scoring
+    and its stats), so the scorers can never diverge.
 
     NB: F.filter's two-arg lambda form means (element, index) — bind the
     term via closure, single-arg lambda only."""
     c = F.col(toks) if isinstance(toks, str) else toks
     return F.size(F.filter(c, lambda x: x == F.lit(term))).cast("double")
-
-
-def bm25_scores_pretokenized(
-    toked: DataFrame,
-    terms: list[str],
-    operator: str = "OR",
-    score_name: str = "bm25_score",
-) -> DataFrame:
-    """BM25 over a DataFrame that already carries `_toks` (array<string>) and
-    `_dl` (double) — bm25_scores' scorer for a corpus it tokenizes per
-    query."""
-    tfed = toked.select(
-        "*", *[term_tf("_toks", t).alias(f"_tf_{i}") for i, t in enumerate(terms)]
-    )
-    return bm25_scores_from_tf(
-        tfed, len(terms), operator, score_name,
-        match_col=match_predicate("_toks", terms, operator),
-    ).drop("_toks")
 
 
 def match_predicate(
@@ -467,17 +465,21 @@ def bm25_scores_from_tf(
     stats: tuple[float, float, list[float]] | None = None,
     match_col: Column | None = None,
 ) -> DataFrame:
-    """BM25 from precomputed per-term frequencies: expects `_dl` (double)
-    and `_tf_0.._tf_{n-1}` (double) columns. This is the narrowest corpus
-    projection that can answer BM25 — fixed-width scalars, no token arrays.
-    df_t = Σ [tf_t > 0] equals the array_contains count
-    of the tokenized form, so scores are bit-identical to bm25_scores.
+    """BM25 from precomputed per-clause frequencies: expects `_dl` (double)
+    and `_tf_0.._tf_{n-1}` (double) columns.  The ONE scorer: plain BM25
+    (``bm25_scores``), NLQ (``nlq_scores``, where a clause may be a phrase)
+    and the postings index (``fts_index.fts_search``) all build their
+    idf·norm sum here, so the float expression — and with it the
+    association order (((0+s0)+s1)+s2) that keeps every path's scores
+    bit-identical — exists once.  Without ``stats``, df_t = Σ [tf_t > 0]
+    over ``tfed`` in one broadcast agg row.
 
     ``stats`` = (n_docs, avgdl, [df_0..df_{n-1}]) injects precomputed
     corpus statistics as LITERALS — no stats pass, no broadcast join; the
     reference's tantivy index serves stats the same way
     (BM25InfoInDataParts).  The literal doubles feed the identical float
-    expression, so scores stay bit-identical to the two-pass plan.
+    expression (Catalyst folds the idf with the JVM's Math.log), so scores
+    stay bit-identical to the two-pass plan.
 
     ``match_col`` (see ``match_predicate``) replaces the tf-derived match
     filter with an equivalent cheap predicate so the pushed-down filter does
@@ -502,8 +504,6 @@ def bm25_scores_from_tf(
         dfs = [F.lit(d) for d in stats[2]]
 
     score = F.lit(0.0)
-    match_any = F.lit(False)
-    match_all = F.lit(True)
     for i in range(n_terms):
         tf = F.col(f"_tf_{i}")
         idf = F.log(F.lit(1.0) + (nd - dfs[i] + F.lit(0.5)) / (dfs[i] + F.lit(0.5)))
@@ -511,14 +511,13 @@ def bm25_scores_from_tf(
             tf + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("_dl") / avgdl)
         )
         score = score + F.when(tf > 0, idf * norm).otherwise(F.lit(0.0))
-        match_any = match_any | (tf > 0)
-        match_all = match_all & (tf > 0)
-
-    if match_col is not None:
-        matched = match_col
-    else:
-        matched = match_all if operator.upper() == "AND" else match_any
-    out = scored.withColumn(score_name, score).filter(matched)
+    if match_col is None:
+        every = operator.upper() == "AND"
+        match_col = functools.reduce(
+            lambda a, b: (a & b) if every else (a | b),
+            [F.col(f"_tf_{i}") > 0 for i in range(n_terms)],
+        )
+    out = scored.withColumn(score_name, score).filter(match_col)
     drop = ["_dl"] + [f"_tf_{i}" for i in range(n_terms)]
     if stats is None:
         drop += ["_n_docs", "_avgdl"] + [f"_df_{i}" for i in range(n_terms)]
@@ -539,7 +538,9 @@ def parse_nlq(query: str, tokenizer: str = "simple") -> list[dict]:
 
     `word` → optional term; `"a b c"` → phrase (consecutive tokens);
     `+x` → required; `-x` → prohibited. A bare term that tokenizes to
-    several tokens (``foo-bar``) becomes a phrase, as tantivy does.
+    several tokens (``foo-bar``) becomes a phrase, as tantivy does.  Each
+    clause goes through ``tokenize_query``'s analyzer chain, repeats kept
+    (a phrase matches its tokens in sequence).
     Returns [{"tokens": [...], "phrase": bool, "must": bool,
     "must_not": bool}, ...].
     """
@@ -549,9 +550,7 @@ def parse_nlq(query: str, tokenizer: str = "simple") -> list[dict]:
             prefix, text = m.group(1), m.group(2)
         else:
             prefix, text = m.group(3), m.group(4)
-        toks = [t for t in re.split(_TOKEN_SPLIT, text.lower()) if t]
-        if tokenizer == "stem":
-            toks = [re.sub(r"(ing|edly|ed|es|s)$", "", t) for t in toks]
+        toks = _analyze(text, tokenizer)
         if not toks:
             continue
         clauses.append(
@@ -655,75 +654,50 @@ def nlq_scores(
         raise InvalidSearchQuery("NLQ query needs at least one positive clause")
 
     res = _resident_toked(df, text_col, tokenizer, None)
-    lit_stats = None
+    stats = None
     if res is not None:
         toked, record = res
         # a single-token clause is keyed by its token (the complete-stats
         # map answers it); a phrase by its token tuple, so repeated NLQ
         # queries reuse stats exactly like plain-term BM25
-        lit_stats = _resident_stats(
+        stats = _resident_stats(
             toked, record,
             [c["tokens"][0] if len(c["tokens"]) == 1 else tuple(c["tokens"])
              for c in pos],
             lambda ck: _clause_tf("_toks", [ck] if isinstance(ck, str) else list(ck)),
         )
     else:
-        toked = df.withColumn("_toks", tokenize(text_col, tokenizer)).withColumn(
-            "_dl", F.size("_toks").cast("double")
-        )
-    for i, c in enumerate(pos):
-        toked = toked.withColumn(f"_tf_{i}", _clause_tf("_toks", c["tokens"]))
+        toked = _toked(df, text_col, tokenizer, None)
     # prohibited clauses need no counted tf — the keep filter below uses the
     # cheap presence predicate directly
+    for i, c in enumerate(pos):
+        toked = toked.withColumn(f"_tf_{i}", _clause_tf("_toks", c["tokens"]))
 
-    if lit_stats is None:
-        aggs = [
-            F.count(F.lit(1)).cast("double").alias("_n_docs"),
-            F.avg("_dl").alias("_avgdl"),
-        ] + [
-            F.sum(F.when(F.col(f"_tf_{i}") > 0, 1).otherwise(0))
-            .cast("double")
-            .alias(f"_df_{i}")
-            for i in range(len(pos))
-        ]
-        scored = toked.crossJoin(F.broadcast(toked.agg(*aggs)))
-        nd, avgdl = F.col("_n_docs"), F.col("_avgdl")
-        dfs = [F.col(f"_df_{i}") for i in range(len(pos))]
-    else:
-        scored = toked
-        nd, avgdl = F.lit(lit_stats[0]), F.lit(lit_stats[1])
-        dfs = [F.lit(d) for d in lit_stats[2]]
-
-    score = F.lit(0.0)
-    match_plain = F.lit(False)
-    has_plain = any(not c["must"] for c in pos)
-    keep = F.lit(True)
     # keep/prohibit conditions use the cheap _clause_present predicates
     # (⟺ tf > 0 / tf == 0) so the pushed-down filter does not re-evaluate
     # every clause's full occurrence counter below the tf projection
-    for i, c in enumerate(pos):
-        tf = F.col(f"_tf_{i}")
-        idf = F.log(
-            F.lit(1.0) + (nd - dfs[i] + F.lit(0.5)) / (dfs[i] + F.lit(0.5))
-        )
-        norm = tf * (BM25_K1 + 1.0) / (
-            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("_dl") / avgdl)
-        )
-        score = score + F.when(tf > 0, idf * norm).otherwise(F.lit(0.0))
+    keep = F.lit(True)
+    match_plain = F.lit(False)
+    for c in pos:
         if c["must"]:
             keep = keep & _clause_present("_toks", c["tokens"])
         else:
             match_plain = match_plain | _clause_present("_toks", c["tokens"])
-    if has_plain:
+    if any(not c["must"] for c in pos):
         keep = keep & match_plain
     for c in neg:
         keep = keep & ~_clause_present("_toks", c["tokens"])
+    return bm25_scores_from_tf(
+        toked, len(pos), score_name=score_name, stats=stats, match_col=keep
+    ).drop("_toks")
 
-    out = scored.withColumn(score_name, score).filter(keep)
-    drop = ["_toks", "_dl"] + [f"_tf_{i}" for i in range(len(pos))]
-    if lit_stats is None:
-        drop += ["_n_docs", "_avgdl"] + [f"_df_{i}" for i in range(len(pos))]
-    return out.drop(*drop)
+
+def _check_k(k) -> None:
+    """A text search's top-k must be positive and within the result window."""
+    if k is None or k <= 0:
+        raise InvalidSearchQuery("text search requires a positive LIMIT (top-k)")
+    if k > MAX_SEARCH_RESULT_WINDOW:
+        raise InvalidSearchQuery(f"LIMIT {k} exceeds max_search_result_window")
 
 
 def nlq_search(
@@ -736,10 +710,7 @@ def nlq_search(
     score_name: str = "bm25_score",
 ) -> DataFrame:
     """`textsearch(..., enable_nlq=1)` top-k with phrase / +must / -must_not."""
-    if k is None or k <= 0:
-        raise InvalidSearchQuery("text search requires a positive LIMIT (top-k)")
-    if k > MAX_SEARCH_RESULT_WINDOW:
-        raise InvalidSearchQuery(f"LIMIT {k} exceeds max_search_result_window")
+    _check_k(k)
     scored = nlq_scores(df, text_col, query, tokenizer, score_name)
     order = [F.col(score_name).desc()]
     if id_col:
@@ -772,14 +743,12 @@ def text_search(
     reference's behavior of using the tantivy index transparently once it
     exists (MergeTreeIndexTantivy; the direct scan is the index-less
     fallback). Indexed and direct scores are bit-identical by construction
-    (fts_search keeps the same term-ordered float summation). A missing or
-    unbuilt index falls back to the direct path, which takes ``resident``
-    as ``bm25_scores`` does."""
-    if k is None or k <= 0:
-        raise InvalidSearchQuery("text search requires a positive LIMIT (top-k)")
-    if k > MAX_SEARCH_RESULT_WINDOW:
-        raise InvalidSearchQuery(f"LIMIT {k} exceeds max_search_result_window")
-    if artifact_dir is not None:
+    (both score through ``bm25_scores_from_tf``). A missing or unbuilt
+    index, and any ``where``, take the direct path, which takes
+    ``resident`` as ``bm25_scores`` does: the index serves only a global
+    top-k, which a filter applied afterwards would thin below k rows."""
+    _check_k(k)
+    if artifact_dir is not None and where is None:
         from myscaledb_spark.plans.vector_index import IndexRegistry
 
         rec = IndexRegistry(artifact_dir).get(index_name)
@@ -797,8 +766,6 @@ def text_search(
             out = df.join(F.broadcast(cands), id_col).select(
                 *df.columns, score_name
             )
-            if where is not None:
-                out = out.filter(where)
             return out.orderBy(
                 F.col(score_name).desc(), F.col(id_col).asc()
             ).limit(k)

@@ -6,7 +6,7 @@ Artifact layout (parquet):
   <root>/<name>/postings/   (term, doc_id, tf, dl)  partitioned/bucketable
                             by term; dl is inlined per posting (Lucene
                             stores per-doc norms with the index the same
-                            way) so scoring needs NO doclens join
+                            way) so scoring needs no doc-length join
   <root>/<name>/dfreq/      (term: string, df: bigint)  per-term doc
                             frequency — the reference's tantivy index stores
                             term dictionaries with doc counts likewise
@@ -17,16 +17,14 @@ Artifact layout (parquet):
                             avgdl = total_dl / dl_docs — bit-identical to
                             Spark's avg(dl), which sums integer lengths as
                             doubles (exact below 2^53)
-  <root>/<name>/doclens/    (doc_id, dl)  legacy only: pre-r8 artifacts (no
-                            dl column, no dfreq dir) keep it, and fts_search
-                            reads it through the join-based plan; an artifact
-                            with dfreq built before stats.json held total_dl
-                            has its doclens summed once, by its first append,
-                            which then removes it
 
-Query path (`fts_search`) computes exactly the same tantivy-style BM25 as
-functions/text.py but reads ONLY the query terms' postings (predicate pushed
-to the parquet scan) instead of re-tokenizing the corpus — at 100 TB this is
+An artifact without dfreq/ or without total_dl predates this layout;
+searches and appends refuse it with one "rebuild the index" error.
+
+Query path (`fts_search`) scores through the same
+``text.bm25_scores_from_tf`` as the direct path, but takes tf and dl from
+ONLY the query terms' postings (predicate pushed to the parquet scan)
+instead of re-tokenizing the corpus — at 100 TB this is
 the difference between touching ~kB of postings and re-scanning the table.
 Incremental maintenance (`append_to_fts_index`, ≈ VIBuilderUpdater on new
 parts, foreachBatch in streaming ingestion) costs O(batch + vocabulary), not
@@ -47,7 +45,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from myscaledb_spark import memo
 from myscaledb_spark.errors import InvalidSearchQuery
-from myscaledb_spark.functions.text import BM25_B, BM25_K1, tokenize, tokenize_query
+from myscaledb_spark.functions.text import bm25_scores_from_tf, tokenize, tokenize_query
 from myscaledb_spark.plans.frame_cache import cached_parquet, data_files
 from myscaledb_spark.plans.vector_index import IndexRegistry
 from myscaledb_spark.session import observed_metrics
@@ -64,19 +62,33 @@ _FRAMES_CACHE: dict[tuple, tuple] = {}
 
 
 def _cached_index_frames(spark: SparkSession, base: str):
-    """(postings, doclens, dfreq) of an artifact, persisted through
-    frame_cache.  Exactly one of doclens and dfreq is None: an artifact
-    with a dfreq dir never opens its doclens."""
-    postings = cached_parquet(spark, os.path.join(base, "postings"))
-    dfreq_path = os.path.join(base, "dfreq")
-    if os.path.isdir(dfreq_path):
-        return postings, None, cached_parquet(spark, dfreq_path, _DFREQ_SCHEMA)
-    return postings, cached_parquet(spark, os.path.join(base, "doclens")), None
+    """(postings, dfreq) of an artifact, persisted through frame_cache."""
+    return (
+        cached_parquet(spark, os.path.join(base, "postings")),
+        cached_parquet(spark, os.path.join(base, "dfreq"), _DFREQ_SCHEMA),
+    )
+
+
+def _built(artifact_dir: str, name: str) -> tuple[str, dict]:
+    """(base dir, stats.json) of a built index.  An artifact without dfreq
+    or without total_dl predates the current layout and is refused."""
+    rec = IndexRegistry(artifact_dir).get(name)
+    if rec is None or rec.get("status") != "Built":
+        raise RuntimeError(f"fts index {name!r} not built")
+    base = rec["base"]
+    with open(os.path.join(base, "stats.json")) as f:
+        stats = json.load(f)
+    if "total_dl" not in stats or not os.path.isdir(os.path.join(base, "dfreq")):
+        raise RuntimeError(
+            f"fts index {name!r} has an old artifact format (no dfreq or "
+            "total_dl): rebuild the index"
+        )
+    return base, stats
 
 
 def _cached_dfmap(dfreq, base: str, terms: list[str]) -> dict:
-    """{term: df} for the terms PRESENT in the index (absent terms omitted,
-    matching the pruned-collect behavior), collecting only the terms not
+    """{term: df} of ``terms`` (0.0 for a term absent from the index, the df
+    a scan of the corpus counts), collecting only the terms not
     yet in the artifact's memo (``memo.py``; keyed by base under the
     stats.json mtime, which an append or a rebuild rewrites).  The r8 fast
     path collected the pruned dfreq rows on EVERY query — one whole Spark
@@ -85,12 +97,11 @@ def _cached_dfmap(dfreq, base: str, terms: list[str]) -> dict:
     def fetch(need):
         got = {r["term"]: float(r["df"])
                for r in dfreq.filter(F.col("term").isin(need)).collect()}
-        return {t: got.get(t) for t in need}  # None: absent from the index
+        return {t: got.get(t, 0.0) for t in need}
 
     mtime = os.path.getmtime(os.path.join(base, "stats.json"))
     table = memo.get(dfreq.sparkSession, "fts_dfmap", base, mtime, dict, slots=16)
-    dfs = memo.terms(table, terms, fetch)
-    return {t: v for t, v in dfs.items() if v is not None}
+    return memo.terms(table, terms, fetch)
 
 
 def _spec_to_json(spec) -> dict | None:
@@ -136,8 +147,6 @@ def build_fts_index(
     _dfreq_rows(written).groupBy("term").agg(F.sum("df").alias("df")).write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "dfreq"))
-    # a rebuild over a legacy artifact leaves no stale doclens behind
-    shutil.rmtree(os.path.join(base, "doclens"), ignore_errors=True)
     _write_stats(base, {"tokenizer": tokenizer, "spec": _spec_to_json(spec)},
                  totals["n_docs"], totals["total_dl"], totals["dl_docs"])
     reg.set_status(name, "Built", base=base)
@@ -151,7 +160,7 @@ def _tokenized(docs: DataFrame, text_col: str, id_col: str, tokenizer: str, spec
     ).withColumn("dl", F.size("toks"))
 
 
-def _postings(toked: DataFrame, with_dl: bool = True):
+def _postings(toked: DataFrame):
     """(postings of one tokenized batch, an Observation of its totals
     {n_docs, total_dl, dl_docs} that completes when they are written).
 
@@ -167,7 +176,7 @@ def _postings(toked: DataFrame, with_dl: bool = True):
         .groupBy("term", "doc_id")
         .agg(
             # dl rides along into each posting row (first() over the
-            # constant-per-doc dl) so the query path never joins doclens
+            # constant-per-doc dl) so the query path needs no doc-length join
             F.count("pos").alias("tf"),
             F.first("dl").alias("dl"),
             F.count(F.when(first, 1)).alias("docs_"),
@@ -182,17 +191,17 @@ def _postings(toked: DataFrame, with_dl: bool = True):
         F.sum("dl_").alias("total_dl"),
         F.sum("dl_docs_").alias("dl_docs"),
     ).filter(F.col("tf") > 0)
-    return postings.select("term", "doc_id", "tf", *(["dl"] if with_dl else [])), obs
+    return postings.select("term", "doc_id", "tf", "dl"), obs
 
 
-def _write_postings(toked: DataFrame, path: str, mode: str, with_dl: bool = True):
+def _write_postings(toked: DataFrame, path: str, mode: str):
     """Write the postings of one tokenized batch to ``path``; return (the
     postings this write added, read back from its own files with their
     known schema, and the batch's totals).  A 1-row collect is the
     fallback when the observed totals do not arrive in time."""
     spark = toked.sparkSession
     before = data_files(path) if mode == "append" and os.path.isdir(path) else frozenset()
-    postings, obs = _postings(toked, with_dl)
+    postings, obs = _postings(toked)
     postings.write.mode(mode).parquet(path)
     got = observed_metrics(obs) or toked.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -237,122 +246,39 @@ def fts_search(
     score_name: str = "bm25_score",
 ) -> DataFrame:
     """Index-backed BM25 top-k. Same scores as the direct path (table-global
-    stats), but the scan touches only the query terms' postings."""
+    stats), but the scan touches only the query terms' postings.
+
+    One groupBy over the term-pruned postings pivots each doc's tf per
+    query term, in query-term order, and takes its dl; df comes from the
+    dfreq memo and N and avgdl from stats.json, all as literals into
+    ``bm25_scores_from_tf`` — the direct path's scorer, so indexed and
+    direct scores are bit-identical doubles.  A term absent from the index
+    has no postings: its tf is NULL and it adds the scorer's 0.0.  Doc ids
+    are assumed unique across the build and its appends; a duplicated id
+    scores as one doc whose tf sums its copies' and whose dl is the
+    longest copy's."""
     if k is None or k <= 0:
         raise InvalidSearchQuery("text search requires a positive LIMIT (top-k)")
-    reg = IndexRegistry(artifact_dir)
-    rec = reg.get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"fts index {name!r} not built")
-    base = rec["base"]
-    stats = json.load(open(os.path.join(base, "stats.json")))
+    base, stats = _built(artifact_dir, name)
     terms = tokenize_query(
         query, stats["tokenizer"], spec=_spec_from_json(stats.get("spec"))
     )
     if not terms:
         raise InvalidSearchQuery("empty text-search query after tokenization")
-    n_docs, avgdl = float(stats["n_docs"]), float(stats["avgdl"])
-
-    all_postings, doclens, dfreq = _cached_index_frames(spark, base)
+    all_postings, dfreq = _cached_index_frames(spark, base)
+    dfmap = _cached_dfmap(dfreq, base, terms)
     # term filter prunes the cached columnar batches (min/max per batch;
     # on a cold cache the same predicate pushes into the parquet scan)
-    postings = all_postings.filter(F.col("term").isin(terms))
-
-    if dfreq is not None:
-        # r8 fast path (an artifact with dfreq always inlines dl): df comes
-        # from the dfreq table (one tiny pruned lookup — ≤ #query-terms
-        # rows) and dl is inlined in the postings, so the scoring plan is
-        # ONE groupBy pivot over the pruned
-        # postings + executeTake — zero joins, one shuffle (map-side
-        # partial-agg'd), vs the legacy plan's dfreq shuffle + broadcast
-        # join + doclens join.
-        dfmap = _cached_dfmap(dfreq, base, terms)
-        norm = (
-            F.col("tf").cast("double")
-            * (BM25_K1 + 1.0)
-            / (
-                F.col("tf").cast("double")
-                + BM25_K1
-                * (1.0 - BM25_B + BM25_B * F.col("dl").cast("double") / F.lit(avgdl))
-            )
-        )
-        # Pivot per-term norms and add idf·norm in query-term order — the
-        # same association order as bm25_scores' expression tree
-        # (((0+s0)+s1)+s2), so indexed and direct scores are bit-identical
-        # doubles. idf's log argument is computed driver-side with the same
-        # IEEE op order ((n_docs - df) + 0.5) / (df + 0.5); F.log of the
-        # literal is constant-folded by the SAME JVM Math.log as the legacy
-        # column expression, so the folded constant is bit-identical too.
-        aggs = [
-            F.sum(F.when(F.col("term") == t, norm)).alias(f"_n_{i}")
+    tfed = all_postings.filter(F.col("term").isin(terms)).groupBy("doc_id").agg(
+        F.max("dl").cast("double").alias("_dl"),
+        *[
+            F.sum(F.when(F.col("term") == t, F.col("tf"))).cast("double").alias(f"_tf_{i}")
             for i, t in enumerate(terms)
-        ] + [F.count(F.lit(1)).alias("_nterms")]
-        agg = postings.groupBy("doc_id").agg(*aggs)
-        score = F.lit(0.0)
-        for i, t in enumerate(terms):
-            if t in dfmap:
-                idf = F.log(
-                    F.lit(1.0 + (n_docs - dfmap[t] + 0.5) / (dfmap[t] + 0.5))
-                )
-                score = score + F.coalesce(idf * F.col(f"_n_{i}"), F.lit(0.0))
-            else:
-                # term absent from the index: no posting rows, contributes
-                # exactly the 0.0 the legacy inner-join plan contributed
-                score = score + F.lit(0.0)
-        agg = agg.withColumn(score_name, score)
-        if operator.upper() == "AND":
-            agg = agg.filter(F.col("_nterms") == len(terms))
-        return (
-            agg.drop("_nterms", *[f"_n_{i}" for i in range(len(terms))])
-            .orderBy(F.col(score_name).desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
-
-    # legacy plan for pre-r8 artifacts (no dfreq dir / no inlined dl)
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        postings.join(F.broadcast(dfreq), "term")
-        .join(doclens, "doc_id")
-        .withColumn(
-            "_idf",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "_s",
-            # parenthesized idf * (norm) — the exact association order of
-            # bm25_scores' `idf * norm`, keeping indexed scores bit-identical
-            F.col("_idf")
-            * (
-                F.col("tf").cast("double")
-                * (BM25_K1 + 1.0)
-                / (
-                    F.col("tf").cast("double")
-                    + BM25_K1
-                    * (1.0 - BM25_B + BM25_B * F.col("dl").cast("double") / F.lit(avgdl))
-                )
-            ),
-        )
+        ],
     )
-    # Pivot per-term scores and add them in query-term order — the same
-    # association order as bm25_scores' expression tree (((0+s0)+s1)+s2), so
-    # indexed and direct scores are bit-identical doubles, not just close.
-    # A float F.sum over term-rows would have nondeterministic add order.
-    aggs = [
-        F.sum(F.when(F.col("term") == t, F.col("_s"))).alias(f"_s_{i}")
-        for i, t in enumerate(terms)
-    ] + [F.count(F.lit(1)).alias("_nterms")]
-    agg = scored.groupBy("doc_id").agg(*aggs)
-    score = F.lit(0.0)
-    for i in range(len(terms)):
-        score = score + F.coalesce(F.col(f"_s_{i}"), F.lit(0.0))
-    agg = agg.withColumn(score_name, score)
-    if operator.upper() == "AND":
-        agg = agg.filter(F.col("_nterms") == len(terms))
+    lit_stats = (float(stats["n_docs"]), float(stats["avgdl"]), [dfmap[t] for t in terms])
     return (
-        agg.drop("_nterms", *[f"_s_{i}" for i in range(len(terms))])
+        bm25_scores_from_tf(tfed, len(terms), operator, score_name, stats=lit_stats)
         .orderBy(F.col(score_name).desc(), F.col("doc_id").asc())
         .limit(k)
     )
@@ -370,56 +296,28 @@ def append_to_fts_index(
     counts into dfreq, and update the global stats from its totals.  Write
     order: postings, then dfreq (tmp + rename), then stats.json last as the
     commit point."""
-    reg = IndexRegistry(artifact_dir)
-    rec = reg.get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"fts index {name!r} not built")
-    base = rec["base"]
-    stats = json.load(open(os.path.join(base, "stats.json")))
+    base, stats = _built(artifact_dir, name)
     toked = _tokenized(
         new_docs, text_col, id_col, stats["tokenizer"], _spec_from_json(stats.get("spec"))
     )
+    written, totals = _write_postings(toked, os.path.join(base, "postings"), "append")
     dfreq_path = os.path.join(base, "dfreq")
-    doclens_path = os.path.join(base, "doclens")
-    has_dfreq = os.path.isdir(dfreq_path)
-    spark = new_docs.sparkSession
-    total_dl, dl_docs = stats.get("total_dl"), stats.get("dl_docs", stats["n_docs"])
-    if total_dl is None:  # artifact from before total_dl: derive it once
-        if os.path.isdir(doclens_path):
-            # exact: count(dl) skips NULL lengths, as avg(dl) did
-            total_dl, dl_docs = spark.read.parquet(doclens_path).agg(
-                F.sum("dl"), F.count("dl")
-            ).first()
-            total_dl = total_dl or 0
-        else:
-            total_dl = round(stats["avgdl"] * dl_docs)
-    written, totals = _write_postings(
-        toked, os.path.join(base, "postings"), "append", with_dl=has_dfreq
+    merged = (
+        new_docs.sparkSession.read.schema(_DFREQ_SCHEMA).parquet(dfreq_path)
+        .unionByName(_dfreq_rows(written))
+        .groupBy("term")
+        .agg(F.sum("df").alias("df"))
     )
-    if has_dfreq:
-        merged = (
-            spark.read.schema(_DFREQ_SCHEMA).parquet(dfreq_path)
-            .unionByName(_dfreq_rows(written))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-        )
-        tmp = os.path.join(base, "dfreq_next")
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(dfreq_path)
-        os.rename(tmp, dfreq_path)
-    else:
-        # pre-r8 artifact: keep its (term, doc_id, tf) postings and the
-        # doclens its join-based plan reads
-        toked.select("doc_id", "dl").write.mode("append").parquet(doclens_path)
+    tmp = os.path.join(base, "dfreq_next")
+    merged.write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(dfreq_path)
+    os.rename(tmp, dfreq_path)
     _write_stats(
         base, stats,
         stats["n_docs"] + totals["n_docs"],
-        total_dl + totals["total_dl"],
-        dl_docs + totals["dl_docs"],
+        stats["total_dl"] + totals["total_dl"],
+        stats["dl_docs"] + totals["dl_docs"],
     )
-    if has_dfreq:
-        # an artifact built before total_dl: its doclens, now stale, is
-        # read by nothing once stats.json holds the totals
-        shutil.rmtree(doclens_path, ignore_errors=True)
+    reg = IndexRegistry(artifact_dir)
     reg.set_status(name, "Built", base=base)
     return reg.get(name)

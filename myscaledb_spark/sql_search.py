@@ -501,26 +501,14 @@ def _text_arg(spark: SparkSession, raw: str, fnname: str) -> str:
 
 
 def _sql_text_candidates(text_df, col, query, k, id_col, score_name, where):
-    """Query-shape-aware text scoring for the SQL search functions: tantivy's
-    QueryParser turns a bare term that tokenizes to several tokens
-    ("history's", "foo-bar") into a PHRASE query, and honors quoted phrases
-    and +/- operators — so such queries route through nlq_scores (the
-    phrase/must machinery); plain-word queries keep the OR text_search path
-    (bit-identical to the gate oracles)."""
-    from myscaledb_spark.functions.text import nlq_scores, parse_nlq, text_search
+    """Top-k of ``_text_scores_frame``; ``where`` prunes after scoring."""
+    from myscaledb_spark.functions.text import _check_k
 
-    clauses = parse_nlq(query, "simple")
-    if any(c["phrase"] or c["must"] or c["must_not"] for c in clauses):
-        scored = nlq_scores(text_df, col, query, "simple", score_name)
-        if where is not None:
-            scored = scored.filter(where)
-        return scored.orderBy(
-            F.col(score_name).desc(), F.col(id_col).asc()
-        ).limit(k)
-    return text_search(
-        text_df, col, query, k, id_col=id_col, score_name=score_name,
-        where=where,
-    )
+    _check_k(k)
+    scored = _text_scores_frame(text_df, col, query, score_name)
+    if where is not None:
+        scored = scored.filter(where)
+    return scored.orderBy(F.col(score_name).desc(), F.col(id_col).asc()).limit(k)
 
 
 def maybe_binary_distance(spark: SparkSession, sql: str) -> DataFrame | None:
@@ -686,9 +674,13 @@ def _multi_part_table(table: str) -> bool:
 
 
 def _text_scores_frame(df, col, query, score_name):
-    """All matching rows scored with table-global BM25 stats (no top-k):
-    the per-part fusion ranks/normalizes these per part.  Phrase-bearing
-    queries route through the NLQ scorer like _sql_text_candidates."""
+    """All matching rows scored with table-global BM25 stats (no top-k),
+    for every text leg of the SQL search functions.  Tantivy's QueryParser
+    turns a bare term that tokenizes to several tokens ("history's",
+    "foo-bar") into a PHRASE query, and honors quoted phrases and +/-
+    operators — so such queries score through nlq_scores (the phrase/must
+    machinery); plain-word queries keep OR BM25 (bit-identical to the gate
+    oracles)."""
     from myscaledb_spark.functions.text import bm25_scores, nlq_scores, parse_nlq
 
     clauses = parse_nlq(query, "simple")
@@ -730,8 +722,6 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
     order_text = sql[spans["order"][0] : spans["order"][1]].strip() if spans["order"] else None
 
     if kind == "textsearch":
-        from myscaledb_spark.functions.text import text_search
-
         if params:
             raise ChSqlError("textsearch parameters are not supported in SQL")
         if len(args) != 2:
@@ -898,7 +888,6 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
             # leg scans everything, the text leg ONLY the indexed parts
             # (empty text leg → pure dense fusion, as the reference's
             # 'w/o tantivy index' blocks print)
-            from myscaledb_spark.functions.text import text_search
             from myscaledb_spark.functions.vector import distance, distance_defined
             from myscaledb_spark.operators.hybrid import fuse_candidates
             from myscaledb_spark.operators.topk import _order

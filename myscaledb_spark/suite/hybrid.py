@@ -225,8 +225,8 @@ def hybrid_search_indexed_exhaustive(spark, sf_dir):
     candidates come from the IVF artifact probed exhaustively
     (nprobe = ncentroids ⇒ candidates ≡ brute force, the r3
     exhaustive-oracle trick), text candidates from the FTS postings
-    artifact (bit-identical BM25 by construction — fixed-order term
-    summation in fts_search), so the fusion result matches the SAME
+    artifact (bit-identical BM25 by construction — fts_search scores
+    through the direct path's bm25_scores_from_tf), so the fusion result matches the SAME
     brute-force oracle as hybrid_search_rsf while scanning the corpus
     ZERO times at query time."""
     from myscaledb_spark.operators.hybrid import hybrid_search_indexed

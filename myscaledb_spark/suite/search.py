@@ -438,7 +438,8 @@ def bm25_cjk_indexed(spark, sf_dir):
     FMM-tokenized postings once (tokenizer spec stored with the index, as
     MergeTreeIndexTantivy stores its config), so queries do a term-pruned
     postings read and never re-tokenize the corpus. Bit-identical to the
-    direct path's oracle by the fixed-order term summation in fts_search."""
+    direct path's oracle: fts_search scores through the direct path's
+    scorer (text.bm25_scores_from_tf)."""
     from myscaledb_spark.functions.text import tokenize
     from myscaledb_spark.plans.fts_index import build_fts_index, fts_search
     from myscaledb_spark.suite.artifact_cache import cached_artifact

@@ -141,3 +141,23 @@ def test_text_search_auto_routes_to_postings(spark, tmp_path):
     assert [tuple(r) for r in fallback.collect()] == [
         tuple(r) for r in direct.collect()
     ]
+
+
+def test_index_routed_text_search_with_where_returns_direct_rows(spark, tmp_path):
+    """A filtered index-routed search keeps k rows: the filter is not applied
+    to the index's global top-k (which holds mostly filtered-out docs
+    here), so the result equals the direct path's."""
+    docs = spark.createDataFrame(
+        [(i, "vector" if i % 5 == 4 else f"vector filler words {i}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    art = str(tmp_path / "fts_where")
+    build_fts_index(docs, "text", "doc_id", art)
+    where = F.col("doc_id") % 5 != 4
+    direct = text_search(docs, "text", "vector", 5, id_col="doc_id", where=where)
+    routed = text_search(
+        docs, "text", "vector", 5, id_col="doc_id", where=where, artifact_dir=art
+    )
+    want = [tuple(r) for r in direct.collect()]
+    assert len(want) == 5
+    assert [tuple(r) for r in routed.collect()] == want

@@ -10,11 +10,12 @@ import shutil
 import struct
 import time
 
+import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from myscaledb_spark import session
-from myscaledb_spark.functions.text import text_search, tokenize
+from myscaledb_spark.functions.text import tokenize
 from myscaledb_spark.functions.vector import _query_literal
 from myscaledb_spark.plans.frame_cache import cached_parquet
 from myscaledb_spark.plans.fts_index import (
@@ -130,17 +131,6 @@ def test_fts_append_stats_and_dfreq_equal_build_over_union(spark, tmp_path):
     assert not os.path.exists(os.path.join(inc, "fts", "doclens"))
 
 
-def _as_older_artifact(spark, d: str, half) -> None:
-    """Rewrite a fresh build into what the build wrote before stats.json
-    held total_dl: no total_dl/dl_docs, and a doclens dir."""
-    p = os.path.join(d, "fts", "stats.json")
-    old = {k: v for k, v in json.load(open(p)).items() if k not in ("total_dl", "dl_docs")}
-    json.dump(old, open(p, "w"))
-    half.select("doc_id", F.size(tokenize("text")).alias("dl")).write.parquet(
-        os.path.join(d, "fts", "doclens")
-    )
-
-
 def test_fts_batch_totals_are_observed_after_the_shuffle(spark):
     """The totals are observed above the postings' aggregate, so they are
     taken in the write's result stage, which Spark counts once per
@@ -152,66 +142,25 @@ def test_fts_batch_totals_are_observed_after_the_shuffle(spark):
     assert "CollectMetrics" in plan[at[0]] and "Aggregate" in plan[at[1]]
 
 
-def test_fts_append_derives_total_dl_for_older_stats(spark, tmp_path):
-    docs = _docs_with_gaps(spark)
-    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    build_fts_index(even, "text", "doc_id", inc)
-    _as_older_artifact(spark, inc, even)
-    append_to_fts_index(docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", inc)
-    build_fts_index(docs, "text", "doc_id", full)
-    a, b = _stats(inc), _stats(full)
-    assert (a["n_docs"], a["total_dl"], a["dl_docs"], a["avgdl"].hex()) == (
-        b["n_docs"], b["total_dl"], b["dl_docs"], b["avgdl"].hex()
+def test_old_format_artifact_is_refused_with_rebuild_error(spark, tmp_path):
+    """An artifact without dfreq/ or without total_dl in stats.json (the
+    layout before both existed) is neither searched nor appended to."""
+    docs = spark.createDataFrame(
+        [(i, f"vector search {i}") for i in range(6)], "doc_id long, text string"
     )
-    # the derived totals are in stats.json: the stale doclens is gone
-    assert not os.path.exists(os.path.join(inc, "fts", "doclens"))
-
-
-def test_fts_append_to_older_stats_without_doclens(spark, tmp_path):
-    """Without doclens the totals come from round(avgdl * n_docs), exact
-    when every text has a length."""
-    docs = spark.table("documents")
-    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
-    build_fts_index(docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id", inc)
-    p = os.path.join(inc, "fts", "stats.json")
-    old = {k: v for k, v in json.load(open(p)).items() if k not in ("total_dl", "dl_docs")}
-    json.dump(old, open(p, "w"))
-    append_to_fts_index(docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", inc)
-    build_fts_index(docs, "text", "doc_id", full)
-    a, b = _stats(inc), _stats(full)
-    assert (a["n_docs"], a["total_dl"], a["avgdl"].hex()) == (
-        b["n_docs"], b["total_dl"], b["avgdl"].hex()
-    )
-
-
-def test_legacy_artifact_append_keeps_doclens_and_scores(spark, tmp_path):
-    """A pre-r8 artifact (postings without dl, doclens, no dfreq) still
-    appends and searches through the join-based plan."""
-    docs = spark.table("documents")
-    d = str(tmp_path / "legacy")
-    build_fts_index(docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id", d)
-    base = os.path.join(d, "fts")
-    postings = spark.read.parquet(os.path.join(base, "postings")).drop("dl")
-    postings.write.parquet(os.path.join(base, "postings_legacy"))
-    shutil.rmtree(os.path.join(base, "postings"))
-    shutil.rmtree(os.path.join(base, "dfreq"))
-    os.rename(os.path.join(base, "postings_legacy"), os.path.join(base, "postings"))
-    docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id", F.size(tokenize("text")).alias("dl")
-    ).write.parquet(os.path.join(base, "doclens"))
-    st = _stats(d)
-    json.dump({"n_docs": st["n_docs"], "avgdl": st["avgdl"], "tokenizer": st["tokenizer"]},
-              open(os.path.join(base, "stats.json"), "w"))
-
-    append_to_fts_index(docs.filter(F.col("doc_id") % 2 == 1), "text", "doc_id", d)
-    assert not os.path.exists(os.path.join(base, "dfreq"))
-    assert spark.read.parquet(os.path.join(base, "doclens")).count() == docs.count()
-    via_index = fts_search(spark, d, QUERY, 10).collect()
-    direct = text_search(docs, "text", QUERY, 10, id_col="doc_id").collect()
-    assert [(r.doc_id, r.bm25_score) for r in via_index] == [
-        (r.doc_id, r.bm25_score) for r in direct
-    ]
+    for missing in ("dfreq", "total_dl"):
+        d = str(tmp_path / missing)
+        build_fts_index(docs, "text", "doc_id", d)
+        base = os.path.join(d, "fts")
+        if missing == "dfreq":
+            shutil.rmtree(os.path.join(base, "dfreq"))
+        else:
+            st = {k: v for k, v in _stats(d).items() if k not in ("total_dl", "dl_docs")}
+            json.dump(st, open(os.path.join(base, "stats.json"), "w"))
+        with pytest.raises(RuntimeError, match="rebuild the index"):
+            fts_search(spark, d, QUERY, 5)
+        with pytest.raises(RuntimeError, match="rebuild the index"):
+            append_to_fts_index(docs, "text", "doc_id", d)
 
 
 # -- IVF assignment equals the nested-when expression it replaced -------------

@@ -616,3 +616,119 @@ def test_filtered_hybrid_search_streams_without_an_entry(spark):
         spark, df.schema["doc_id"].dataType, vec, txt, k, "doc_id", "rsf"
     ).collect()
     assert [(r[0], r[1]) for r in got] == [(r[0], r[1]) for r in want]
+
+
+def test_parse_nlq_analyzes_clauses_with_the_query_analyzer(spark):
+    """Each NLQ clause goes through tokenize_query's chain, repeats kept:
+    CJK clauses segment, raw clauses stay whole and unlowered, stem uses
+    the shared suffix rule."""
+    from myscaledb_spark.functions.text import nlq_search, parse_nlq
+
+    assert [c["tokens"] for c in parse_nlq("数据 查询", "chinese")] == [["数据"], ["查询"]]
+    raw = parse_nlq('"Table Hash" +Vector', "raw")
+    assert [(c["tokens"], c["phrase"], c["must"]) for c in raw] == [
+        (["Table Hash"], False, False), (["Vector"], False, True)
+    ]
+    assert parse_nlq("searching tables", "stem")[0]["tokens"] == ["search"]
+    assert parse_nlq('"a b a"')[0]["tokens"] == ["a", "b", "a"]
+    assert tokenize_query("数据 fast", "chinese_char") == ["数", "据", "fast"]
+    docs = spark.createDataFrame(
+        [(1, "数据查询很快"), (2, "数据引擎"), (3, "fast engine")], "id long, text string"
+    )
+    got = nlq_search(docs, "text", "+数据 -引擎", 3, id_col="id", tokenizer="chinese")
+    assert [r.id for r in got.collect()] == [1]
+
+
+#: candidate lists of the driver-side vs DataFrame fusion pin: (vector leg, text leg)
+_FUSION_CASES = {
+    "tied": ([(1, 0.5), (2, 0.5), (3, 1.25), (4, 2.0), (7, 1.25)],
+             [(2, 3.0), (5, 3.0), (1, 1.0), (6, 0.7), (8, 1.0)]),
+    "all_equal": ([(1, 1.0), (2, 1.0), (3, 1.0)], [(3, 2.5), (4, 2.5)]),
+    "empty_text": ([(1, 0.3), (2, 0.1), (3, 0.2), (4, 0.9)], []),
+}
+
+
+@pytest.mark.parametrize("kind", ["rsf", "rrf"])
+def test_fuse_local_equals_fuse_candidates(spark, kind):
+    """The driver-side fusion (_fuse_local) equals the DataFrame fusion
+    (fuse_candidates) bit for bit: ids, order and score bits, per metric,
+    on tied scores, an all-equal list and an empty text leg.  Each
+    DataFrame fusion costs several Spark jobs, so one call per metric
+    fuses the three cases as parts (disjoint ids; ranked and normalized
+    per part); the unpartitioned form runs on the tied case."""
+    import struct
+
+    from pyspark.sql.types import LongType
+
+    from myscaledb_spark.operators.hybrid import _fuse_local, fuse_candidates
+
+    def bits(rows):
+        return [(r[0], struct.pack(">d", r[1]).hex()) for r in rows]
+
+    def local(metric, vec, txt):
+        return bits(_fuse_local(
+            spark, LongType(), vec, txt, 4, "id", kind, metric, 0.3, 60, "s"
+        ).collect())
+
+    cases = [
+        ([(100 * c + i, d) for i, d in vec], [(100 * c + i, s) for i, s in txt])
+        for c, (vec, txt) in enumerate(_FUSION_CASES.values())
+    ]
+    vec_df = spark.createDataFrame(
+        [(i, d, c) for c, (vec, _) in enumerate(cases) for i, d in vec],
+        "id long, _vdist double, _part int",
+    )
+    txt_df = spark.createDataFrame(
+        [(i, s, c) for c, (_, txt) in enumerate(cases) for i, s in txt],
+        "id long, _bm25 double, _part int",
+    )
+    for metric in ("L2", "IP", "Cosine", "Hamming"):
+        rows = fuse_candidates(
+            vec_df, txt_df, 100, "id", kind, metric, 0.3, 60, "s", part_col="_part"
+        ).collect()
+        for c, (vec, txt) in enumerate(cases):
+            want = local(metric, vec, txt)
+            assert len(want) == 4, (metric, c)
+            assert bits([r for r in rows if r[0] // 100 == c][:4]) == want, (metric, c)
+    vec, txt = cases[0]
+    rows = fuse_candidates(
+        spark.createDataFrame(vec, "id long, _vdist double"),
+        spark.createDataFrame(txt, "id long, _bm25 double"),
+        4, "id", kind, "IP", 0.3, 60, "s",
+    ).collect()
+    assert bits(rows) == local("IP", vec, txt)
+
+
+def test_bm25_constants_read_only_in_the_scorer():
+    """The idf·norm expression is built in one place: BM25_K1 and BM25_B
+    are read under myscaledb_spark/ only inside text.bm25_scores_from_tf."""
+    import ast
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "myscaledb_spark")
+    stray = []
+    for d, _, fs in os.walk(pkg):
+        for f in fs:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            tree = ast.parse(open(path, encoding="utf-8").read())
+            funcs = [n for n in ast.walk(tree)
+                     if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+            for n in ast.walk(tree):
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                    name = n.id
+                elif isinstance(n, ast.Attribute):
+                    name = n.attr
+                elif isinstance(n, ast.alias):
+                    name = n.name
+                else:
+                    continue
+                if name not in ("BM25_K1", "BM25_B"):
+                    continue
+                inner = [fn for fn in funcs if fn.lineno <= n.lineno <= fn.end_lineno]
+                owner = max(inner, key=lambda fn: fn.lineno).name if inner else None
+                if (f, owner) != ("text.py", "bm25_scores_from_tf"):
+                    stray.append(f"{os.path.relpath(path, pkg)}:{n.lineno}")
+    assert not stray, stray
