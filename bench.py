@@ -175,10 +175,10 @@ def main() -> None:
         import tempfile
 
         from myscaledb_spark.catalog import load_table
-        from myscaledb_spark.plans.pq_index import build_pq_index, pq_recall, pq_search
+        from myscaledb_spark.plans.pq_index import build_pq_index, pq_search
         from myscaledb_spark.plans.vector_index import (
+            ann_recall,
             build_ivf_index,
-            ivf_recall,
             ivf_search,
         )
         from myscaledb_spark.suite.search import make_qvec
@@ -193,10 +193,11 @@ def main() -> None:
         ivf_build = round(time.time() - t0, 3)
         for nprobe in (1, 2, 4, 8):
             t0 = time.time()
-            ivf_search(spark, art, q, 10, nprobe=nprobe).collect()
+            hits = ivf_search(spark, art, q, 10, nprobe=nprobe)
+            hits.collect()
             sweep[f"ivf_nprobe{nprobe}"] = {
                 "sec": round(time.time() - t0, 4),
-                "recall@10": round(ivf_recall(emb, spark, art, q, 10, nprobe=nprobe), 3),
+                "recall@10": round(ann_recall(emb, hits, q, 10), 3),
             }
         sweep["ivf_build_sec"] = ivf_build
 
@@ -205,52 +206,41 @@ def main() -> None:
         pq_build = round(time.time() - t0, 3)
         for mult in (3, 10):
             t0 = time.time()
-            pq_search(spark, art, q, 10, candidate_multiple=mult).collect()
+            hits = pq_search(spark, art, q, 10, candidate_multiple=mult)
+            hits.collect()
             sweep[f"pq_cand{mult}x"] = {
                 "sec": round(time.time() - t0, 4),
-                "recall@10": round(
-                    pq_recall(emb, spark, art, q, 10, candidate_multiple=mult), 3
-                ),
+                "recall@10": round(ann_recall(emb, hits, q, 10), 3),
             }
         sweep["pq_build_sec"] = pq_build
 
-        from myscaledb_spark.plans.hnsw_index import (
-            build_hnsw_index,
-            hnsw_recall,
-            hnsw_search,
-        )
+        from myscaledb_spark.plans.hnsw_index import build_hnsw_index, hnsw_search
 
         t0 = time.time()
         build_hnsw_index(emb, "embedding", "vec_id", art, m=8, ef_construction=32)
         hnsw_build = round(time.time() - t0, 3)
         for ef in (50, 100):  # reference sweeps ef_s ∈ {50,100,200,400}
             t0 = time.time()
-            hnsw_search(spark, art, q, 10, ef_search=ef).collect()
+            hits = hnsw_search(spark, art, q, 10, ef_search=ef)
+            hits.collect()
             sweep[f"hnsw_ef{ef}"] = {
                 "sec": round(time.time() - t0, 4),
-                "recall@10": round(
-                    hnsw_recall(emb, spark, art, q, 10, ef_search=ef), 3
-                ),
+                "recall@10": round(ann_recall(emb, hits, q, 10), 3),
             }
         sweep["hnsw_build_sec"] = hnsw_build
 
-        from myscaledb_spark.plans.mstg_index import (
-            build_mstg_index,
-            mstg_recall,
-            mstg_search,
-        )
+        from myscaledb_spark.plans.mstg_index import build_mstg_index, mstg_search
 
         t0 = time.time()
         build_mstg_index(emb, "embedding", "vec_id", art, num_leaves=16, num_top=4)
         mstg_build = round(time.time() - t0, 3)
         for pt, np_ in ((1, 2), (2, 4), (3, 8)):
             t0 = time.time()
-            mstg_search(spark, art, q, 10, probe_top=pt, nprobe=np_).collect()
+            hits = mstg_search(spark, art, q, 10, probe_top=pt, nprobe=np_)
+            hits.collect()
             sweep[f"mstg_top{pt}_probe{np_}"] = {
                 "sec": round(time.time() - t0, 4),
-                "recall@10": round(
-                    mstg_recall(emb, spark, art, q, 10, probe_top=pt, nprobe=np_), 3
-                ),
+                "recall@10": round(ann_recall(emb, hits, q, 10), 3),
             }
         sweep["mstg_build_sec"] = mstg_build
         emb.unpersist()

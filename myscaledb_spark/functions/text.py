@@ -157,7 +157,8 @@ def _analyze(
     stem_languages: list[str] | None = None,
     spec=None,
 ) -> list[str]:
-    """``tokenize``'s chain on one driver-side string, repeats kept."""
+    """``tokenize``'s chain on one driver-side string, repeats kept; an
+    unknown tokenizer name raises, as ``tokenize`` does."""
     from myscaledb_spark.functions.tokenizer_spec import STEM_SUFFIX_RULES
 
     if spec is not None:
@@ -177,8 +178,10 @@ def _analyze(
     elif tokenizer == "chinese_char":
         spaced = re.sub("([一-鿿])", r" \1 ", query.lower())
         toks = [t for t in re.split("[^a-z0-9一-鿿]+", spaced) if t]
-    else:
+    elif tokenizer in ("simple", "stem"):
         toks = [t for t in re.split(_TOKEN_SPLIT, query.lower()) if t]
+    else:
+        raise InvalidSearchQuery(f"unknown tokenizer {tokenizer!r}")
     if length_limit:
         toks = [t for t in toks if len(t) <= length_limit]
     if stop_words:
@@ -751,8 +754,7 @@ def text_search(
     if artifact_dir is not None and where is None:
         from myscaledb_spark.plans.vector_index import IndexRegistry
 
-        rec = IndexRegistry(artifact_dir).get(index_name)
-        if rec is not None and rec.get("status") == "Built":
+        if IndexRegistry.is_built(IndexRegistry(artifact_dir).get(index_name)):
             if id_col is None:
                 raise InvalidSearchQuery(
                     "index-routed text_search needs id_col to join rows back"

@@ -22,10 +22,11 @@ happens, and it reuses the single-search primitives.  The default path
 resident tokenized corpus that text search keeps, with its complete BM25
 statistics, and collects both legs in one tagged-union job
 (`_collect_legs`); the indexed path (`hybrid_search_indexed`) takes its
-legs from the IVF/HNSW/MSTG and FTS artifacts and collects them the same
-way.  Fusion of the two ≤k′-row lists runs on the driver (`_fuse_local`),
-as the reference fuses in memory on one node; `fuse_candidates` is the
-DataFrame fusion for per-part fusion and pre-built candidate frames.
+vector leg from any registered ANN index (`ddl.search_index`) and its text
+leg from the FTS artifact, and collects them the same way.  Fusion of the
+two ≤k′-row lists runs on the driver (`_fuse_local`), as the reference
+fuses in memory on one node; `fuse_candidates` is the DataFrame fusion for
+per-part fusion and pre-built candidate frames.
 """
 
 from __future__ import annotations
@@ -121,7 +122,8 @@ def hybrid_search(
     When ``artifact_dir`` holds BUILT vector + fts index records, the query
     routes through ``hybrid_search_indexed`` automatically (zero corpus
     scans) — the reference's transparent index use once the table declares
-    one; a missing/unbuilt artifact falls back to the single-scan default.
+    one; a missing/unbuilt artifact, or a FLAT vector record (no artifact),
+    falls back to the single-scan default, which is exact.
 
     Plan shape: both legs read the resident tokenized corpus that
     ``text_search`` keeps (``text._resident_toked``) — the reference runs
@@ -149,16 +151,15 @@ def hybrid_search(
         from myscaledb_spark.plans.vector_index import IndexRegistry
 
         reg = IndexRegistry(artifact_dir)
-        vrec, frec = reg.get(index_name), reg.get(fts_name)
+        vrec = reg.get(index_name)
+        # a FLAT record has no artifact: the exact path below serves it
         if (
-            vrec is not None and vrec.get("status") == "Built"
-            and frec is not None and frec.get("status") == "Built"
+            reg.is_built(vrec) and reg.is_built(reg.get(fts_name))
+            and vrec.get("index_type") != "FLAT"
         ):
-            kind = (vrec.get("index_type") or "ivf").lower()
-            kind = {"ivfflat": "ivf", "hnswflat": "hnsw"}.get(kind, kind)
             return hybrid_search_indexed(
                 df.sparkSession, artifact_dir, None, None, qvec, qtext, k,
-                id_col, index_kind=kind, index_name=index_name,
+                id_col, index_name=index_name,
                 fts_name=fts_name, fusion_type=ft, metric=metric,
                 fusion_weight=fusion_weight, fusion_k=fusion_k,
                 candidate_multiple=candidate_multiple, tokenizer=tokenizer,
@@ -375,44 +376,30 @@ def hybrid_search_indexed(
 ) -> DataFrame:
     """Hybrid search with ANN-index vector candidates — the reference's real
     shape (MergeTreeHybridSearchManager drives the part-level vector INDEX
-    plus the tantivy text index, then fuses). Vector candidates come from a
-    prebuilt IVF/HNSW/MSTG artifact (partition-pruned / graph search instead
-    of a full scan); text candidates from the FTS postings artifact when
-    ``fts_name`` is given (term-pruned postings scan, `plans/fts_index.py` —
-    then NO query touches the corpus at all, vs the default path's scan of
-    the resident corpus), else direct BM25 over ``df``. Fusion is identical to
-    hybrid_search. search_params pass through (nprobe=, ef_search=,
-    probe_top=...). With exhaustive search params (nprobe=ncentroids) both
-    candidate lists equal the brute-force lists bit-for-bit, which is how
-    the driver gate pins this path to the same oracle as hybrid_search_rsf.
+    plus the tantivy text index, then fuses). Vector candidates come from
+    the registered index ``index_name`` (default: the name ``index_kind``)
+    through ``ddl.search_index``, so the record's type picks the searcher —
+    IVF, PQ, SQ, HNSW or MSTG (partition-pruned / compressed / graph search
+    instead of a full scan; FLAT needs ``df`` and ``vec_col=``); text
+    candidates from the FTS postings artifact when ``fts_name`` is given
+    (term-pruned postings scan, `plans/fts_index.py` — then NO query
+    touches the corpus at all, vs the default path's scan of the resident
+    corpus), else direct BM25 over ``df``. Fusion is identical to
+    hybrid_search. search_params pass through to the searcher (nprobe=,
+    ef_search=, probe_top=, vec_col=...). With exhaustive search params
+    (nprobe=ncentroids) both candidate lists equal the brute-force lists
+    bit-for-bit, which is how the driver gate pins this path to the same
+    oracle as hybrid_search_rsf.
     """
     if k is None or k <= 0:
         raise InvalidSearchQuery("hybrid search requires a positive LIMIT (top-k)")
-    kind = index_kind.lower()
+    from myscaledb_spark.plans.ddl import search_index
+
     kprime = k * candidate_multiple
-    if kind == "ivf":
-        from myscaledb_spark.plans.vector_index import ivf_search
-
-        vec_cand = ivf_search(
-            spark, artifact_dir, qvec, kprime, name=index_name or "ivf",
-            metric=metric, id_col=id_col, **search_params,
-        )
-    elif kind == "hnsw":
-        from myscaledb_spark.plans.hnsw_index import hnsw_search
-
-        vec_cand = hnsw_search(
-            spark, artifact_dir, qvec, kprime, name=index_name or "hnsw",
-            id_col=id_col, **search_params,
-        )
-    elif kind == "mstg":
-        from myscaledb_spark.plans.mstg_index import mstg_search
-
-        vec_cand = mstg_search(
-            spark, artifact_dir, qvec, kprime, name=index_name or "mstg",
-            id_col=id_col, **search_params,
-        )
-    else:
-        raise InvalidSearchQuery(f"unknown index kind {index_kind!r}")
+    vec_cand = search_index(
+        spark, artifact_dir, index_name or index_kind, qvec, kprime, df=df,
+        id_col=id_col, metric=metric, **search_params,
+    )
     vec_cand = vec_cand.select(F.col(id_col), F.col("dist").alias("_vdist"))
     if fts_name is not None:
         from myscaledb_spark.plans.fts_index import fts_search

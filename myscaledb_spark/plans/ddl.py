@@ -12,7 +12,9 @@ engine:
 builder (plans/), and records it in the IndexRegistry (≈system.vector_indices).
 `search_index` then answers top-k against any registered index by name,
 dispatching on its recorded type — the analog of the reference routing a
-search to whatever index the table declares.
+search to whatever index the table declares.  It is the one type → searcher
+dispatch: `operators.hybrid.hybrid_search_indexed` takes its vector leg from
+it too.
 
 Type mapping (tests/vector_search/benchmark.py:23 sweep):
   FLAT           -> registry-only record; searches run the exact brute-force path
@@ -181,7 +183,7 @@ def alter_index_ddl(
             # IF EXISTS on a missing index is a pure no-op — writing a
             # "Dropped" record would fabricate a phantom system.vector_indices row
             return {"name": name, "status": "Dropped"}
-        was_built = (reg.get(name) or {}).get("status") == "Built"
+        was_built = reg.is_built(reg.get(name))
         reg.set_status(name, "Dropped")
         if was_built:
             # 00030's VIEventLog trace for DROP VECTOR INDEX: the command
@@ -208,7 +210,7 @@ def alter_index_ddl(
             raise InvalidSearchQuery("ADD INDEX needs the table DataFrame")
         name, col = m.group("name"), m.group("col") or m.group("colp")
         existing = IndexRegistry(artifact_dir).get(name)
-        if existing is not None and existing.get("status") == "Built":
+        if IndexRegistry.is_built(existing):
             if m.group("if_not_exists"):
                 return existing
             raise InvalidSearchQuery(f"index {name!r} already exists")
@@ -339,7 +341,7 @@ def alter_index_ddl(
     # duplicate names are per-TABLE (the reference keys indexes in each
     # table's metadata): a same-named index on ANOTHER table overwrites the
     # shared artifact slot instead of raising
-    if (existing is not None and existing.get("status") == "Built"
+    if (IndexRegistry.is_built(existing)
             and existing.get("table") in (None, "", table)):
         if m.group("if_not_exists"):
             return existing  # idempotent: no rebuild
@@ -478,16 +480,19 @@ def search_index(
     metric: str | None = None,
     **search_params,
 ) -> DataFrame:
-    """Top-k against a DDL-registered index, dispatching on its recorded
-    type. FLAT needs the table back (`df`, `vec_col`) since it has no
-    artifact; every other type searches its artifact files. `metric`
-    defaults to the metric the DDL declared (registry record) — pass it
-    only to override."""
-    from myscaledb_spark.plans.vector_index import IndexRegistry
+    """Top-k against a registered index, the one place a record's
+    ``index_type`` picks the searcher.  FLAT needs the table back (`df`,
+    `vec_col`) since it has no artifact; every other type searches its
+    artifact files, returning (``id_col``, dist).  ``id_col`` and `metric`
+    reach every searcher that takes them, and `vec_col` reaches IVF, whose
+    lists keep the table's columns.  `metric` and `vec_col` default to the
+    metric and column the DDL declared (registry record) — pass them only
+    to override.
+    ``search_params`` go to the searcher (nprobe=, ef_search=, ...)."""
+    from myscaledb_spark.plans import hnsw_index, mstg_index, pq_index, sq_index
+    from myscaledb_spark.plans import vector_index
 
-    rec = IndexRegistry(artifact_dir).get(name)
-    if rec is None or rec.get("status") not in ("Built",):
-        raise InvalidSearchQuery(f"index {name!r} is not built")
+    rec = vector_index.IndexRegistry(artifact_dir).built(name, InvalidSearchQuery)
     itype = (rec.get("index_type") or "").upper()
     if metric is None:
         # FLAT records metric at top level; IVF keeps it in build params
@@ -500,27 +505,28 @@ def search_index(
         if df is None or vec_col is None:
             raise InvalidSearchQuery("FLAT search needs (df, vec_col)")
         return vector_topk(df, vec_col, qvec, k, metric, None, id_col)
-    if itype in ("IVF", "IVFFLAT"):
-        from myscaledb_spark.plans.vector_index import ivf_search
-
-        return ivf_search(
-            spark, artifact_dir, qvec, k, name=name, metric=metric,
-            id_col=id_col, **search_params,
-        )
-    if itype in ("PQ", "PQFLAT", "IVFPQ", "HNSWPQ"):
-        from myscaledb_spark.plans.pq_index import pq_search
-
-        return pq_search(spark, artifact_dir, qvec, k, name=name, **search_params)
-    if itype in ("SQ", "IVFSQ", "HNSWSQ"):
-        from myscaledb_spark.plans.sq_index import sq_search
-
-        return sq_search(spark, artifact_dir, qvec, k, name=name, **search_params)
-    if itype in ("HNSW", "HNSWFLAT"):
-        from myscaledb_spark.plans.hnsw_index import hnsw_search
-
-        return hnsw_search(spark, artifact_dir, qvec, k, name=name, **search_params)
-    if itype in ("MSTG", "SCANN"):
-        from myscaledb_spark.plans.mstg_index import mstg_search
-
-        return mstg_search(spark, artifact_dir, qvec, k, name=name, **search_params)
-    raise InvalidSearchQuery(f"index {name!r} has unknown type {itype!r}")
+    # recorded type (and its DDL aliases) → (searcher, the shared arguments
+    # it takes besides id_col)
+    ivf = (
+        vector_index.ivf_search,
+        {"metric": metric, "vec_col": vec_col or rec.get("column")},
+    )
+    pq = (pq_index.pq_search, {"metric": metric})
+    sq = (sq_index.sq_search, {"metric": metric})
+    hnsw = (hnsw_index.hnsw_search, {})
+    mstg = (mstg_index.mstg_search, {})
+    searchers = {
+        "IVF": ivf, "IVFFLAT": ivf,
+        "PQ": pq, "PQFLAT": pq, "IVFPQ": pq, "HNSWPQ": pq,
+        "SQ": sq, "IVFSQ": sq, "HNSWSQ": sq,
+        "HNSW": hnsw, "HNSWFLAT": hnsw,
+        "MSTG": mstg, "SCANN": mstg,
+    }
+    if itype not in searchers:
+        raise InvalidSearchQuery(f"index {name!r} has unknown type {itype!r}")
+    searcher, shared = searchers[itype]
+    shared = {a: v for a, v in shared.items() if v is not None}
+    return searcher(
+        spark, artifact_dir, qvec, k, name=name, id_col=id_col, **shared,
+        **search_params,
+    )

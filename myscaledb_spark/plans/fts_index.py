@@ -72,10 +72,7 @@ def _cached_index_frames(spark: SparkSession, base: str):
 def _built(artifact_dir: str, name: str) -> tuple[str, dict]:
     """(base dir, stats.json) of a built index.  An artifact without dfreq
     or without total_dl predates the current layout and is refused."""
-    rec = IndexRegistry(artifact_dir).get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"fts index {name!r} not built")
-    base = rec["base"]
+    base = IndexRegistry(artifact_dir).built(name)["base"]
     with open(os.path.join(base, "stats.json")) as f:
         stats = json.load(f)
     if "total_dl" not in stats or not os.path.isdir(os.path.join(base, "dfreq")):

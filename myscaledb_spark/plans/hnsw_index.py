@@ -15,6 +15,12 @@ the candidates merged globally (§3.2.4-5). Here:
           the local graph; the global top-k is the exact-distance merge of
           per-part candidates — same two-stage merge as the reference.
 
+The graph machinery is parameterised by the partition column and shared with
+mstg_index (one graph per leaf, `leaf_id`): `graph_schema`,
+`group_graph_rows` (one group's build), `build_graphs` (the applyInPandas
+build) and `search_graphs` (per-group beam search or exact ranking, then the
+global merge).
+
 Beam search is Python-side by necessity (data-dependent pointer chasing is
 the one workload Catalyst can't express) — but it touches only the index
 artifact, never the base table, and each part's search is O(ef·M·d).
@@ -149,15 +155,102 @@ def _beam(
     return out
 
 
-_GRAPH_SCHEMA = StructType(
-    [
-        StructField("part_id", IntegerType()),
-        StructField("pos", IntegerType()),
-        StructField("node_id", LongType()),
-        StructField("vec", ArrayType(DoubleType())),
-        StructField("neighbors", ArrayType(IntegerType())),
-    ]
-)
+def graph_schema(part_col: str) -> StructType:
+    """Stored graph rows: one NSW graph per ``part_col`` group, ``pos`` the
+    insertion position within it, ``neighbors`` as positions."""
+    return StructType(
+        [
+            StructField(part_col, IntegerType()),
+            StructField("pos", IntegerType()),
+            StructField("node_id", LongType()),
+            StructField("vec", ArrayType(DoubleType())),
+            StructField("neighbors", ArrayType(IntegerType())),
+        ]
+    )
+
+
+def group_graph_rows(
+    part, node_ids: list, vecs: list, m: int, ef_construction: int
+) -> list[tuple]:
+    """One group's graph rows (part, pos, node_id, vec, neighbors): members
+    are inserted in ascending node id (a stable sort), so a rebuild is
+    bit-identical whatever order the rows arrive in."""
+    order = sorted(range(len(node_ids)), key=node_ids.__getitem__)
+    adj = _nsw_insertions(
+        np.array([vecs[j] for j in order], dtype=np.float64), m, ef_construction
+    )
+    return [(part, pos, node_ids[j], vecs[j], adj[pos]) for pos, j in enumerate(order)]
+
+
+def build_graphs(keyed: DataFrame, part_col: str, m: int, ef_construction: int) -> DataFrame:
+    """Graph rows of ``keyed`` (``part_col``, node_id, vec): one NSW graph
+    per ``part_col`` group, each built in one applyInPandas call."""
+    schema = graph_schema(part_col)
+
+    def _build(pdf):
+        import pandas as pd
+
+        rows = group_graph_rows(
+            pdf[part_col].iloc[0], pdf["node_id"].tolist(), pdf["vec"].tolist(),
+            m, ef_construction,
+        )
+        return pd.DataFrame(rows, columns=schema.names)
+
+    return keyed.groupBy(part_col).applyInPandas(_build, schema)
+
+
+def search_graphs(
+    graph: DataFrame,
+    part_col: str,
+    qvec: Sequence[float],
+    k: int,
+    ef_search: int,
+    id_col: str,
+    n_seeds: int,
+    exhaustive: bool,
+) -> DataFrame:
+    """Top-k over stored graph rows: a beam search (ef candidates) per
+    ``part_col`` group, then the global exact merge of the per-group
+    candidates (reference §3.2.4-5) → (``id_col``, dist).
+
+    exhaustive=True replaces the beam with an exact native distance ranking
+    over every row of ``graph`` — equal to brute force by construction,
+    giving the artifact path (build → partitioned graph storage → read →
+    rank) a bit-exact oracle.  The distance is the same JVM expression as
+    vector_topk, so the double association order matches the DuckDB oracle
+    exactly — numpy's pairwise summation in the beam path would not."""
+    if exhaustive:
+        from myscaledb_spark.operators.topk import vector_topk
+
+        out = vector_topk(graph, "vec", list(map(float, qvec)), k, "L2", None, "node_id")
+        return out.withColumnRenamed("node_id", id_col).select(id_col, "dist")
+    q = np.asarray(qvec, dtype=np.float64)
+    ef = max(ef_search, k)
+    out_schema = StructType(
+        [StructField("node_id", LongType()), StructField("dist", DoubleType())]
+    )
+
+    def _search(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("pos").reset_index(drop=True)
+        X = np.array(pdf["vec"].tolist(), dtype=np.float64)
+        adj = [list(a) for a in pdf["neighbors"]]
+        found = _beam(X, adj, q, ef, n_seeds=n_seeds)
+        ids = pdf["node_id"].to_numpy()
+        return pd.DataFrame(
+            {
+                "node_id": [ids[p] for _, p in found],
+                "dist": [np.sqrt(d) for d, _ in found],
+            }
+        )
+
+    cands = graph.groupBy(part_col).applyInPandas(_search, out_schema)
+    return (
+        cands.orderBy(F.col("dist").asc(), F.col("node_id").asc())
+        .limit(k)
+        .withColumnRenamed("node_id", id_col)
+    )
 
 
 def build_hnsw_index(
@@ -198,24 +291,7 @@ def build_hnsw_index(
         F.col(id_col).alias("node_id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-
-    def _build(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("node_id").reset_index(drop=True)
-        X = np.array(pdf["vec"].tolist(), dtype=np.float64)
-        adj = _nsw_insertions(X, m, ef_construction)
-        return pd.DataFrame(
-            {
-                "part_id": pdf["part_id"],
-                "pos": np.arange(len(pdf), dtype=np.int32),
-                "node_id": pdf["node_id"],
-                "vec": pdf["vec"],
-                "neighbors": [np.array(a, dtype=np.int32) for a in adj],
-            }
-        )
-
-    graph = keyed.groupBy("part_id").applyInPandas(_build, _GRAPH_SCHEMA)
+    graph = build_graphs(keyed, "part_id", m, ef_construction)
     base = os.path.join(artifact_dir, name)
     graph.write.mode("overwrite").partitionBy("part_id").parquet(
         os.path.join(base, "graph")
@@ -238,78 +314,11 @@ def hnsw_search(
     n_seeds: int = 4,
     exhaustive: bool = False,
 ) -> DataFrame:
-    """Per-part beam search → global exact merge (reference §3.2.4-5).
-
-    exhaustive=True replaces the beam with an exact native distance ranking
-    over every stored graph row — equal to brute force by construction,
-    giving the artifact path (build → partitioned graph storage → read →
-    rank) a bit-exact oracle; the beam path stays the approximate default.
-    """
-    reg = IndexRegistry(artifact_dir)
-    rec = reg.get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"hnsw index {name!r} not built")
+    """Per-part beam search → global exact merge (``search_graphs``;
+    exhaustive=True ranks every stored row exactly — the bit-exact oracle;
+    the beam path stays the approximate default)."""
+    rec = IndexRegistry(artifact_dir).built(name)
     from myscaledb_spark.plans.frame_cache import cached_parquet
 
     graph = cached_parquet(spark, os.path.join(rec["base"], "graph"))
-    q = np.asarray(qvec, dtype=np.float64)
-    ef = max(ef_search, k)
-    if exhaustive:
-        from myscaledb_spark.operators.topk import vector_topk
-
-        out = vector_topk(graph, "vec", list(map(float, qvec)), k, "L2", None, "node_id")
-        return out.withColumnRenamed("node_id", id_col).select(id_col, "dist")
-
-    out_schema = StructType(
-        [StructField("node_id", LongType()), StructField("dist", DoubleType())]
-    )
-
-    def _search(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        X = np.array(pdf["vec"].tolist(), dtype=np.float64)
-        adj = [list(a) for a in pdf["neighbors"]]
-        found = _beam(X, adj, q, ef, n_seeds=n_seeds)
-        ids = pdf["node_id"].to_numpy()
-        return pd.DataFrame(
-            {
-                "node_id": [ids[p] for _, p in found],
-                "dist": [np.sqrt(d) for d, _ in found],
-            }
-        )
-
-    cands = graph.groupBy("part_id").applyInPandas(_search, out_schema)
-    return (
-        cands.orderBy(F.col("dist").asc(), F.col("node_id").asc())
-        .limit(k)
-        .withColumnRenamed("node_id", id_col)
-    )
-
-
-def hnsw_recall(
-    df: DataFrame,
-    spark: SparkSession,
-    artifact_dir: str,
-    qvec: Sequence[float],
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    name: str = "hnsw",
-    ef_search: int = 50,
-) -> float:
-    from myscaledb_spark.operators.topk import vector_topk
-
-    exact = {
-        r[0]
-        for r in vector_topk(df, vec_col, qvec, k, "L2", None, id_col)
-        .select(id_col)
-        .collect()
-    }
-    approx = {
-        r[0]
-        for r in hnsw_search(spark, artifact_dir, qvec, k, name, ef_search, id_col)
-        .select(id_col)
-        .collect()
-    }
-    return len(exact & approx) / max(len(exact), 1)
+    return search_graphs(graph, "part_id", qvec, k, ef_search, id_col, n_seeds, exhaustive)

@@ -6,18 +6,22 @@ implementation lives in the closed `contrib/search-index` submodule, so this
 is a from-scratch hybrid following the public description — tree-structured
 coarse routing over graph-searched leaves:
 
-  build:  one Spark KMeans produces `num_leaves` leaf centroids (same linear
-          pass as IVF); the centroids themselves are clustered DRIVER-SIDE
-          (numpy Lloyd iterations over ≤ a few hundred points — metadata
-          scale) into `num_top` routing cells, giving a 2-level tree. Every
-          leaf's rows get an NSW graph built independently in one
-          applyInPandas call (same deterministic machinery as hnsw_index).
+  build:  one k-means produces `num_leaves` leaf centroids (IVF's front
+          end, `vector_index._small_kmeans` / `_mllib_kmeans`); the
+          centroids themselves are clustered DRIVER-SIDE (numpy Lloyd
+          iterations over ≤ a few hundred points — metadata scale) into
+          `num_top` routing cells, giving a 2-level tree. Every leaf's rows
+          get an NSW graph built independently by
+          `hnsw_index.group_graph_rows` (driver-side below the
+          SMALL_KMEANS_ROWS gate, else one applyInPandas call through
+          `hnsw_index.build_graphs`), stored partitioned by leaf_id.
   search: descend the tree on the driver (route: query → nearest top cells →
           nearest leaf centroids within them), then scan ONLY the chosen
-          leaves (partition-pruned parquet read), beam-search each leaf's
-          graph, and exact-merge the per-leaf candidates — recall is
-          controlled by (probe_top, nprobe, ef_search), cost by
-          nprobe/num_leaves of the data like the reference's MSTG probes.
+          leaves (partition-pruned parquet read) and run
+          `hnsw_index.search_graphs`: beam-search each leaf's graph and
+          exact-merge the per-leaf candidates — recall is controlled by
+          (probe_top, nprobe, ef_search), cost by nprobe/num_leaves of the
+          data like the reference's MSTG probes.
 
 At 100 TB: build = one KMeans + one partitioned write + per-leaf graph
 builds (each leaf must fit an executor — same documented constraint as the
@@ -35,26 +39,17 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
+
+from myscaledb_spark.plans.hnsw_index import (
+    build_graphs,
+    graph_schema,
+    group_graph_rows,
+    search_graphs,
 )
-
-from myscaledb_spark.plans.hnsw_index import _beam, _nsw_insertions
-from myscaledb_spark.plans.vector_index import IndexRegistry
-
-_GRAPH_SCHEMA = StructType(
-    [
-        StructField("leaf_id", IntegerType()),
-        StructField("pos", IntegerType()),
-        StructField("node_id", LongType()),
-        StructField("vec", ArrayType(DoubleType())),
-        StructField("neighbors", ArrayType(IntegerType())),
-    ]
+from myscaledb_spark.plans.vector_index import (
+    IndexRegistry,
+    _mllib_kmeans,
+    _small_kmeans,
 )
 
 
@@ -79,60 +74,6 @@ def _cluster_centroids(cents: np.ndarray, num_top: int, iters: int = 25) -> np.n
     return assign, tops
 
 
-def _small_driver_build(
-    df, vec_col, id_col, num_leaves, m, ef_construction, seed, n_total, base
-):
-    """Small-input build path (same row gate, vector_index.SMALL_KMEANS_ROWS):
-    collect (id, vec), cluster with the deterministic numpy Lloyd's the PQ
-    codebooks use, build every leaf's NSW graph driver-side, write the
-    partitioned graph in one job.  MLlib KMeans.fit alone costs ~10-15
-    Spark jobs of fixed overhead — 13 s for a 1000-row reference test
-    table vs milliseconds of math.  Returns the centroid matrix, or None
-    when the gate does not fire (the 100 TB distributed path runs
-    unchanged)."""
-    from myscaledb_spark.plans.pq_index import _kmeans_np
-    from myscaledb_spark.plans.vector_index import SMALL_KMEANS_ROWS
-
-    spark = df.sparkSession
-    if n_total > SMALL_KMEANS_ROWS:
-        return None
-    try:
-        pairs = df.select(
-            F.col(id_col).alias("_kid"),
-            F.col(vec_col).cast("array<double>").alias("_kv"),
-        ).collect()
-        if any(r["_kid"] is None for r in pairs):
-            return None
-        X = np.asarray([r["_kv"] for r in pairs], dtype=np.float64)
-        if X.ndim != 2 or not np.isfinite(X).all():
-            return None
-        C = _kmeans_np(X, num_leaves, seed)
-        assign = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-        rows = []
-        for leaf in range(len(C)):
-            idxs = np.where(assign == leaf)[0]
-            if len(idxs) == 0:
-                continue
-            # same member order as the applyInPandas path: sort by node id
-            order = sorted(range(len(idxs)), key=lambda j: pairs[idxs[j]]["_kid"])
-            Xl = X[idxs[order]]
-            adj = _nsw_insertions(Xl, m, ef_construction)
-            for pos, j in enumerate(order):
-                r = pairs[idxs[j]]
-                rows.append((
-                    int(leaf), int(pos), int(r["_kid"]),
-                    [float(v) for v in r["_kv"]],
-                    [int(a) for a in adj[pos]],
-                ))
-        graph = spark.createDataFrame(rows, _GRAPH_SCHEMA)
-        graph.write.mode("overwrite").partitionBy("leaf_id").parquet(
-            os.path.join(base, "graph")
-        )
-        return C
-    except Exception:
-        return None
-
-
 def build_mstg_index(
     df: DataFrame,
     vec_col: str,
@@ -145,9 +86,6 @@ def build_mstg_index(
     ef_construction: int = 32,
     seed: int = 42,
 ) -> dict:
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     reg = IndexRegistry(artifact_dir)
     reg.set_status(
         name, "InProgress", column=vec_col, index_type="MSTG",
@@ -155,9 +93,6 @@ def build_mstg_index(
                 "ef_c": ef_construction},
     )
 
-    feats = df.withColumn(
-        "_feat", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
     n_total = df.count()
     if n_total < 2:
         # index declared before data exists (reference DDL-first scripts):
@@ -175,50 +110,34 @@ def build_mstg_index(
     num_leaves = max(2, min(num_leaves, n_total))
     num_top = max(1, min(num_top, num_leaves))
 
-    base = os.path.join(artifact_dir, name)
-    cents = _small_driver_build(
-        df, vec_col, id_col, num_leaves, m, ef_construction, seed, n_total, base
-    )
-    if cents is None:
-        train_cap = max(num_leaves * 200, 20_000)
-        train = (
-            feats.sample(fraction=min(1.0, train_cap / max(n_total, 1)), seed=seed)
-            if n_total > train_cap
-            else feats
+    small = _small_kmeans(df, vec_col, id_col, num_leaves, seed, n_total)
+    if small is not None:
+        # driver-side: every leaf's graph from the same per-group builder,
+        # written in one job (no Python worker round trip)
+        ids, vecs, cents, assign = small
+        rows = []
+        for leaf in range(len(cents)):
+            members = np.flatnonzero(assign == leaf)
+            rows += group_graph_rows(
+                leaf, [ids[i] for i in members], [vecs[i] for i in members],
+                m, ef_construction,
+            )
+        graph = df.sparkSession.createDataFrame(rows, graph_schema("leaf_id"))
+    else:
+        assigned, cents = _mllib_kmeans(
+            df, vec_col, num_leaves, seed, n_total, "leaf_id"
         )
-        km = KMeans(
-            k=num_leaves, seed=seed, featuresCol="_feat", predictionCol="leaf_id"
-        )
-        model = km.fit(train)
-        assigned = model.transform(feats).drop("_feat")
-
         keyed = assigned.select(
             F.col("leaf_id").cast("int"),
             F.col(id_col).alias("node_id"),
             F.col(vec_col).cast("array<double>").alias("vec"),
         )
-
-        def _build(pdf):
-            import pandas as pd
-
-            pdf = pdf.sort_values("node_id").reset_index(drop=True)
-            X = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            adj = _nsw_insertions(X, m, ef_construction)
-            return pd.DataFrame(
-                {
-                    "leaf_id": pdf["leaf_id"],
-                    "pos": np.arange(len(pdf), dtype=np.int32),
-                    "node_id": pdf["node_id"],
-                    "vec": pdf["vec"],
-                    "neighbors": [np.array(a, dtype=np.int32) for a in adj],
-                }
-            )
-
-        graph = keyed.groupBy("leaf_id").applyInPandas(_build, _GRAPH_SCHEMA)
-        graph.write.mode("overwrite").partitionBy("leaf_id").parquet(
-            os.path.join(base, "graph")
-        )
-        cents = np.array([list(map(float, c)) for c in model.clusterCenters()])
+        graph = build_graphs(keyed, "leaf_id", m, ef_construction)
+    base = os.path.join(artifact_dir, name)
+    graph.write.mode("overwrite").partitionBy("leaf_id").parquet(
+        os.path.join(base, "graph")
+    )
+    cents = np.asarray(cents)
     top_assign, tops = _cluster_centroids(cents, num_top)
     os.makedirs(base, exist_ok=True)
     json.dump(
@@ -267,90 +186,21 @@ def mstg_search(
     exhaustive: bool = False,
 ) -> DataFrame:
     """Tree-routed, graph-searched top-k: partition-pruned read of the
-    probed leaves, per-leaf beam search, exact global merge.
+    probed leaves, then ``hnsw_index.search_graphs`` per leaf.
 
-    exhaustive=True replaces the per-leaf beam search with an exact native
-    distance ranking over every row of the probed leaves; combined with
-    probe_top=num_top and nprobe=num_leaves this is provably equal to brute
-    force (reference brute-force equivalence: MergeTreeVSManager.cpp:382-408),
-    which gives the MSTG artifact path a bit-exact oracle. The distance is the
-    same JVM expression as vector_topk, so the double association order
-    matches the DuckDB oracle exactly — numpy's pairwise summation in the
-    beam path would not.
+    exhaustive=True ranks every row of the probed leaves exactly; combined
+    with probe_top=num_top and nprobe=num_leaves this is provably equal to
+    brute force (reference brute-force equivalence:
+    MergeTreeVSManager.cpp:382-408), which gives the MSTG artifact path a
+    bit-exact oracle.
     """
-    reg = IndexRegistry(artifact_dir)
-    rec = reg.get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"mstg index {name!r} not built")
+    rec = IndexRegistry(artifact_dir).built(name)
     tree = json.load(open(os.path.join(rec["base"], "tree.json")))
-    q = np.asarray(qvec, dtype=np.float64)
-    leaves = _route(tree, q, probe_top, nprobe)
+    leaves = _route(tree, np.asarray(qvec, dtype=np.float64), probe_top, nprobe)
 
     from myscaledb_spark.plans.frame_cache import cached_parquet
 
     graph = cached_parquet(spark, os.path.join(rec["base"], "graph")).filter(
         F.col("leaf_id").isin(leaves)  # partition pruning
     )
-    if exhaustive:
-        from myscaledb_spark.operators.topk import vector_topk
-
-        out = vector_topk(graph, "vec", list(map(float, qvec)), k, "L2", None, "node_id")
-        return out.withColumnRenamed("node_id", id_col).select(id_col, "dist")
-    ef = max(ef_search, k)
-    out_schema = StructType(
-        [StructField("node_id", LongType()), StructField("dist", DoubleType())]
-    )
-
-    def _search(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        X = np.array(pdf["vec"].tolist(), dtype=np.float64)
-        adj = [list(a) for a in pdf["neighbors"]]
-        found = _beam(X, adj, q, ef, n_seeds=n_seeds)
-        ids = pdf["node_id"].to_numpy()
-        return pd.DataFrame(
-            {
-                "node_id": [ids[p] for _, p in found],
-                "dist": [np.sqrt(d) for d, _ in found],
-            }
-        )
-
-    cands = graph.groupBy("leaf_id").applyInPandas(_search, out_schema)
-    return (
-        cands.orderBy(F.col("dist").asc(), F.col("node_id").asc())
-        .limit(k)
-        .withColumnRenamed("node_id", id_col)
-    )
-
-
-def mstg_recall(
-    df: DataFrame,
-    spark: SparkSession,
-    artifact_dir: str,
-    qvec: Sequence[float],
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    name: str = "mstg",
-    probe_top: int = 2,
-    nprobe: int = 4,
-    ef_search: int = 50,
-) -> float:
-    from myscaledb_spark.operators.topk import vector_topk
-
-    exact = {
-        r[0]
-        for r in vector_topk(df, vec_col, qvec, k, "L2", None, id_col)
-        .select(id_col)
-        .collect()
-    }
-    approx = {
-        r[0]
-        for r in mstg_search(
-            spark, artifact_dir, qvec, k, name, probe_top, nprobe, ef_search, id_col
-        )
-        .select(id_col)
-        .collect()
-    }
-    return len(exact & approx) / max(len(exact), 1)
+    return search_graphs(graph, "leaf_id", qvec, k, ef_search, id_col, n_seeds, exhaustive)

@@ -12,8 +12,10 @@ Search = ADC (asymmetric distance computation): one (m × ks) lookup table of
 query-to-centroid partial distances folded into a literal array, then
 candidate scoring is m element_at lookups per row as a pure JVM
 transform/aggregate expression over the codes parquet (no Python stage in
-the query path). Top (k × multiple) candidates re-rank exactly → top-k.
-Compression ratio vs float32: d·4 / m bytes (64-dim → 8 codes = 32×).
+the query path). Top (k × multiple) candidates re-rank exactly → top-k
+(`exact_rerank`, the two-stage tail sq_index shares, as it shares the codes
+table writer `write_codes`). Compression ratio vs float32: d·4 / m bytes
+(64-dim → 8 codes = 32×).
 
 At 100 TB the codes table is what gets scanned (32× less IO than raw
 vectors); training stays bounded; encoding is an embarrassingly parallel
@@ -40,33 +42,67 @@ from pyspark.sql.types import (
 )
 
 from myscaledb_spark.operators.topk import vector_topk
-from myscaledb_spark.plans.vector_index import IndexRegistry
+from myscaledb_spark.plans.vector_index import IndexRegistry, _kmeans_np
 
 TRAIN_SAMPLE_CAP = 50_000  # ≈ reference max train block (Settings.h:118)
 
 
-def _kmeans_np(X: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray:
-    """Deterministic Lloyd's k-means (numpy). Empty clusters re-seeded from
-    the farthest points so codebooks stay full-rank."""
-    rng = np.random.default_rng(seed)
-    k = min(k, len(X))
-    C = X[rng.choice(len(X), size=k, replace=False)].copy()
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        newC = np.zeros_like(C)
-        for j in range(k):
-            members = X[assign == j]
-            if len(members) == 0:
-                far = d2.min(axis=1).argmax()
-                newC[j] = X[far]
-            else:
-                newC[j] = members.mean(axis=0)
-        if np.allclose(newC, C):
-            C = newC
-            break
-        C = newC
-    return C
+def write_codes(
+    df: DataFrame, vec_col: str, id_col: str, id_name: str, encode, path: str
+) -> None:
+    """The codes table of a compressed index: one mapInPandas pass stores
+    each vector's ``encode(V)`` codes (an int matrix, one row per vector)
+    next to the vector itself, keyed by ``id_name`` — shared by PQ
+    (``pq_id``) and SQ (``sq_id``)."""
+
+    def _encode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            yield pd.DataFrame(
+                {
+                    id_name: pdf[id_col].astype("int64"),
+                    "codes": list(encode(V)),
+                    "vec": list(V),
+                }
+            )
+
+    schema = StructType(
+        [
+            StructField(id_name, LongType()),
+            StructField("codes", ArrayType(IntegerType())),
+            StructField("vec", ArrayType(DoubleType())),
+        ]
+    )
+    df.select(id_col, vec_col).mapInPandas(_encode, schema).write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def exact_rerank(
+    codes_df: DataFrame,
+    id_name: str,
+    approx,
+    qvec: Sequence[float],
+    k: int,
+    candidate_multiple: int,
+    metric: str,
+    id_col: str,
+) -> DataFrame:
+    """The two-stage tail of PQ and SQ search (MergeTreeVSManager.cpp:443-456):
+    the top ``k × candidate_multiple`` rows by the ``approx`` compressed
+    distance (ties by id), joined back to their stored vectors and re-ranked
+    exactly by ``vector_topk`` → (``id_col``, dist)."""
+    ncand = max(k * candidate_multiple, k)
+    cands = (
+        codes_df.select(id_name, approx.alias("approx"))
+        .orderBy(F.col("approx").asc(), F.col(id_name).asc())
+        .limit(ncand)
+    )
+    joined = cands.join(codes_df.select(id_name, "vec"), id_name)
+    exact = vector_topk(joined, "vec", list(qvec), k, metric, None, id_name)
+    return exact.select(F.col(id_name).alias(id_col), "dist")
 
 
 def build_pq_index(
@@ -115,37 +151,15 @@ def build_pq_index(
     json.dump({"m": m, "ks": ks, "sub": sub, "codebooks": cb_list},
               open(os.path.join(base, "codebooks.json"), "w"))
 
-    CB = codebooks  # closure broadcast to executors
+    def _encode(V):
+        codes = np.empty((len(V), m), dtype=np.int32)
+        for j in range(m):
+            sv = V[:, j * sub : (j + 1) * sub]
+            d2 = ((sv[:, None, :] - codebooks[j][None, :, :]) ** 2).sum(axis=2)
+            codes[:, j] = d2.argmin(axis=1)
+        return codes
 
-    out_schema = StructType(
-        [
-            StructField("pq_id", LongType()),
-            StructField("codes", ArrayType(IntegerType())),
-            StructField("vec", ArrayType(DoubleType())),
-        ]
-    )
-
-    def _encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(V), m), dtype=np.int32)
-            for j in range(m):
-                sv = V[:, j * sub : (j + 1) * sub]
-                d2 = ((sv[:, None, :] - CB[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "pq_id": pdf[id_col].astype("int64"),
-                    "codes": list(codes),
-                    "vec": list(V),
-                }
-            )
-
-    df.select(id_col, vec_col).mapInPandas(_encode, out_schema).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "codes"))
+    write_codes(df, vec_col, id_col, "pq_id", _encode, os.path.join(base, "codes"))
 
     reg.set_status(name, "Built", base=base)
     return reg.get(name)
@@ -163,10 +177,7 @@ def pq_search(
 ) -> DataFrame:
     """Two-stage ADC search: compressed scoring → exact re-rank (mirrors
     MergeTreeVSManager.cpp:443-456 two-stage for PQ-like indexes)."""
-    reg = IndexRegistry(artifact_dir)
-    rec = reg.get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"pq index {name!r} not built")
+    rec = IndexRegistry(artifact_dir).built(name)
     meta = json.load(open(os.path.join(rec["base"], "codebooks.json")))
     m, sub = meta["m"], meta["sub"]
     CB = np.array(meta["codebooks"], dtype=np.float64)  # (m, ks, sub)
@@ -179,7 +190,6 @@ def pq_search(
     from myscaledb_spark.plans.frame_cache import cached_parquet
 
     codes_df = cached_parquet(spark, os.path.join(rec["base"], "codes"))
-    ncand = max(k * candidate_multiple, k)
 
     # ADC as a PURE JVM expression: the (m × ks) lookup table is a tiny
     # literal array (e.g. 8×16 = 128 doubles), and the per-row score is
@@ -193,40 +203,4 @@ def pq_search(
         F.col("codes"), lambda c, i: F.element_at(lut_flat, i * ks + c + 1)
     )
     adc = F.aggregate(picks, F.lit(0.0), lambda acc, v: acc + v)
-    cands = (
-        codes_df.select("pq_id", adc.alias("adc"))
-        .orderBy(F.col("adc").asc(), F.col("pq_id").asc())
-        .limit(ncand)
-    )
-    # exact re-rank on the stored original vectors
-    joined = cands.join(codes_df.select("pq_id", "vec"), "pq_id")
-    exact = vector_topk(joined, "vec", list(q), k, metric, None, "pq_id")
-    return exact.select(F.col("pq_id").alias(id_col), "dist")
-
-
-def pq_recall(
-    df: DataFrame,
-    spark: SparkSession,
-    artifact_dir: str,
-    qvec: Sequence[float],
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    name: str = "pq",
-    candidate_multiple: int = 3,
-) -> float:
-    exact = {
-        r[0]
-        for r in vector_topk(df, vec_col, qvec, k, "L2", None, id_col)
-        .select(id_col)
-        .collect()
-    }
-    approx = {
-        r[0]
-        for r in pq_search(
-            spark, artifact_dir, qvec, k, name, candidate_multiple, "L2", id_col
-        )
-        .select(id_col)
-        .collect()
-    }
-    return len(exact & approx) / max(len(exact), 1)
+    return exact_rerank(codes_df, "pq_id", adc, q, k, candidate_multiple, metric, id_col)

@@ -12,9 +12,10 @@ Search: approximate distance on the DEQUANTIZED codes as a pure JVM
 zip_with/aggregate expression with the per-dim dequantization constants
 folded into literals (whole-stage codegen, no Python stage — the candidate
 scan is a FileScan + TakeOrderedAndProject over 4×-smaller rows), top
-(k × multiple) candidates, exact re-rank on stored vectors → top-k. With
-candidates ≥ corpus the re-rank is provably exact, which is how the gate
-entry gets a bit-exact oracle.
+(k × multiple) candidates, exact re-rank on stored vectors → top-k — the
+two-stage tail and the codes writer are pq_index's `exact_rerank` and
+`write_codes`. With candidates ≥ corpus the re-rank is provably exact,
+which is how the gate entry gets a bit-exact oracle.
 
 At 100 TB: the codes table is the scan target (4× less IO), the min/max
 stats are a single tiny artifact, encoding is one mapInPandas pass.
@@ -30,16 +31,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
-from myscaledb_spark.operators.topk import vector_topk
+from myscaledb_spark.plans.pq_index import exact_rerank, write_codes
 from myscaledb_spark.plans.vector_index import IndexRegistry
 
 
@@ -82,32 +75,10 @@ def build_sq_index(
         open(os.path.join(base, "sq_stats.json"), "w"),
     )
 
-    out_schema = StructType(
-        [
-            StructField("sq_id", LongType()),
-            StructField("codes", ArrayType(IntegerType())),
-            StructField("vec", ArrayType(DoubleType())),
-        ]
-    )
-    LO, SPAN = lo, span  # closure-broadcast to executors
+    def _encode(V):
+        return np.rint((V - lo) / span * levels).clip(0, levels).astype(np.int32)
 
-    def _encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.rint((V - LO) / SPAN * levels).clip(0, levels).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "sq_id": pdf[id_col].astype("int64"),
-                    "codes": list(codes),
-                    "vec": list(V),
-                }
-            )
-
-    df.select(id_col, vec_col).mapInPandas(_encode, out_schema).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "codes"))
+    write_codes(df, vec_col, id_col, "sq_id", _encode, os.path.join(base, "codes"))
 
     reg.set_status(name, "Built", base=base)
     return reg.get(name)
@@ -125,10 +96,7 @@ def sq_search(
 ) -> DataFrame:
     """Two-stage search: dequantized scoring → exact re-rank (the reference's
     two-stage path for SQ-compressed indexes, MergeTreeVSManager.cpp:443-456)."""
-    reg = IndexRegistry(artifact_dir)
-    rec = reg.get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"sq index {name!r} not built")
+    rec = IndexRegistry(artifact_dir).built(name)
     meta = json.load(open(os.path.join(rec["base"], "sq_stats.json")))
     lo = np.array(meta["lo"], dtype=np.float64)
     hi = np.array(meta["hi"], dtype=np.float64)
@@ -139,7 +107,6 @@ def sq_search(
     from myscaledb_spark.plans.frame_cache import cached_parquet
 
     codes_df = cached_parquet(spark, os.path.join(rec["base"], "codes"))
-    ncand = max(k * candidate_multiple, k)
 
     # Dequantized distance as a PURE JVM expression (whole-stage codegen, no
     # Arrow transfer):  dist = Σ_i (lo_i + c_i·span_i/levels − q_i)²
@@ -158,39 +125,4 @@ def sq_search(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    cands = (
-        codes_df.select("sq_id", approx.alias("approx"))
-        .orderBy(F.col("approx").asc(), F.col("sq_id").asc())
-        .limit(ncand)
-    )
-    joined = cands.join(codes_df.select("sq_id", "vec"), "sq_id")
-    exact = vector_topk(joined, "vec", list(q), k, metric, None, "sq_id")
-    return exact.select(F.col("sq_id").alias(id_col), "dist")
-
-
-def sq_recall(
-    df: DataFrame,
-    spark: SparkSession,
-    artifact_dir: str,
-    qvec: Sequence[float],
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    name: str = "sq",
-    candidate_multiple: int = 3,
-) -> float:
-    exact = {
-        r[0]
-        for r in vector_topk(df, vec_col, qvec, k, "L2", None, id_col)
-        .select(id_col)
-        .collect()
-    }
-    approx = {
-        r[0]
-        for r in sq_search(
-            spark, artifact_dir, qvec, k, name, candidate_multiple, "L2", id_col
-        )
-        .select(id_col)
-        .collect()
-    }
-    return len(exact & approx) / max(len(exact), 1)
+    return exact_rerank(codes_df, "sq_id", approx, q, k, candidate_multiple, metric, id_col)

@@ -30,8 +30,11 @@ import os
 import time
 from collections.abc import Sequence
 
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from myscaledb_spark.functions.vector import distance, double_array_sql
 from myscaledb_spark.operators.topk import vector_topk
@@ -173,6 +176,20 @@ class IndexRegistry:
         p = self._path(name)
         return json.load(open(p)) if os.path.exists(p) else None
 
+    @staticmethod
+    def is_built(rec: dict | None) -> bool:
+        """Whether a record (as ``get`` returns it) can serve searches."""
+        return rec is not None and rec.get("status") == "Built"
+
+    def built(self, name: str, error: type[Exception] = RuntimeError) -> dict:
+        """The record of ``name``; raises ``error`` unless it is Built."""
+        rec = self.get(name)
+        if not self.is_built(rec):
+            raise error(
+                f"index {name!r} not built (status={rec and rec.get('status')})"
+            )
+        return rec
+
     def list(self) -> list[dict]:
         recs = [
             json.load(open(os.path.join(self.dir, f)))
@@ -182,64 +199,87 @@ class IndexRegistry:
         return sorted(recs, key=lambda r: (r.get("seq", 0), r.get("name") or ""))
 
 
-#: Row gate for the driver-side k-means build path.  MLlib KMeans.fit costs
-#: ~10-15 Spark jobs of fixed overhead (RDD conversion, k-means|| init,
-#: per-iteration aggregates) — on reference test tables of a few thousand
-#: rows that is seconds of scheduling for milliseconds of math.  At or below
-#: the gate the vectors are collected and clustered with the same
-#: deterministic numpy Lloyd's the PQ codebooks already use; above it (the
-#: 100 TB shape) the distributed MLlib path runs unchanged.
+#: Row gate for the driver-side k-means build path (IVF lists, MSTG leaves).
+#: MLlib KMeans.fit costs ~10-15 Spark jobs of fixed overhead (RDD
+#: conversion, k-means|| init, per-iteration aggregates) — on reference test
+#: tables of a few thousand rows that is seconds of scheduling for
+#: milliseconds of math.  At or below the gate the vectors are collected and
+#: clustered with the same deterministic numpy Lloyd's the PQ codebooks use;
+#: above it (the 100 TB shape) the distributed MLlib path runs.
 SMALL_KMEANS_ROWS = 65536
 
 
-def _small_kmeans_assign(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int,
-    seed: int,
-    n_total: int,
-    out_col: str,
-):
-    """Small-input build path: collect (id, vec), cluster driver-side
-    (numpy, seeded — deterministic), re-attach the assignment as a
-    broadcast (id → cluster) map.  Returns (assigned_df, centroids) or
-    (None, None) when the gate does not fire or the input shape is not
-    collectable (ragged/duplicate-id inputs keep the MLlib path)."""
-    spark = df.sparkSession
+def _kmeans_np(X: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray:
+    """Deterministic Lloyd's k-means (numpy). Empty clusters re-seeded from
+    the farthest points so codebooks stay full-rank."""
+    rng = np.random.default_rng(seed)
+    k = min(k, len(X))
+    C = X[rng.choice(len(X), size=k, replace=False)].copy()
+    for _ in range(iters):
+        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        assign = d2.argmin(axis=1)
+        newC = np.zeros_like(C)
+        for j in range(k):
+            members = X[assign == j]
+            if len(members) == 0:
+                far = d2.min(axis=1).argmax()
+                newC[j] = X[far]
+            else:
+                newC[j] = members.mean(axis=0)
+        if np.allclose(newC, C):
+            C = newC
+            break
+        C = newC
+    return C
+
+
+def _small_kmeans(df: DataFrame, vec_col: str, id_col: str, k: int, seed: int, n_total: int):
+    """Small-input k-means: collect (id, vec), cluster driver-side (numpy,
+    seeded — deterministic), assign each row its nearest centroid.  Returns
+    (ids, vecs, centroids, assignment), or None when the row gate does not
+    fire or the input is not collectable (NULL ids, ragged, NULL or
+    non-finite vectors) — the caller then runs ``_mllib_kmeans``."""
     if n_total > SMALL_KMEANS_ROWS:
-        return None, None
+        return None
+    pairs = df.select(id_col, F.col(vec_col).cast("array<double>")).collect()
+    ids = [r[0] for r in pairs]
+    vecs = [r[1] for r in pairs]
+    if any(i is None for i in ids):
+        return None
     try:
-        import numpy as np
+        X = np.asarray(vecs, dtype=np.float64)
+    except (TypeError, ValueError):
+        return None
+    if X.ndim != 2 or not np.isfinite(X).all():
+        return None
+    C = _kmeans_np(X, k, seed)
+    assign = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    return ids, vecs, C, assign
 
-        from pyspark.sql.types import IntegerType, StructField, StructType
 
-        from myscaledb_spark.plans.pq_index import _kmeans_np
+def _mllib_kmeans(df: DataFrame, vec_col: str, k: int, seed: int, n_total: int, out_col: str):
+    """Distributed k-means: MLlib KMeans (fixed seed) trained on a bounded
+    sample — centroid quality needs ~100 points per centroid, not the full
+    table (the reference caps training blocks the same way, Settings.h:118)
+    — then every row assigned executor-side.  Returns (``df`` plus
+    ``out_col``, centroid list)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
 
-        pairs = df.select(
-            F.col(id_col).alias("_kid"),
-            F.col(vec_col).cast("array<double>").alias("_kv"),
-        ).collect()
-        ids = [r["_kid"] for r in pairs]
-        if len(set(ids)) != len(ids) or any(i is None for i in ids):
-            return None, None
-        X = np.asarray([r["_kv"] for r in pairs], dtype=np.float64)
-        if X.ndim != 2 or not np.isfinite(X).all():
-            return None, None
-        C = _kmeans_np(X, k, seed)
-        lids = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-        amap_schema = StructType(
-            [df.schema[id_col], StructField(out_col, IntegerType())]
-        )
-        amap = spark.createDataFrame(
-            [(i, int(l)) for i, l in zip(ids, lids)], amap_schema
-        )
-        return (
-            df.join(F.broadcast(amap), id_col),
-            [list(map(float, c)) for c in C],
-        )
-    except Exception:
-        return None, None
+    feats = df.withColumn(
+        "_feat", array_to_vector(F.col(vec_col).cast("array<double>"))
+    )
+    train_cap = max(k * 200, 20_000)
+    train = (
+        feats.sample(fraction=min(1.0, train_cap / max(n_total, 1)), seed=seed)
+        if n_total > train_cap
+        else feats
+    )
+    model = KMeans(k=k, seed=seed, featuresCol="_feat", predictionCol=out_col).fit(train)
+    return (
+        model.transform(feats).drop("_feat"),
+        [list(map(float, c)) for c in model.clusterCenters()],
+    )
 
 
 def build_ivf_index(
@@ -253,9 +293,6 @@ def build_ivf_index(
     seed: int = 42,
 ) -> dict:
     """Build an IVF index artifact. Returns the registry record."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     reg = IndexRegistry(artifact_dir)
     reg.set_status(
         name,
@@ -268,12 +305,6 @@ def build_ivf_index(
     # keep ALL table columns in the inverted lists so filtered search and
     # projections work directly on the probed scan (≈ reference reading row
     # ranges back from the part, §3.2.4)
-    feats = df.withColumn(
-        "_feat", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    # train on a bounded sample (reference caps training blocks the same way,
-    # Settings.h:118) — centroid quality needs ~100 points per centroid, not
-    # the full table; assignment below still covers every row
     n_total = df.count()
     if n_total < 2:
         # index declared before data exists: exact FLAT stand-in (see
@@ -282,22 +313,21 @@ def build_ivf_index(
         return reg.get(name)
     # tiny tables: KMeans needs k <= n points — clamp rather than fail DDL
     num_centroids = max(2, min(num_centroids, n_total))
-    assigned, centroids = _small_kmeans_assign(
-        df, vec_col, id_col, num_centroids, seed, n_total, "list_id"
-    )
-    if assigned is None:
-        train_cap = max(num_centroids * 200, 20_000)
-        train = (
-            feats.sample(fraction=min(1.0, train_cap / max(n_total, 1)), seed=seed)
-            if n_total > train_cap
-            else feats
+    small = _small_kmeans(df, vec_col, id_col, num_centroids, seed, n_total)
+    # the assignment re-joins on id, so duplicate ids take the MLlib path
+    if small is not None and len(set(small[0])) == len(small[0]):
+        ids, _, C, lids = small
+        amap_schema = StructType(
+            [df.schema[id_col], StructField("list_id", IntegerType())]
         )
-        km = KMeans(
-            k=num_centroids, seed=seed, featuresCol="_feat", predictionCol="list_id"
+        amap = df.sparkSession.createDataFrame(
+            [(i, int(l)) for i, l in zip(ids, lids)], amap_schema
         )
-        model = km.fit(train)
-        assigned = model.transform(feats).drop("_feat")
-        centroids = [list(map(float, c)) for c in model.clusterCenters()]
+        assigned, centroids = df.join(F.broadcast(amap), id_col), C.tolist()
+    else:
+        assigned, centroids = _mllib_kmeans(
+            df, vec_col, num_centroids, seed, n_total, "list_id"
+        )
 
     inv_path = os.path.join(artifact_dir, name, "inverted")
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(inv_path)
@@ -326,9 +356,7 @@ def append_to_ivf_index(
     Assignment (``_with_list_id``) is one JVM pass over the batch, no
     Python."""
     reg = IndexRegistry(artifact_dir)
-    rec = reg.get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"index {name!r} not built")
+    rec = reg.built(name)
     centroids = json.load(open(rec["centroids"]))
     assigned = _with_list_id(new_df, vec_col, centroids)
     assigned.write.mode("append").partitionBy("list_id").parquet(rec["inverted"])
@@ -400,10 +428,7 @@ def ivf_search(
     the same mask as a table). Applied as a broadcast anti-join BEFORE the
     top-k, so deleted rows can never surface and the index needs no
     rebuild until compaction."""
-    reg = IndexRegistry(artifact_dir)
-    rec = reg.get(name)
-    if rec is None or rec.get("status") != "Built":
-        raise RuntimeError(f"index {name!r} not built (status={rec and rec.get('status')})")
+    rec = IndexRegistry(artifact_dir).built(name)
     centroids = json.load(open(rec["centroids"]))
     probe = _nearest_lists(centroids, qvec, nprobe, metric)
     from myscaledb_spark.plans.frame_cache import cached_parquet
@@ -416,32 +441,22 @@ def ivf_search(
     return vector_topk(cands, vec_col, qvec, k, metric, where, id_col)
 
 
-def ivf_recall(
+def ann_recall(
     df: DataFrame,
-    spark: SparkSession,
-    artifact_dir: str,
+    approx: DataFrame,
     qvec: Sequence[float],
     k: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    nprobe: int = 4,
-    metric: str = "L2",
-    name: str = "ivf",
 ) -> float:
-    """recall@k of the ANN path vs the exact oracle (BASELINE.md: 'ours must
-    pin recall explicitly')."""
+    """recall@k of an ANN search frame ``approx`` (any searcher's result,
+    holding ``id_col``) against the exact L2 top-k over ``df``
+    (BASELINE.md: 'ours must pin recall explicitly')."""
     exact = {
         r[0]
-        for r in vector_topk(df, vec_col, qvec, k, metric, None, id_col)
+        for r in vector_topk(df, vec_col, qvec, k, "L2", None, id_col)
         .select(id_col)
         .collect()
     }
-    approx = {
-        r[0]
-        for r in ivf_search(
-            spark, artifact_dir, qvec, k, name, nprobe, metric, None, id_col, vec_col
-        )
-        .select(id_col)
-        .collect()
-    }
-    return len(exact & approx) / max(len(exact), 1)
+    got = {r[0] for r in approx.select(id_col).collect()}
+    return len(exact & got) / max(len(exact), 1)

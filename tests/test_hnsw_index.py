@@ -6,11 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from myscaledb_spark.plans.hnsw_index import (
-    build_hnsw_index,
-    hnsw_recall,
-    hnsw_search,
-)
+from myscaledb_spark.plans.hnsw_index import build_hnsw_index, hnsw_search
+from myscaledb_spark.plans.vector_index import ann_recall
 
 
 @pytest.fixture(scope="module")
@@ -40,15 +37,19 @@ def test_recall_reasonable(spark, hnsw_dir):
     """Random gaussians are the ANN worst case; NSW with ef=50 over 4 parts
     must still recover most of the true top-10 (random would be 2%)."""
     recalls = [
-        hnsw_recall(spark.table("embeddings"), spark, hnsw_dir, _q(s), 10, ef_search=50)
+        ann_recall(
+            spark.table("embeddings"),
+            hnsw_search(spark, hnsw_dir, _q(s), 10, ef_search=50), _q(s), 10,
+        )
         for s in (1, 2, 3)
     ]
     assert sum(recalls) / len(recalls) >= 0.5, recalls
 
 
 def test_ef_improves_recall(spark, hnsw_dir):
-    lo = hnsw_recall(spark.table("embeddings"), spark, hnsw_dir, _q(7), 10, ef_search=10)
-    hi = hnsw_recall(spark.table("embeddings"), spark, hnsw_dir, _q(7), 10, ef_search=120)
+    emb = spark.table("embeddings")
+    lo = ann_recall(emb, hnsw_search(spark, hnsw_dir, _q(7), 10, ef_search=10), _q(7), 10)
+    hi = ann_recall(emb, hnsw_search(spark, hnsw_dir, _q(7), 10, ef_search=120), _q(7), 10)
     assert hi >= lo
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import tempfile
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -230,3 +231,58 @@ def test_compound_drop_add_same_name(spark, emb, tmp_path):
     from myscaledb_spark.plans.vector_index import IndexRegistry
 
     assert IndexRegistry(art).get("vc")["index_type"].upper() == "FLAT"
+
+
+#: every vector index type the DDL builds, with the record type it leaves
+_DDL_TYPES = [
+    ("FLAT", "FLAT"),
+    ("IVFFLAT('ncentroids=4')", "IVFFLAT"),
+    ("IVFPQ('pq_m=2', 'ks=4')", "PQFLAT"),
+    ("IVFSQ", "SQ"),
+    ("HNSWFLAT('m=4')", "HNSWFLAT"),
+    ("MSTG('alpha=1')", "MSTG"),
+]
+
+
+@pytest.mark.parametrize(
+    "ddl_type,record_type", _DDL_TYPES + [("IVFFLAT", "stand-in")],
+    ids=[t for t, _ in _DDL_TYPES] + ["n<2 stand-in"],
+)
+def test_every_index_type_serves_search_index_and_hybrid(spark, tmp_path, ddl_type, record_type):
+    """``search_index`` returns the caller's ``id_col`` for every type, and
+    ``hybrid_search(artifact_dir=…)`` returns k rows next to an FTS index:
+    the record's type picks the searcher, and a FLAT record (declared, or
+    the stand-in a build over fewer than 2 rows leaves) takes the exact
+    path."""
+    from myscaledb_spark.operators.hybrid import hybrid_search
+    from myscaledb_spark.plans.fts_index import build_fts_index
+
+    rng = np.random.default_rng(3)
+    words = ["vector", "search", "fast", "hash", "join", "table"]
+    df = spark.createDataFrame(
+        [
+            (i, [float(x) for x in rng.standard_normal(8)],
+             " ".join(words[j % 6] for j in range(i, i + 3)))
+            for i in range(40)
+        ],
+        "id long, vec array<double>, text string",
+    )
+    art = str(tmp_path / "art")
+    table = df.limit(1) if record_type == "stand-in" else df
+    rec = alter_index_ddl(
+        spark, f"ALTER TABLE t ADD VECTOR INDEX v vec TYPE {ddl_type}", table, "id", art
+    )
+    assert rec["status"] == "Built"
+    assert rec["index_type"] == ("FLAT" if record_type == "stand-in" else record_type)
+    q = [0.1] * 8
+    # only FLAT needs the table back; the others search their artifact
+    table_args = {"df": df, "vec_col": "vec"} if rec["index_type"] == "FLAT" else {}
+    out = search_index(spark, art, "v", q, 5, id_col="id", **table_args)
+    assert "id" in out.columns and "vec_id" not in out.columns
+    assert len(out.select("id").collect()) == 5
+    build_fts_index(df, "text", "id", art, name="fts")
+    fused = hybrid_search(
+        df, "vec", "text", q, "vector fast", 5, "id", artifact_dir=art,
+        index_name="v", fts_name="fts",
+    ).collect()
+    assert len(fused) == 5

@@ -11,9 +11,9 @@ from myscaledb_spark.plans.mstg_index import (
     _cluster_centroids,
     _route,
     build_mstg_index,
-    mstg_recall,
     mstg_search,
 )
+from myscaledb_spark.plans.vector_index import ann_recall
 from myscaledb_spark.suite.search import make_qvec
 
 
@@ -59,11 +59,13 @@ def test_mstg_search_shape_and_order(spark, mstg_art):
 def test_mstg_recall_scales_with_probes(spark, mstg_art):
     emb = spark.table("embeddings")
     q = make_qvec(seed=77)
-    r_full = mstg_recall(
-        emb, spark, mstg_art, q, 10, probe_top=3, nprobe=8, ef_search=200
+    r_full = ann_recall(
+        emb, mstg_search(spark, mstg_art, q, 10, probe_top=3, nprobe=8, ef_search=200),
+        q, 10,
     )
-    r_small = mstg_recall(
-        emb, spark, mstg_art, q, 10, probe_top=1, nprobe=2, ef_search=50
+    r_small = ann_recall(
+        emb, mstg_search(spark, mstg_art, q, 10, probe_top=1, nprobe=2, ef_search=50),
+        q, 10,
     )
     assert r_full >= 0.9  # all leaves probed, wide beam
     assert r_full >= r_small
@@ -78,3 +80,22 @@ def test_mstg_deterministic_rebuild(spark, tmp_path):
     r1 = [(r.vec_id, r.dist) for r in mstg_search(spark, a1, q, 5).collect()]
     r2 = [(r.vec_id, r.dist) for r in mstg_search(spark, a2, q, 5).collect()]
     assert r1 == r2
+
+
+def test_mllib_build_path_exhaustive_equals_brute_force(spark, tmp_path, monkeypatch):
+    """Above the small-input gate the leaves come from MLlib KMeans and each
+    leaf's graph from the applyInPandas build; probing every top cell and
+    every leaf exhaustively equals brute force, ids and distances."""
+    from myscaledb_spark.operators.topk import vector_topk
+    from myscaledb_spark.plans import vector_index
+
+    monkeypatch.setattr(vector_index, "SMALL_KMEANS_ROWS", 0)
+    emb = spark.table("embeddings")
+    art = str(tmp_path / "mstg_mllib")
+    build_mstg_index(emb, "embedding", "vec_id", art, num_leaves=8, num_top=3)
+    q = make_qvec(seed=77)
+    got = mstg_search(
+        spark, art, q, 10, probe_top=3, nprobe=8, exhaustive=True
+    ).collect()
+    want = vector_topk(emb, "embedding", q, 10, "L2", None, "vec_id")
+    assert got == want.select("vec_id", "dist").collect()

@@ -6,7 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from myscaledb_spark.plans.pq_index import build_pq_index, pq_recall, pq_search
+from myscaledb_spark.plans.pq_index import build_pq_index, pq_search
+from myscaledb_spark.plans.vector_index import ann_recall
 
 
 @pytest.fixture(scope="module")
@@ -35,7 +36,7 @@ def test_recall_reasonable(spark, pq_dir):
     """PQ with 3x candidate expansion + exact re-rank on random gaussians
     (ANN worst case): recall must be well above random (10/500 = 2%)."""
     recalls = [
-        pq_recall(spark.table("embeddings"), spark, pq_dir, _q(s), 10)
+        ann_recall(spark.table("embeddings"), pq_search(spark, pq_dir, _q(s), 10), _q(s), 10)
         for s in (1, 2, 3)
     ]
     assert sum(recalls) / len(recalls) > 0.3, recalls
@@ -44,8 +45,9 @@ def test_recall_reasonable(spark, pq_dir):
 def test_wide_candidates_approach_exact(spark, pq_dir):
     """candidate_multiple → corpus size ⇒ re-rank is over everything ⇒
     recall 1.0 (ADC only affects pruning, never final distances)."""
-    r = pq_recall(
-        spark.table("embeddings"), spark, pq_dir, _q(4), 10, candidate_multiple=50
+    r = ann_recall(
+        spark.table("embeddings"),
+        pq_search(spark, pq_dir, _q(4), 10, candidate_multiple=50), _q(4), 10,
     )
     assert r == 1.0
 

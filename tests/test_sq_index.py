@@ -10,7 +10,8 @@ import os
 import numpy as np
 import pytest
 
-from myscaledb_spark.plans.sq_index import build_sq_index, sq_recall, sq_search
+from myscaledb_spark.plans.sq_index import build_sq_index, sq_search
+from myscaledb_spark.plans.vector_index import ann_recall
 
 
 @pytest.fixture(scope="module")
@@ -37,15 +38,16 @@ def test_recall_high(spark, sq_dir):
     """int8 quantization error is tiny relative to inter-point distances:
     with 3x candidate re-rank SQ should be near-perfect (well above PQ)."""
     recalls = [
-        sq_recall(spark.table("embeddings"), spark, sq_dir, _q(s), 10)
+        ann_recall(spark.table("embeddings"), sq_search(spark, sq_dir, _q(s), 10), _q(s), 10)
         for s in (1, 2, 3)
     ]
     assert sum(recalls) / len(recalls) >= 0.9, recalls
 
 
 def test_wide_candidates_exact(spark, sq_dir):
-    r = sq_recall(
-        spark.table("embeddings"), spark, sq_dir, _q(4), 10, candidate_multiple=50
+    r = ann_recall(
+        spark.table("embeddings"),
+        sq_search(spark, sq_dir, _q(4), 10, candidate_multiple=50), _q(4), 10,
     )
     assert r == 1.0
 

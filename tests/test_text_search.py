@@ -732,3 +732,16 @@ def test_bm25_constants_read_only_in_the_scorer():
                 if (f, owner) != ("text.py", "bm25_scores_from_tf"):
                     stray.append(f"{os.path.relpath(path, pkg)}:{n.lineno}")
     assert not stray, stray
+
+
+def test_unknown_tokenizer_raises_on_the_query_side():
+    """The query analyzer rejects an unknown tokenizer name as the column
+    tokenizer does, instead of analyzing the query as ``simple``."""
+    from myscaledb_spark.errors import InvalidSearchQuery
+    from myscaledb_spark.functions.text import parse_nlq
+
+    with pytest.raises(InvalidSearchQuery, match="unknown tokenizer"):
+        tokenize_query("Hello World", "bogus")
+    with pytest.raises(InvalidSearchQuery, match="unknown tokenizer"):
+        parse_nlq('hello +"big world"', "bogus")
+    assert tokenize_query("Hello World", "simple") == ["hello", "world"]

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 
 from myscaledb_spark.plans.vector_index import (
     IndexRegistry,
+    ann_recall,
     build_ivf_index,
-    ivf_recall,
     ivf_search,
 )
 
@@ -47,8 +47,9 @@ def test_search_returns_k(spark, ivf_dir):
 
 def test_full_probe_equals_exact(spark, ivf_dir):
     """nprobe = num_centroids ⇒ recall 1.0 (ANN degenerates to exact)."""
-    r = ivf_recall(
-        spark.table("embeddings"), spark, ivf_dir, _q(7), 10, nprobe=8
+    r = ann_recall(
+        spark.table("embeddings"), ivf_search(spark, ivf_dir, _q(7), 10, nprobe=8),
+        _q(7), 10,
     )
     assert r == 1.0
 
@@ -56,8 +57,9 @@ def test_full_probe_equals_exact(spark, ivf_dir):
 def test_partial_probe_recall(spark, ivf_dir):
     """Random gaussian vectors are the ANN worst case; still, nprobe=4/8
     must recover a meaningful fraction and never crash."""
-    r = ivf_recall(
-        spark.table("embeddings"), spark, ivf_dir, _q(11), 10, nprobe=4
+    r = ann_recall(
+        spark.table("embeddings"), ivf_search(spark, ivf_dir, _q(11), 10, nprobe=4),
+        _q(11), 10,
     )
     assert 0.0 <= r <= 1.0
 
@@ -169,3 +171,55 @@ def test_recall_indicator_counts_returned_rows(spark):
     assert (row["k"], row["n_results"], row["recall_ok"]) == (3, 3, 1)
     row = _recall_indicator(spark, got, exact, 3, 0.5).collect()[0]
     assert row["recall_ok"] == 0
+
+
+def test_mllib_build_path_full_probe_equals_exact(spark, tmp_path, monkeypatch):
+    """Above the small-input gate the centroids come from MLlib KMeans and
+    the lists from its executor-side assignment; a full probe still equals
+    the exact top-k, ids and distances."""
+    from myscaledb_spark.operators.topk import vector_topk
+    from myscaledb_spark.plans import vector_index
+
+    monkeypatch.setattr(vector_index, "SMALL_KMEANS_ROWS", 0)
+    emb = spark.table("embeddings")
+    d = str(tmp_path / "ivf_mllib")
+    build_ivf_index(emb, "embedding", "vec_id", d, num_centroids=8)
+    got = ivf_search(spark, d, _q(7), 10, nprobe=8).select("vec_id", "dist").collect()
+    want = vector_topk(emb, "embedding", _q(7), 10, "L2", None, "vec_id")
+    assert got == want.select("vec_id", "dist").collect()
+
+
+#: modules of the ANN index family under myscaledb_spark/plans
+_ANN_MODULES = ("vector_index", "pq_index", "sq_index", "hnsw_index", "mstg_index", "ddl")
+
+
+def test_index_family_keeps_one_built_check_and_one_graph_search():
+    """Source guard: the registry's Built comparison lives only in
+    IndexRegistry, and the NSW graph's applyInPandas only in hnsw_index."""
+    import ast
+    import os
+
+    plans = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "myscaledb_spark", "plans",
+    )
+    stray = []
+    for mod in _ANN_MODULES:
+        path = os.path.join(plans, mod + ".py")
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        registry = {
+            id(n)
+            for c in ast.walk(tree)
+            if isinstance(c, ast.ClassDef) and c.name == "IndexRegistry"
+            for n in ast.walk(c)
+        }
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Compare) and id(n) not in registry and any(
+                isinstance(e, ast.Constant) and e.value == "Built"
+                for e in ast.walk(n)
+            ):
+                stray.append(f"{mod}:{n.lineno} Built comparison")
+            if (mod != "hnsw_index" and isinstance(n, ast.Attribute)
+                    and n.attr == "applyInPandas"):
+                stray.append(f"{mod}:{n.lineno} applyInPandas")
+    assert not stray, stray
