@@ -20,13 +20,13 @@ Spark design: candidate generation is where all the data-scale work
 happens, and it reuses the single-search primitives.  The default path
 (`hybrid_search`) runs the exact distance top-k′ and `text_search` over the
 resident tokenized corpus that text search keeps, with its complete BM25
-statistics, and collects both legs in one tagged-union job
-(`_collect_legs`); the indexed path (`hybrid_search_indexed`) takes its
-vector leg from any registered ANN index (`ddl.search_index`) and its text
-leg from the FTS artifact, and collects them the same way.  Fusion of the
-two ≤k′-row lists runs on the driver (`_fuse_local`), as the reference
-fuses in memory on one node; `fuse_candidates` is the DataFrame fusion for
-per-part fusion and pre-built candidate frames.
+statistics; the indexed path (`hybrid_search_indexed`) takes its vector
+leg from any registered ANN index (`ddl.search_index`) and its text leg
+from the FTS artifact; the SQL hybridsearch shapes (`sql_search`) build
+their own legs, per part where the table has several.  Every path fuses
+through `fuse_candidates`: one tagged-union job collects both legs and the
+fusion of the two ≤k′-row lists runs on the driver, as the reference fuses
+in memory on one node.
 """
 
 from __future__ import annotations
@@ -35,12 +35,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.functions.text import _resident_toked, text_search
 from myscaledb_spark.functions.vector import METRIC_ASCENDING
-from myscaledb_spark.session import collect_small, values_relation
+from myscaledb_spark.session import _sort_key, collect_small, values_relation
 
 DEFAULT_FUSION_K = 60  # src/Core/Settings.h:920
 DEFAULT_FUSION_WEIGHT = 0.5  # src/Core/Settings.h:919
@@ -51,48 +50,6 @@ DEFAULT_FUSION_WEIGHT = 0.5  # src/Core/Settings.h:919
 #: (HybridSearchUtils.cpp:31 replaceLimitAST), where each shard over-returns
 #: before the global re-fuse — Spark's single plan has no such split.
 DEFAULT_CANDIDATE_MULTIPLE = 1
-
-
-def _ranked(df: DataFrame, score_col: str, ascending: bool, id_col: str,
-            part_col: str | None = None) -> DataFrame:
-    order = [F.col(score_col).asc() if ascending else F.col(score_col).desc(), F.col(id_col).asc()]
-    w = (Window.partitionBy(part_col) if part_col else Window).orderBy(*order)
-    sel = [id_col, score_col] + ([part_col] if part_col else [])
-    return df.select(*sel).withColumn("_rank", F.row_number().over(w))
-
-
-def _minmax_norm(df: DataFrame, score_col: str, out_col: str,
-                 part_col: str | None = None) -> DataFrame:
-    """Min-max normalize; all-equal list → 1.0 (HybridSearchUtils.cpp:296-302).
-    With ``part_col``, normalization is PER PART — the reference fuses each
-    data part's candidate list independently (MergeTreeHybridSearchManager;
-    00041_mqvs_text_search_multiple_parts pins the per-part numbers)."""
-    if part_col:
-        w = Window.partitionBy(part_col)
-        return (
-            df.withColumn("_mn", F.min(score_col).over(w))
-            .withColumn("_mx", F.max(score_col).over(w))
-            .withColumn(
-                out_col,
-                F.when(F.col("_mx") == F.col("_mn"), F.lit(1.0)).otherwise(
-                    (F.col(score_col) - F.col("_mn"))
-                    / (F.col("_mx") - F.col("_mn"))
-                ),
-            )
-        )
-    stats = df.agg(
-        F.min(score_col).alias("_mn"), F.max(score_col).alias("_mx")
-    )
-    return (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn(
-            out_col,
-            F.when(F.col("_mx") == F.col("_mn"), F.lit(1.0)).otherwise(
-                (F.col(score_col) - F.col("_mn")) / (F.col("_mx") - F.col("_mn"))
-            ),
-        )
-        .drop("_mn", "_mx")
-    )
 
 
 def hybrid_search(
@@ -131,16 +88,15 @@ def hybrid_search(
     (MergeTreeHybridSearchManager.cpp:114-151).  The vector leg is the
     exact distance top-k′ over that frame; the text leg is ``text_search``
     itself, whose BM25 statistics come from the corpus's complete stats
-    record, so a repeated query runs no stats pass.  Both legs are
-    collected by ONE tagged-union job (``_collect_legs``), then fused
-    driver-side over the two ≤k′-row lists — result-scale, never
-    data-scale.  A corpus above the resident gate, and a filtered frame
-    without an entry (a WHERE per query), stream both legs from ``df``, the
-    text leg with its stats pass over the filtered rows; the indexed variant (`hybrid_search_indexed`) is the
-    no-corpus-scan scale path.
+    record, so a repeated query runs no stats pass.  ``fuse_candidates``
+    collects both legs in ONE job and fuses them driver-side over the two
+    ≤k′-row lists — result-scale, never data-scale.  A corpus above the
+    resident gate, and a filtered frame without an entry (a WHERE per
+    query), stream both legs from ``df``, the text leg with its stats pass
+    over the filtered rows; the indexed variant (`hybrid_search_indexed`)
+    is the no-corpus-scan scale path.
     """
-    from myscaledb_spark.functions.vector import distance, distance_defined
-    from myscaledb_spark.operators.topk import _order, _validate_k
+    from myscaledb_spark.operators.topk import _validate_k, vector_topk
 
     ft = fusion_type.lower()
     if ft not in ("rsf", "rrf"):
@@ -176,22 +132,16 @@ def hybrid_search(
     if res is None and not _filtered(df):
         res = _resident_toked(df, text_col, tokenizer, None)
     corpus = df if res is None else res[0]
-    # NULL/malformed vectors have no distance and would sort FIRST
-    # ascending — the structural guard drops them, as vector_topk does
-    vec_cand = (
-        corpus.filter(distance_defined(vec_col, qvec, metric))
-        .select(F.col(id_col), distance(vec_col, qvec, metric).alias("_vdist"))
-        .orderBy(*_order(F.col("_vdist"), F.col(id_col), metric))
-        .limit(kprime)
-    )
+    vec_cand = vector_topk(
+        corpus, vec_col, qvec, kprime, metric, id_col=id_col, dist_name="_vdist"
+    ).select(id_col, "_vdist")
     txt_cand = text_search(
         df, text_col, qtext, kprime, id_col, tokenizer, score_name="_bm25",
         resident=res,
     ).select(id_col, "_bm25")
-    id_type, vec_rows, txt_rows = _collect_legs(vec_cand, txt_cand, id_col)
-    return _fuse_local(
-        df.sparkSession, id_type, vec_rows, txt_rows, k,
-        id_col, ft, metric, fusion_weight, fusion_k, score_name,
+    return fuse_candidates(
+        vec_cand, txt_cand, k, id_col, ft, metric, fusion_weight, fusion_k,
+        score_name,
     )
 
 
@@ -205,34 +155,78 @@ def _filtered(df: DataFrame) -> bool:
         return True
 
 
-def _collect_legs(vec_cand: DataFrame, txt_cand: DataFrame, id_col: str):
-    """(id type, [(id, _vdist)], [(id, _bm25)]) of two candidate frames,
-    collected by ONE job.  The legs are tiny top-k subtrees; collecting
-    them separately paid two job schedulings and two py4j round trips per
-    query.  A tagged union keeps each leg's own top-k (per-leg semantics
-    and normalization order unchanged — rows are re-split by the tag), so
-    the two lists are exactly what two collects return.  Below the
-    small-input gate the job runs with AQE off and one shuffle partition:
-    AQE's per-stage re-planning jobs cost more than a ≤2k′-row result's
-    whole data path; above it the adaptive plan runs unchanged."""
+def _collect_legs(vec_cand: DataFrame, txt_cand: DataFrame, id_col: str,
+                  part_col: str | None = None):
+    """(id type, [(id, _vdist[, part])], [(id, _bm25[, part])]) of two
+    candidate frames, collected by ONE job.  The legs are tiny top-k
+    subtrees; collecting them separately paid two job schedulings and two
+    py4j round trips per query.  A tagged union keeps each leg's own top-k
+    (rows are re-split by the tag), so the two lists are exactly what two
+    collects return.  Below the small-input gate the job runs with AQE off
+    and one shuffle partition: AQE's per-stage re-planning jobs cost more
+    than a ≤2k′-row result's whole data path; above it the adaptive plan
+    runs unchanged."""
     id_type = vec_cand.schema[id_col].dataType
+    part = [F.col(part_col)] if part_col else []
     tagged = vec_cand.select(
         F.col(id_col).alias("_id"),
         F.col("_vdist").alias("_score"),
         F.lit(0).alias("_leg"),
+        *part,
     ).unionAll(
         txt_cand.select(
             F.col(id_col).cast(id_type).alias("_id"),
             F.col("_bm25").alias("_score"),
             F.lit(1).alias("_leg"),
+            *part,
         )
     )
     rows = collect_small(tagged, **{"spark.sql.shuffle.partitions": "1"})
     if rows is None:
         rows = tagged.collect()
-    vec_rows = [(r[0], r[1]) for r in rows if r[2] == 0]
-    txt_rows = [(r[0], r[1]) for r in rows if r[2] == 1]
-    return id_type, vec_rows, txt_rows
+    legs: tuple = ([], [])
+    for r in rows:
+        legs[r[2]].append((r[0], r[1], *r[3:]))
+    return id_type, legs[0], legs[1]
+
+
+def _spark_ordered(rows: list, descending: bool) -> list:
+    """(id, score) rows by score, then id ascending, in Spark's order: NULL
+    first ascending and last descending, NaN above every double, -0.0 equal
+    to 0.0 (stable sorts, last key first)."""
+    out = sorted(rows, key=lambda r: _sort_key(r[0]))
+    out.sort(key=lambda r: _sort_key(r[1]), reverse=descending)
+    return out
+
+
+def _rrf_scores(rows: list, ascending: bool, fusion_k: int) -> dict:
+    """id → 1 / (fusion_k + rank), rank 1-based in the list's score order."""
+    return {
+        i: 1.0 / (float(fusion_k) + rank)
+        for rank, (i, _) in enumerate(_spark_ordered(rows, not ascending), start=1)
+    }
+
+
+def _rsf_scores(rows: list, ascending: bool, weight: float) -> dict:
+    """id → min-max normalized score × weight; an all-equal list (NaN equals
+    NaN, as in Spark) normalizes to 1.0 (HybridSearchUtils.cpp:296-302), and
+    an ascending metric scores 1 - norm.  Spark's min/max skip NULLs and put
+    NaN above every double; a NULL score adds 0.0, as a missing leg does."""
+    present = [s for _, s in rows if s is not None]
+    mn = min(present, key=_sort_key, default=None)
+    mx = max(present, key=_sort_key, default=None)
+    out = {}
+    for i, s in rows:
+        if mn is None:
+            nrm = None
+        elif _sort_key(mx) == _sort_key(mn):
+            nrm = 1.0
+        else:
+            nrm = None if s is None else (s - mn) / (mx - mn)
+        if nrm is not None and ascending:
+            nrm = 1.0 - nrm
+        out[i] = 0.0 if nrm is None else nrm * weight
+    return out
 
 
 def _fuse_local(
@@ -248,45 +242,34 @@ def _fuse_local(
     fusion_k: int = DEFAULT_FUSION_K,
     score_name: str = "fusion_score",
 ) -> DataFrame:
-    """Driver-side fusion of collected candidate lists — the exact float
-    sequence of ``fuse_candidates`` (IEEE doubles, same op order), run on
-    ≤k′-row Python lists. The reference's fusion is likewise a single-node
-    in-memory pass over the candidate lists (HybridSearchUtils.cpp:163-314);
-    distributing a ≤max_search_result_window-row fuse bought ~4 extra Spark
-    jobs per query. ``fuse_candidates`` remains the DataFrame path for
-    per-part fusion and pre-built candidate frames."""
+    """RSF/RRF over collected (id, score[, part]) candidate lists: ranks and
+    normalization per part, one fused score per id (a missing leg adds
+    0.0), then the global top-k by (score DESC, id ASC) as a VALUES
+    relation.  Every id lives in exactly one part."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     asc = METRIC_ASCENDING.get(metric, True)
-    if metric.upper() == "L2":
-        # the reference fuses faiss METRIC_L2 scores, i.e. SQUARED L2
-        vec_rows = [(i, d * d) for i, d in vec_rows]
-    scores: dict = {}
-    if fusion_type == "rrf":
-        v_sorted = sorted(
-            vec_rows, key=lambda r: ((r[1] if asc else -r[1]), r[0])
-        )
-        for rank, (i, _) in enumerate(v_sorted, start=1):
-            scores[i] = scores.get(i, 0.0) + 1.0 / (float(fusion_k) + rank)
-        t_sorted = sorted(txt_rows, key=lambda r: (-r[1], r[0]))
-        for rank, (i, _) in enumerate(t_sorted, start=1):
-            scores[i] = scores.get(i, 0.0) + 1.0 / (float(fusion_k) + rank)
-    else:
-        if vec_rows:
-            ds = [d for _, d in vec_rows]
-            mn, mx = min(ds), max(ds)
-            for i, d in vec_rows:
-                nrm = 1.0 if mx == mn else (d - mn) / (mx - mn)
-                part = nrm if not asc else 1.0 - nrm
-                scores[i] = scores.get(i, 0.0) + part * (1.0 - fusion_weight)
-        if txt_rows:
-            ss = [s for _, s in txt_rows]
-            mn, mx = min(ss), max(ss)
-            for i, s in txt_rows:
-                nrm = 1.0 if mx == mn else (s - mn) / (mx - mn)
-                scores[i] = scores.get(i, 0.0) + nrm * float(fusion_weight)
-    top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    top = [(i, float(s)) for i, s in top]
+    parts: dict = {}
+    for leg, rows in enumerate((vec_rows, txt_rows)):
+        for r in rows:
+            parts.setdefault(r[2] if len(r) > 2 else None, ([], []))[leg].append(r[:2])
+    vs: dict = {}
+    ts: dict = {}
+    for vec, txt in parts.values():
+        if metric.upper() == "L2":
+            # the reference fuses faiss METRIC_L2 scores, i.e. SQUARED L2
+            # (00040_mqvs_hybrid_search.reference: id0 norm = 1 - 3/27 over
+            # squared candidate distances). Ranking is unchanged (monotone),
+            # but RSF min-max normalization is not — square before it.
+            vec = [(i, None if d is None else d * d) for i, d in vec]
+        if fusion_type == "rrf":
+            vs.update(_rrf_scores(vec, asc, fusion_k))
+            ts.update(_rrf_scores(txt, False, fusion_k))
+        else:
+            vs.update(_rsf_scores(vec, asc, 1.0 - fusion_weight))
+            ts.update(_rsf_scores(txt, False, float(fusion_weight)))
+    fused = [(i, vs.get(i, 0.0) + ts.get(i, 0.0)) for i in {**vs, **ts}]
+    top = _spark_ordered(fused, descending=True)[:k]
     schema = StructType([
         StructField(id_col, id_type, True),
         StructField(score_name, DoubleType(), True),
@@ -307,50 +290,26 @@ def fuse_candidates(
     score_name: str = "fusion_score",
     part_col: str | None = None,
 ) -> DataFrame:
-    """Fuse pre-computed candidate lists: vec_cand(id, _vdist),
-    txt_cand(id, _bm25) → top-k by RSF/RRF. Candidate lists are tiny (k′
-    rows), so the windows/joins here touch only candidates — this is the
-    piece that stays constant whether candidates come from brute force, an
-    IVF/HNSW/MSTG artifact, or an external retriever.  ``part_col`` scopes
-    ranking/normalization to each data part (candidates must carry it in
-    BOTH frames; every id lives in exactly one part)."""
+    """Fuse candidate lists vec_cand(id, _vdist) and txt_cand(id, _bm25) →
+    top-k (id, score_name) by RSF/RRF — the engine's one fusion, whether
+    the candidates come from brute force, an ANN index, the FTS artifact or
+    a SQL shape.  ONE job collects both legs (``_collect_legs``); the
+    fusion runs on the driver over the ≤k′-row lists, as the reference
+    fuses in memory on one node (HybridSearchUtils.cpp:163-314,
+    MergeTreeHybridSearchManager.cpp:114-151).  Scores order as Spark
+    orders them: NaN above every double, NaN equal to NaN, -0.0 equal to
+    0.0.  ``part_col`` scopes ranking and normalization to each data part
+    (candidates must carry it in BOTH frames; every id lives in exactly one
+    part); the merge across parts is by fused score.  The result is a
+    VALUES relation: collecting it runs no job."""
     ft = fusion_type.lower()
-    asc = METRIC_ASCENDING.get(metric, True)
-    if metric.upper() == "L2":
-        # the reference fuses faiss METRIC_L2 scores, i.e. SQUARED L2
-        # (00040_mqvs_hybrid_search.reference: id0 norm = 1 - 3/27 over
-        # squared candidate distances). Ranking is unchanged (monotone), but
-        # RSF min-max normalization is not — square before normalizing.
-        vec_cand = vec_cand.withColumn("_vdist", F.col("_vdist") * F.col("_vdist"))
-
-    if ft == "rrf":
-        v = _ranked(vec_cand, "_vdist", asc, id_col, part_col).select(
-            F.col(id_col), (F.lit(1.0) / (F.lit(float(fusion_k)) + F.col("_rank"))).alias("_vs")
-        )
-        t = _ranked(txt_cand, "_bm25", False, id_col, part_col).select(
-            F.col(id_col), (F.lit(1.0) / (F.lit(float(fusion_k)) + F.col("_rank"))).alias("_ts")
-        )
-        fused = v.join(t, id_col, "full_outer").select(
-            F.col(id_col),
-            (F.coalesce("_vs", F.lit(0.0)) + F.coalesce("_ts", F.lit(0.0))).alias(score_name),
-        )
-    else:
-        v = _minmax_norm(vec_cand, "_vdist", "_vnorm", part_col).select(
-            F.col(id_col),
-            (
-                (F.col("_vnorm") if not asc else (F.lit(1.0) - F.col("_vnorm")))
-                * F.lit(1.0 - fusion_weight)
-            ).alias("_vs"),
-        )
-        t = _minmax_norm(txt_cand, "_bm25", "_tnorm", part_col).select(
-            F.col(id_col), (F.col("_tnorm") * F.lit(float(fusion_weight))).alias("_ts"),
-        )
-        fused = v.join(t, id_col, "full_outer").select(
-            F.col(id_col),
-            (F.coalesce("_vs", F.lit(0.0)) + F.coalesce("_ts", F.lit(0.0))).alias(score_name),
-        )
-
-    return fused.orderBy(F.col(score_name).desc(), F.col(id_col).asc()).limit(k)
+    if ft not in ("rsf", "rrf"):
+        raise InvalidSearchQuery(f"fusion_type must be rsf|rrf, got {fusion_type!r}")
+    id_type, vec_rows, txt_rows = _collect_legs(vec_cand, txt_cand, id_col, part_col)
+    return _fuse_local(
+        vec_cand.sparkSession, id_type, vec_rows, txt_rows, k,
+        id_col, ft, metric, fusion_weight, fusion_k, score_name,
+    )
 
 
 def hybrid_search_indexed(
@@ -415,11 +374,7 @@ def hybrid_search_indexed(
         txt_cand = text_search(
             df, text_col, qtext, kprime, id_col, tokenizer, score_name="_bm25"
         ).select(id_col, "_bm25")
-    ft = fusion_type.lower()
-    if ft not in ("rsf", "rrf"):
-        raise InvalidSearchQuery(f"fusion_type must be rsf|rrf, got {fusion_type!r}")
-    id_type, vec_rows, txt_rows = _collect_legs(vec_cand, txt_cand, id_col)
-    return _fuse_local(
-        spark, id_type, vec_rows, txt_rows, k,
-        id_col, ft, metric, fusion_weight, fusion_k, score_name,
+    return fuse_candidates(
+        vec_cand, txt_cand, k, id_col, fusion_type, metric, fusion_weight,
+        fusion_k, score_name,
     )

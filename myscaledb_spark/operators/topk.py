@@ -132,11 +132,24 @@ def batch_vector_topk(
             for i, q in enumerate(qvecs)
         ]
     )
-    exploded = df.withColumn("_q", F.explode(queries))
     # distance against the exploded per-row query vector (column-column form)
     a = F.col(vec_col).cast("array<double>")
     qv = F.col("_q.qv")
     m = metric.lower()
+    # vector_topk's distance_defined rule per (row, query): a NULL row, a
+    # NULL element, a length other than the query's, and for Cosine a
+    # zero-norm row or query have no distance — unguarded they ranked FIRST
+    # with a NULL dist (or raised DIVIDE_BY_ZERO under ANSI).  The row-only
+    # conjuncts are pushed below the explode.
+    defined = (
+        a.isNotNull()
+        & ~F.exists(a, lambda x: x.isNull())
+        & (F.size(a) == F.size(qv))
+    )
+    if m == "cosine":
+        defined = (defined & F.exists(a, lambda x: x != 0.0)
+                   & F.exists(qv, lambda x: x != 0.0))
+    exploded = df.withColumn("_q", F.explode(queries)).filter(defined)
     if m in ("l2", "l2squared"):
         d = F.aggregate(
             F.zip_with(a, qv, lambda x, y: (x - y) * (x - y)),

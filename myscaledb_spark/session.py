@@ -170,6 +170,16 @@ def _sql_literal(dtype: T.DataType):
     return None
 
 
+def _sort_key(v):
+    """Spark's ascending order of one value: NULL first, NaN after every
+    other double, -0.0 equal to 0.0 (``v + 0.0`` folds the sign)."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float):
+        return (2,) if v != v else (1, v + 0.0)
+    return (1, v)
+
+
 def values_relation(
     spark: SparkSession, schema: T.StructType, rows: list
 ) -> DataFrame | None:

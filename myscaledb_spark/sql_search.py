@@ -33,8 +33,11 @@ Semantics notes:
 
 Everything executes as the operators' DataFrame plans — Catalyst sees the
 same declarative shape as the API path; this module is parsing only.  The
-one exception is an ORDER BY over an already-local result (a hybrid search's
-fused rows), which sorts on the driver with Spark's ordering.
+one exception is an ORDER BY over an already-local result: every hybridsearch
+shape (binary, per-part, partial fts coverage, default) fuses through
+`operators.hybrid.fuse_candidates`, which returns its fused rows as a VALUES
+relation, and those sort on the driver with Spark's ordering
+(`session._sort_key`).
 """
 
 from __future__ import annotations
@@ -399,16 +402,6 @@ def _apply_order(df: DataFrame, alias: str, order_text: str | None, id_col: str)
     return df.orderBy(*[F.col(c).desc() if d else F.col(c).asc() for c, d in keys])
 
 
-def _sort_key(v):
-    """Spark's ascending order of one value: NULL first, NaN after every
-    other double, -0.0 equal to 0.0 (``v + 0.0`` folds the sign)."""
-    if v is None:
-        return (0,)
-    if isinstance(v, float):
-        return (2,) if v != v else (1, v + 0.0)
-    return (1, v)
-
-
 def _sorted_local(df: DataFrame, keys: list) -> DataFrame | None:
     """``df`` sorted by ``keys`` [(column, descending)] on the driver and
     re-emitted as a VALUES relation, when ``df`` is already a local relation
@@ -417,7 +410,7 @@ def _sorted_local(df: DataFrame, keys: list) -> DataFrame | None:
     ASC NULLS FIRST, DESC NULLS LAST, NaN largest, -0.0 equal to 0.0; rows
     that tie on every key keep their order.  None when ``df`` is not local
     or a key is not one of its string/integral/double columns."""
-    from myscaledb_spark.session import values_relation
+    from myscaledb_spark.session import _sort_key, values_relation
     from pyspark.sql import types as T
 
     try:
@@ -763,6 +756,7 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
         from myscaledb_spark.operators.hybrid import (
             DEFAULT_FUSION_K,
             DEFAULT_FUSION_WEIGHT,
+            fuse_candidates,
             hybrid_search,
         )
 
@@ -788,6 +782,13 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
         vec_col = _ident_arg(args[0], "hybridsearch vector column")
         text_col = _ident_arg(args[1], "hybridsearch text column")
         qtext = _text_arg(spark, args[3], "hybridsearch")
+        fusion = dict(
+            fusion_type=opts["fusion_type"],
+            fusion_weight=float(opts.get("fusion_weight", DEFAULT_FUSION_WEIGHT)),
+            fusion_k=int(opts.get("fusion_k", DEFAULT_FUSION_K)),
+            score_name=alias,
+        )
+        metric, part_col = "L2", None
         if not args[2].strip().startswith("["):
             # binary-vector hybrid (00040 'on binary vector'): the query
             # vector is a FixedString expression (char(1,1,1)); the dense
@@ -795,10 +796,10 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
             # without the squared-metric mapping (Hamming IS the score)
             from myscaledb_spark.functions.text import text_search
             from myscaledb_spark.functions.vector import hamming_distance
-            from myscaledb_spark.operators.hybrid import fuse_candidates
 
             qval = spark.sql(f"SELECT {_rewrite_calls(args[2])}").first()[0]
             qbytes = qval if isinstance(qval, (bytes, bytearray)) else str(qval).encode("latin-1")
+            metric = "Hamming"
             vec_cand = (
                 df.select(id_col, hamming_distance(vec_col, bytes(qbytes)).alias("_vdist"))
                 .filter(F.col("_vdist").isNotNull())
@@ -809,126 +810,91 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
                 text_search(df, text_col, qtext, k, id_col=id_col, score_name="_bm25")
                 .select(id_col, "_bm25")
             )
-            out = fuse_candidates(
-                vec_cand, txt_cand, k, id_col,
-                fusion_type=opts["fusion_type"], metric="Hamming",
-                fusion_weight=float(opts.get("fusion_weight", DEFAULT_FUSION_WEIGHT)),
-                fusion_k=int(opts.get("fusion_k", DEFAULT_FUSION_K)),
-                score_name=alias,
-            )
-            sel = (plain if plain else [id_col]) + [alias]
-            return _apply_order(out.select(*sel), alias, order_text, id_col)
-        qvec = _parse_vec_literal(args[2])
-        # dense_nprobe tunes the reference's index probe; the SQL shim runs
-        # the exact path, so it is accepted and ignored (parseVSParameters.cpp
-        # accepts the same strings on the exact fallback)
-        text_df, no_index = _fts_text_frame(spark, table, df)
-        per_part = _multi_part_table(table) and not no_index
-        if per_part:
-            # >1 data part: the reference fuses EACH part's candidate list
-            # independently (per-part top-k, per-part RSF normalization)
-            # and merges by fused score — MergeTreeHybridSearchManager;
-            # 00041_mqvs_text_search_multiple_parts pins the numbers
-            from myscaledb_spark.operators.hybrid import fuse_candidates
-            from myscaledb_spark.functions.vector import distance
-            from myscaledb_spark.plans.table_ddl import EXISTS, ISEQ, TABLES
+        else:
+            qvec = _parse_vec_literal(args[2])
+            # dense_nprobe tunes the reference's index probe; the SQL shim
+            # runs the exact path, so it is accepted and ignored
+            # (parseVSParameters.cpp accepts the same strings on the exact
+            # fallback)
+            text_df, no_index = _fts_text_frame(spark, table, df)
+            if _multi_part_table(table) and not no_index:
+                # >1 data part: the reference fuses EACH part's candidate list
+                # independently (per-part top-k, per-part RSF normalization)
+                # and merges by fused score — MergeTreeHybridSearchManager;
+                # 00041_mqvs_text_search_multiple_parts pins the numbers
+                from pyspark.sql import Window
 
-            from pyspark.sql import Window
+                from myscaledb_spark.functions.vector import distance, distance_defined
+                from myscaledb_spark.plans.table_ddl import EXISTS, ISEQ, TABLES
 
-            store_df = spark.table(f"{table}__store").withColumn(
-                "_part", F.floor(F.col(ISEQ) / F.lit(1 << 50)).cast("int")
-            )
-            alive = (F.col(EXISTS) if EXISTS in store_df.columns
-                     else F.lit(True))
-            keep = alive if where_col is None else (alive & where_col)
-            from myscaledb_spark.functions.vector import distance_defined
-
-            # structural null-guard BEFORE the projection: a filter on the
-            # projected distance is pushed below the Project and evaluates
-            # the O(d) aggregate twice per row (see vector.distance_defined)
-            dense = (
-                store_df.filter(keep)
-                .filter(distance_defined(vec_col, qvec, "L2"))
-                .select(id_col, "_part",
-                        distance(vec_col, qvec, "L2").alias("_vdist"))
-            )
-            wv = Window.partitionBy("_part").orderBy(
-                F.col("_vdist").asc(), F.col(id_col).asc())
-            vec_cand = (
-                dense.withColumn("_rn", F.row_number().over(wv))
-                .filter(F.col("_rn") <= k).select(id_col, "_vdist", "_part")
-            )
-            decl = TABLES[table].get("fts_decl") or {}
-            part0 = int(decl.get("covered_from_part", 0))
-            tbase = (store_df if part0 <= 0
-                     else store_df.filter(F.col(ISEQ) >= part0 * (1 << 50)))
-            scored = _text_scores_frame(tbase, text_col, qtext, "_bm25")
-            scored = scored.filter(keep)
-            wt = Window.partitionBy("_part").orderBy(
-                F.col("_bm25").desc(), F.col(id_col).asc())
-            txt_cand = (
-                scored.withColumn("_rn", F.row_number().over(wt))
-                .filter(F.col("_rn") <= k).select(id_col, "_bm25", "_part")
-            )
-            out = fuse_candidates(
-                vec_cand, txt_cand, k, id_col,
-                fusion_type=opts["fusion_type"], metric="L2",
-                fusion_weight=float(opts.get("fusion_weight", DEFAULT_FUSION_WEIGHT)),
-                fusion_k=int(opts.get("fusion_k", DEFAULT_FUSION_K)),
-                score_name=alias, part_col="_part",
-            )
-            extra = [c for c in plain if c != id_col]
-            if extra:
-                out = out.join(df.select(id_col, *extra), id_col)
-            sel = (plain if plain else [id_col]) + [alias]
-            return _apply_order(out.select(*sel), alias, order_text, id_col)
-        if no_index or text_df is not df:
-            # fts coverage differs from the dense corpus (missing index or
-            # un-backfilled parts): build the legs separately — the dense
-            # leg scans everything, the text leg ONLY the indexed parts
-            # (empty text leg → pure dense fusion, as the reference's
-            # 'w/o tantivy index' blocks print)
-            from myscaledb_spark.functions.vector import distance, distance_defined
-            from myscaledb_spark.operators.hybrid import fuse_candidates
-            from myscaledb_spark.operators.topk import _order
-
-            vec_cand = (
-                df.filter(distance_defined(vec_col, qvec, "L2"))
-                .select(id_col, distance(vec_col, qvec, "L2").alias("_vdist"))
-                .orderBy(*_order(F.col("_vdist"), F.col(id_col), "L2"))
-                .limit(k)
-            )
-            if no_index:
-                txt_cand = (
-                    df.select(id_col).limit(0).withColumn("_bm25", F.lit(0.0))
+                part_col = "_part"
+                store_df = spark.table(f"{table}__store").withColumn(
+                    part_col, F.floor(F.col(ISEQ) / F.lit(1 << 50)).cast("int")
                 )
+                alive = (F.col(EXISTS) if EXISTS in store_df.columns
+                         else F.lit(True))
+                keep = alive if where_col is None else (alive & where_col)
+                # structural null-guard BEFORE the projection: a filter on the
+                # projected distance is pushed below the Project and evaluates
+                # the O(d) aggregate twice per row (see vector.distance_defined)
+                dense = (
+                    store_df.filter(keep)
+                    .filter(distance_defined(vec_col, qvec, "L2"))
+                    .select(id_col, part_col,
+                            distance(vec_col, qvec, "L2").alias("_vdist"))
+                )
+                wv = Window.partitionBy(part_col).orderBy(
+                    F.col("_vdist").asc(), F.col(id_col).asc())
+                vec_cand = (
+                    dense.withColumn("_rn", F.row_number().over(wv))
+                    .filter(F.col("_rn") <= k).select(id_col, "_vdist", part_col)
+                )
+                decl = TABLES[table].get("fts_decl") or {}
+                part0 = int(decl.get("covered_from_part", 0))
+                tbase = (store_df if part0 <= 0
+                         else store_df.filter(F.col(ISEQ) >= part0 * (1 << 50)))
+                scored = _text_scores_frame(tbase, text_col, qtext, "_bm25")
+                scored = scored.filter(keep)
+                wt = Window.partitionBy(part_col).orderBy(
+                    F.col("_bm25").desc(), F.col(id_col).asc())
+                txt_cand = (
+                    scored.withColumn("_rn", F.row_number().over(wt))
+                    .filter(F.col("_rn") <= k).select(id_col, "_bm25", part_col)
+                )
+            elif no_index or text_df is not df:
+                # fts coverage differs from the dense corpus (missing index or
+                # un-backfilled parts): build the legs separately — the dense
+                # leg scans everything, the text leg ONLY the indexed parts
+                # (empty text leg → pure dense fusion, as the reference's
+                # 'w/o tantivy index' blocks print)
+                from myscaledb_spark.operators.topk import vector_topk
+
+                vec_cand = vector_topk(
+                    df, vec_col, qvec, k, "L2", id_col=id_col, dist_name="_vdist"
+                ).select(id_col, "_vdist")
+                if no_index:
+                    txt_cand = (
+                        df.select(id_col).limit(0).withColumn("_bm25", F.lit(0.0))
+                    )
+                else:
+                    mask = _exists_mask(text_df)
+                    tw = where_col
+                    if mask is not None:
+                        tw = mask if tw is None else (tw & mask)
+                    txt_cand = _sql_text_candidates(
+                        text_df, text_col, qtext, k, id_col, "_bm25", tw
+                    ).select(id_col, "_bm25")
             else:
-                mask = _exists_mask(text_df)
-                tw = where_col
-                if mask is not None:
-                    tw = mask if tw is None else (tw & mask)
-                txt_cand = _sql_text_candidates(
-                    text_df, text_col, qtext, k, id_col, "_bm25", tw
-                ).select(id_col, "_bm25")
-            out = fuse_candidates(
-                vec_cand, txt_cand, k, id_col,
-                fusion_type=opts["fusion_type"], metric="L2",
-                fusion_weight=float(opts.get("fusion_weight", DEFAULT_FUSION_WEIGHT)),
-                fusion_k=int(opts.get("fusion_k", DEFAULT_FUSION_K)),
-                score_name=alias,
+                vec_cand = None  # the default shape: hybrid_search
+        if vec_cand is None:
+            out = hybrid_search(
+                df, vec_col, text_col, qvec, qtext, k, id_col, **fusion
             )
-            extra = [c for c in plain if c != id_col]
-            if extra:
-                out = out.join(df.select(id_col, *extra), id_col)
-            sel = (plain if plain else [id_col]) + [alias]
-            return _apply_order(out.select(*sel), alias, order_text, id_col)
-        out = hybrid_search(
-            df, vec_col, text_col, qvec, qtext, k, id_col,
-            fusion_type=opts["fusion_type"],
-            fusion_weight=float(opts.get("fusion_weight", DEFAULT_FUSION_WEIGHT)),
-            fusion_k=int(opts.get("fusion_k", DEFAULT_FUSION_K)),
-            score_name=alias,
-        )
+        else:
+            out = fuse_candidates(
+                vec_cand, txt_cand, k, id_col, metric=metric,
+                part_col=part_col, **fusion,
+            )
         extra = [c for c in plain if c != id_col]
         if extra:
             out = out.join(df.select(id_col, *extra), id_col)

@@ -1,17 +1,14 @@
 """Regression tests for the round-5 ADVICE findings.
 
 - unbin pad-to-byte semantics (FunctionsCoding.h) and >64-bit refusal
-- joined-search alias-qualified arguments + kind-derived inner direction
 - uniq_state all-NULL key groups surface with a zero state
-- binary batch_distance honors / refuses ORDER BY instead of ignoring it
 - system.data_type_families has no fabricated miscased names
 """
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from myscaledb_spark.sql_dialect import ChSqlError, ch_sql
+from myscaledb_spark.sql_dialect import ch_sql
 
 
 def test_unbin_pads_to_byte_boundary(spark):
@@ -31,43 +28,6 @@ def test_unbin_refuses_over_64_bits(spark):
         ch_sql(spark, f"SELECT unbin('{'1' * 65}') AS b").collect()
 
 
-def test_joined_search_alias_qualified_args(spark):
-    docs = spark.createDataFrame(
-        [(1, "spark shuffles data"), (2, "ducks swim fast"),
-         (3, "spark spark spark")],
-        "id int, body string",
-    )
-    docs.createOrReplaceTempView("adv_docs")
-    spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "gamma")], "doc_id int, tag string"
-    ).createOrReplaceTempView("adv_tags")
-    out = ch_sql(
-        spark,
-        "SELECT t.tag, textsearch(d.body, 'spark') AS bm25 "
-        "FROM adv_tags t JOIN adv_docs d ON t.doc_id = d.id "
-        "ORDER BY bm25 DESC LIMIT 2",
-    ).collect()
-    assert [r.tag for r in out] == ["gamma", "alpha"]
-
-
-def test_joined_search_rejects_other_side_qualifier(spark):
-    spark.createDataFrame(
-        [(1, "x")], "id int, body string"
-    ).createOrReplaceTempView("adv_docs2")
-    spark.createDataFrame(
-        [(1, "alpha")], "doc_id int, tag string"
-    ).createOrReplaceTempView("adv_tags2")
-    # `body` lives on d (the search side) but is qualified with t — an
-    # unresolvable qualifier that previously leaked into the inner SQL
-    with pytest.raises(ChSqlError, match="non-search side"):
-        ch_sql(
-            spark,
-            "SELECT t.tag, textsearch(t.body, 'x') AS bm25 "
-            "FROM adv_tags2 t JOIN adv_docs2 d ON t.doc_id = d.id "
-            "ORDER BY bm25 DESC LIMIT 1",
-        )
-
-
 def test_uniq_state_all_null_group_surfaces(spark):
     from myscaledb_spark.operators.agg_state import uniq_finalize, uniq_state
 
@@ -82,34 +42,6 @@ def test_uniq_state_all_null_group_surfaces(spark):
     est = {r.k: r.est for r in
            st.select("k", uniq_finalize("state").alias("est")).collect()}
     assert est["b"] == 0 and round(est["a"]) == 2
-
-
-def test_binary_batch_distance_order_by_honored(spark):
-    from myscaledb_spark.plans.table_ddl import ch_script
-
-    ch_script(spark, """
-        DROP TABLE IF EXISTS adv_bin;
-        CREATE TABLE adv_bin (id UInt32, v FixedString(2))
-          ENGINE = MergeTree ORDER BY id;
-        INSERT INTO adv_bin VALUES (1, unhex('0000')), (2, unhex('00FF')),
-          (3, unhex('FFFF'))
-    """)
-    out = ch_sql(
-        spark,
-        "SELECT id, batch_distance(v, [unhex('0000')]) AS dist FROM adv_bin "
-        "ORDER BY dist.1, dist.2 DESC LIMIT 3 BY dist.1",
-    ).collect()
-    # descending Hamming distance from 0x0000: 3 (16 bits), 2 (8), 1 (0)
-    assert [r.id for r in out] == [3, 2, 1]
-    with pytest.raises(ChSqlError, match="ORDER BY"):
-        ch_sql(
-            spark,
-            "SELECT id, batch_distance(v, [unhex('0000')]) AS dist "
-            "FROM adv_bin ORDER BY id LIMIT 3 BY dist.1",
-        )
-    from myscaledb_spark.plans.table_ddl import ch_script
-
-    ch_script(spark, "DROP TABLE adv_bin")
 
 
 def test_data_type_families_proper_names_only(spark):

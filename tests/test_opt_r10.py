@@ -4,93 +4,15 @@ Each r10 optimization replaces a filter that Catalyst would push below a
 projection (re-evaluating the expensive projected expression per row —
 guide §7.2 "duplicated subtrees") with a cheap predicate proven equivalent.
 These tests pin the equivalences on adversarial inputs the testdata never
-exercises: NULL arrays, wrong-dimension vectors, NULL elements, empty docs.
+exercises: NULL and empty docs, short docs.  The distance_defined pins live
+in test_vector_search.py.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from myscaledb_spark import session
-from myscaledb_spark.functions.vector import distance, distance_defined
-
-
-QV = [1.0, -2.0, 0.5]
-
-ADVERSARIAL_VECS = [
-    (1, [1.0, 2.0, 3.0]),      # valid
-    (2, None),                  # NULL array
-    (3, [1.0, 2.0]),            # too short (zip_with pads with NULL)
-    (4, [1.0, 2.0, 3.0, 4.0]),  # too long
-    (5, [1.0, None, 3.0]),      # NULL element
-    (6, []),                    # empty
-    (7, [-1.0, 0.0, 9.0]),      # valid
-    (8, [0.0, 0.0, 0.0]),       # zero norm: Cosine divides by zero (r11 ADVICE)
-]
-
-
-@pytest.mark.parametrize("metric", ["L2", "L2Squared", "L1", "IP", "Cosine", "Linf"])
-def test_distance_defined_equals_isnotnull(spark, metric):
-    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
-    got = sorted(
-        r["id"]
-        for r in df.filter(distance_defined("v", QV, metric)).select("id").collect()
-    )
-    # the isnotnull(dist) reference semantics are those of a session that
-    # tolerates div-by-zero (NULL result) — under ANSI both old and new code
-    # threw for the zero-norm Cosine row, so the equivalence target is the
-    # non-ANSI drop behavior (r11 ADVICE high: zero-norm cosine rows must
-    # not surface as NULL-distance rank-1 results)
-    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        want = sorted(
-            r["id"]
-            for r in df.withColumn("d", distance("v", QV, metric))
-            .filter(F.col("d").isNotNull())
-            .select("id")
-            .collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", old_ansi)
-    assert got == want, f"{metric}: structural predicate != isnotnull(dist)"
-
-
-def test_cosine_topk_drops_zero_norm_rows(spark):
-    """r11 ADVICE high: a zero-norm vector's cosine distance is undefined;
-    in a non-ANSI session it is NULL, sorts FIRST ascending, and displaced
-    the true #1 neighbor. The structural predicate must drop it."""
-    from myscaledb_spark.operators.topk import vector_topk
-
-    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
-    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        out = vector_topk(df, "v", QV, 5, "Cosine", id_col="id").collect()
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", old_ansi)
-    assert [r["id"] for r in out] == [7, 1]
-    assert all(r["dist"] is not None for r in out)
-
-
-def test_cosine_zero_query_vector_returns_empty(spark):
-    from myscaledb_spark.operators.topk import vector_topk
-
-    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
-    out = vector_topk(df, "v", [0.0, 0.0, 0.0], 5, "Cosine", id_col="id")
-    assert out.count() == 0
-
-
-def test_vector_topk_drops_malformed_rows(spark):
-    from myscaledb_spark.operators.topk import vector_topk
-
-    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
-    out = vector_topk(df, "v", QV, 5, "L2", id_col="id")
-    ids = [r["id"] for r in out.collect()]
-    # only the well-formed vectors, ranked by L2 distance (the zero vector
-    # is perfectly valid for L2 — it is only Cosine that must drop it)
-    assert ids == [8, 1, 7]
 
 
 def test_match_predicate_equals_tf_match(spark):

@@ -333,3 +333,168 @@ def test_per_part_hybridsearch_evaluates_text_subquery_once(spark, monkeypatch):
     finally:
         ch_script(spark, "DROP TABLE t_pp")
     assert rows and len(calls) == 1
+
+
+def test_joined_search_alias_qualified_args(spark):
+    docs = spark.createDataFrame(
+        [(1, "spark shuffles data"), (2, "ducks swim fast"),
+         (3, "spark spark spark")],
+        "id int, body string",
+    )
+    docs.createOrReplaceTempView("adv_docs")
+    spark.createDataFrame(
+        [(1, "alpha"), (2, "beta"), (3, "gamma")], "doc_id int, tag string"
+    ).createOrReplaceTempView("adv_tags")
+    out = ch_sql(
+        spark,
+        "SELECT t.tag, textsearch(d.body, 'spark') AS bm25 "
+        "FROM adv_tags t JOIN adv_docs d ON t.doc_id = d.id "
+        "ORDER BY bm25 DESC LIMIT 2",
+    ).collect()
+    assert [r.tag for r in out] == ["gamma", "alpha"]
+
+
+def test_joined_search_rejects_other_side_qualifier(spark):
+    spark.createDataFrame(
+        [(1, "x")], "id int, body string"
+    ).createOrReplaceTempView("adv_docs2")
+    spark.createDataFrame(
+        [(1, "alpha")], "doc_id int, tag string"
+    ).createOrReplaceTempView("adv_tags2")
+    # `body` lives on d (the search side) but is qualified with t — an
+    # unresolvable qualifier that previously leaked into the inner SQL
+    with pytest.raises(ChSqlError, match="non-search side"):
+        ch_sql(
+            spark,
+            "SELECT t.tag, textsearch(t.body, 'x') AS bm25 "
+            "FROM adv_tags2 t JOIN adv_docs2 d ON t.doc_id = d.id "
+            "ORDER BY bm25 DESC LIMIT 1",
+        )
+
+
+def test_binary_batch_distance_order_by_honored(spark):
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    ch_script(spark, """
+        DROP TABLE IF EXISTS adv_bin;
+        CREATE TABLE adv_bin (id UInt32, v FixedString(2))
+          ENGINE = MergeTree ORDER BY id;
+        INSERT INTO adv_bin VALUES (1, unhex('0000')), (2, unhex('00FF')),
+          (3, unhex('FFFF'))
+    """)
+    out = ch_sql(
+        spark,
+        "SELECT id, batch_distance(v, [unhex('0000')]) AS dist FROM adv_bin "
+        "ORDER BY dist.1, dist.2 DESC LIMIT 3 BY dist.1",
+    ).collect()
+    # descending Hamming distance from 0x0000: 3 (16 bits), 2 (8), 1 (0)
+    assert [r.id for r in out] == [3, 2, 1]
+    with pytest.raises(ChSqlError, match="ORDER BY"):
+        ch_sql(
+            spark,
+            "SELECT id, batch_distance(v, [unhex('0000')]) AS dist "
+            "FROM adv_bin ORDER BY id LIMIT 3 BY dist.1",
+        )
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    ch_script(spark, "DROP TABLE adv_bin")
+
+
+_HS_DOCS = [
+    (0, "ancient empires rise and fall", [0.5, 0.0, 1.0]),
+    (1, "artistic expressions reflect cultures", [1.0, 1.5, 1.0]),
+    (2, "ancient philosophies provide wisdom", [2.0, 0.5, 2.5]),
+    (3, "strategic military campaigns", [3.0, 3.0, 0.0]),
+    (4, "wisdom of ancient ancient cultures", [0.0, 2.0, 1.0]),
+    (5, "modern economies fluctuate", [1.5, 1.0, 1.0]),
+    (6, "empires and cultures in history", [2.5, 2.0, 0.5]),
+    (7, "quiet rivers flow", [0.25, 0.75, 1.25]),
+]
+
+#: SQL hybridsearch shapes over ch_ddl MergeTree tables: (vector type, fts
+#: INDEX declared, inserts as id ranges, query vector).  One part with an
+#: fts INDEX reads the text leg from the store frame; two parts fuse per
+#: part; a FixedString vector ranks by Hamming; no fts INDEX leaves the text
+#: leg empty.
+_HS_SHAPES = {
+    "fts_index": ("Array(Float32)", True, [range(8)], "[1.0, 1, 1]"),
+    "two_parts": ("Array(Float32)", True, [range(4), range(4, 8)], "[1.0, 1, 1]"),
+    "binary": ("FixedString(2)", True, [range(8)], "char(5, 9)"),
+    "no_fts_index": ("Array(Float32)", False, [range(8)], "[1.0, 1, 1]"),
+}
+
+
+def _hs_script(table, shape):
+    vtype, fts, parts, _ = _HS_SHAPES[shape]
+    index = ", INDEX inv_idx(doc) TYPE fts GRANULARITY 1" if fts else ""
+    script = (f"DROP TABLE IF EXISTS {table}; CREATE TABLE {table}(id UInt64, "
+              f"vector {vtype}, doc String{index}) ENGINE = MergeTree ORDER BY id;")
+    for ids in parts:
+        rows = []
+        for i in ids:
+            _, doc, vec = _HS_DOCS[i]
+            v = (f"char({i * 37 % 256}, {i * 11 % 256})" if vtype.startswith("Fixed")
+                 else "[" + ", ".join(map(str, vec)) + "]")
+            rows.append(f"({i}, {v}, '{doc}')")
+        script += f" INSERT INTO {table} VALUES {', '.join(rows)};"
+    return script
+
+
+def _hs_sql(table, shape, kind):
+    return (f"SELECT id, hybridsearch('fusion_type={kind}')(vector, doc, "
+            f"{_HS_SHAPES[shape][3]}, 'ancient cultures') AS s FROM {table} "
+            "ORDER BY s DESC, id LIMIT 5")
+
+
+#: Per shape: the Spark jobs of one query and, per fusion type, the ids and
+#: score bits.  The rows equal those of the earlier Spark-window fusion,
+#: which ran fts_index 5/3, two_parts 7/7, binary 6/4 and no_fts_index 2/1
+#: jobs (rsf/rrf) per query.
+_HS_PINS = {
+    "fts_index": (2, {
+        "rsf": [(1, "3fe127d3da925ab1"), (4, "3fe0000000000000"), (5, "3fe0000000000000"),
+                (7, "3fd8000000000000"), (0, "3fcb6db6db6db6dc")],
+        "rrf": [(1, "3fa0a6c92bff7560"), (4, "3fa04536afbeeb26"), (0, "3fa0000000000000"),
+                (5, "3f90842108421084"), (2, "3f90410410410410")],
+    }),
+    "two_parts": (5, {
+        "rsf": [(1, "3ff0000000000000"), (2, "3fea0ea0ea0ea0ea"), (4, "3fe7627627627627"),
+                (5, "3fe0000000000000"), (0, "3fdc57c57c57c57c")],
+        "rrf": [(1, "3fa0c9714fbcda3b"), (4, "3fa0853aaffeef26"), (0, "3fa062928c418a4a"),
+                (2, "3fa062928c418a4a"), (6, "3fa0421084210842")],
+    }),
+    "binary": (3, {
+        "rsf": [(1, "3fe127d3da925ab1"), (4, "3fe0000000000000"), (0, "3fd0000000000000"),
+                (7, "3fd0000000000000"), (2, "3fa27d3da925ab09")],
+        "rrf": [(1, "3fa0a6c92bff7560"), (4, "3fa04536afbeeb26"), (0, "3fa0421084210842"),
+                (2, "3f90410410410410"), (7, "3f90410410410410")],
+    }),
+    "no_fts_index": (1, {
+        "rsf": [(1, "3fe0000000000000"), (5, "3fe0000000000000"), (7, "3fd8000000000000"),
+                (0, "3fcb6db6db6db6dc"), (4, "0000000000000000")],
+        "rrf": [(1, "3f90c9714fbcda3b"), (5, "3f90842108421084"), (7, "3f90410410410410"),
+                (0, "3f90000000000000"), (4, "3f8f81f81f81f820")],
+    }),
+}
+
+
+@pytest.mark.parametrize("shape", list(_HS_SHAPES))
+def test_sql_hybridsearch_shapes_pin_rows_and_jobs(spark, shape):
+    """Each SQL hybridsearch shape returns the pinned ids and score bits for
+    rsf and rrf, and each query runs the pinned number of Spark jobs (the
+    same on a first and a repeated query)."""
+    import struct
+
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    table = f"t_hs_{shape}"
+    jobs, pins = _HS_PINS[shape]
+    ch_script(spark, _hs_script(table, shape))
+    try:
+        for kind, want in pins.items():
+            sql = _hs_sql(table, shape, kind)
+            rows, n = _jobs(spark, f"pin-{shape}-{kind}", lambda: ch_sql(spark, sql).collect())
+            assert [(r[0], struct.pack(">d", r[1]).hex()) for r in rows] == want, kind
+            assert n == jobs, kind
+    finally:
+        ch_script(spark, f"DROP TABLE {table}")

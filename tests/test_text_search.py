@@ -11,9 +11,12 @@ import re
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from myscaledb_spark.functions.text import text_search, tokenize_query
 from myscaledb_spark.operators.hybrid import hybrid_search
+from tests.conftest import SF_DIR
 
 K1, B = 1.2, 0.75
 
@@ -355,6 +358,46 @@ def test_hybrid_search_indexed_matches_bruteforce(spark, tmp_path):
     ]
 
 
+def test_hybrid_indexed_fusion_equals_thread_legs(spark, tmp_path):
+    """The tagged-union single-job collect must produce the same per-leg
+    candidate lists (hence the same fusion result) as two separate
+    collects — pinned by comparing against independently collected legs."""
+    from pyspark.sql import functions as F
+
+    from myscaledb_spark.catalog import load_table
+    from myscaledb_spark.operators.hybrid import hybrid_search_indexed
+    from myscaledb_spark.plans.fts_index import build_fts_index, fts_search
+    from myscaledb_spark.plans.vector_index import build_ivf_index, ivf_search
+
+    d = load_table(spark, SF_DIR, "documents")
+    e = load_table(spark, SF_DIR, "embeddings")
+    corpus = d.join(e, d.doc_id == e.vec_id).select("doc_id", "text", "embedding")
+    art = str(tmp_path / "art")
+    build_ivf_index(corpus, "embedding", "doc_id", art, num_centroids=4)
+    build_fts_index(corpus, "text", "doc_id", art)
+    qv = [float(i % 7 - 3) / 3.0 for i in range(64)]
+    out = hybrid_search_indexed(
+        spark, art, None, None, qv, "vector search fast", 5, "doc_id",
+        index_kind="ivf", fts_name="fts", fusion_type="rsf", nprobe=4,
+    ).collect()
+    # reproduce the fusion from separately collected legs
+    from myscaledb_spark.operators.hybrid import _fuse_local
+
+    vec_cand = ivf_search(
+        spark, art, qv, 5, name="ivf", metric="L2", id_col="doc_id", nprobe=4
+    ).select(F.col("doc_id"), F.col("dist").alias("_vdist"))
+    txt_cand = fts_search(
+        spark, art, "vector search fast", 5, name="fts", score_name="_bm25"
+    ).select(F.col("doc_id"), "_bm25")
+    vec_rows = [(r[0], r[1]) for r in vec_cand.collect()]
+    txt_rows = [(r[0], r[1]) for r in txt_cand.collect()]
+    want = _fuse_local(
+        spark, vec_cand.schema["doc_id"].dataType, vec_rows, txt_rows, 5,
+        "doc_id", "rsf", "L2", 0.5, 60, "fusion_score",
+    ).collect()
+    assert [tuple(r) for r in out] == [tuple(r) for r in want]
+
+
 def _hybrid_corpus(spark):
     """documents ⋈ embeddings plus a NULL-vector row and a short-vector row
     whose texts match the query (the structural guard must drop both)."""
@@ -639,64 +682,146 @@ def test_parse_nlq_analyzes_clauses_with_the_query_analyzer(spark):
     assert [r.id for r in got.collect()] == [1]
 
 
-#: candidate lists of the driver-side vs DataFrame fusion pin: (vector leg, text leg)
+def _ranked(df, score_col, ascending, id_col, part_col=None):
+    order = [F.col(score_col).asc() if ascending else F.col(score_col).desc(), F.col(id_col).asc()]
+    w = (Window.partitionBy(part_col) if part_col else Window).orderBy(*order)
+    sel = [id_col, score_col] + ([part_col] if part_col else [])
+    return df.select(*sel).withColumn("_rank", F.row_number().over(w))
+
+
+def _minmax_norm(df, score_col, out_col, part_col=None):
+    """Min-max normalize; all-equal list → 1.0 (HybridSearchUtils.cpp:296-302),
+    per part with ``part_col``."""
+    if part_col:
+        w = Window.partitionBy(part_col)
+        return (
+            df.withColumn("_mn", F.min(score_col).over(w))
+            .withColumn("_mx", F.max(score_col).over(w))
+            .withColumn(
+                out_col,
+                F.when(F.col("_mx") == F.col("_mn"), F.lit(1.0)).otherwise(
+                    (F.col(score_col) - F.col("_mn"))
+                    / (F.col("_mx") - F.col("_mn"))
+                ),
+            )
+        )
+    stats = df.agg(
+        F.min(score_col).alias("_mn"), F.max(score_col).alias("_mx")
+    )
+    return (
+        df.crossJoin(F.broadcast(stats))
+        .withColumn(
+            out_col,
+            F.when(F.col("_mx") == F.col("_mn"), F.lit(1.0)).otherwise(
+                (F.col(score_col) - F.col("_mn")) / (F.col("_mx") - F.col("_mn"))
+            ),
+        )
+        .drop("_mn", "_mx")
+    )
+
+
+def _dataframe_fusion(vec_cand, txt_cand, k, id_col, fusion_type, metric,
+                      fusion_weight, fusion_k, score_name, part_col=None):
+    """The fusion as Spark windows, broadcast min/max cross joins and a full
+    outer join — the oracle of the driver-side ``fuse_candidates``: Spark's
+    own NULL, NaN and -0.0 semantics, one (id, score) frame ordered by score
+    DESC, id ASC, limit k."""
+    from myscaledb_spark.functions.vector import METRIC_ASCENDING
+
+    asc = METRIC_ASCENDING.get(metric, True)
+    if metric.upper() == "L2":
+        vec_cand = vec_cand.withColumn("_vdist", F.col("_vdist") * F.col("_vdist"))
+    if fusion_type == "rrf":
+        v = _ranked(vec_cand, "_vdist", asc, id_col, part_col).select(
+            F.col(id_col), (F.lit(1.0) / (F.lit(float(fusion_k)) + F.col("_rank"))).alias("_vs")
+        )
+        t = _ranked(txt_cand, "_bm25", False, id_col, part_col).select(
+            F.col(id_col), (F.lit(1.0) / (F.lit(float(fusion_k)) + F.col("_rank"))).alias("_ts")
+        )
+    else:
+        v = _minmax_norm(vec_cand, "_vdist", "_vnorm", part_col).select(
+            F.col(id_col),
+            (
+                (F.col("_vnorm") if not asc else (F.lit(1.0) - F.col("_vnorm")))
+                * F.lit(1.0 - fusion_weight)
+            ).alias("_vs"),
+        )
+        t = _minmax_norm(txt_cand, "_bm25", "_tnorm", part_col).select(
+            F.col(id_col), (F.col("_tnorm") * F.lit(float(fusion_weight))).alias("_ts"),
+        )
+    fused = v.join(t, id_col, "full_outer").select(
+        F.col(id_col),
+        (F.coalesce("_vs", F.lit(0.0)) + F.coalesce("_ts", F.lit(0.0))).alias(score_name),
+    )
+    return fused.orderBy(F.col(score_name).desc(), F.col(id_col).asc()).limit(k)
+
+
+_NAN = float("nan")
+
+#: candidate lists of the driver-side fusion vs the DataFrame oracle:
+#: (vector leg, text leg), at least 4 ids each
 _FUSION_CASES = {
     "tied": ([(1, 0.5), (2, 0.5), (3, 1.25), (4, 2.0), (7, 1.25)],
              [(2, 3.0), (5, 3.0), (1, 1.0), (6, 0.7), (8, 1.0)]),
     "all_equal": ([(1, 1.0), (2, 1.0), (3, 1.0)], [(3, 2.5), (4, 2.5)]),
     "empty_text": ([(1, 0.3), (2, 0.1), (3, 0.2), (4, 0.9)], []),
+    "nan_first": ([(1, _NAN), (2, 0.5), (3, 1.0)], [(1, 2.0), (4, 1.0)]),
+    "nan_last": ([(2, 0.5), (3, 1.0), (1, _NAN)], [(1, 2.0), (4, 1.0)]),
+    "nan_bm25": ([(1, 0.3), (2, 0.1), (3, 0.2)], [(4, _NAN), (1, 2.0), (5, 1.0)]),
+    "all_nan": ([(1, _NAN), (2, _NAN), (3, _NAN)], [(3, 1.0), (4, 0.5)]),
+    "neg_zero": ([(2, 0.0), (1, -0.0), (3, 0.5)], [(2, 0.0), (1, -0.0), (4, 1.0)]),
 }
 
 
 @pytest.mark.parametrize("kind", ["rsf", "rrf"])
 def test_fuse_local_equals_fuse_candidates(spark, kind):
-    """The driver-side fusion (_fuse_local) equals the DataFrame fusion
-    (fuse_candidates) bit for bit: ids, order and score bits, per metric,
-    on tied scores, an all-equal list and an empty text leg.  Each
-    DataFrame fusion costs several Spark jobs, so one call per metric
-    fuses the three cases as parts (disjoint ids; ranked and normalized
-    per part); the unpartitioned form runs on the tied case."""
+    """fuse_candidates (one collect, driver-side fusion) equals the DataFrame
+    fusion oracle bit for bit — ids, order and score bits — per metric, on
+    tied scores, an all-equal list, an empty text leg, NaN scores in either
+    leg (Spark orders NaN above every double and NaN = NaN) and -0.0.  One
+    oracle call per metric fuses all cases as parts (disjoint ids; ranked
+    and normalized per part): its rows are the answer of fuse_candidates
+    with part_col, and per case, of fuse_candidates without it and of
+    _fuse_local on the lists.  The oracle's unpartitioned form runs on the
+    NaN-last case."""
     import struct
 
-    from pyspark.sql.types import LongType
+    from pyspark.sql import types as T
 
     from myscaledb_spark.operators.hybrid import _fuse_local, fuse_candidates
+    from myscaledb_spark.session import values_relation
+
+    def frame(rows, score, part=False):
+        fields = [T.StructField("id", T.LongType()), T.StructField(score, T.DoubleType())]
+        if part:
+            fields.append(T.StructField("_part", T.IntegerType()))
+        return values_relation(spark, T.StructType(fields), rows)
 
     def bits(rows):
         return [(r[0], struct.pack(">d", r[1]).hex()) for r in rows]
-
-    def local(metric, vec, txt):
-        return bits(_fuse_local(
-            spark, LongType(), vec, txt, 4, "id", kind, metric, 0.3, 60, "s"
-        ).collect())
 
     cases = [
         ([(100 * c + i, d) for i, d in vec], [(100 * c + i, s) for i, s in txt])
         for c, (vec, txt) in enumerate(_FUSION_CASES.values())
     ]
-    vec_df = spark.createDataFrame(
-        [(i, d, c) for c, (vec, _) in enumerate(cases) for i, d in vec],
-        "id long, _vdist double, _part int",
-    )
-    txt_df = spark.createDataFrame(
-        [(i, s, c) for c, (_, txt) in enumerate(cases) for i, s in txt],
-        "id long, _bm25 double, _part int",
-    )
+    frames = [(frame(vec, "_vdist"), frame(txt, "_bm25")) for vec, txt in cases]
+    vec_df = frame([(i, d, c) for c, (vec, _) in enumerate(cases) for i, d in vec], "_vdist", True)
+    txt_df = frame([(i, s, c) for c, (_, txt) in enumerate(cases) for i, s in txt], "_bm25", True)
+    nan_last = list(_FUSION_CASES).index("nan_last")
     for metric in ("L2", "IP", "Cosine", "Hamming"):
-        rows = fuse_candidates(
-            vec_df, txt_df, 100, "id", kind, metric, 0.3, 60, "s", part_col="_part"
-        ).collect()
+        args = (kind, metric, 0.3, 60, "s")
+        want = bits(_dataframe_fusion(vec_df, txt_df, 100, "id", *args, "_part").collect())
+        assert bits(fuse_candidates(vec_df, txt_df, 100, "id", *args, part_col="_part")
+                    .collect()) == want, metric
         for c, (vec, txt) in enumerate(cases):
-            want = local(metric, vec, txt)
-            assert len(want) == 4, (metric, c)
-            assert bits([r for r in rows if r[0] // 100 == c][:4]) == want, (metric, c)
-    vec, txt = cases[0]
-    rows = fuse_candidates(
-        spark.createDataFrame(vec, "id long, _vdist double"),
-        spark.createDataFrame(txt, "id long, _bm25 double"),
-        4, "id", kind, "IP", 0.3, 60, "s",
-    ).collect()
-    assert bits(rows) == local("IP", vec, txt)
+            case = [r for r in want if r[0] // 100 == c][:4]
+            assert len(case) == 4, (metric, c)
+            got = fuse_candidates(*frames[c], 4, "id", *args)
+            assert bits(got.collect()) == case, (metric, c)
+            local = _fuse_local(spark, T.LongType(), vec, txt, 4, "id", *args)
+            assert bits(local.collect()) == case, (metric, c)
+        alone = _dataframe_fusion(*frames[nan_last], 4, "id", *args)
+        assert bits(alone.collect()) == [r for r in want if r[0] // 100 == nan_last][:4]
 
 
 def test_bm25_constants_read_only_in_the_scorer():
@@ -731,6 +856,47 @@ def test_bm25_constants_read_only_in_the_scorer():
                 owner = max(inner, key=lambda fn: fn.lineno).name if inner else None
                 if (f, owner) != ("text.py", "bm25_scores_from_tf"):
                     stray.append(f"{os.path.relpath(path, pkg)}:{n.lineno}")
+    assert not stray, stray
+
+
+def test_hybrid_fusion_lives_in_fuse_candidates():
+    """Source guard: under myscaledb_spark/ only hybrid.fuse_candidates calls
+    or imports _collect_legs and _fuse_local, and operators/hybrid.py builds
+    no Spark window, row_number or full outer join."""
+    import ast
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "myscaledb_spark")
+    stray = []
+    for d, _, fs in os.walk(pkg):
+        for f in fs:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            rel = os.path.relpath(path, pkg)
+            tree = ast.parse(open(path, encoding="utf-8").read())
+            funcs = [n for n in ast.walk(tree)
+                     if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+            for n in ast.walk(tree):
+                if isinstance(n, ast.Call):
+                    fn = n.func
+                    name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+                elif isinstance(n, ast.alias):
+                    name = n.name
+                else:
+                    name = None
+                if name in ("_collect_legs", "_fuse_local"):
+                    inner = [fn for fn in funcs if fn.lineno <= n.lineno <= fn.end_lineno]
+                    owner = max(inner, key=lambda fn: fn.lineno).name if inner else None
+                    if (rel, owner) != (os.path.join("operators", "hybrid.py"), "fuse_candidates"):
+                        stray.append(f"{rel}:{n.lineno} {name}")
+                if rel == os.path.join("operators", "hybrid.py"):
+                    word = (getattr(n, "id", None) or getattr(n, "attr", None)
+                            or getattr(n, "name", None)
+                            or (n.value if isinstance(n, ast.Constant) else None))
+                    if word in ("Window", "row_number", "full_outer"):
+                        stray.append(f"{rel}:{n.lineno} {word}")
     assert not stray, stray
 
 

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from myscaledb_spark.errors import InvalidSearchQuery
+from myscaledb_spark.functions.vector import distance, distance_defined
 from myscaledb_spark.operators.topk import (
     batch_vector_topk,
     two_stage_topk,
@@ -230,3 +231,104 @@ def test_vector_topk_drops_null_distance_rows(spark):
     df = spark.createDataFrame(rows, "id int, v array<float>")
     got = vector_topk(df, "v", [0.0, 0.0], 2, "L2", None, "id")
     assert [r.id for r in got.collect()] == [1, 2]
+
+
+QV = [1.0, -2.0, 0.5]
+
+ADVERSARIAL_VECS = [
+    (1, [1.0, 2.0, 3.0]),      # valid
+    (2, None),                  # NULL array
+    (3, [1.0, 2.0]),            # too short (zip_with pads with NULL)
+    (4, [1.0, 2.0, 3.0, 4.0]),  # too long
+    (5, [1.0, None, 3.0]),      # NULL element
+    (6, []),                    # empty
+    (7, [-1.0, 0.0, 9.0]),      # valid
+    (8, [0.0, 0.0, 0.0]),       # zero norm: Cosine divides by zero (r11 ADVICE)
+]
+
+
+@pytest.mark.parametrize("metric", ["L2", "L2Squared", "L1", "IP", "Cosine", "Linf"])
+def test_distance_defined_equals_isnotnull(spark, metric):
+    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
+    got = sorted(
+        r["id"]
+        for r in df.filter(distance_defined("v", QV, metric)).select("id").collect()
+    )
+    # the isnotnull(dist) reference semantics are those of a session that
+    # tolerates div-by-zero (NULL result) — under ANSI both old and new code
+    # threw for the zero-norm Cosine row, so the equivalence target is the
+    # non-ANSI drop behavior (r11 ADVICE high: zero-norm cosine rows must
+    # not surface as NULL-distance rank-1 results)
+    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = sorted(
+            r["id"]
+            for r in df.withColumn("d", distance("v", QV, metric))
+            .filter(F.col("d").isNotNull())
+            .select("id")
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old_ansi)
+    assert got == want, f"{metric}: structural predicate != isnotnull(dist)"
+
+
+def test_cosine_topk_drops_zero_norm_rows(spark):
+    """r11 ADVICE high: a zero-norm vector's cosine distance is undefined;
+    in a non-ANSI session it is NULL, sorts FIRST ascending, and displaced
+    the true #1 neighbor. The structural predicate must drop it."""
+    from myscaledb_spark.operators.topk import vector_topk
+
+    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
+    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        out = vector_topk(df, "v", QV, 5, "Cosine", id_col="id").collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old_ansi)
+    assert [r["id"] for r in out] == [7, 1]
+    assert all(r["dist"] is not None for r in out)
+
+
+def test_cosine_zero_query_vector_returns_empty(spark):
+    from myscaledb_spark.operators.topk import vector_topk
+
+    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
+    out = vector_topk(df, "v", [0.0, 0.0, 0.0], 5, "Cosine", id_col="id")
+    assert out.count() == 0
+
+
+def test_vector_topk_drops_malformed_rows(spark):
+    from myscaledb_spark.operators.topk import vector_topk
+
+    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
+    out = vector_topk(df, "v", QV, 5, "L2", id_col="id")
+    ids = [r["id"] for r in out.collect()]
+    # only the well-formed vectors, ranked by L2 distance (the zero vector
+    # is perfectly valid for L2 — it is only Cosine that must drop it)
+    assert ids == [8, 1, 7]
+
+
+@pytest.mark.parametrize("metric", ["L2", "IP", "Cosine"])
+def test_batch_distance_drops_undefined_distances(spark, metric):
+    """batch_vector_topk applies vector_topk's distance_defined rule per
+    query: a NULL row, a row of another length and, for Cosine, a zero-norm
+    row have no distance and are dropped (they ranked first with a NULL
+    dist, and Cosine raised DIVIDE_BY_ZERO under ANSI); a zero-norm Cosine
+    query returns no rows.  The rows left equal vector_topk's, per query."""
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, None), (4, [5.0]), (5, [2.0, -1.0])],
+        "id int, v array<double>",
+    )
+    queries = [[1.0, 0.0], [0.0, 0.0], [-1.0, 3.0]]
+    got = batch_vector_topk(df, "v", queries, 4, metric, id_col="id").collect()
+    assert all(r["dist"] is not None for r in got)
+    for q, qv in enumerate(queries):
+        want = [(r["id"], r["dist"]) for r in
+                vector_topk(df, "v", qv, 4, metric, id_col="id").collect()]
+        rows = sorted((r for r in got if r["query_id"] == q),
+                      key=lambda r: (r["dist"] if metric != "IP" else -r["dist"], r["id"]))
+        assert [(r["id"], r["dist"]) for r in rows] == want, (metric, q)
+    if metric == "Cosine":
+        assert not [r for r in got if r["query_id"] == 1]
