@@ -892,30 +892,26 @@ def arrayDifference(a):
 # vector math on arrays (arrayDistance.cpp) — re-exported from functions.vector
 from myscaledb_spark.functions.vector import (  # noqa: E402
     cosine_distance as _cosdist,
+    distance as _distance,
     l2_distance as _l2dist,
+    vector_norm as _norm,
 )
 
 
-def L2Distance(a, qvec):
+def L2Distance(a: str, qvec):
     return _l2dist(a, qvec)
 
 
-def cosineDistance(a, qvec):
+def cosineDistance(a: str, qvec):
     return _cosdist(a, qvec)
 
 
-def arrayDotProduct(a, b):
-    return F.aggregate(
-        F.zip_with(_c(a).cast("array<double>"), _c(b).cast("array<double>"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def arrayDotProduct(a: str, b: str):
+    return _distance(a, b, "IP")
 
 
-def L2Norm(a):
-    from myscaledb_spark.functions.vector import vector_norm
-
-    return vector_norm(_c(a), 2)
+def L2Norm(a: str):
+    return _norm(a, 2)
 
 
 # ---------------------------------------------------------------------------

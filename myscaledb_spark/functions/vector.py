@@ -11,17 +11,21 @@ Reference parity:
     `src/VectorIndex/Utils/CommonUtils.cpp:86-96`, test
     `tests/queries/2_vector_search/00038_mqvs_binary_vector.*`.
 
-Design: everything here is a Catalyst expression built from higher-order
-array functions (``zip_with`` + ``aggregate``), so distance computation stays
-JVM-side inside whole-stage codegen — no Python row boundary, vectorized by
-Tungsten, and the surrounding filter/topk plan keeps predicate pushdown.
-Math is done in DOUBLE regardless of the (float32) storage type so results
-are reproducible across engines and partitionings.
+Design: every distance is a Catalyst expression built from higher-order
+array functions (``zip_with`` + ``aggregate``) parsed from one kernel of
+Spark SQL text (``KERNEL``), which the SQL dialect's distance functions,
+batch_distance, IVF and SQ assignment and the cosine near-dup join share.
+It stays JVM-side with no Python row boundary, and the surrounding
+filter/topk plan keeps predicate pushdown; higher-order functions run
+interpreted, outside whole-stage codegen.  Math is done in DOUBLE
+regardless of the (float32) storage type so results are reproducible
+across engines and partitionings.
 """
 
 from __future__ import annotations
 
 import math
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -49,11 +53,6 @@ METRIC_ASCENDING = {
 }
 
 
-def _as_double_array(col: Column | str) -> Column:
-    col = F.col(col) if isinstance(col, str) else col
-    return col.cast("array<double>")
-
-
 def _double_sql(x: float) -> str:
     """A SQL double literal that parses back to exactly ``x``: ``repr`` is
     the shortest round-tripping decimal; NaN and ±inf have no literal form."""
@@ -70,85 +69,152 @@ def double_array_sql(values: Sequence[float]) -> str:
     return "array(" + ", ".join(_double_sql(x) for x in values) + ")"
 
 
-def _query_literal(qvec: Sequence[float]) -> Column:
-    # one parsed expression, one JVM call: F.array(*F.lit(...)) costs two
-    # py4j round trips per component (~33 ms for a 64-d query)
-    return F.expr(double_array_sql(qvec))
+def column_sql(name: str) -> str:
+    """SQL text of the column ``F.col(name)`` reads: every dot-separated
+    part back-quoted, so a qualified ``a.v`` stays qualified and a
+    back-quoted part keeps its dots."""
+    parts = re.findall(r"`((?:[^`]|``)*)`|([^.`]+)", name)
+    return ".".join(f"`{quoted or plain}`" for quoted, plain in parts)
 
 
-def l2_squared_distance(col: Column | str, qvec: Sequence[float]) -> Column:
-    a, q = _as_double_array(col), _query_literal(qvec)
-    return F.aggregate(
-        F.zip_with(a, q, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+# ---------------------------------------------------------------------------
+# The kernel: one fold per metric, as Spark SQL text over two operand slots,
+# {0} the row vector and {1} the query vector, both array<double>.  Cosine
+# divides by the query's norm in slot {2}.  It is text because the SQL
+# dialect emits text; the Column builders below parse the same text with
+# F.expr.  Every fold is sequential, left to right from 0.0, so a numpy or
+# Python loop in the same order reproduces it bit for bit.
+# ---------------------------------------------------------------------------
 
 
-def l2_distance(col: Column | str, qvec: Sequence[float]) -> Column:
-    return F.sqrt(l2_squared_distance(col, qvec))
+def _fold(term: str, step: str = "acc + v") -> str:
+    return ("aggregate(zip_with({0}, {1}, (x, y) -> " + term
+            + "), cast(0.0 as double), (acc, v) -> " + step + ")")
 
 
-def l1_distance(col: Column | str, qvec: Sequence[float]) -> Column:
-    a, q = _as_double_array(col), _query_literal(qvec)
-    return F.aggregate(
-        F.zip_with(a, q, lambda x, y: F.abs(x - y)), F.lit(0.0), lambda acc, v: acc + v
-    )
+def _self_fold(step: str) -> str:
+    return "aggregate({0}, cast(0.0 as double), (acc, v) -> " + step + ")"
 
 
-def linf_distance(col: Column | str, qvec: Sequence[float]) -> Column:
-    a, q = _as_double_array(col), _query_literal(qvec)
-    return F.aggregate(
-        F.zip_with(a, q, lambda x, y: F.abs(x - y)),
-        F.lit(0.0),
-        lambda acc, v: F.greatest(acc, v),
-    )
+KERNEL: dict[str, str] = {
+    "L2Squared": _fold("(x - y) * (x - y)"),
+    "IP": _fold("x * y"),
+    "L1": _fold("abs(x - y)"),
+    "Linf": _fold("abs(x - y)", "greatest(acc, v)"),
+    "L2Norm": "sqrt(" + _self_fold("acc + v * v") + ")",
+    "L1Norm": _self_fold("acc + abs(v)"),
+}
+KERNEL["L2"] = "sqrt(" + KERNEL["L2Squared"] + ")"
+KERNEL["Cosine"] = "(1.0 - " + KERNEL["IP"] + " / (" + KERNEL["L2Norm"] + " * {2}))"
+
+_CANONICAL = {m.lower(): m for m in METRICS}
 
 
-def ip_distance(col: Column | str, qvec: Sequence[float]) -> Column:
-    """Inner product 'distance' — larger is better; ORDER BY ... DESC."""
-    a, q = _as_double_array(col), _query_literal(qvec)
-    return F.aggregate(
-        F.zip_with(a, q, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
+def canonical_metric(metric: str) -> str:
+    try:
+        return _CANONICAL[metric.lower()]
+    except KeyError:
+        raise UnknownMetric(f"metric must be one of {METRICS}, got {metric!r}") from None
 
 
-def vector_norm(col: Column | str, p: int = 2) -> Column:
-    """arrayNorm (src/Functions/array/arrayDistance.cpp arrayL2Norm etc.)."""
-    a = _as_double_array(col)
-    if p == 2:
-        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    if p == 1:
-        return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + F.abs(v))
-    raise ValueError(f"unsupported norm order {p}")
+def distance_sql(metric: str, row: str, query: str, query_norm_sql: str | None = None) -> str:
+    """The kernel's ``metric`` fold (a name of ``KERNEL``) with the SQL
+    texts ``row`` and ``query`` in its operand slots.  Cosine's query norm
+    is ``query_norm_sql`` when the caller folded it already, else the L2
+    norm fold over ``query``."""
+    if query_norm_sql is None:
+        query_norm_sql = KERNEL["L2Norm"].format(query)
+    return KERNEL[metric].format(row, query, query_norm_sql)
 
 
-def cosine_distance(col: Column | str, qvec: Sequence[float]) -> Column:
-    """Cosine *distance* = 1 - cos_sim (reference metric 'Cosine'; ASC order).
+def query_norm(qvec: Sequence[float]) -> float:
+    """‖qvec‖ folded in Python in the kernel's order: bit-identical to the
+    kernel's L2 norm fold over the same vector."""
+    return math.sqrt(sum(float(x) * float(x) for x in qvec))
 
-    Query-side norm is folded to a Python constant; the row side computes dot
-    and self-norm in a single array traversal via a struct accumulator.
+
+def vector_sql(col: str) -> str:
+    """The kernel's operand for the column named ``col``: ``array<double>``."""
+    return f"cast({column_sql(col)} as array<double>)"
+
+
+def _operands(col: str, qvec: Sequence[float] | str) -> tuple[str, str, str]:
+    """(row, query, query norm) SQL texts for a literal query (its norm
+    folded in Python), or for the query column named ``qvec`` (its norm the
+    kernel's fold)."""
+    if isinstance(qvec, str):
+        query = vector_sql(qvec)
+        return vector_sql(col), query, KERNEL["L2Norm"].format(query)
+    return vector_sql(col), double_array_sql(qvec), _double_sql(query_norm(qvec))
+
+
+def distance(col: str, qvec: Sequence[float] | str, metric: str = "L2") -> Column:
+    """The reference's ``distance(vec_col, [q...])`` as a column expression
+    over the column named ``col``; ``qvec`` is a literal query or the name
+    of a query column.
+
+    Metric resolution mirrors `MergeTreeSettings.h:183` (table-level
+    ``vector_search_metric_type``); dispatch mirrors
+    `src/VectorIndex/Storages/MergeTreeVSManager.cpp:340-470`.
     """
-    a, q = _as_double_array(col), _query_literal(qvec)
-    qnorm = math.sqrt(sum(float(x) * float(x) for x in qvec))
-    zero = F.struct(F.lit(0.0).alias("dot"), F.lit(0.0).alias("na"))
-    pairs = F.zip_with(a, q, lambda x, y: F.struct(x.alias("x"), y.alias("y")))
-    return F.aggregate(
-        pairs,
-        zero,
-        lambda acc, p: F.struct(
-            (acc["dot"] + p["x"] * p["y"]).alias("dot"),
-            (acc["na"] + p["x"] * p["x"]).alias("na"),
-        ),
-        lambda acc: F.lit(1.0) - acc["dot"] / (F.sqrt(acc["na"]) * F.lit(qnorm)),
-    )
+    return F.expr(distance_sql(canonical_metric(metric), *_operands(col, qvec)))
 
 
-def distance_defined(
-    col: Column | str, qvec: Sequence[float], metric: str = "L2"
-) -> Column:
+def l2_distance(col: str, qvec: Sequence[float]) -> Column:
+    return distance(col, qvec, "L2")
+
+
+def l2_squared_distance(col: str, qvec: Sequence[float]) -> Column:
+    return distance(col, qvec, "L2Squared")
+
+
+def l1_distance(col: str, qvec: Sequence[float]) -> Column:
+    return distance(col, qvec, "L1")
+
+
+def linf_distance(col: str, qvec: Sequence[float]) -> Column:
+    return distance(col, qvec, "Linf")
+
+
+def ip_distance(col: str, qvec: Sequence[float]) -> Column:
+    """Inner product 'distance' — larger is better; ORDER BY ... DESC."""
+    return distance(col, qvec, "IP")
+
+
+def cosine_distance(col: str, qvec: Sequence[float]) -> Column:
+    """Cosine *distance* = 1 - cos_sim (reference metric 'Cosine'; ASC order)."""
+    return distance(col, qvec, "Cosine")
+
+
+def vector_norm(col: str, p: int = 2) -> Column:
+    """arrayNorm (src/Functions/array/arrayDistance.cpp arrayL2Norm etc.)."""
+    if p not in (1, 2):
+        raise ValueError(f"unsupported norm order {p}")
+    return F.expr(KERNEL[f"L{p}Norm"].format(vector_sql(col)))
+
+
+def row_defined(col: str, dim: int | str, metric: str = "L2") -> Column:
+    """The row side of ``distance_defined``: rows of ``col`` that have a
+    ``metric`` distance to some query of ``dim`` elements (``dim`` an int
+    or SQL text)."""
+    return F.expr(_row_rule(col, dim, canonical_metric(metric)))
+
+
+def _row_rule(col: str, dim: int | str, m: str) -> str:
+    name = column_sql(col)
+    if m == "Linf":
+        return f"{name} IS NOT NULL"
+    rule = f"{name} IS NOT NULL AND size({name}) = {dim} AND NOT exists({name}, x -> x IS NULL)"
+    if m == "Cosine":
+        rule += f" AND exists({vector_sql(col)}, x -> x * x != 0.0)"
+    return rule
+
+
+def distance_defined(col: str, qvec: Sequence[float] | str, metric: str = "L2") -> Column:
     """Predicate equivalent to ``distance(col, qvec, metric).isNotNull()``
-    at a fraction of the cost.
+    at a fraction of the cost: the one rule for which rows have a distance,
+    for a literal query and for a query column alike (same arguments as
+    ``distance``).
 
     Rationale (optimization guide §7.2 "duplicated subtrees"): filtering on
     ``isnotnull(dist)`` after projecting the distance makes Catalyst push the
@@ -161,49 +227,25 @@ def distance_defined(
     query (zip_with pads with NULL), or contains a NULL element — all
     checkable with O(1)/O(d) primitives.  Linf folds NULL elements away
     (``greatest`` skips NULLs), so its distance is NULL iff the column is
-    NULL.  Cosine additionally divides by the row/query norms, so a
-    zero-norm row vector (or query vector) makes the distance undefined
-    (NULL in non-ANSI sessions — which would sort FIRST ascending and
-    displace a real neighbor): require a nonzero element row-side and
-    return an all-false predicate when the query norm is zero, matching
-    the old isNotNull(dist) guard's drop behavior (r10 ADVICE, high).
-    Equivalence is pinned by tests/test_opt_r10.py."""
-    c = F.col(col) if isinstance(col, str) else col
-    if metric.lower() == "linf":
-        return c.isNotNull()
-    base = (
-        c.isNotNull()
-        & (F.size(c) == len(qvec))
-        & ~F.exists(c, lambda x: x.isNull())
-    )
-    if metric.lower() == "cosine":
-        if not any(float(x) != 0.0 for x in qvec):
-            return F.lit(False)
-        base = base & F.exists(c, lambda x: x != 0.0)
-    return base
-
-
-def distance(col: Column | str, qvec: Sequence[float], metric: str = "L2") -> Column:
-    """The reference's ``distance(vec_col, [q...])`` as a column expression.
-
-    Metric resolution mirrors `MergeTreeSettings.h:183` (table-level
-    ``vector_search_metric_type``); dispatch mirrors
-    `src/VectorIndex/Storages/MergeTreeVSManager.cpp:340-470`.
-    """
-    m = metric.lower()
-    if m == "l2":
-        return l2_distance(col, qvec)
-    if m == "l2squared":
-        return l2_squared_distance(col, qvec)
-    if m == "cosine":
-        return cosine_distance(col, qvec)
-    if m == "ip":
-        return ip_distance(col, qvec)
-    if m == "l1":
-        return l1_distance(col, qvec)
-    if m == "linf":
-        return linf_distance(col, qvec)
-    raise UnknownMetric(f"metric must be one of {METRICS}, got {metric!r}")
+    NULL.  Cosine divides by ``sqrt(na) * ‖q‖`` (``na`` the row's sum of
+    squares); where that is 0 the distance is undefined (NULL in non-ANSI
+    sessions, which sorts FIRST ascending; DIVIDE_BY_ZERO under ANSI).  A
+    row is kept when some ``x * x`` is non-zero, which is exactly
+    ``na != 0`` (a sum of non-negative terms), and a query when its norm is
+    non-zero.  Together they are exactly a non-zero divisor: a non-zero sum
+    of squares is at least 4.9e-324, so both roots are at least 2.2e-162
+    and their product rounds to at least 4.9e-324.  Equivalence is pinned
+    by tests/test_vector_search.py."""
+    m = canonical_metric(metric)
+    if isinstance(qvec, str):
+        query = vector_sql(qvec)
+        rule = _row_rule(col, f"size({query})", m)
+        if m == "Cosine":
+            rule += f" AND {KERNEL['L2Norm'].format(query)} != 0.0"
+        return F.expr(rule)
+    if m == "Cosine" and query_norm(qvec) == 0.0:
+        return F.lit(False)
+    return F.expr(_row_rule(col, len(qvec), m))
 
 
 # ---------------------------------------------------------------------------
@@ -257,8 +299,15 @@ __all__ = [
     "METRICS",
     "BINARY_METRICS",
     "METRIC_ASCENDING",
+    "KERNEL",
+    "column_sql",
+    "distance_sql",
+    "double_array_sql",
+    "query_norm",
+    "vector_sql",
     "distance",
     "distance_defined",
+    "row_defined",
     "l2_distance",
     "l2_squared_distance",
     "l1_distance",

@@ -16,7 +16,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from myscaledb_spark.functions.vector import cosine_distance
+from myscaledb_spark.functions.vector import (
+    cosine_distance,
+    distance,
+    ip_distance,
+    vector_norm,
+)
 
 
 def cosine_topk(
@@ -25,14 +30,6 @@ def cosine_topk(
     """Brute-force cosine top-k (ascending cosine *distance*)."""
     scored = df.withColumn("dist", cosine_distance(vec_col, qvec))
     return scored.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(k)
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 13) -> list[list[float]]:
@@ -49,13 +46,11 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 13) -> list[list[flo
     return planes
 
 
-def lsh_bucket(vec_col: Column, planes: Sequence[Sequence[float]]) -> Column:
+def lsh_bucket(vec_col: str, planes: Sequence[Sequence[float]]) -> Column:
     """Sign-of-projection bucket id (random-hyperplane LSH for cosine)."""
-    a = vec_col.cast("array<double>")
     bucket = F.lit(0).cast("long")
     for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(v)) for v in p])
-        bucket = bucket + F.when(_dot(a, plane) > 0, F.lit(2**i).cast("long")).otherwise(
+        bucket = bucket + F.when(ip_distance(vec_col, p) > 0, F.lit(2**i).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
     return bucket
@@ -82,7 +77,7 @@ def lsh_neardup_pairs(
     for t in range(n_tables):
         planes = random_hyperplanes(dim, n_planes, seed + 101 * t)
         pairs = cosine_neardup_pairs(
-            df, vec_col, id_col, threshold, block_col=lsh_bucket(F.col(vec_col), planes)
+            df, vec_col, id_col, threshold, block_col=lsh_bucket(vec_col, planes)
         )
         out = pairs if out is None else out.unionAll(pairs)
     return out.distinct()
@@ -116,7 +111,7 @@ def cosine_neardup_pairs(
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-        _norm(F.col(vec_col).cast("array<double>")).alias("nrm"),
+        vector_norm(vec_col).alias("nrm"),
         *([block_col.alias("blk")] if block_col is not None else []),
     )
     a = base.alias("a")
@@ -124,7 +119,7 @@ def cosine_neardup_pairs(
     cond = F.col("a.id") < F.col("b.id")
     if block_col is not None:
         cond = cond & (F.col("a.blk") == F.col("b.blk"))
-    sim = _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
+    sim = distance("a.v", "b.v", "IP") / (F.col("a.nrm") * F.col("b.nrm"))
     # The threshold filter on the projected cos_sim would be pushed below
     # the Project into the join condition, re-evaluating the O(d) dot
     # product a second time per candidate pair (guide §7.2 duplicated

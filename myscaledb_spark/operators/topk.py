@@ -47,8 +47,12 @@ from myscaledb_spark.errors import (
 )
 from myscaledb_spark.functions.vector import (
     METRIC_ASCENDING,
+    canonical_metric,
     distance,
     distance_defined,
+    double_array_sql,
+    query_norm,
+    row_defined,
 )
 
 
@@ -63,7 +67,7 @@ def _validate_k(k: int) -> None:
 
 
 def _order(dist_col: Column, id_col: Column | None, metric: str):
-    asc = METRIC_ASCENDING[metric if metric in METRIC_ASCENDING else "L2"]
+    asc = METRIC_ASCENDING[canonical_metric(metric)]
     key = dist_col.asc() if asc else dist_col.desc()
     # deterministic tie-break so results are stable across partitionings
     return [key, id_col.asc()] if id_col is not None else [key]
@@ -121,56 +125,26 @@ def batch_vector_topk(
     _validate_k(n_by_query)
     if not qvecs:
         raise InvalidSearchQuery("batch_distance requires at least one query vector")
+    m = canonical_metric(metric)
+    if m not in ("L2", "L2Squared", "IP", "Cosine"):
+        raise InvalidSearchQuery(f"batch_distance: unsupported metric {metric!r}")
     if where is not None:
         df = df.filter(where)
-    queries = F.array(
-        *[
-            F.struct(
-                F.lit(i).cast("int").alias(query_id_name),
-                F.array(*[F.lit(float(x)) for x in q]).alias("qv"),
-            )
-            for i, q in enumerate(qvecs)
-        ]
+    queries = F.expr("array(" + ", ".join(
+        f"named_struct('id', {i}, 'qv', {double_array_sql(q)})" for i, q in enumerate(qvecs)
+    ) + ")")
+    # vector_topk's distance_defined rule per (row, query): unguarded, an
+    # undefined distance ranked FIRST with a NULL dist (or raised
+    # DIVIDE_BY_ZERO under ANSI).  The row-only conjuncts are pushed below
+    # the explode.
+    exploded = df.withColumn("_q", F.explode(queries)).filter(
+        distance_defined(vec_col, "_q.qv", m)
     )
-    # distance against the exploded per-row query vector (column-column form)
-    a = F.col(vec_col).cast("array<double>")
-    qv = F.col("_q.qv")
-    m = metric.lower()
-    # vector_topk's distance_defined rule per (row, query): a NULL row, a
-    # NULL element, a length other than the query's, and for Cosine a
-    # zero-norm row or query have no distance — unguarded they ranked FIRST
-    # with a NULL dist (or raised DIVIDE_BY_ZERO under ANSI).  The row-only
-    # conjuncts are pushed below the explode.
-    defined = (
-        a.isNotNull()
-        & ~F.exists(a, lambda x: x.isNull())
-        & (F.size(a) == F.size(qv))
-    )
-    if m == "cosine":
-        defined = (defined & F.exists(a, lambda x: x != 0.0)
-                   & F.exists(qv, lambda x: x != 0.0))
-    exploded = df.withColumn("_q", F.explode(queries)).filter(defined)
-    if m in ("l2", "l2squared"):
-        d = F.aggregate(
-            F.zip_with(a, qv, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        if m == "l2":
-            d = F.sqrt(d)
-    elif m == "ip":
-        d = F.aggregate(F.zip_with(a, qv, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    elif m == "cosine":
-        dot = F.aggregate(F.zip_with(a, qv, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-        na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-        nq = F.sqrt(F.aggregate(qv, F.lit(0.0), lambda acc, v: acc + v * v))
-        d = F.lit(1.0) - dot / (na * nq)
-    else:
-        raise InvalidSearchQuery(f"batch_distance: unsupported metric {metric!r}")
+    d = distance(vec_col, "_q.qv", m)
     scored = exploded.withColumn(dist_name, d).withColumn(
-        query_id_name, F.col(f"_q.{query_id_name}")
+        query_id_name, F.col("_q.id")
     ).drop("_q")
-    asc = METRIC_ASCENDING.get(metric, True)
+    asc = METRIC_ASCENDING[m]
     order = [F.col(dist_name).asc() if asc else F.col(dist_name).desc()]
     if id_col:
         order.append(F.col(id_col).asc())
@@ -209,16 +183,21 @@ def batch_vector_topk_large(
     _validate_k(n_by_query)
     if not qvecs:
         raise InvalidSearchQuery("batch_distance requires at least one query vector")
+    metric = canonical_metric(metric)
     m = metric.lower()
     if m not in ("l2", "l2squared", "ip", "cosine"):
         raise InvalidSearchQuery(f"batch_distance: unsupported metric {metric!r}")
     if where is not None:
         df = df.filter(where)  # pre-filter before candidate generation
+    # distance_defined's rule: the row side filters before the Python
+    # stage; a zero-norm Cosine query has no rows
+    df = df.filter(row_defined(vec_col, len(qvecs[0]), metric))
+    keep = [i for i, q in enumerate(qvecs) if m != "cosine" or query_norm(q) != 0.0]
 
-    Q = np.asarray(qvecs, dtype=np.float64)  # (nq, d) — broadcast via closure
+    Q = np.asarray([qvecs[i] for i in keep], dtype=np.float64).reshape(len(keep), -1)
     if m == "cosine":
         qn = np.linalg.norm(Q, axis=1)
-        qn[qn == 0] = 1e-30
+    qids = np.asarray(keep, dtype=np.int32)
     nq = Q.shape[0]
     n = n_by_query
     idc = id_col or df.columns[0]
@@ -233,15 +212,15 @@ def batch_vector_topk_large(
 
     def _partition_topn(batches):
         for pdf in batches:
+            if pdf.empty or not nq:
+                continue
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)  # (b, d)
             ids = pdf[idc].to_numpy()
             if m == "ip":
                 D = X @ Q.T  # larger better
                 order_sign = -1.0
             elif m == "cosine":
-                xn = np.linalg.norm(X, axis=1)
-                xn[xn == 0] = 1e-30
-                D = 1.0 - (X @ Q.T) / np.outer(xn, qn)
+                D = 1.0 - (X @ Q.T) / np.outer(np.linalg.norm(X, axis=1), qn)
                 order_sign = 1.0
             else:
                 x2 = (X * X).sum(axis=1)[:, None]
@@ -254,18 +233,18 @@ def batch_vector_topk_large(
             take = min(n, D.shape[0])
             # per-query partial top-n within this batch
             part = np.argpartition(order_sign * D, take - 1, axis=0)[:take]  # (take, nq)
-            qid = np.repeat(np.arange(nq, dtype=np.int32), take)
+            col = np.repeat(np.arange(nq), take)
             rows = part.T.reshape(-1)  # [q0's top rows..., q1's top rows...]
             yield pd.DataFrame(
                 {
-                    query_id_name: qid,
+                    query_id_name: qids[col],
                     "_cand_id": ids[rows].astype(np.int64),
-                    dist_name: D[rows, qid],
+                    dist_name: D[rows, col],
                 }
             )
 
     cands = df.select(idc, vec_col).mapInPandas(_partition_topn, out_schema)
-    asc = METRIC_ASCENDING.get(metric, True)
+    asc = METRIC_ASCENDING[metric]
     order = [F.col(dist_name).asc() if asc else F.col(dist_name).desc(), F.col("_cand_id").asc()]
     w = Window.partitionBy(query_id_name).orderBy(*order)
     return (
@@ -303,11 +282,13 @@ def two_stage_topk(
         df = df.filter(where)
     ncand = min(max(k * candidate_multiple, k), MAX_SEARCH_RESULT_WINDOW)
     if coarse_dims:
+        # a row without a full distance has a NULL coarse one, which ranked
+        # first and filled the candidate set only for stage 2 to drop it
         coarse = F.slice(F.col(vec_col).cast("array<double>"), 1, coarse_dims)
-        stage1 = df.withColumn("_coarse", coarse)
+        stage1 = df.filter(distance_defined(vec_col, qvec, metric)).withColumn("_coarse", coarse)
         qcoarse = list(qvec)[:coarse_dims]
         stage1 = stage1.withColumn("_cd", distance("_coarse", qcoarse, metric))
-        asc = METRIC_ASCENDING.get(metric, True)
+        asc = METRIC_ASCENDING[canonical_metric(metric)]
         order = [F.col("_cd").asc() if asc else F.col("_cd").desc()]
         if id_col:
             order.append(F.col(id_col).asc())

@@ -32,6 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myscaledb_spark.functions.vector import distance_sql, double_array_sql, vector_sql
 from myscaledb_spark.plans.pq_index import exact_rerank, write_codes
 from myscaledb_spark.plans.vector_index import IndexRegistry
 
@@ -115,14 +116,7 @@ def sq_search(
     # into literal arrays. The candidate stage then compiles to a scan +
     # TakeOrderedAndProject — the same shape as the exact brute-force path,
     # over 4×-smaller rows.
-    a_const = F.array(*[F.lit(float(s / levels)) for s in span])
-    b_const = F.array(*[F.lit(float(qi - l)) for qi, l in zip(q, lo)])
-    scaled = F.zip_with(
-        F.col("codes").cast("array<double>"), a_const, lambda c, a: c * a
-    )
-    approx = F.aggregate(
-        F.zip_with(scaled, b_const, lambda t, b: (t - b) * (t - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    scaled = (f"zip_with({vector_sql('codes')}, {double_array_sql(span / levels)}, "
+              "(c, a) -> c * a)")
+    approx = F.expr(distance_sql("L2Squared", scaled, double_array_sql(q - lo)))
     return exact_rerank(codes_df, "sq_id", approx, q, k, candidate_multiple, metric, id_col)

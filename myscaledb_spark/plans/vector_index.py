@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from myscaledb_spark.functions.vector import distance, double_array_sql
+from myscaledb_spark.functions.vector import distance_sql, double_array_sql, vector_sql
 from myscaledb_spark.operators.topk import vector_topk
 
 
@@ -372,13 +372,12 @@ def _with_list_id(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> 
     are materialised once (two-level select), so the argmin does not
     recompute them.  The first minimum wins ties; NaN counts as the largest
     distance (Spark's double ordering); a NULL vector goes to list 0."""
-    a = F.col(vec_col).cast("array<double>")
-    cents = F.expr("array(" + ", ".join(double_array_sql(c) for c in centroids) + ")")
-    d = F.transform(cents, lambda c: F.aggregate(
-        F.zip_with(a, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    ))
+    cents = "array(" + ", ".join(double_array_sql(c) for c in centroids) + ")"
+    # a lambda variable named like the column's first part would capture
+    # the row operand; this name is longer than the whole column name
+    c = "_centroid" + "_" * len(vec_col)
+    d = F.expr(f"transform({cents}, {c} -> "
+               + distance_sql("L2Squared", vector_sql(vec_col), c) + ")")
     return (
         df.withColumn("_ivf_d", d)
         .withColumn("list_id", F.coalesce(

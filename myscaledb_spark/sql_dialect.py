@@ -28,6 +28,11 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from myscaledb_spark.functions.vector import distance_sql
+
+# the vector-distance templates' operand slots: the row and query vectors
+_ROW, _QUERY = "cast({0} as array<double>)", "cast({1} as array<double>)"
+
 # name → template with {0},{1},...; {*} = all args joined by ', '
 TEMPLATES: dict[str, str] = {
     # date/time
@@ -540,39 +545,20 @@ TEMPLATES: dict[str, str] = {
         "vv -> struct(-size(filter(collect_list({0}), y -> y = vv)) as negcnt, "
         "vv as val))), s -> s.val), 1, 10)"
     ),
-    # vector search (§2.9): exact expression forms
-    "L2Distance": (
-        "sqrt(aggregate(zip_with(cast({0} as array<double>), cast({1} as array<double>), "
-        "(x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, v) -> acc + v))"
-    ),
+    # vector search (§2.9): exact expression forms, generated from the one
+    # kernel in functions/vector.py
+    "L2Distance": distance_sql("L2", _ROW, _QUERY),
     # distance() carries the reference's faiss METRIC_L2 semantics: SQUARED
     # L2 (tests/queries/2_vector_search/00001_mqvs_distance.reference prints
     # 0.03 for a [0.1,0.1,0.1] offset, not 0.1732). L2Distance (the standard
     # ClickHouse function) stays true Euclidean. Cosine/IP tables swap this
-    # template via _distance_metric_rewrite.
-    "distance": (
-        "aggregate(zip_with(cast({0} as array<double>), cast({1} as array<double>), "
-        "(x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, v) -> acc + v)"
-    ),
-    "L2SquaredDistance": (
-        "aggregate(zip_with(cast({0} as array<double>), cast({1} as array<double>), "
-        "(x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, v) -> acc + v)"
-    ),
-    "dotProduct": (
-        "aggregate(zip_with(cast({0} as array<double>), cast({1} as array<double>), "
-        "(x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)"
-    ),
-    "arrayDotProduct": (
-        "aggregate(zip_with(cast({0} as array<double>), cast({1} as array<double>), "
-        "(x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)"
-    ),
-    "cosineDistance": (
-        "(1.0 - aggregate(zip_with(cast({0} as array<double>), cast({1} as array<double>), "
-        "(x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v) / "
-        "(sqrt(aggregate(cast({0} as array<double>), cast(0.0 as double), (acc, v) -> acc + v * v)) * "
-        "sqrt(aggregate(cast({1} as array<double>), cast(0.0 as double), (acc, v) -> acc + v * v))))"
-    ),
-    "L2Norm": "sqrt(aggregate(cast({0} as array<double>), cast(0.0 as double), (acc, v) -> acc + v * v))",
+    # template via _distance_metric_and_direction.
+    "distance": distance_sql("L2Squared", _ROW, _QUERY),
+    "L2SquaredDistance": distance_sql("L2Squared", _ROW, _QUERY),
+    "dotProduct": distance_sql("IP", _ROW, _QUERY),
+    "arrayDotProduct": distance_sql("IP", _ROW, _QUERY),
+    "cosineDistance": distance_sql("Cosine", _ROW, _QUERY),
+    "L2Norm": distance_sql("L2Norm", _ROW, _QUERY),
     # geo (greatCircleDistance.cpp; same haversine tree as ch_compat builders)
     "greatCircleDistance": (
         "(2.0 * 6371000.0 * asin(sqrt("
@@ -593,9 +579,8 @@ PARAMETRIC: dict[str, str] = {
     # distance('nprobe=128')(col, q): search params tune the INDEX path —
     # the SQL dialect always computes the exact form, so params are accepted
     # and ignored (parseVSParameters.cpp accepts the same strings).
-    "distance": (
-        "aggregate(zip_with(cast({a0} as array<double>), cast({a1} as array<double>), "
-        "(x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, v) -> acc + v)"
+    "distance": distance_sql(
+        "L2Squared", "cast({a0} as array<double>)", "cast({a1} as array<double>)"
     ),
     "quantile": "percentile({a0}, {p0})",
     "quantileExact": "percentile({a0}, {p0})",

@@ -115,3 +115,26 @@ def test_empty_array_helpers(spark):
     assert by_id[2]["en"] == []
     assert by_id[2]["enu"] == []
     assert by_id[2]["diff"] == []
+
+
+def test_minhash_excludes_short_docs_without_prefilter(spark):
+    """The r10 cold path stores short docs as empty cached sets instead of
+    pre-filtering on size(tokens) (which re-tokenized every row below the
+    cache); they must still contribute no signatures and no pairs."""
+    from myscaledb_spark.operators.dedup import minhash_dedup_pairs
+
+    rows = [
+        (1, "alpha beta gamma delta epsilon zeta"),
+        (2, "alpha beta gamma delta epsilon zeta"),  # exact dup of 1
+        (3, "two tokens"),                            # < 3 tokens: no shingles
+        (4, "one"),
+        (5, ""),
+    ]
+    df = spark.createDataFrame(rows, "doc_id int, text string").withColumn(
+        "_toks",
+        F.filter(F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != ""),
+    )
+    pairs = minhash_dedup_pairs(
+        df, "doc_id", F.col("_toks"), 3, 12, 4, 0.5
+    ).collect()
+    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs] == [(1, 2, 1.0)]

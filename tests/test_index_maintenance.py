@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from myscaledb_spark import session
 from myscaledb_spark.functions.text import tokenize
-from myscaledb_spark.functions.vector import _query_literal
+from myscaledb_spark.functions.vector import double_array_sql
 from myscaledb_spark.plans.frame_cache import cached_parquet
 from myscaledb_spark.plans.fts_index import (
     _postings,
@@ -69,7 +69,7 @@ def test_query_literal_bit_identical_to_lit_array(spark):
     vals = [0.1, -0.0, 0.0, 1 / 3, 1e-05, 1e20, -1.5e-300, 5e-324,
             1.7976931348623157e308, 123456789.0, float("nan"),
             float("inf"), float("-inf")]
-    got = spark.range(1).select(_query_literal(vals).alias("a")).first()["a"]
+    got = spark.range(1).select(F.expr(double_array_sql(vals)).alias("a")).first()["a"]
     want = spark.range(1).select(
         F.array(*[F.lit(float(x)) for x in vals]).alias("a")
     ).first()["a"]

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
 
 from myscaledb_spark import session
 from myscaledb_spark.session import collect_small, session_settings, values_relation
+from tests.conftest import SF_DIR
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "myscaledb_spark")
 
@@ -237,3 +238,28 @@ def test_stats_reads_and_size_gates_go_through_session():
                 conf_reads.append(f"{os.path.relpath(path, PKG)}:{ln}")
     assert not stray, stray
     assert not conf_reads, conf_reads
+
+
+def test_agg_state_small_input_scope_equals_distributed(spark, monkeypatch):
+    """The r10 small-input execution scope (AQE off + stats-derived shuffle
+    partitions, materialized inside the scope) must return exactly the rows
+    the unscoped AQE plan returns — the scope changes execution confs only."""
+    from myscaledb_spark.suite.agg_state_gate import agg_state_merge_orders
+
+    sf = SF_DIR
+    scoped = agg_state_merge_orders(spark, sf)
+    # small path fired: the returned frame is pre-materialized — the r10
+    # shape was a localCheckpoint (ExistingRDD); r11 re-emits the ≤|status|
+    # rows as a VALUES LocalRelation (LocalTableScan, zero jobs on collect)
+    plan = scoped._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan or "LocalTableScan" in plan
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
+    try:
+        dist = agg_state_merge_orders(spark, sf)
+        dplan = dist._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in dplan and "LocalTableScan" not in dplan
+        assert sorted(map(tuple, scoped.collect()), key=repr) == sorted(
+            map(tuple, dist.collect()), key=repr
+        )
+    finally:
+        monkeypatch.undo()

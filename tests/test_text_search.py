@@ -911,3 +911,53 @@ def test_unknown_tokenizer_raises_on_the_query_side():
     with pytest.raises(InvalidSearchQuery, match="unknown tokenizer"):
         parse_nlq('hello +"big world"', "bogus")
     assert tokenize_query("Hello World", "simple") == ["hello", "world"]
+
+
+def test_match_predicate_equals_tf_match(spark):
+    from myscaledb_spark.functions.text import match_predicate, term_tf
+
+    rows = [
+        (1, "the vector search engine"),
+        (2, "nothing relevant here"),
+        (3, "search only"),
+        (4, ""),
+        (5, None),
+        (6, "vector search fast vector"),
+    ]
+    df = spark.createDataFrame(rows, "id int, text string").withColumn(
+        "_toks",
+        F.filter(F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != ""),
+    )
+    terms = ["vector", "search", "fast"]
+    for op in ("OR", "AND"):
+        tf_match = F.lit(op == "AND")
+        for t in terms:
+            c = term_tf("_toks", t) > 0
+            tf_match = (tf_match & c) if op == "AND" else (tf_match | c)
+        got = sorted(
+            r["id"] for r in df.filter(match_predicate("_toks", terms, op)).collect()
+        )
+        want = sorted(r["id"] for r in df.filter(tf_match).collect())
+        assert got == want, f"operator={op}"
+
+
+def test_clause_present_equals_clause_tf(spark):
+    from myscaledb_spark.functions.text import _clause_present, _clause_tf
+
+    rows = [
+        (1, ["table", "hash", "join"]),     # phrase "table hash" present
+        (2, ["hash", "table"]),              # reversed — absent
+        (3, ["a", "a", "a"]),                # self-overlapping phrase "a a"
+        (4, ["a"]),                          # too short for the phrase
+        (5, []),
+        (6, ["table", "hash", "table", "hash"]),  # two occurrences
+    ]
+    df = spark.createDataFrame(rows, "id int, _toks array<string>")
+    for clause in (["table"], ["table", "hash"], ["a", "a"]):
+        got = sorted(
+            r["id"] for r in df.filter(_clause_present("_toks", clause)).collect()
+        )
+        want = sorted(
+            r["id"] for r in df.filter(_clause_tf("_toks", clause) > 0).collect()
+        )
+        assert got == want, f"clause={clause}"

@@ -3,6 +3,9 @@ brute-force semantics, tests/queries/2_vector_search/00001_mqvs_distance.*)."""
 
 from __future__ import annotations
 
+import math
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -249,7 +252,9 @@ ADVERSARIAL_VECS = [
 
 @pytest.mark.parametrize("metric", ["L2", "L2Squared", "L1", "IP", "Cosine", "Linf"])
 def test_distance_defined_equals_isnotnull(spark, metric):
-    df = spark.createDataFrame(ADVERSARIAL_VECS, "id int, v array<double>")
+    # a subnormal row's squares underflow: its Cosine divisor is 0
+    df = spark.createDataFrame(ADVERSARIAL_VECS + [(9, [5e-324, 0.0, 0.0])],
+                               "id int, v array<double>")
     got = sorted(
         r["id"]
         for r in df.filter(distance_defined("v", QV, metric)).select("id").collect()
@@ -332,3 +337,253 @@ def test_batch_distance_drops_undefined_distances(spark, metric):
         assert [(r["id"], r["dist"]) for r in rows] == want, (metric, q)
     if metric == "Cosine":
         assert not [r for r in got if r["query_id"] == 1]
+
+
+@pytest.mark.parametrize("case", ["subnormal_row", "subnormal_query"])
+def test_cosine_subnormal_has_no_distance(spark, case):
+    """A vector whose squares all underflow has a zero Cosine divisor: the
+    row or query is dropped, where before the whole query raised
+    DIVIDE_BY_ZERO under ANSI.  The smallest non-zero norms still divide
+    (their product rounds to 5e-324, not 0)."""
+    if case == "subnormal_row":
+        rows = [(1, [5e-324, 0.0]), (2, [1.0, 1.0]), (3, [0.0, 1.0]),
+                (4, [2.3e-162, 0.0])]
+        qv, want = [1.0, 0.0], [4, 2, 3]
+    else:
+        rows = [(1, [1.0, 1.0])]
+        qv, want = [5e-324, 0.0], []
+    df = spark.createDataFrame(rows, "id int, v array<double>")
+    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        got = vector_topk(df, "v", qv, 5, "Cosine", id_col="id").collect()
+        batch = batch_vector_topk(df, "v", [[1.0, 0.0], qv], 5, "Cosine",
+                                  id_col="id").collect()
+        tiny = vector_topk(df, "v", [3e-162, 0.0], 5, "Cosine", id_col="id").collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old_ansi)
+    assert [r["id"] for r in got] == want
+    assert all(r["dist"] is not None for r in got + batch + tiny)
+    per_query = sorted((r["dist"], r["id"]) for r in batch if r["query_id"] == 1)
+    assert [i for _, i in per_query] == want
+    assert {r["id"] for r in tiny} == {i for i, v in rows if any(x * x for x in v)}
+
+
+@pytest.mark.parametrize("metric", ["L2", "IP", "Cosine"])
+def test_batch_large_drops_undefined_distances(spark, metric):
+    """batch_vector_topk_large applies distance_defined's rule: the row side
+    before its Python stage (a NULL row failed the job), and a zero-norm
+    Cosine query returns no rows (it returned rows at distance 1.0).  Per
+    query it returns batch_vector_topk's ids, distances within 1e-9."""
+    from myscaledb_spark.operators.topk import batch_vector_topk_large
+
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, None), (4, [5.0]), (5, [2.0, -1.0])],
+        "id int, v array<double>",
+    )
+    queries = [[1.0, 0.0], [0.0, 0.0], [-1.0, 3.0]]
+    large = batch_vector_topk_large(df, "v", queries, 4, metric, id_col="id").collect()
+    small = batch_vector_topk(df, "v", queries, 4, metric, id_col="id").collect()
+
+    def by_query(rows):
+        out = {}
+        for r in sorted(rows, key=lambda r: (r["dist"] if metric != "IP" else -r["dist"], r["id"])):
+            out.setdefault(r["query_id"], []).append((r["id"], r["dist"]))
+        return out
+
+    got, want = by_query(large), by_query(small)
+    assert sorted(got) == sorted(want)
+    for q in want:
+        assert [i for i, _ in got[q]] == [i for i, _ in want[q]], (metric, q)
+        np.testing.assert_allclose([d for _, d in got[q]], [d for _, d in want[q]],
+                                   rtol=0, atol=1e-9)
+
+
+def test_two_stage_coarse_drops_undefined_rows(spark):
+    """A NULL, short or NULL-element row has a NULL coarse distance; it
+    sorted first, filled the candidate set, and stage 2 dropped it."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [2.0, 0.0, 0.0]), (3, None), (4, [1.0]),
+         (5, [None, 0.0, 0.0]), (6, [1.0, 0.0, 0.5])],
+        "id int, v array<double>",
+    )
+    qv = [1.0, 0.0, 0.4]
+    want = [r["id"] for r in vector_topk(df, "v", qv, 3, "L2", id_col="id").collect()]
+    got = two_stage_topk(df, "v", qv, 3, "L2", id_col="id", candidate_multiple=1,
+                         coarse_dims=2).collect()
+    assert want == [6, 1, 2]
+    assert [r["id"] for r in got] == want
+
+
+def test_metric_names_are_case_insensitive(spark):
+    """distance() accepts "ip" as "IP"; the top-k order must follow it (a
+    lower-case IP search ranked the smallest inner products first)."""
+    df = spark.createDataFrame([(1, [1.0, 0.0]), (2, [3.0, 1.0]), (3, [-2.0, 0.5])],
+                               "id int, v array<double>")
+    for fn in (vector_topk, two_stage_topk):
+        got = {m: [r["id"] for r in fn(df, "v", [1.0, 0.0], 3, m, id_col="id").collect()]
+               for m in ("IP", "ip")}
+        assert got["ip"] == got["IP"] == [2, 1, 3], fn.__name__
+
+
+# -- the distance kernel -----------------------------------------------------
+
+def _fold_oracle(metric, a, q):
+    """Sequential float64 fold, left to right from 0.0: the kernel's order."""
+    if metric == "L2Norm":
+        return math.sqrt(_sum(x * x for x in a))
+    if metric == "Linf":
+        acc = 0.0
+        for x, y in zip(a, q):
+            v = abs(x - y)
+            if math.isnan(v) or (not math.isnan(acc) and v > acc):  # Spark: NaN is largest
+                acc = v
+        return acc
+    if metric in ("L2", "L2Squared"):
+        s = _sum((x - y) * (x - y) for x, y in zip(a, q))
+        return math.sqrt(s) if metric == "L2" else s
+    if metric == "L1":
+        return _sum(abs(x - y) for x, y in zip(a, q))
+    dot = _sum(x * y for x, y in zip(a, q))
+    if metric == "IP":
+        return dot
+    return 1.0 - dot / (math.sqrt(_sum(x * x for x in a)) * math.sqrt(_sum(y * y for y in q)))
+
+
+def _sum(terms):
+    acc = 0.0
+    for t in terms:
+        acc = acc + t
+    return acc
+
+
+def _same_bits(a, b):
+    return (math.isnan(a) and math.isnan(b)) or struct.pack(">d", a) == struct.pack(">d", b)
+
+
+def _kernel_inputs():
+    rng = np.random.default_rng(2024)
+    d = 64
+    rows = [rng.standard_normal(d).tolist() for _ in range(12)]
+    special = [1e308, -1e308, float("nan"), float("inf"), float("-inf"), -0.0,
+               5e-324, -2.5e-320, 1e-310]
+    for i, s in enumerate(special):
+        r = rng.standard_normal(d).tolist()
+        r[i * 7 % d] = s
+        r[(i * 7 + 3) % d] = s
+        rows.append(r)
+    rows.append([1e308] * d)
+    rows.append([5e-324] * d)  # all squares underflow: no Cosine distance
+    rows.append([-0.0] * d)
+    q = rng.standard_normal(d).tolist()
+    q[5], q[6], q[7] = -0.0, 5e-324, 1e20
+    return [(i + 1, r) for i, r in enumerate(rows)], q
+
+
+_KERNEL_SQL = {"L2": "L2Distance", "L2Squared": "L2SquaredDistance", "IP": "dotProduct",
+               "Cosine": "cosineDistance", "L2Norm": "L2Norm"}
+
+
+@pytest.mark.parametrize("metric", ["L2", "L2Squared", "Cosine", "IP", "L1", "Linf", "L2Norm"])
+def test_distance_entry_points_equal_sequential_fold(spark, metric):
+    """Every Spark-side distance entry point equals a sequential float64
+    fold bit for bit (NaN as NaN) on rows with ±1e308, NaN, ±inf, -0.0 and
+    subnormal elements, over the rows whose distance is defined."""
+    from myscaledb_spark.functions import vector as V
+    from myscaledb_spark.operators.similarity import cosine_neardup_pairs
+    from myscaledb_spark.sql_dialect import ch_sql
+
+    rows, q = _kernel_inputs()
+    want = {}
+    for i, r in rows:
+        if metric == "Cosine" and _fold_oracle("L2Norm", r, q) == 0.0:
+            continue  # zero divisor: no distance
+        want[i] = _fold_oracle(metric, r, q)
+    df = (spark.createDataFrame([(i, r, q) for i, r in rows],
+                                "id int, v array<double>, q array<double>")
+          .filter(F.col("id").isin(list(want))))
+    builders = {"L2": V.l2_distance, "L2Squared": V.l2_squared_distance,
+                "Cosine": V.cosine_distance, "IP": V.ip_distance,
+                "L1": V.l1_distance, "Linf": V.linf_distance}
+    if metric == "L2Norm":
+        cols = {"vector_norm": V.vector_norm("v")}
+    else:
+        cols = {"distance": V.distance("v", q, metric), "named": builders[metric]("v", q)}
+    got = {(name, r["id"]): r[name] for r in df.select("id", *[c.alias(n) for n, c in cols.items()])
+           .collect() for name in cols}
+    if metric in _KERNEL_SQL:
+        df.createOrReplaceTempView("kernel_pin")
+        fns = [_KERNEL_SQL[metric]] + (["distance"] if metric == "L2Squared" else [])
+        for fn in fns:
+            sql = (f"SELECT id, {fn}(v) AS d FROM kernel_pin" if metric == "L2Norm"
+                   else f"SELECT id, {fn}(v, q) AS d FROM kernel_pin")
+            got.update({(fn, r["id"]): r["d"] for r in ch_sql(spark, sql).collect()})
+    if metric in ("L2", "L2Squared", "IP", "Cosine"):
+        batch = batch_vector_topk(df, "v", [q], len(rows), metric, id_col="id").collect()
+        got.update({("batch", r["id"]): r["dist"] for r in batch})
+        assert {i for (n, i) in got if n == "batch"} == set(want)
+    for (name, i), d in got.items():
+        assert _same_bits(d, want[i]), (metric, name, i, d, want[i])
+
+    if metric == "Cosine":
+        # cosine_neardup_pairs' similarity dot / (‖a‖·‖b‖), rounded to 4
+        # places as Spark rounds a double: HALF_UP on its decimal form,
+        # which has no negative zero (+ 0.0)
+        from decimal import ROUND_HALF_UP, Decimal
+
+        vecs = dict(rows)
+        pairs = cosine_neardup_pairs(df, "v", "id", -2.0).collect()  # NaN sorts above -2.0
+        for p in pairs:
+            a, b = vecs[p["id_a"]], vecs[p["id_b"]]
+            sim = _sum(x * y for x, y in zip(a, b)) / (
+                math.sqrt(_sum(x * x for x in a)) * math.sqrt(_sum(y * y for y in b)))
+            if not math.isnan(sim):
+                sim = float(Decimal(repr(sim)).quantize(Decimal("0.0001"), ROUND_HALF_UP)) + 0.0
+            assert _same_bits(p["cos_sim"], sim), p
+        ids = sorted(want)
+        assert sorted((p["id_a"], p["id_b"]) for p in pairs) == [
+            (a, b) for a in ids for b in ids if a < b]
+
+
+def test_distance_folds_live_in_vector_py():
+    """Source guard: no distance or norm fold is written out under
+    myscaledb_spark/ outside functions/vector.py, and every dialect
+    distance template is the kernel's text."""
+    import os
+    import re
+
+    from myscaledb_spark import sql_dialect
+    from myscaledb_spark.functions.vector import distance_sql
+
+    pair = r"\(\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*"
+    folds = [
+        re.compile(pair + r"\(\1 - \2\) \* \(\1 - \2\)"),            # (x - y) * (x - y)
+        re.compile(pair + r"(?:F\.)?abs\(\1 - \2\)"),                 # abs(x - y)
+        re.compile(pair + r"\1 \+ \2 \* \2\b"),                       # acc + v * v
+        re.compile(r"aggregate\( ?(?:F\.)?zip_with\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*?"
+                   + pair + r"\1 \* \2 ?\)"),                         # x * y summed
+    ]
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "myscaledb_spark")
+    stray = []
+    for d, _, fs in os.walk(pkg):
+        for f in fs:
+            path = os.path.join(d, f)
+            if not f.endswith(".py") or os.path.relpath(path, pkg) == os.path.join(
+                    "functions", "vector.py"):
+                continue
+            src = open(path, encoding="utf-8").read()
+            # one form for Python and SQL lambdas, whitespace collapsed
+            src = re.sub(r"\s+", " ", re.sub(r"lambda (\w+), (\w+):", r"(\1, \2) ->", src))
+            stray += [f"{os.path.relpath(path, pkg)}: {m.group(0)[-60:]}"
+                      for rx in folds for m in rx.finditer(src)]
+    assert not stray, stray
+
+    row, query = "cast({0} as array<double>)", "cast({1} as array<double>)"
+    for name, metric in [("distance", "L2Squared"), ("L2Distance", "L2"),
+                         ("L2SquaredDistance", "L2Squared"), ("dotProduct", "IP"),
+                         ("arrayDotProduct", "IP"), ("cosineDistance", "Cosine"),
+                         ("L2Norm", "L2Norm")]:
+        assert sql_dialect.TEMPLATES[name] == distance_sql(metric, row, query), name
+    assert sql_dialect.PARAMETRIC["distance"] == distance_sql(
+        "L2Squared", "cast({a0} as array<double>)", "cast({a1} as array<double>)")
