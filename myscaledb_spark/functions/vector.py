@@ -133,6 +133,57 @@ def query_norm(qvec: Sequence[float]) -> float:
     return math.sqrt(sum(float(x) * float(x) for x in qvec))
 
 
+def driver_distance(rows, qvec: Sequence[float], metric: str):
+    """The kernel's ``metric`` fold in numpy: the distance of every row of
+    ``rows`` (2-D float64, column-major so each dimension is contiguous) to
+    the literal query ``qvec``.  The same IEEE float64 operations as
+    ``KERNEL``, in the same order (left to right over the dimensions, from
+    0.0), so each value equals the Spark expression's bit for bit; numpy
+    runs each ``+`` and ``*`` as its own rounding step.  L2, L2Squared, IP
+    and Cosine; where a Cosine divisor is zero the value is inf or NaN
+    (``driver_defined`` names those rows)."""
+    import numpy as np
+
+    m = canonical_metric(metric)
+    q = [float(x) for x in qvec]
+    acc = np.zeros(rows.shape[0])
+    if m in ("L2", "L2Squared"):
+        for j, y in enumerate(q):
+            d = rows[:, j] - y
+            acc = acc + d * d
+        return np.sqrt(acc) if m == "L2" else acc
+    for j, y in enumerate(q):
+        acc = acc + rows[:, j] * y
+    if m == "IP":
+        return acc
+    if m != "Cosine":
+        raise UnknownMetric(f"no driver fold for metric {metric!r}")
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return 1.0 - acc / (np.sqrt(_driver_sum_sq(rows)) * query_norm(q))
+
+
+def _driver_sum_sq(rows):
+    """The L2 norm fold's sum of squares per row, in the kernel's order."""
+    import numpy as np
+
+    acc = np.zeros(rows.shape[0])
+    for j in range(rows.shape[1]):
+        c = rows[:, j]
+        acc = acc + c * c
+    return acc
+
+
+def driver_defined(rows, qvec: Sequence[float], metric: str):
+    """``distance_defined`` over rows that have the query's length and no
+    NULL element: all True, except Cosine's zero divisor — a row whose sum
+    of squares is 0, or a zero query (see ``distance_defined``)."""
+    import numpy as np
+
+    if canonical_metric(metric) != "Cosine":
+        return np.ones(rows.shape[0], bool)
+    return (_driver_sum_sq(rows) != 0.0) & (query_norm(qvec) != 0.0)
+
+
 def vector_sql(col: str) -> str:
     """The kernel's operand for the column named ``col``: ``array<double>``."""
     return f"cast({column_sql(col)} as array<double>)"
@@ -302,6 +353,8 @@ __all__ = [
     "KERNEL",
     "column_sql",
     "distance_sql",
+    "driver_defined",
+    "driver_distance",
     "double_array_sql",
     "query_norm",
     "vector_sql",

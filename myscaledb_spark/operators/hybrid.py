@@ -19,14 +19,15 @@ Reference parity (`src/VectorIndex/Utils/HybridSearchUtils.cpp`):
 Spark design: candidate generation is where all the data-scale work
 happens, and it reuses the single-search primitives.  The default path
 (`hybrid_search`) runs the exact distance top-k′ and `text_search` over the
-resident tokenized corpus that text search keeps, with its complete BM25
-statistics; the indexed path (`hybrid_search_indexed`) takes its vector
-leg from any registered ANN index (`ddl.search_index`) and its text leg
-from the FTS artifact; the SQL hybridsearch shapes (`sql_search`) build
-their own legs, per part where the table has several.  Every path fuses
-through `fuse_candidates`: one tagged-union job collects both legs and the
-fusion of the two ≤k′-row lists runs on the driver, as the reference fuses
-in memory on one node.
+resident corpus that text search keeps — in numpy over a small corpus's
+driver snapshot, with no Spark job; the indexed path
+(`hybrid_search_indexed`) takes its vector leg from any registered ANN
+index (`ddl.search_index`) and its text leg from the FTS artifact; the SQL
+hybridsearch shapes (`sql_search`) build their own legs, per part where the
+table has several.  Every path fuses
+through `_fuse_local` on the driver, as the reference fuses in memory on
+one node; `fuse_candidates` first collects Spark legs in one tagged-union
+job.
 """
 
 from __future__ import annotations
@@ -37,8 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from myscaledb_spark.errors import InvalidSearchQuery
-from myscaledb_spark.functions.text import _resident_toked, text_search
+from myscaledb_spark.functions.text import _resident_toked, text_search, tokenize_query
 from myscaledb_spark.functions.vector import METRIC_ASCENDING
+from myscaledb_spark.resident import mark_served
 from myscaledb_spark.session import _sort_key, collect_small, values_relation
 
 DEFAULT_FUSION_K = 60  # src/Core/Settings.h:920
@@ -82,19 +84,20 @@ def hybrid_search(
     one; a missing/unbuilt artifact, or a FLAT vector record (no artifact),
     falls back to the single-scan default, which is exact.
 
-    Plan shape: both legs read the resident tokenized corpus that
-    ``text_search`` keeps (``text._resident_toked``) — the reference runs
-    both searches against resident index structures
-    (MergeTreeHybridSearchManager.cpp:114-151).  The vector leg is the
-    exact distance top-k′ over that frame; the text leg is ``text_search``
-    itself, whose BM25 statistics come from the corpus's complete stats
-    record, so a repeated query runs no stats pass.  ``fuse_candidates``
-    collects both legs in ONE job and fuses them driver-side over the two
-    ≤k′-row lists — result-scale, never data-scale.  A corpus above the
-    resident gate, and a filtered frame without an entry (a WHERE per
-    query), stream both legs from ``df``, the text leg with its stats pass
-    over the filtered rows; the indexed variant (`hybrid_search_indexed`)
-    is the no-corpus-scan scale path.
+    Plan shape: both legs read the resident corpus that ``text_search``
+    keeps (``text._resident_toked``) — the reference runs both searches
+    against resident index structures (MergeTreeHybridSearchManager.cpp:
+    114-151).  A corpus with a driver snapshot (``resident.py``) answers
+    both legs in numpy — ``vector_topk``'s and ``text_search``'s rows, bit
+    for bit — and fuses them with ``_fuse_local``: no Spark job.  Above the
+    snapshot gate the vector leg is the exact distance top-k′ over the
+    persisted tokenized frame and the text leg is ``text_search`` itself;
+    ``fuse_candidates`` collects both legs in ONE job and fuses them
+    driver-side over the two ≤k′-row lists — result-scale, never
+    data-scale.  A corpus above the resident gate, and a filtered frame
+    without an entry (a WHERE per query), stream both legs from ``df``,
+    the text leg with its stats pass over the filtered rows; the indexed
+    variant (`hybrid_search_indexed`) is the no-corpus-scan scale path.
     """
     from myscaledb_spark.operators.topk import _validate_k, vector_topk
 
@@ -131,6 +134,19 @@ def hybrid_search(
     res = _resident_toked(df, text_col, tokenizer, None, create=False)
     if res is None and not _filtered(df):
         res = _resident_toked(df, text_col, tokenizer, None)
+    if res is not None and not isinstance(res, tuple):
+        # a driver snapshot: both legs and the fusion in numpy, no Spark job
+        vec = res.nearest(vec_col, qvec, kprime, metric, id_col)
+        terms = tokenize_query(qtext, tokenizer)
+        if vec is not None and terms:
+            txt = res.bm25_top(text_col, terms, kprime, id_col, tokenizer)
+            legs = [list(zip(res.values(id_col, pos), scores)) for pos, scores in (vec, txt)]
+            mark_served()
+            return _fuse_local(
+                df.sparkSession, df.schema[id_col].dataType, *legs, k, id_col,
+                ft, metric, fusion_weight, fusion_k, score_name,
+            )
+        res = None
     corpus = df if res is None else res[0]
     vec_cand = vector_topk(
         corpus, vec_col, qvec, kprime, metric, id_col=id_col, dist_name="_vdist"

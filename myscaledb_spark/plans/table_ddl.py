@@ -56,6 +56,17 @@ EXISTS = "_ch_exists"
 _CHECKPOINT_EVERY = 16  # parts before the store lineage is squashed
 
 
+def _empty_store(spark: SparkSession, fields: str) -> DataFrame:
+    """A new table's store: no rows, the DDL ``fields`` plus the insertion
+    sequence and the lightweight-delete mask, as an empty local relation —
+    its size estimate is 0, where an empty RDD's is unknown, so a small
+    table stays within the small-input gates."""
+    from myscaledb_spark.session import values_relation
+
+    ddl = f"{fields}, {ISEQ} bigint, {EXISTS} boolean"
+    return values_relation(spark, spark.createDataFrame([], ddl).schema, [])
+
+
 def _refresh_view(spark: SparkSession, table: str) -> None:
     """(Re)build the logical table view over its store: hidden columns
     excluded, masked rows filtered."""
@@ -343,10 +354,7 @@ def create_table_as_select(spark: SparkSession, sql: str) -> dict:
     schema = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
     # backquote: CTAS from literals yields names like `1` (00235)
     fields = ", ".join(f"`{c}` {t}" for c, t in schema)
-    empty_store = spark.createDataFrame(
-        [], f"{fields}, {ISEQ} bigint, {EXISTS} boolean"
-    )
-    empty_store.createOrReplaceTempView(f"{table}__store")
+    _empty_store(spark, fields).createOrReplaceTempView(f"{table}__store")
     eng0 = (m.group("engine") or "").lower()
     if eng0 == "replacingmergetree" and m.group("eargs"):
         # legacy CTAS engine args (date, key..., granularity[, version]) —
@@ -1005,8 +1013,7 @@ def create_table(spark: SparkSession, sql: str) -> dict:
 
     store = f"{table}__store"
     fields = ", ".join(f"`{c}` {t}" for c, t in schema)
-    empty_store = spark.createDataFrame([], f"{fields}, {ISEQ} bigint, {EXISTS} boolean")
-    empty_store.createOrReplaceTempView(store)
+    _empty_store(spark, fields).createOrReplaceTempView(store)
     _refresh_view(spark, table)
 
     register_table_engine(
@@ -1165,10 +1172,7 @@ def create_materialized_view(spark: SparkSession, s: str):
             if len(decls) == len(schema):
                 schema = decls
         fields = ", ".join(f"`{c}` {t}" for c, t in schema)
-        empty_store = spark.createDataFrame(
-            [], f"{fields}, {ISEQ} bigint, {EXISTS} boolean"
-        )
-        empty_store.createOrReplaceTempView(f"{name}__store")
+        _empty_store(spark, fields).createOrReplaceTempView(f"{name}__store")
         register_table_engine(name, "none", [])
         TABLES[name] = {"schema": schema, "n_parts": 0, "parts": []}
         _SEQ[name] = 0

@@ -7515,6 +7515,7 @@ def ch_sql(spark: SparkSession, sql: str, args: dict | None = None) -> DataFrame
     import time as _time
 
     from myscaledb_spark.introspection import log_query
+    from myscaledb_spark.resident import served
     from myscaledb_spark.sql_search import maybe_search_query
 
     t0 = _time.perf_counter()
@@ -7531,13 +7532,17 @@ def ch_sql(spark: SparkSession, sql: str, args: dict | None = None) -> DataFrame
     # BEFORE search-shape detection so `textsearch(doc, target_keywords)`
     # sees its argument (00040_with_subquery's WITH form)
     sql = _rewrite_scalar_with(sql)
+    n_served = served()
     handled = maybe_search_query(spark, sql)
     if handled is None:
         from myscaledb_spark.sql_search import maybe_binary_distance
 
         handled = maybe_binary_distance(spark, sql)
     if handled is not None:
-        log_query(sql, "<search-operator plan>", (_time.perf_counter() - t0) * 1e3, "search")
+        # the path that ran: a driver snapshot answered, or Spark operators
+        plan = ("<driver-resident plan>" if served() != n_served
+                else "<search-operator plan>")
+        log_query(sql, plan, (_time.perf_counter() - t0) * 1e3, "search")
         return handled
     td = _maybe_grouped_tdigest(spark, sql)
     if td is not None:

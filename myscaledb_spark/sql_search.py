@@ -32,22 +32,27 @@ Semantics notes:
     ``1``/``2`` without quoting).
 
 Everything executes as the operators' DataFrame plans — Catalyst sees the
-same declarative shape as the API path; this module is parsing only.  The
-one exception is an ORDER BY over an already-local result: every hybridsearch
-shape (binary, per-part, partial fts coverage, default) fuses through
-`operators.hybrid.fuse_candidates`, which returns its fused rows as a VALUES
-relation, and those sort on the driver with Spark's ordering
-(`session._sort_key`).
+same declarative shape as the API path; this module is parsing only.  Two
+exceptions run on the driver.  An ORDER BY over an already-local result:
+every hybridsearch shape (binary, per-part, partial fts coverage, default)
+fuses into a VALUES relation, and those rows sort on the driver with
+Spark's ordering (`session._sort_key`).  And a search over a plain table
+with a driver snapshot (`resident.py`, below `session.DRIVER_RESIDENT_BYTES`):
+the flat `distance()` shape, plain-term textsearch and the default
+hybridsearch answer in numpy with the Spark plan's rows and score bits, and
+no Spark job; `ch_sql` logs them as `<driver-resident plan>`.
 """
 
 from __future__ import annotations
 
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from myscaledb_spark.errors import InvalidSearchQuery
+from myscaledb_spark.resident import top
 from myscaledb_spark.sql_dialect import (
     TABLE_ENGINES,
     ChSqlError,
@@ -68,7 +73,7 @@ def maybe_search_query(spark: SparkSession, sql: str) -> DataFrame | None:
     smask = _string_mask(sql)
     hits = list(_FN_RE.finditer(smask))
     if not hits:
-        return None
+        return _resident_distance(spark, sql)
     if len(hits) > 1:
         raise ChSqlError(
             "only one text/hybrid/batch search function is allowed per query "
@@ -127,6 +132,95 @@ def maybe_search_query(spark: SparkSession, sql: str) -> DataFrame | None:
             f"SELECT cols, {kind}(...) AS alias FROM t [WHERE p] "
             "ORDER BY alias ... LIMIT k — or use the API operator directly"
         ) from e
+
+
+_NUMBER = re.compile(r"[+-]?(\d*)(?:\.(\d*))?([eE][+-]?\d+)?")
+_DISTANCE_SHAPE = re.compile(
+    r"\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<table>[A-Za-z_]\w*)\s+ORDER\s+BY\s+"
+    r"(?P<key>[A-Za-z_]\w*)(?:\s+(?P<dir>ASC|DESC))?\s+LIMIT\s+(?P<k>\d+)\s*",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
+def _exact_vector(text: str) -> list[float] | None:
+    """The query vector literal ``[x, ...]`` as the doubles Spark reads it
+    (each element's literal, widened to the array's common type, then cast
+    to double), or None when Python's parse could differ: a non-numeric
+    element, or decimal literals whose common type needs more than 38
+    digits (Spark would round them)."""
+    t = text.strip()
+    if not (t.startswith("[") and t.endswith("]")):
+        return None
+    elems = [e.strip() for e in _split_args(t[1:-1])] if t[1:-1].strip() else []
+    digits = scale = 0
+    double = False
+    for e in elems:
+        m = _NUMBER.fullmatch(e)
+        if m is None or not (m.group(1) or m.group(2)):
+            return None
+        if m.group(3):
+            double = True
+        elif m.group(2) is not None:  # decimal(p, s)
+            digits = max(digits, len(m.group(1).lstrip("0")))
+            scale = max(scale, len(m.group(2)))
+        else:  # INT, BIGINT or decimal(p, 0) literal, widened as a decimal
+            n = len(m.group(1).lstrip("0"))
+            digits = max(digits, 10 if n < 10 else 20 if n < 19 else n)
+    if not double and digits + scale > 38:
+        return None
+    return [float(e) for e in elems]
+
+
+def _resident_distance(spark, sql):
+    """The dialect's vector-search shape, ``SELECT cols, distance(v, [..])
+    AS d FROM t ORDER BY d [ASC|DESC] LIMIT k``, answered from ``t``'s
+    driver snapshot: the kernel's distance in numpy (``vector.driver_
+    distance``), the metric from the table (L2 → squared L2, Cosine, IP),
+    rows without a distance last with a NULL ``d`` once LIMIT exceeds the
+    rows that have one, ties in input order — the Spark plan's rows with no
+    Spark job.  None (the dialect's Spark plan runs) for any other shape, a
+    ch_ddl or engine table, a direction the metric rejects, a zero Cosine
+    divisor (DIVIDE_BY_ZERO under ANSI, NULL otherwise: Spark decides) or a
+    corpus without a snapshot."""
+    from myscaledb_spark.functions.text import _snapshot
+    from myscaledb_spark.plans.table_ddl import TABLES
+    from myscaledb_spark.sql_dialect import TABLE_ENGINES, effective_vs_metric
+
+    m = _DISTANCE_SHAPE.fullmatch(_top_level_mask(sql))
+    if m is None or m.group("table") in TABLES or m.group("table") in TABLE_ENGINES:
+        return None
+    items = _split_args(sql[m.start("items"): m.end("items")])
+    call = re.fullmatch(r"\s*distance\s*\((.*)\)\s+AS\s+(" + _IDENT + r")\s*",
+                        items[-1], re.IGNORECASE | re.DOTALL)
+    cols = [it.strip() for it in items[:-1]]
+    if call is None or call.group(2) != m.group("key") or len(set(cols)) != len(cols) or any(
+            not re.fullmatch(_IDENT, c) for c in cols):
+        return None
+    args = _split_args(call.group(1))
+    qvec = _exact_vector(args[-1]) if len(args) == 2 else None
+    if qvec is None or not re.fullmatch(_IDENT, args[0].strip()):
+        return None
+    metric = {"l2": "L2Squared", "cosine": "Cosine", "ip": "IP"}.get(
+        effective_vs_metric(m.group("table")).lower())
+    desc = (m.group("dir") or "").upper() == "DESC"
+    if metric is None or desc != (metric == "IP"):
+        return None
+    df = spark.table(m.group("table"))
+    if any(c not in df.columns for c in cols) or args[0].strip() not in df.columns:
+        return None
+    snap = _snapshot(df)
+    got = None if snap is None else snap.distances(args[0].strip(), qvec, metric)
+    if got is None or got[2].any():
+        return None
+    pos, d, _ = got
+    k = int(m.group("k"))
+    best = top(d, k, desc)
+    rows = pos[best].tolist()
+    scores = d[best].tolist()
+    if len(rows) < k:  # NULL distances last, in input order
+        rest = np.setdiff1d(np.arange(snap.n), pos)[: k - len(rows)].tolist()
+        rows, scores = rows + rest, scores + [None] * len(rest)
+    return _resident_answer(snap, rows, scores, cols, call.group(2), [])
 
 
 def _maybe_joined_search(spark, sql, tmask, hit, kind):
@@ -375,10 +469,10 @@ def _ident_arg(arg: str, what: str) -> str:
     return arg.strip()
 
 
-def _apply_order(df: DataFrame, alias: str, order_text: str | None, id_col: str):
-    """ORDER BY `alias DESC[, col [ASC|DESC]]*` — DESC on the score is
-    mandatory (the reference errors when the direction contradicts the
-    metric, 00027_mqvs_check_order_by_for_metric_type.sql)."""
+def _order_keys(alias: str, order_text: str | None) -> list:
+    """[(column, descending)] of ORDER BY `alias DESC[, col [ASC|DESC]]*` —
+    DESC on the score is mandatory (the reference errors when the direction
+    contradicts the metric, 00027_mqvs_check_order_by_for_metric_type.sql)."""
     if order_text is None:
         raise InvalidSearchQuery(
             f"search requires ORDER BY {alias} DESC (direction is checked)"
@@ -396,6 +490,12 @@ def _apply_order(df: DataFrame, alias: str, order_text: str | None, id_col: str)
         if om is None:
             raise ChSqlError(f"unsupported ORDER BY key {p!r}")
         keys.append((om.group(1), (om.group(2) or "").upper() == "DESC"))
+    return keys
+
+
+def _apply_order(df: DataFrame, alias: str, order_text: str | None, id_col: str):
+    """ORDER BY `alias DESC[, col [ASC|DESC]]*` (``_order_keys``)."""
+    keys = _order_keys(alias, order_text)
     local = _sorted_local(df, keys)
     if local is not None:
         return local
@@ -436,6 +536,24 @@ def _sorted_local(df: DataFrame, keys: list) -> DataFrame | None:
         i = names.index(c)
         rows.sort(key=lambda r: _sort_key(r[i]), reverse=desc)
     return values_relation(df.sparkSession, df.schema, rows)
+
+
+def _resident_answer(snap, pos: list, scores: list, cols: list, alias: str,
+                     keys: list) -> DataFrame | None:
+    """A search answered from a driver snapshot: rows ``pos`` of ``cols``
+    plus the score ``alias``, sorted by ``keys`` as ``_sorted_local`` sorts,
+    as a VALUES relation; None when a key is not an output column or a
+    column has no literal (the caller runs the Spark path)."""
+    from myscaledb_spark.resident import emit
+    from myscaledb_spark.session import _sort_key
+
+    if any(c not in cols + [alias] for c, _ in keys) or not snap.emittable(cols):
+        return None
+    order = list(range(len(pos)))
+    for c, desc in reversed(keys):  # stable sorts, last key first
+        v = scores if c == alias else snap.values(c, pos)
+        order.sort(key=lambda i: _sort_key(v[i]), reverse=desc)
+    return emit(snap, [pos[i] for i in order], cols, alias, [scores[i] for i in order])
 
 
 def _fts_text_frame(spark: SparkSession, table: str, df: DataFrame):
@@ -682,6 +800,28 @@ def _text_scores_frame(df, col, query, score_name):
     return bm25_scores(df, col, query, "simple", "OR", score_name)
 
 
+def _resident_text(df, col, query, k, id_col, cols, alias, order_text):
+    """A plain-term SQL textsearch over a table with a driver snapshot:
+    ``text_search``'s top-k by (score DESC, id ASC) from the postings, then
+    the query's ORDER BY — the rows and score bits of the Spark path, with
+    no Spark job.  None for a phrase, +must or -must_not query (the NLQ
+    path), a non-string column or a corpus without a snapshot."""
+    from myscaledb_spark.functions.text import _check_k, _snapshot, parse_nlq, tokenize_query
+
+    if dict(df.dtypes).get(col) != "string":
+        return None
+    clauses = parse_nlq(query, "simple")
+    if any(c["phrase"] or c["must"] or c["must_not"] for c in clauses):
+        return None
+    _check_k(k)
+    keys = _order_keys(alias, order_text)
+    snap = _snapshot(df)
+    if snap is None:
+        return None
+    pos, scores = snap.bm25_top(col, tokenize_query(query), k, id_col)
+    return _resident_answer(snap, pos, scores, cols, alias, keys)
+
+
 def _exists_mask(df: DataFrame):
     """The lightweight-delete read filter, when the frame carries the
     store's _row_exists column (None otherwise)."""
@@ -739,6 +879,11 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
         # search with WHERE clause' keeps the unfiltered score); the
         # lightweight-delete mask prunes the same way (index stats keep
         # deleted rows, results drop them)
+        sel = plain + [alias] if plain else [id_col, alias]
+        if where_col is None and text_df is df:
+            local = _resident_text(df, col, query, k, id_col, sel[:-1], alias, order_text)
+            if local is not None:
+                return local
         mask = _exists_mask(text_df)
         if mask is not None:
             where_col = mask if where_col is None else (where_col & mask)
@@ -749,7 +894,6 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
             # no fts index on this ch_ddl table: the reference's textsearch
             # serves from the index and returns nothing
             out = out.limit(0)
-        sel = plain + [alias] if plain else [id_col, alias]
         return _apply_order(out.select(*sel), alias, order_text, id_col)
 
     if kind == "hybridsearch":
@@ -899,6 +1043,10 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
         if extra:
             out = out.join(df.select(id_col, *extra), id_col)
         sel = (plain if plain else [id_col]) + [alias]
+        keys = _order_keys(alias, order_text)
+        if not extra and keys == [(alias, True), (id_col, False)][:len(keys)]:
+            # the fusion's own order (score DESC, id ASC; ties keep it)
+            return out.select(*sel)
         return _apply_order(out.select(*sel), alias, order_text, id_col)
 
     # ---- batch_distance ----

@@ -30,10 +30,25 @@ def test_vector_topk_plan(spark):
     assert codegen_stage_count(df) >= 1
 
 
-def test_bm25_plan_no_python(spark):
+def _spark_search_plans(monkeypatch):
+    """Below ``session.DRIVER_RESIDENT_BYTES`` a search answers from the
+    corpus's driver snapshot as a VALUES relation; the plan audits are
+    about the Spark plan that serves larger corpora, so they lower the
+    gate (equivalence of the two paths is pinned by test_resident.py)."""
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
+
+
+def _local(df) -> bool:
+    return df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+
+
+def test_bm25_plan_no_python(spark, monkeypatch):
     from myscaledb_spark.functions.text import text_search
 
-    df = text_search(spark.table("documents"), "text", "vector search", 10, id_col="doc_id")
+    args = (spark.table("documents"), "text", "vector search", 10)
+    assert _local(text_search(*args, id_col="doc_id"))
+    _spark_search_plans(monkeypatch)
+    df = text_search(*args, id_col="doc_id")
     assert_no_python_in_plan(df)
     assert_take_ordered(df)
 
@@ -56,12 +71,14 @@ def test_newly_gated_plans_no_python(spark):
         assert_no_python_in_plan(df), name
 
 
-def test_round3_search_plans(spark):
+def test_round3_search_plans(spark, monkeypatch):
     """Round-3 entries: search-on-join broadcasts the filtered dim side and
     keeps TakeOrderedAndProject; multi-distance is one scan, no Python;
     stop-word BM25 stays whole-stage-codegen (the analyzer chain is all
     higher-order column exprs)."""
     import __spark_entry__ as m
+
+    _spark_search_plans(monkeypatch)
 
     qs = m.queries()
     join_df = qs["vec_search_join"](spark, SF_DIR)
@@ -96,12 +113,13 @@ def test_get_objects_no_url_localtablescan(spark, tmp_path):
     assert "binaryFile" in plan or "FileScan" in plan
 
 
-def test_cjk_text_search_plan_no_python(spark):
+def test_cjk_text_search_plan_no_python(spark, monkeypatch):
     """r3 VERDICT ask #2: the `chinese` tokenizer must run JVM-side — no
     pandas UDF / Arrow eval anywhere in a CJK text_search plan (the FMM
     dictionary is compiled to a longest-first regex alternation)."""
     from myscaledb_spark.functions.text import text_search
 
+    _spark_search_plans(monkeypatch)
     df = text_search(
         spark.table("documents"), "text", "数据查询", 10,
         id_col="doc_id", tokenizer="chinese",

@@ -193,29 +193,32 @@ def _hybridsearch_sql(view, words):
             "ORDER BY s DESC, id LIMIT 5")
 
 
-def test_sql_text_and_hybrid_search_run_one_job(spark, tmp_path):
-    """After a warm-up query on a table, SQL textsearch and hybridsearch with
-    fresh terms run exactly one Spark job each: both read the resident
-    tokenized corpus with its complete BM25 stats, hybridsearch collects its
-    legs in one job, and the ORDER BY over its fused rows sorts on the
-    driver.  The first text op builds the corpus and its stats in one more
-    job.  (A per-query stats pass, a two-thread hybrid and a Spark sort of
-    the fused rows ran 4 jobs there, then 3 and 8 per query.)"""
+def _distance_sql(view, qvec="[1.0, 2.0, 0.5]", k=5):
+    return f"SELECT id, distance(vector, {qvec}) AS d FROM {view} ORDER BY d LIMIT {k}"
+
+
+def test_sql_searches_run_no_job_after_the_first(spark, tmp_path):
+    """The first search on a table builds its driver snapshot in at most one
+    Spark job; then SQL distance, textsearch and hybridsearch with fresh
+    queries each run none: numpy over the snapshot, rows emitted as a
+    VALUES relation.  (Before the snapshot they ran 1 job each, and before
+    the resident corpus 4, then 3 and 8.)"""
     _pin_view(spark, "t_pin_jobs", str(tmp_path / "t_pin_jobs"))
     first, n_first = _jobs(
         spark, "pin-first",
         lambda: ch_sql(spark, _textsearch_sql("t_pin_jobs", "ancient")).collect(),
     )
-    assert first and n_first <= 2
-    _, n_text = _jobs(
-        spark, "pin-text",
-        lambda: ch_sql(spark, _textsearch_sql("t_pin_jobs", "wisdom rise")).collect(),
-    )
-    _, n_hybrid = _jobs(
-        spark, "pin-hybrid",
-        lambda: ch_sql(spark, _hybridsearch_sql("t_pin_jobs", "military cultures")).collect(),
-    )
-    assert (n_text, n_hybrid) == (1, 1)
+    assert first and n_first <= 1
+    steady = [
+        _jobs(spark, f"pin-{i}", lambda: ch_sql(spark, sql).collect())
+        for i, sql in enumerate([
+            _distance_sql("t_pin_jobs"),
+            _textsearch_sql("t_pin_jobs", "wisdom rise"),
+            _hybridsearch_sql("t_pin_jobs", "military cultures"),
+        ])
+    ]
+    assert all(rows for rows, _ in steady)
+    assert [n for _, n in steady] == [0, 0, 0]
 
 
 def _key_groups(rows, idx):
@@ -273,8 +276,9 @@ def test_driver_order_by_equals_spark_sort(spark):
 
 def test_resident_corpus_follows_rewritten_input(spark, tmp_path, monkeypatch):
     """Overwriting a view's parquet through Spark and re-registering the view
-    must not serve the old corpus's BM25 stats: textsearch and hybridsearch
-    equal a run that streams the corpus with no resident entry."""
+    must not serve the old corpus's snapshot: distance, textsearch and
+    hybridsearch equal a run that streams the corpus with no resident
+    entry."""
     from myscaledb_spark.functions import text as T
 
     path = str(tmp_path / "t_fresh")
@@ -284,9 +288,11 @@ def test_resident_corpus_follows_rewritten_input(spark, tmp_path, monkeypatch):
     text_q = "SELECT id, textsearch(doc, 'apple') AS s FROM t_fresh ORDER BY s DESC LIMIT 3"
     hybrid_q = ("SELECT id, hybridsearch('fusion_type=rsf')(vec, doc, [1.0, 0.0], "
                 "'apple') AS s FROM t_fresh ORDER BY s DESC, id LIMIT 3")
+    distance_q = "SELECT id, distance(vec, [0.95, 0.1]) AS d FROM t_fresh ORDER BY d LIMIT 3"
 
     def run():
-        return [[tuple(r) for r in ch_sql(spark, q).collect()] for q in (text_q, hybrid_q)]
+        return [[tuple(r) for r in ch_sql(spark, q).collect()]
+                for q in (text_q, hybrid_q, distance_q)]
 
     spark.createDataFrame(docs, schema).write.mode("overwrite").parquet(path)
     spark.read.parquet(path).createOrReplaceTempView("t_fresh")
@@ -297,7 +303,26 @@ def test_resident_corpus_follows_rewritten_input(spark, tmp_path, monkeypatch):
     after = run()
     monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # no resident corpus
     assert after == run()
-    assert after[0][0][0] == 5
+    assert after[0][0][0] == 5 and after[2][0][0] == 5
+
+
+def test_query_log_names_the_driver_resident_plan(spark, tmp_path):
+    """system.query_log shows which path answered a search: a snapshot's
+    answer under its own plan tag, a filtered search under the Spark
+    operators' tag."""
+    from myscaledb_spark.introspection import system_query_log
+
+    _pin_view(spark, "t_pin_log", str(tmp_path / "t_pin_log"))
+    queries = [_distance_sql("t_pin_log"), _textsearch_sql("t_pin_log", "wisdom"),
+               _hybridsearch_sql("t_pin_log", "rise"),
+               "SELECT id, textsearch(doc, 'wisdom') AS s FROM t_pin_log "
+               "WHERE id > 3 ORDER BY s DESC LIMIT 5"]
+    for q in queries:
+        ch_sql(spark, q).collect()
+    log = {r["query"]: r["translated"] for r in system_query_log(spark).collect()
+           if r["kind"] == "search"}
+    assert [log[q] for q in queries] == ["<driver-resident plan>"] * 3 + [
+        "<search-operator plan>"]
 
 
 def test_per_part_hybridsearch_evaluates_text_subquery_once(spark, monkeypatch):
@@ -446,30 +471,33 @@ def _hs_sql(table, shape, kind):
             "ORDER BY s DESC, id LIMIT 5")
 
 
-#: Per shape: the Spark jobs of one query and, per fusion type, the ids and
-#: score bits.  The rows equal those of the earlier Spark-window fusion,
-#: which ran fts_index 5/3, two_parts 7/7, binary 6/4 and no_fts_index 2/1
-#: jobs (rsf/rrf) per query.
+#: Per shape: the Spark jobs of the first query and of a repeated one, and
+#: per fusion type, the ids and score bits.  The first text leg over a
+#: table's store builds its driver snapshot (BM25 stats) in one more job.
+#: The rows equal those of the earlier Spark-window fusion, which ran
+#: fts_index 5/3, two_parts 7/7, binary 6/4 and no_fts_index 2/1 jobs
+#: (rsf/rrf) per query; before the stores had a size estimate, fts_index
+#: ran 2, two_parts 5 and binary 3 jobs per query.
 _HS_PINS = {
-    "fts_index": (2, {
+    "fts_index": ((2, 1), {
         "rsf": [(1, "3fe127d3da925ab1"), (4, "3fe0000000000000"), (5, "3fe0000000000000"),
                 (7, "3fd8000000000000"), (0, "3fcb6db6db6db6dc")],
         "rrf": [(1, "3fa0a6c92bff7560"), (4, "3fa04536afbeeb26"), (0, "3fa0000000000000"),
                 (5, "3f90842108421084"), (2, "3f90410410410410")],
     }),
-    "two_parts": (5, {
+    "two_parts": ((2, 1), {
         "rsf": [(1, "3ff0000000000000"), (2, "3fea0ea0ea0ea0ea"), (4, "3fe7627627627627"),
                 (5, "3fe0000000000000"), (0, "3fdc57c57c57c57c")],
         "rrf": [(1, "3fa0c9714fbcda3b"), (4, "3fa0853aaffeef26"), (0, "3fa062928c418a4a"),
                 (2, "3fa062928c418a4a"), (6, "3fa0421084210842")],
     }),
-    "binary": (3, {
+    "binary": ((3, 2), {
         "rsf": [(1, "3fe127d3da925ab1"), (4, "3fe0000000000000"), (0, "3fd0000000000000"),
                 (7, "3fd0000000000000"), (2, "3fa27d3da925ab09")],
         "rrf": [(1, "3fa0a6c92bff7560"), (4, "3fa04536afbeeb26"), (0, "3fa0421084210842"),
                 (2, "3f90410410410410"), (7, "3f90410410410410")],
     }),
-    "no_fts_index": (1, {
+    "no_fts_index": ((1, 1), {
         "rsf": [(1, "3fe0000000000000"), (5, "3fe0000000000000"), (7, "3fd8000000000000"),
                 (0, "3fcb6db6db6db6dc"), (4, "0000000000000000")],
         "rrf": [(1, "3f90c9714fbcda3b"), (5, "3f90842108421084"), (7, "3f90410410410410"),
@@ -481,8 +509,8 @@ _HS_PINS = {
 @pytest.mark.parametrize("shape", list(_HS_SHAPES))
 def test_sql_hybridsearch_shapes_pin_rows_and_jobs(spark, shape):
     """Each SQL hybridsearch shape returns the pinned ids and score bits for
-    rsf and rrf, and each query runs the pinned number of Spark jobs (the
-    same on a first and a repeated query)."""
+    rsf and rrf, and its first (rsf) and repeated (rrf) queries run the
+    pinned numbers of Spark jobs."""
     import struct
 
     from myscaledb_spark.plans.table_ddl import ch_script
@@ -491,10 +519,10 @@ def test_sql_hybridsearch_shapes_pin_rows_and_jobs(spark, shape):
     jobs, pins = _HS_PINS[shape]
     ch_script(spark, _hs_script(table, shape))
     try:
-        for kind, want in pins.items():
+        for (kind, want), n_jobs in zip(pins.items(), jobs):
             sql = _hs_sql(table, shape, kind)
             rows, n = _jobs(spark, f"pin-{shape}-{kind}", lambda: ch_sql(spark, sql).collect())
             assert [(r[0], struct.pack(">d", r[1]).hex()) for r in rows] == want, kind
-            assert n == jobs, kind
+            assert n == n_jobs, kind
     finally:
         ch_script(spark, f"DROP TABLE {table}")
