@@ -24,11 +24,12 @@ expression computing tf from the token array. Everything is JVM higher-order
 functions inside codegen; the only wide op is the final top-k
 (TakeOrderedAndProject). A corpus at or below
 ``session.DRIVER_RESIDENT_BYTES`` is collected once into a driver snapshot
-(``resident.py``) whose postings answer a plain top-k query with no Spark
-job and give every other query its N, avgdl and single-token df; a corpus
-up to 8 GB stays resident per session as a persisted tokenized frame
-(`_resident_toked`; the memo layer is `memo.py`), with N, avgdl and the df
-of every token computed once (`_corpus_stats`) below the small-input gate.
+(``resident.py``, kept in ``memo.py``'s ``text`` namespace and looked up by
+``_snapshot``) whose postings answer a plain top-k query with no Spark job
+and give every other query its N, avgdl and single-token df.  A larger or
+unfingerprintable corpus streams: each query tokenizes it and computes its
+stats in the same plan; a built FTS index (``text_search(artifact_dir=)``)
+is the path for repeated queries over it.
 Every path — streaming, resident, driver, NLQ and the postings index
 (plans/fts_index.py, the scale path for repeated querying) — computes its
 per-clause tf and dl its own way and scores through ``bm25_sum``, the one
@@ -45,7 +46,7 @@ from pyspark.sql import functions as F
 
 from myscaledb_spark import memo
 from myscaledb_spark.errors import InvalidSearchQuery, MAX_SEARCH_RESULT_WINDOW
-from myscaledb_spark.session import collect_small, estimated_bytes
+from myscaledb_spark.session import estimated_bytes
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -209,168 +210,74 @@ def _toked(
     ).withColumn(dl, F.size(toks).cast("double"))
 
 
-#: only corpora under this estimated input size are kept resident — the
-#: same cost-gate shape as the grouped-t-digest auto switch.  Above it,
-#: direct search stays a streaming scan (the FTS postings artifact is the
-#: intended scale path for repeated queries — build the index).  At or
-#: below ``session.DRIVER_RESIDENT_BYTES`` the corpus lives on the driver
-#: (``resident.Snapshot``); above that, as a persisted tokenized frame.
-_RESIDENT_MAX_BYTES = 8 << 30
-
-
-def _resident_toked(
-    df: DataFrame, text_col: str, tokenizer: str, spec, create: bool = True
-):
-    """``df``'s resident corpus from the session's memo (``memo.py``): its
-    driver snapshot (``resident.Snapshot``, one per input plan) at or below
-    ``session.DRIVER_RESIDENT_BYTES``, else (df.* + _toks + _dl persisted,
-    its BM25 stats record) up to ``_RESIDENT_MAX_BYTES``; None when the
-    corpus is bigger or unfingerprintable and the caller should stream.
-    With ``create=False`` a corpus without an entry streams too.
+def _snapshot(df: DataFrame, create: bool = True):
+    """``df``'s driver snapshot (``resident.Snapshot``) from the session's
+    memo (``memo.py``), built by one Spark job when missing (``create``);
+    None when ``df`` is estimated above ``session.DRIVER_RESIDENT_BYTES`` or
+    cannot be fingerprinted, and the caller streams (a built FTS index is
+    the scale path for repeated queries over such a corpus).  Every search
+    over the input plan shares it: one entry per plan, not per column or
+    analyzer (a snapshot derives each analyzer's postings itself).
 
     The reference's tantivy index keeps the analyzed corpus resident; the
     direct (index-less) scan re-tokenized per query — and the per-query
     regexp/HOF tokenization was the whole cost of the direct BM25 gates
-    (r9 VERDICT finding #4).  The persisted frame is keyed by the analyzed
-    input plan + the full analyzer config (a snapshot derives each
-    analyzer's postings itself), under the input files' fingerprint, so a
-    rewritten input replaces its entry, also when the query then streams."""
-    from myscaledb_spark import session
+    (r9 VERDICT finding #4).
 
-    est = estimated_bytes(df)
-    if est <= session.DRIVER_RESIDENT_BYTES:
-        return _snapshot(df, create, est)
-
-    def build():
-        from pyspark import StorageLevel
-
-        toked = _toked(df, text_col, tokenizer, spec)
-        return toked.persist(StorageLevel.MEMORY_AND_DISK), {}
-
-    fp = memo.fingerprint(df) if est <= _RESIDENT_MAX_BYTES else None
-    key = (memo.plan_key(df), text_col, tokenizer, repr(spec))
-    # 8 slots: several corpora/tokenizers legitimately coexist in a session
-    # (simple + stopword-spec + CJK gates)
-    return memo.get(
-        df.sparkSession, "text", key, fp, build if create else None, slots=8
-    )
-
-
-def _snapshot(df: DataFrame, create: bool = True, est: int | None = None):
-    """``df``'s driver snapshot (``resident.Snapshot``) from the memo, built
-    by one Spark job when missing (``create``), or None when ``df`` is
-    estimated above ``session.DRIVER_RESIDENT_BYTES`` (or
-    ``_RESIDENT_MAX_BYTES``) or cannot be fingerprinted.  Every search over the input plan shares
-    it: one entry per plan, not per column or analyzer."""
+    An entry keeps the estimate its input passed the gate with, so a hit
+    is only fingerprinted, never sized again (the estimate is an optimizer
+    run).  A plan without an entry is sized before it is fingerprinted, so
+    a large or many-file input is never stat'ed, and an input rewritten
+    since its entry was built is sized again before it is rebuilt; the
+    stale entry is released either way, also when the query then
+    streams."""
     from myscaledb_spark import resident, session
 
-    if est is None:
-        est = estimated_bytes(df)
-    gate = min(session.DRIVER_RESIDENT_BYTES, _RESIDENT_MAX_BYTES)
-    fp = memo.fingerprint(df) if 0 < est <= gate else None
-    build = functools.partial(resident.build, df) if create else None
-    return memo.get(df.sparkSession, "text", memo.plan_key(df), fp, build)
+    spark, key = df.sparkSession, memo.plan_key(df)
+    fp = memo.fingerprint(df) if memo.has(spark, "text", key) else None
+    hit = memo.get(spark, "text", key, fp)  # a lookup: releases a stale entry
+    if hit is not None and hit[0] <= session.DRIVER_RESIDENT_BYTES:
+        return hit[1]
+    est = estimated_bytes(df) if create else 0
+    if not 0 < est <= session.DRIVER_RESIDENT_BYTES:
+        return None
+    if fp is None:
+        fp = memo.fingerprint(df)
+    got = memo.get(spark, "text", key, fp, lambda: (est, resident.build(df)))
+    return None if got is None else got[1]
 
 
 #: default ``resident`` argument of the scorers: look the corpus up
 _LOOKUP = object()
 
-#: bound on the complete-stats map of one persisted corpus: the map costs
-#: about 100 bytes of driver memory a token (488 KB for a 4,829-token
-#: corpus), so at most ~6.5 MB per memo slot; a larger vocabulary keeps
-#: the per-clause path
-_CORPUS_STATS_MAX_TERMS = 1 << 16
 
-
-def _corpus_stats(resident: DataFrame) -> tuple | None:
-    """(N, avgdl, {token: df}) of ``resident`` in one job — one group-by over
-    each doc's distinct tokens — or None above the small-input gate or with
-    more than ``_CORPUS_STATS_MAX_TERMS`` tokens (the collect stops one row
-    past the bound, on one shuffle partition so it stays one job).  Each
-    doc also counts once, with its length, on its first exploded row
-    (``posexplode_outer`` keeps a token-less doc as one NULL-token row), so
-    the groups' partial counts and length sums add up to N and avgdl.  The
-    lengths are integers, so the sum is exact and avgdl is bit-identical to
-    ``avg(_dl)``."""
-    ex = resident.select(
-        F.posexplode_outer(F.array_distinct("_toks")).alias("_p", "_t"), "_dl"
-    )
-    first = F.col("_p").isNull() | (F.col("_p") == 0)
-    dl = F.when(first, F.col("_dl"))
-    rows = collect_small(
-        ex.groupBy("_t").agg(
-            F.count(F.lit(1)).cast("double").alias("_df"),
-            F.count(F.when(first, 1)).alias("_n"),
-            F.count(dl).alias("_ndl"),
-            F.sum(dl).alias("_sdl"),
-        ).limit(_CORPUS_STATS_MAX_TERMS + 1),
-        sized=resident,
-        **{"spark.sql.shuffle.partitions": "1"},
-    )
-    if rows is None or len(rows) > _CORPUS_STATS_MAX_TERMS:
-        return None
-    n = float(sum(r["_n"] for r in rows))
-    ndl = sum(r["_ndl"] for r in rows)
-    sdl = sum(r["_sdl"] for r in rows if r["_sdl"] is not None)
-    terms = {r["_t"]: r["_df"] for r in rows if r["_t"] is not None}
-    return n, (sdl / ndl if ndl else None), terms
-
-
-def _resident_stats(res, text_col, tokenizer, spec, keys, tf_of, streamed=None):
-    """(n_docs, avgdl, [df per clause]) for a resident corpus — the
+def _resident_stats(snap, text_col, tokenizer, spec, keys, tf_of, streamed):
+    """(n_docs, avgdl, [df per clause]) from ``snap``'s postings — the
     reference's index serves precomputed stats the same way
     (BM25InfoInDataParts.h).  ``keys`` name the clauses: a str is a single
     token, a tuple a phrase; ``tf_of(key)`` builds a clause's tf column.
 
-    A snapshot answers N, avgdl and every single token's df from its
-    postings; a persisted frame within the small-input gate and the
-    vocabulary bound computes them once, in one job (``_corpus_stats``),
-    into its stats record.  Either way an absent token has df 0.0, exactly
-    what ``sum(tf > 0)`` gives, and avgdl sums the same integer doc lengths
-    as ``avg(_dl)``, so scores are bit-identical to a per-query stats pass.
-    Phrase clauses, and every clause of a persisted frame without that map,
-    take the per-clause path: their missing df in one agg over the corpus
-    (``streamed``, the tokenized input, for a snapshot), kept in a
-    per-term memo (``memo.terms``)."""
-    from myscaledb_spark.resident import Snapshot
-
-    if isinstance(res, Snapshot):
-        post = res.postings(text_col, tokenizer, spec)
-        frame, record = streamed, post.record
-        record.update(n=post.n_docs, avgdl=post.avgdl)
-        single = post.df
-    else:
-        frame, record = res
-        if "n" not in record:
-            full = _corpus_stats(frame)
-            if full is not None:  # one update: a reader never sees "n" alone
-                record.update(zip(("n", "avgdl", "terms"), full))
-        terms = record.get("terms")
-        single = None if terms is None else (lambda ck: terms.get(ck, 0.0))
+    N, avgdl and every single token's df come from the postings: an absent
+    token has df 0.0, exactly what ``sum(tf > 0)`` gives, and avgdl sums the
+    same integer doc lengths as ``avg(_dl)``, so scores are bit-identical to
+    a per-query stats pass.  A phrase's df is one agg over ``streamed``,
+    the tokenized input, kept in the postings' per-term memo
+    (``memo.terms``)."""
+    post = snap.postings(text_col, tokenizer, spec)
 
     def fetch(need):
-        aggs = [
-            F.count(F.lit(1)).cast("double").alias("_n"),
-            F.avg("_dl").alias("_avg"),
-        ] + [
+        row = streamed.agg(*[
             F.sum(F.when(tf_of(ck) > 0, 1).otherwise(0)).cast("double")
             .alias(f"_d{i}")
             for i, ck in enumerate(need)
-        ]
-        row = frame.agg(*aggs).collect()[0]
-        record.setdefault("n", row["_n"])
-        record.setdefault("avgdl", row["_avg"])
+        ]).collect()[0]
         return {ck: row[f"_d{i}"] for i, ck in enumerate(need)}
 
-    clauses = memo.terms(
-        record.setdefault("clauses", {}),
-        [ck for ck in keys if single is None or not isinstance(ck, str)],
-        fetch,
+    phrases = memo.terms(
+        post.phrase_df, [ck for ck in keys if not isinstance(ck, str)], fetch
     )
-    if "n" not in record:
-        fetch([])
-    dfs = [clauses[ck] if ck in clauses else single(ck) for ck in keys]
-    return record["n"], record["avgdl"], dfs
+    dfs = [phrases[ck] if ck in phrases else post.df(ck) for ck in keys]
+    return post.n_docs, post.avgdl, dfs
 
 
 def bm25_scores(
@@ -393,8 +300,8 @@ def bm25_scores(
     stop_word_filters / stem_languages / length_limit — through both the
     document and the query analyzer.
 
-    ``resident`` is the caller's ``_resident_toked`` result for ``df``
-    (None streams); by default it is looked up here.
+    ``resident`` is the caller's ``_snapshot`` of ``df`` (None streams); by
+    default it is looked up here.
     """
     terms = tokenize_query(query, tokenizer, spec=spec)
     if not terms:
@@ -402,7 +309,7 @@ def bm25_scores(
 
     res = resident
     if res is _LOOKUP:
-        res = _resident_toked(df, text_col, tokenizer, spec)
+        res = _snapshot(df)
     if res is None and tokenizer == "simple" and spec is None and all(
         re.fullmatch("[a-z0-9]+", t) for t in terms
     ):
@@ -449,11 +356,8 @@ def bm25_scores(
     stats = None
     toked = _toked(df, text_col, tokenizer, spec)
     if res is not None:
-        # tf from the token arrays (integer counts; cached when persisted)
-        # + literal stats from the resident corpus: a repeated query is ONE
-        # job — scoring + top-k — with no stats pass and no broadcast build
-        if isinstance(res, tuple):
-            toked = res[0]
+        # literal stats from the snapshot: a repeated query is ONE job —
+        # scoring + top-k — with no stats pass and no broadcast build
         stats = _resident_stats(
             res, text_col, tokenizer, spec, terms,
             lambda t: term_tf("_toks", t), toked,
@@ -709,12 +613,10 @@ def nlq_scores(
     if not pos:
         raise InvalidSearchQuery("NLQ query needs at least one positive clause")
 
-    res = _resident_toked(df, text_col, tokenizer, None)
+    res = _snapshot(df)
     stats = None
     toked = _toked(df, text_col, tokenizer, None)
     if res is not None:
-        if isinstance(res, tuple):
-            toked = res[0]
         # a single-token clause is keyed by its token (a snapshot's
         # postings answer it); a phrase by its token tuple, so repeated NLQ
         # queries reuse stats exactly like plain-term BM25
@@ -840,8 +742,8 @@ def text_search(
     # the real answer when tokenization dominates.
     res = resident
     if res is _LOOKUP:
-        res = _resident_toked(df, text_col, tokenizer, spec)
-    if where is None and res is not None and not isinstance(res, tuple):
+        res = _snapshot(df)
+    if where is None and res is not None:
         # a driver snapshot: the top-k in numpy, no Spark job
         terms = tokenize_query(query, tokenizer, spec=spec)
         if not terms:

@@ -61,6 +61,12 @@ def _release(entry) -> None:
             v.unpersist()
 
 
+def has(spark: SparkSession, ns: str, key) -> bool:
+    """Whether (``ns``, ``key``) has an entry, under any fingerprint."""
+    with _LOCK:
+        return (ns, key) in _STORES.get(spark, {})
+
+
 def get(spark: SparkSession, ns: str, key, fp, build=None, slots: int = 8):
     """The value of (``ns``, ``key``) under fingerprint ``fp``, built with
     ``build()`` and stored when missing.  An entry under another fingerprint

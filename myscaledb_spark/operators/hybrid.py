@@ -18,9 +18,9 @@ Reference parity (`src/VectorIndex/Utils/HybridSearchUtils.cpp`):
 
 Spark design: candidate generation is where all the data-scale work
 happens, and it reuses the single-search primitives.  The default path
-(`hybrid_search`) runs the exact distance top-k′ and `text_search` over the
-resident corpus that text search keeps — in numpy over a small corpus's
-driver snapshot, with no Spark job; the indexed path
+(`hybrid_search`) runs the exact distance top-k′ and `text_search` in numpy
+over the driver snapshot that text search keeps, with no Spark job, and
+streams both legs over a corpus too large for one; the indexed path
 (`hybrid_search_indexed`) takes its vector leg from any registered ANN
 index (`ddl.search_index`) and its text leg from the FTS artifact; the SQL
 hybridsearch shapes (`sql_search`) build their own legs, per part where the
@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from myscaledb_spark.errors import InvalidSearchQuery
-from myscaledb_spark.functions.text import _resident_toked, text_search, tokenize_query
+from myscaledb_spark.functions.text import _snapshot, text_search, tokenize_query
 from myscaledb_spark.functions.vector import METRIC_ASCENDING
 from myscaledb_spark.resident import mark_served
 from myscaledb_spark.session import _sort_key, collect_small, values_relation
@@ -84,20 +84,18 @@ def hybrid_search(
     one; a missing/unbuilt artifact, or a FLAT vector record (no artifact),
     falls back to the single-scan default, which is exact.
 
-    Plan shape: both legs read the resident corpus that ``text_search``
-    keeps (``text._resident_toked``) — the reference runs both searches
-    against resident index structures (MergeTreeHybridSearchManager.cpp:
-    114-151).  A corpus with a driver snapshot (``resident.py``) answers
-    both legs in numpy — ``vector_topk``'s and ``text_search``'s rows, bit
-    for bit — and fuses them with ``_fuse_local``: no Spark job.  Above the
-    snapshot gate the vector leg is the exact distance top-k′ over the
-    persisted tokenized frame and the text leg is ``text_search`` itself;
-    ``fuse_candidates`` collects both legs in ONE job and fuses them
-    driver-side over the two ≤k′-row lists — result-scale, never
-    data-scale.  A corpus above the resident gate, and a filtered frame
-    without an entry (a WHERE per query), stream both legs from ``df``,
-    the text leg with its stats pass over the filtered rows; the indexed
-    variant (`hybrid_search_indexed`) is the no-corpus-scan scale path.
+    Plan shape: both legs read the driver snapshot that ``text_search``
+    keeps (``text._snapshot``, ``resident.py``) — the reference runs both
+    searches against resident index structures (MergeTreeHybridSearchManager
+    .cpp:114-151).  The snapshot answers both legs in numpy —
+    ``vector_topk``'s and ``text_search``'s rows, bit for bit — and
+    ``_fuse_local`` fuses them: no Spark job.  A corpus above
+    ``session.DRIVER_RESIDENT_BYTES``, and a filtered frame without an
+    entry (a WHERE per query), stream both legs from ``df``, the text leg
+    with its stats pass over the filtered rows; ``fuse_candidates``
+    collects both legs in ONE job and fuses them driver-side over the two
+    ≤k′-row lists — result-scale, never data-scale.  The indexed variant
+    (`hybrid_search_indexed`) is the no-corpus-scan scale path.
     """
     from myscaledb_spark.operators.topk import _validate_k, vector_topk
 
@@ -129,13 +127,13 @@ def hybrid_search(
 
     # looked up here and passed to the text leg.  A filtered frame (the SQL
     # path filters by WHERE first) gets no new entry: one per literal would
-    # tokenize and cache every filtered copy and evict other corpora, so
-    # it streams unless something else made it resident
-    res = _resident_toked(df, text_col, tokenizer, None, create=False)
+    # collect every filtered copy and evict other corpora, so it streams
+    # unless something else made it resident
+    res = _snapshot(df, create=False)
     if res is None and not _filtered(df):
-        res = _resident_toked(df, text_col, tokenizer, None)
-    if res is not None and not isinstance(res, tuple):
-        # a driver snapshot: both legs and the fusion in numpy, no Spark job
+        res = _snapshot(df)
+    if res is not None:
+        # both legs and the fusion in numpy, no Spark job
         vec = res.nearest(vec_col, qvec, kprime, metric, id_col)
         terms = tokenize_query(qtext, tokenizer)
         if vec is not None and terms:
@@ -147,9 +145,8 @@ def hybrid_search(
                 ft, metric, fusion_weight, fusion_k, score_name,
             )
         res = None
-    corpus = df if res is None else res[0]
     vec_cand = vector_topk(
-        corpus, vec_col, qvec, kprime, metric, id_col=id_col, dist_name="_vdist"
+        df, vec_col, qvec, kprime, metric, id_col=id_col, dist_name="_vdist"
     ).select(id_col, "_vdist")
     txt_cand = text_search(
         df, text_col, qtext, kprime, id_col, tokenizer, score_name="_bm25",

@@ -20,6 +20,7 @@ from myscaledb_spark.functions.vector import (
     cosine_distance,
     distance,
     ip_distance,
+    row_defined,
     vector_norm,
 )
 
@@ -106,14 +107,16 @@ def cosine_neardup_pairs(
 
     Without block_col this is the exact O(n²) self-join (small corpora /
     oracle); with block_col (e.g. an LSH bucket) the join is equi-keyed on the
-    block — the linear-shuffle scale path.
+    block — the linear-shuffle scale path.  Rows without a cosine (NULL,
+    with a NULL element, or zero-norm: a zero divisor, DIVIDE_BY_ZERO under
+    ANSI) pair with nothing and are dropped before the join.
     """
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
         vector_norm(vec_col).alias("nrm"),
         *([block_col.alias("blk")] if block_col is not None else []),
-    )
+    ).filter(row_defined("v", "size(v)", "Cosine"))
     a = base.alias("a")
     b = base.alias("b")
     cond = F.col("a.id") < F.col("b.id")

@@ -281,15 +281,20 @@ def two_stage_topk(
     if where is not None:
         df = df.filter(where)
     ncand = min(max(k * candidate_multiple, k), MAX_SEARCH_RESULT_WINDOW)
-    if coarse_dims:
+    qcoarse = list(qvec)[:coarse_dims or 0]
+    if qcoarse and not (canonical_metric(metric) == "Cosine" and query_norm(qcoarse) == 0.0):
         # a row without a full distance has a NULL coarse one, which ranked
-        # first and filled the candidate set only for stage 2 to drop it
+        # first and filled the candidate set only for stage 2 to drop it; a
+        # row whose prefix has no coarse distance (a zero Cosine divisor)
+        # ranks after every row that has one.  A query whose prefix has
+        # none ranks by the full vectors below.
         coarse = F.slice(F.col(vec_col).cast("array<double>"), 1, coarse_dims)
         stage1 = df.filter(distance_defined(vec_col, qvec, metric)).withColumn("_coarse", coarse)
-        qcoarse = list(qvec)[:coarse_dims]
-        stage1 = stage1.withColumn("_cd", distance("_coarse", qcoarse, metric))
+        stage1 = stage1.withColumn("_cd", F.when(
+            distance_defined("_coarse", qcoarse, metric), distance("_coarse", qcoarse, metric)
+        ))
         asc = METRIC_ASCENDING[canonical_metric(metric)]
-        order = [F.col("_cd").asc() if asc else F.col("_cd").desc()]
+        order = [F.col("_cd").asc_nulls_last() if asc else F.col("_cd").desc_nulls_last()]
         if id_col:
             order.append(F.col(id_col).asc())
         cands = stage1.orderBy(*order).limit(ncand).drop("_coarse", "_cd")

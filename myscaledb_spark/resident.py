@@ -16,8 +16,10 @@ search, so a corpus that small is collected ONCE, through Arrow, into a
     the collecting job, so they are the Spark path's tokens.
 
 A snapshot lives in memo.py's ``text`` namespace, one entry per input plan
-under the input files' fingerprint (``text._resident_toked`` looks it up),
-so it never answers from before its input was rewritten.  Distance, BM25
+under the input files' fingerprint (``text._snapshot`` looks it up, for text,
+hybrid and SQL searches alike), so it never answers from before its input
+was rewritten.  It is the only resident copy of a corpus: a larger one
+streams.  Distance, BM25
 and fusion then run on the driver (``vector.driver_distance``,
 ``text.bm25_sum``, ``hybrid._fuse_local``) and return their top-k as a
 VALUES relation: 0 Spark jobs.  Scores and order equal the Spark path's bit
@@ -81,8 +83,8 @@ class Postings:
         self.avgdl = float(counted.sum()) / float(len(counted)) if len(counted) else None
         self._log = log
         self._idf: dict = {}
-        #: stats record of the per-clause path (``text._resident_stats``)
-        self.record: dict = {}
+        #: phrase clause -> df, the per-term memo of ``text._resident_stats``
+        self.phrase_df: dict = {}
 
     def df(self, term: str) -> float:
         """Docs holding ``term``: Σ [tf > 0], 0.0 for an absent term."""

@@ -5,6 +5,7 @@ private memo comes back."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -245,3 +246,42 @@ def test_input_identity_is_read_only_in_memo():
                     continue
                 stray.append(f"{os.path.relpath(path, PKG)}:{ln}")
     assert not stray, stray
+
+
+def test_rank_corr_memoized_second_run_identical(spark):
+    """The rank-table memo and the AQE-off cells scope leave repeated runs
+    bit-identical (the memo only skips re-collecting an immutable rank
+    table)."""
+    from myscaledb_spark.operators.stats import rank_corr
+
+    li = spark.table("lineitem")
+    a = rank_corr(li, "l_quantity", "l_extendedprice").collect()[0][0]
+    b = rank_corr(li, "l_quantity", "l_extendedprice").collect()[0][0]
+    assert a == b
+
+
+def test_text_corpus_has_one_lookup_and_no_persisted_copy():
+    """The driver snapshot is the one resident text corpus: only
+    ``text._snapshot`` reads or writes memo.py's ``text`` namespace, and
+    functions/text.py persists nothing."""
+    owners, persists = [], []
+    for dirpath, _, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, PKG)
+            tree = ast.parse(open(path, encoding="utf-8").read())
+            funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+            for n in ast.walk(tree):
+                if not isinstance(n, ast.Call) or not isinstance(n.func, ast.Attribute):
+                    continue
+                if n.func.attr == "persist" and rel == os.path.join("functions", "text.py"):
+                    persists.append(n.lineno)
+                if (n.func.attr == "get" and isinstance(n.func.value, ast.Name)
+                        and n.func.value.id == "memo" and len(n.args) > 1
+                        and isinstance(n.args[1], ast.Constant) and n.args[1].value == "text"):
+                    inner = [g for g in funcs if g.lineno <= n.lineno <= g.end_lineno]
+                    owners.append((rel, max(inner, key=lambda g: g.lineno).name))
+    assert set(owners) == {(os.path.join("functions", "text.py"), "_snapshot")}, owners
+    assert not persists, persists

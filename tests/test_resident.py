@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from myscaledb_spark import session
 from myscaledb_spark.functions import text as T
 from myscaledb_spark.operators.hybrid import hybrid_search
 from myscaledb_spark.session import session_settings
@@ -84,7 +85,7 @@ def _driver_then_spark(spark, monkeypatch, fn):
     driver, jobs = _jobs(spark, fn)
     assert jobs == 0
     with monkeypatch.context() as m:
-        m.setattr(T, "_RESIDENT_MAX_BYTES", 0)
+        m.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
         return driver, fn()
 
 
@@ -189,3 +190,28 @@ def test_snapshot_idf_log_equals_spark_log(spark):
     post._log, post._idf = log, {}
     assert [post.log(x) for x in args] == want
     assert any(math.log(x) != w for x, w in zip(args, want))
+
+
+def test_snapshot_hit_is_not_sized(spark, tmp_path, monkeypatch):
+    """A memo hit runs no estimated_bytes (the entry keeps the estimate its
+    input passed the gate with); an input rewritten since its entry was
+    built is sized again before it is rebuilt; a plan without an entry
+    that the gate refuses is never fingerprinted."""
+    from myscaledb_spark import memo
+
+    sized, stated = [], []
+    est, fp = T.estimated_bytes, memo.fingerprint
+    monkeypatch.setattr(T, "estimated_bytes", lambda df: sized.append(1) or est(df))
+    monkeypatch.setattr(memo, "fingerprint", lambda df: stated.append(1) or fp(df))
+    rows = _rows(20)
+    snap = T._snapshot(_view(spark, tmp_path, "t_res_hit", rows))
+    assert snap is not None and len(sized) == 1
+    assert T._snapshot(spark.table("t_res_hit")) is snap
+    assert len(sized) == 1
+    _view(spark, tmp_path, "t_res_hit", rows[:10])  # rewritten
+    again = T._snapshot(spark.table("t_res_hit"))
+    assert again is not snap and again.n == 10 and len(sized) == 2
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
+    stated.clear()
+    assert T._snapshot(spark.table("t_res_hit").filter("id > 3")) is None
+    assert stated == []

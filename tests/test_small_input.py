@@ -263,3 +263,64 @@ def test_agg_state_small_input_scope_equals_distributed(spark, monkeypatch):
         )
     finally:
         monkeypatch.undo()
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_revenue_small_input_scope_equals_adaptive(spark, monkeypatch):
+    """The scoped (AQE off / no auto-broadcast / shuffled-hash / stats-derived
+    partitions) small-input execution must equal the adaptive plan
+    row-for-row — execution confs only, so anything else is a bug."""
+    import myscaledb_spark.suite.relational as rel
+
+    scoped = _sorted_rows(rel.revenue_by_nation(spark, SF_DIR))
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
+    try:
+        adaptive = _sorted_rows(rel.revenue_by_nation(spark, SF_DIR))
+    finally:
+        monkeypatch.undo()
+    assert scoped == adaptive
+
+
+def test_revenue_scoped_settings_restore(spark):
+    """The scope must restore AQE/broadcast/shuffle confs after the gate."""
+    import myscaledb_spark.suite.relational as rel
+
+    before = {
+        k: spark.conf.get(k)
+        for k in (
+            "spark.sql.adaptive.enabled",
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.join.preferSortMergeJoin",
+            "spark.sql.shuffle.partitions",
+        )
+    }
+    rel.revenue_by_nation(spark, SF_DIR).collect()
+    after = {k: spark.conf.get(k) for k in before}
+    assert before == after
+
+
+def test_pricing_small_input_scope_equals_adaptive(spark, monkeypatch):
+    import myscaledb_spark.suite.relational as rel
+
+    scoped = _sorted_rows(rel.pricing_summary(spark, SF_DIR))
+    monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
+    try:
+        adaptive = _sorted_rows(rel.pricing_summary(spark, SF_DIR))
+    finally:
+        monkeypatch.undo()
+    assert scoped == adaptive
+
+
+def test_agg_state_values_reemit_schema(spark):
+    """The VALUES re-emit must preserve the exact output schema."""
+    import myscaledb_spark.suite.agg_state_gate as g
+
+    df = g.agg_state_merge_orders(spark, SF_DIR)
+    assert [f.simpleString() for f in df.schema.fields] == [
+        "o_orderstatus:string", "cnt:bigint", "sum_price:double",
+        "avg_price:double", "min_price:double", "best_cust:bigint",
+        "ndv:bigint",
+    ]

@@ -279,7 +279,7 @@ def test_resident_corpus_follows_rewritten_input(spark, tmp_path, monkeypatch):
     must not serve the old corpus's snapshot: distance, textsearch and
     hybridsearch equal a run that streams the corpus with no resident
     entry."""
-    from myscaledb_spark.functions import text as T
+    from myscaledb_spark import session
 
     path = str(tmp_path / "t_fresh")
     schema = "id long, doc string, vec array<double>"
@@ -301,7 +301,7 @@ def test_resident_corpus_follows_rewritten_input(spark, tmp_path, monkeypatch):
     spark.createDataFrame(docs, schema).write.mode("overwrite").parquet(path)
     spark.read.parquet(path).createOrReplaceTempView("t_fresh")
     after = run()
-    monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # no resident corpus
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)  # no resident corpus
     assert after == run()
     assert after[0][0][0] == 5 and after[2][0][0] == 5
 

@@ -415,16 +415,16 @@ def _hybrid_corpus(spark):
 
 @pytest.mark.parametrize("kind", ["rsf", "rrf"])
 def test_hybrid_search_equals_fused_independent_legs(spark, kind):
-    """hybrid_search (resident corpus, one tagged-union collect) equals
-    _fuse_local over separately collected vector_topk and text_search legs,
-    bit for bit — including a query term absent from the corpus."""
+    """hybrid_search over a corpus above the driver snapshot's gate (both
+    legs stream, one tagged-union collect) equals _fuse_local over
+    separately collected vector_topk and text_search legs, bit for bit —
+    including a query term absent from the corpus."""
+    from myscaledb_spark.functions.text import _snapshot
     from myscaledb_spark.operators.hybrid import _fuse_local
     from myscaledb_spark.operators.topk import vector_topk
 
-    from myscaledb_spark.functions.text import _resident_toked
-
-    df = _hybrid_corpus(spark)
-    assert _resident_toked(df, "text", "simple", None) is not None
+    df = _hybrid_corpus(spark)  # the join is estimated at several GB
+    assert _snapshot(df) is None
     q = np.random.default_rng(11).standard_normal(64).tolist()
     k = 8
     for query in (QUERY, QUERY + " zzqabsentterm"):
@@ -443,48 +443,6 @@ def test_hybrid_search_equals_fused_independent_legs(spark, kind):
         assert [(r[0], r[1]) for r in got] == [(r[0], r[1]) for r in want]
 
 
-def test_complete_stats_record_equals_per_term_agg(spark, monkeypatch):
-    """The first stats request on a persisted resident corpus (above the
-    driver snapshot's gate) records N, avgdl and the df of every token;
-    each equals the per-term agg over the resident frame bit for bit, and
-    an absent term has df 0.0."""
-    from pyspark.sql import functions as F
-
-    from myscaledb_spark import session
-    from myscaledb_spark.functions import text as T
-
-    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
-
-    # its own entry, with a NULL text, an empty one and one without tokens
-    df = spark.table("documents").filter("doc_id % 3 = 0").select("doc_id", "text")
-    df = df.unionByName(spark.sql(
-        "SELECT CAST(-1 AS BIGINT) AS doc_id, CAST(NULL AS STRING) AS text "
-        "UNION ALL SELECT CAST(-2 AS BIGINT), '' UNION ALL SELECT CAST(-3 AS BIGINT), '!?'"
-    ))
-    resident, record = T._resident_toked(df, "text", "simple", None)
-    n, avgdl, dfs = T._resident_stats(
-        (resident, record), "text", "simple", None, ["vector", "zzqabsentterm"],
-        lambda t: T.term_tf("_toks", t),
-    )
-    vocab = sorted(r[0] for r in resident.select(F.explode("_toks")).distinct().collect())
-    assert sorted(record["terms"]) == vocab
-    base = resident.agg(
-        F.count(F.lit(1)).cast("double"), F.avg("_dl"),
-        F.sum(F.when(T.term_tf("_toks", "zzqabsentterm") > 0, 1).otherwise(0)).cast("double"),
-    ).collect()[0]
-    assert (record["n"], record["avgdl"]) == (base[0], base[1])
-    assert (n, avgdl) == (base[0], base[1])
-    assert dfs[1] == base[2] == 0.0
-    for lo in range(0, len(vocab), 200):
-        chunk = vocab[lo:lo + 200]
-        row = resident.agg(*[
-            F.sum(F.when(T.term_tf("_toks", t) > 0, 1).otherwise(0)).cast("double")
-            for t in chunk
-        ]).collect()[0]
-        assert [record["terms"][t] for t in chunk] == list(row)
-    assert dfs[0] == record["terms"]["vector"]
-
-
 def test_snapshot_stats_equal_per_term_agg(spark):
     """A driver snapshot's postings give N, avgdl and the df of every token;
     each equals the per-term agg over the tokenized corpus bit for bit, and
@@ -497,14 +455,14 @@ def test_snapshot_stats_equal_per_term_agg(spark):
         "SELECT CAST(-1 AS BIGINT) AS doc_id, CAST(NULL AS STRING) AS text "
         "UNION ALL SELECT CAST(-2 AS BIGINT), '' UNION ALL SELECT CAST(-3 AS BIGINT), '!?'"
     ))
-    post = T._resident_toked(df, "text", "simple", None).postings("text")
+    post = T._snapshot(df).postings("text")
     toked = T._toked(df, "text", "simple", None)
     vocab = sorted(r[0] for r in toked.select(F.explode("_toks")).distinct().collect())
     assert sorted(post.index) == vocab
     base = toked.agg(F.count(F.lit(1)).cast("double"), F.avg("_dl")).collect()[0]
     assert (post.n_docs, post.avgdl) == (base[0], base[1])
     assert T._resident_stats(
-        T._resident_toked(df, "text", "simple", None), "text", "simple", None,
+        T._snapshot(df), "text", "simple", None,
         ["vector", "zzqabsentterm"], lambda t: T.term_tf("_toks", t), toked,
     ) == (base[0], base[1], [post.df("vector"), 0.0])
     for lo in range(0, len(vocab), 200):
@@ -517,11 +475,9 @@ def test_snapshot_stats_equal_per_term_agg(spark):
 
 
 def test_resident_scores_equal_streaming_scores(spark, monkeypatch):
-    """Scores from a driver snapshot (its postings' stats) and from a
-    persisted corpus above the snapshot gate (its complete stats record),
-    phrase clauses on the per-clause path, equal the streaming plan's
-    per-query stats pass, for plain BM25 and for NLQ queries with phrases,
-    bit for bit."""
+    """Scores from a driver snapshot (its postings' stats, phrase clauses on
+    the per-clause path) equal the streaming plan's per-query stats pass,
+    for plain BM25 and for NLQ queries with phrases, bit for bit."""
     from myscaledb_spark import session
     from myscaledb_spark.functions import text as T
     from myscaledb_spark.resident import Snapshot
@@ -540,14 +496,10 @@ def test_resident_scores_equal_streaming_scores(spark, monkeypatch):
             out.append([(r["doc_id"], r["bm25_score"]) for r in s.collect()])
         return out
 
-    assert isinstance(T._resident_toked(df, "text", "simple", None), Snapshot)
+    assert isinstance(T._snapshot(df), Snapshot)
     driver = run()
-    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)  # persisted frame
-    persisted, record = T._resident_toked(df, "text", "simple", None)
-    assert driver == run()
-    assert record["n"] > 0
-    monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # stream every query
-    assert T._resident_toked(df, "text", "simple", None) is None
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)  # stream every query
+    assert T._snapshot(df) is None
     assert driver == run()
     assert all(driver)
 
@@ -570,7 +522,7 @@ def test_stats_memo_bound_keeps_current_query_clauses(spark, monkeypatch):
     """When the per-clause df memo overflows its bound mid-query, the
     clauses of the current query that were already memoized survive the
     eviction (clearing them raised KeyError)."""
-    from myscaledb_spark import memo
+    from myscaledb_spark import memo, session
     from myscaledb_spark.functions import text as T
 
     monkeypatch.setattr(memo, "MAX_TERMS", 2)
@@ -580,7 +532,7 @@ def test_stats_memo_bound_keeps_current_query_clauses(spark, monkeypatch):
         want[q] = [(r["doc_id"], r["bm25_score"])
                    for r in T.nlq_search(df, "text", q, 10, id_col="doc_id").collect()]
     assert all(want.values())
-    monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # streaming reference
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)  # streaming reference
     for q, rows in want.items():
         assert rows == [(r["doc_id"], r["bm25_score"])
                         for r in T.nlq_search(df, "text", q, 10, id_col="doc_id").collect()]
@@ -598,35 +550,6 @@ def test_input_fingerprint_tracks_rewrites(spark, tmp_path):
     assert all(size > 0 and mtime > 0 for _, size, mtime in before)
     spark.range(5).write.mode("overwrite").parquet(path)
     assert fingerprint(spark.read.parquet(path)) != before
-
-
-def test_corpus_stats_over_the_vocabulary_bound_keep_scores(spark, monkeypatch):
-    """A corpus with more tokens than the complete-stats bound records no
-    token map (the collect stops one row past the bound) and answers from
-    the per-clause path; scores equal the streaming plan's, bit for bit."""
-    from myscaledb_spark import session
-    from myscaledb_spark.functions import text as T
-
-    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)  # persisted frame
-    monkeypatch.setattr(T, "_CORPUS_STATS_MAX_TERMS", 3)
-    df = spark.table("documents").filter("doc_id % 7 = 2")  # its own entry
-    queries = [("bm25", QUERY), ("nlq", '"merge join" fast +spark')]
-
-    def run():
-        out = []
-        for kind, q in queries:
-            search = T.text_search if kind == "bm25" else T.nlq_search
-            s = search(df, "text", q, 20, id_col="doc_id")
-            out.append([(r["doc_id"], r["bm25_score"]) for r in s.collect()])
-        return out
-
-    resident, record = T._resident_toked(df, "text", "simple", None)
-    assert T._corpus_stats(resident) is None
-    capped = run()
-    assert "terms" not in record and record["n"] > 0
-    monkeypatch.setattr(T, "_RESIDENT_MAX_BYTES", 0)  # stream every query
-    assert capped == run()
-    assert all(capped)
 
 
 def test_unfingerprintable_rewrite_drops_the_stale_corpus(spark, tmp_path, monkeypatch):
@@ -661,7 +584,7 @@ def test_unfingerprintable_rewrite_drops_the_stale_corpus(spark, tmp_path, monke
                 T.nlq_search(df, "doc", q, 5, id_col="id").collect()]
 
     write("a.parquet")
-    assert T._resident_toked(spark.read.parquet(str(path)), "doc", "simple", None)
+    assert T._snapshot(spark.read.parquet(str(path)))
     before = run()
     docs.append((5, "apple crumble with apple"))
     write("b.parquet")
