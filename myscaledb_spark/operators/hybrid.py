@@ -176,9 +176,11 @@ def _collect_legs(vec_cand: DataFrame, txt_cand: DataFrame, id_col: str,
     py4j round trips per query.  A tagged union keeps each leg's own top-k
     (rows are re-split by the tag), so the two lists are exactly what two
     collects return.  Below the small-input gate the job runs with AQE off
-    and one shuffle partition: AQE's per-stage re-planning jobs cost more
-    than a ≤2k′-row result's whole data path; above it the adaptive plan
-    runs unchanged."""
+    and one shuffle partition, in a clone of the session
+    (``session.collect_small``): AQE's per-stage re-planning jobs cost more
+    than a ≤2k′-row result's whole data path, and the caller's session is
+    never written, so clients sharing it run their legs concurrently.
+    Above the gate the adaptive plan runs unchanged."""
     id_type = vec_cand.schema[id_col].dataType
     part = [F.col(part_col)] if part_col else []
     tagged = vec_cand.select(

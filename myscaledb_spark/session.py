@@ -4,16 +4,20 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
 configs are the ones we would set on a 1000-executor cluster reading 100 TB:
 AQE on (runtime re-plan, skew-join splitting, partition coalescing), sane
 shuffle partitioning, Arrow for every pandas-UDF boundary, UTC session time.
+
+The small-input primitives live here too.  A query whose input the
+optimizer estimates small runs under per-query confs (``scoped``: AQE off,
+fewer shuffle partitions) in a clone of the caller's session, so the
+caller's session is never written; its rows come back to the driver
+(``collect_small``) or as a VALUES relation (``values_relation``).
 """
 
 from __future__ import annotations
 
 import math
 import os
-import threading
 import time
 import weakref as _weakref
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -69,49 +73,40 @@ def get_spark(app_name: str = "myscaledb-spark", master: str | None = None) -> S
     return builder.getOrCreate()
 
 
-#: one lock per session: a scope holds it from its first ``conf.set`` to its
-#: last restore, so two overlapping scopes on one session cannot interleave
-#: their saves and restores (reentrant, so scopes still nest)
-_SCOPE_LOCKS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
+def scoped(df: DataFrame, **confs: str) -> DataFrame:
+    """``df`` re-planned in a clone of its session that carries ``confs`` —
+    the Spark analog of ClickHouse's ``SELECT ... SETTINGS k=v``, whose
+    per-query overlay applies to a copy of the session context
+    (reference: Interpreters/Context.cpp).  The clone
+    (``SparkSession.cloneSession``) starts with every conf of the caller's
+    session, runtime-set ones included, its temp views and its shared state
+    (the cache, the catalog); the caller's session is never written, so a
+    query another thread runs on it meanwhile plans under its own confs.
+    Pass full keys (no ``spark.sql.`` prefix is added).  A fresh clone per
+    call: a kept one would miss the caller's later conf changes.
+
+    Actions on the returned frame run in the clone.  A frame derived from
+    it plans there too; ``checkpoint_scoped`` hands a materialized one
+    back to the caller's session."""
+    clone = df.sparkSession._jsparkSession.cloneSession()
+    for k, v in confs.items():
+        clone.conf().set(k, str(v))
+    return _replan(df, clone)
 
 
-@contextmanager
-def session_settings(spark: SparkSession, **confs: str):
-    """Per-query SETTINGS scope — the Spark analog of ClickHouse's
-    ``SELECT ... SETTINGS k=v`` (reference: Interpreters/Context.cpp
-    per-query settings overlay).  Sets the given SQL confs, yields, then
-    restores the previous values.  Spark reads most SQL confs at
-    EXECUTION time, so a query that should run under the scope must be
-    materialized inside the ``with`` block (``df.localCheckpoint(True)``
-    or an action) — a lazily returned plan executes under whatever the
-    session has later.  Keys may use the short form (no ``spark.sql.``
-    prefix is added — pass full keys).
+def _replan(df: DataFrame, jsession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of the JVM session ``jsession``."""
+    dataset = df.sparkSession._jvm.org.apache.spark.sql.classic.Dataset
+    jdf = dataset.ofRows(jsession, df._jdf.queryExecution().analyzed())
+    return DataFrame(jdf, df.sparkSession)
 
-    Scopes on one session are serialized by a per-session lock, so every
-    conf ends at the value it had before any of them began.  SQLConf is
-    still session-global: a query that another thread runs on the same
-    session WITHOUT a scope, while a scope is open, executes under the
-    scope's confs.  Every scope sets execution confs only, so that query
-    returns the same rows; only its plan shape differs."""
-    with _SCOPE_LOCKS.setdefault(spark, threading.RLock()):
-        old: dict[str, str | None] = {}
-        for k, v in confs.items():
-            try:
-                old[k] = spark.conf.get(k)
-            except Exception:
-                old[k] = None
-            spark.conf.set(k, str(v))
-        try:
-            yield spark
-        finally:
-            for k, prev in old.items():
-                if prev is None:
-                    try:
-                        spark.conf.unset(k)
-                    except Exception:
-                        pass
-                else:
-                    spark.conf.set(k, prev)
+
+def checkpoint_scoped(df: DataFrame, **confs: str) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` run under ``scoped(df, **confs)``,
+    handed back in ``df``'s session: steps the caller adds on top plan
+    under the caller's confs."""
+    done = scoped(df, **confs).localCheckpoint(eager=True)
+    return _replan(done, df.sparkSession._jsparkSession)
 
 
 #: the estimate gate of every small-input path: at or below it AQE's
@@ -141,17 +136,26 @@ def estimated_bytes(df: DataFrame) -> int:
 def collect_small(
     df: DataFrame, sized: DataFrame | None = None, **confs: str
 ) -> list | None:
-    """``df.collect()`` under a scope with AQE off (plus ``confs``) when the
-    estimate of ``sized`` (default ``df``) is in ``(0, SMALL_INPUT_BYTES]``;
-    None otherwise, and the caller runs its adaptive plan.  Execution confs
-    only, so the rows are the ones the adaptive plan returns."""
-    est = estimated_bytes(df if sized is None else sized)
-    if not 0 < est <= SMALL_INPUT_BYTES:
-        return None
-    with session_settings(
-        df.sparkSession, **{"spark.sql.adaptive.enabled": "false", **confs}
-    ):
-        return df.collect()
+    """``df.collect()`` under ``scoped`` with AQE off (plus ``confs``) when
+    the estimate of ``sized`` is in ``(0, SMALL_INPUT_BYTES]``; None
+    otherwise, and the caller runs its adaptive plan.  Without ``sized``
+    the estimate is the scoped plan's own, so a small query is optimized
+    once, in the clone.  Execution confs only, so the rows are the ones the
+    adaptive plan returns."""
+    run = scoped(df, **{"spark.sql.adaptive.enabled": "false", **confs})
+    est = estimated_bytes(run if sized is None else sized)
+    return run.collect() if 0 < est <= SMALL_INPUT_BYTES else None
+
+
+def collect_small_relation(
+    df: DataFrame, sized: DataFrame | None = None, **confs: str
+) -> DataFrame:
+    """``collect_small``'s rows re-emitted as a ``values_relation`` (the
+    caller's collect on it runs no job); ``df`` itself when the estimate is
+    above the gate or a field type has no literal emitter."""
+    rows = collect_small(df, sized, **confs)
+    local = None if rows is None else values_relation(df.sparkSession, df.schema, rows)
+    return df if local is None else local
 
 
 _NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
@@ -253,8 +257,8 @@ def tune_session(spark: SparkSession, force: bool = False) -> SparkSession:
     Tuned once per session: every suite gate calls this on invocation, and
     each conf.set is a py4j round trip — ~15 round trips × 3 bench runs ×
     37 gates is pure fixed overhead (guide §1.2: per-task work after the
-    algorithm).  Scoped overrides (session_settings) restore their previous
-    values themselves, so a tuned session stays tuned."""
+    algorithm).  Scoped overrides (``scoped``) run in a clone of the
+    session and never write it, so a tuned session stays tuned."""
     if not force and spark in _TUNED_SESSIONS:
         return spark
     for k, v in ENGINE_CONFS.items():

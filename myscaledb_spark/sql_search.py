@@ -622,6 +622,15 @@ def _sql_text_candidates(text_df, col, query, k, id_col, score_name, where):
     return scored.orderBy(F.col(score_name).desc(), F.col(id_col).asc()).limit(k)
 
 
+def _query_bytes(spark: SparkSession, expr: str) -> bytes:
+    """The bytes of a FixedString query expression (``char(...)``,
+    ``unbin``, ``unhex``, a string), evaluated by Spark.  A string result
+    encodes as latin-1, one byte per codepoint 0..255 (utf-8 would expand
+    >127 into two bytes and corrupt the bit vector)."""
+    v = spark.sql(f"SELECT {_rewrite_calls(expr)}").first()[0]
+    return bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode("latin-1")
+
+
 def maybe_binary_distance(spark: SparkSession, sql: str) -> DataFrame | None:
     """Execute `SELECT ..., distance(bincol, <bytes-expr>) AS d FROM t
     [WHERE p] ORDER BY ... LIMIT k` when the vector column is a BINARY
@@ -650,12 +659,9 @@ def maybe_binary_distance(spark: SparkSession, sql: str) -> DataFrame | None:
     if dtypes.get(col) not in ("binary", "string"):
         return None
     from myscaledb_spark.functions.vector import hamming_distance, jaccard_distance
-    from myscaledb_spark.sql_dialect import effective_vs_metric, _rewrite_calls as _rw
+    from myscaledb_spark.sql_dialect import effective_vs_metric
 
-    qv = spark.sql(f"SELECT {_rw(args[1])}").first()[0]
-    # latin-1: char(0..255) codepoints ARE the raw bytes (utf-8 would
-    # expand >127 into two bytes and corrupt the bit vector)
-    qbytes = bytes(qv) if isinstance(qv, (bytes, bytearray)) else str(qv).encode("latin-1")
+    qbytes = _query_bytes(spark, args[1])
     # metric resolution order = built index → table SETTINGS → Hamming
     # (the binary default; MergeTreeVSManager::getVSDescription)
     metric = effective_vs_metric(table).lower()
@@ -666,7 +672,7 @@ def maybe_binary_distance(spark: SparkSession, sql: str) -> DataFrame | None:
     alias = am.group(1) if am else "dist"
     df = spark.table(table)
     if spans["where"]:
-        df = df.filter(F.expr(_rw(sql[spans["where"][0]: spans["where"][1]])))
+        df = df.filter(F.expr(_rewrite_calls(sql[spans["where"][0]: spans["where"][1]])))
     dcol = (hamming_distance(col, qbytes) if metric == "hamming"
             else jaccard_distance(col, qbytes))
     # projection: plain identifiers + the distance item under its alias
@@ -703,18 +709,14 @@ def _binary_batch_distance(spark, df, sql, spans, table, vec_col, qarg,
     from pyspark.sql import Window
 
     from myscaledb_spark.functions.vector import hamming_distance, jaccard_distance
-    from myscaledb_spark.sql_dialect import effective_vs_metric, _rewrite_calls as _rw
+    from myscaledb_spark.sql_dialect import effective_vs_metric
 
     t = qarg.strip()
     if not (t.startswith("[") and t.endswith("]")):
         raise ChSqlError(
             f"batch_distance needs a bracket list of query vectors, got {t!r}"
         )
-    qbytes = []
-    for e in _split_args(t[1:-1]):
-        v = spark.sql(f"SELECT {_rw(e)}").first()[0]
-        qbytes.append(bytes(v) if isinstance(v, (bytes, bytearray))
-                      else str(v).encode("latin-1"))
+    qbytes = [_query_bytes(spark, e) for e in _split_args(t[1:-1])]
     metric = effective_vs_metric(table).lower()
     dist_fn = jaccard_distance if metric == "jaccard" else hamming_distance
     base_cols = plain if plain else [id_col]
@@ -941,11 +943,10 @@ def _run(spark: SparkSession, sql: str, kind: str) -> DataFrame:
             from myscaledb_spark.functions.text import text_search
             from myscaledb_spark.functions.vector import hamming_distance
 
-            qval = spark.sql(f"SELECT {_rewrite_calls(args[2])}").first()[0]
-            qbytes = qval if isinstance(qval, (bytes, bytearray)) else str(qval).encode("latin-1")
+            qbytes = _query_bytes(spark, args[2])
             metric = "Hamming"
             vec_cand = (
-                df.select(id_col, hamming_distance(vec_col, bytes(qbytes)).alias("_vdist"))
+                df.select(id_col, hamming_distance(vec_col, qbytes).alias("_vdist"))
                 .filter(F.col("_vdist").isNotNull())
                 .orderBy(F.col("_vdist").asc(), F.col(id_col).asc())
                 .limit(k)

@@ -39,7 +39,7 @@ from myscaledb_spark.operators.agg_state import (
     uniq_state,
     uniq_states,
 )
-from myscaledb_spark.session import collect_small, session_settings, values_relation
+from myscaledb_spark.session import checkpoint_scoped, collect_small_relation
 from myscaledb_spark.suite import register
 
 #: DuckDB longhand for the portable-HLL register → estimate math (the exact
@@ -117,9 +117,9 @@ def agg_state_merge_orders(spark, sf_dir):
         finalize_state("argMax", merge_state("argMax", "am")).alias("best_cust"),
         merge_finalize("uniqExact", "ue").alias("ndv"),
     )
-    rows = collect_small(merged, o, **{"spark.sql.shuffle.partitions": "8"})
-    local = None if rows is None else values_relation(spark, merged.schema, rows)
-    return merged if local is None else local
+    return collect_small_relation(
+        merged, o, **{"spark.sql.shuffle.partitions": "8"}
+    )
 
 
 @register(
@@ -200,12 +200,11 @@ def uniq_hll_state_events(spark, sf_dir):
         F.expr("map_from_arrays(collect_list(if(_b < 512, _b, null)),"
                " collect_list(if(_b < 512, _r, null)))").alias("_m"),
     )
-    with session_settings(
-        spark,
+    assembled = checkpoint_scoped(
+        assembled,
         **{"spark.sql.adaptive.enabled": "false",
            "spark.sql.shuffle.partitions": "8"},
-    ):
-        assembled = assembled.localCheckpoint(eager=True)
+    )
     slices = [
         f"transform(sequence({o}, {o + 255}), i -> coalesce(_m[i], 0))"
         f" AS {a}"

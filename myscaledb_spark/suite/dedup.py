@@ -144,7 +144,7 @@ def minhash_lsh_pairs_q(spark, sf_dir):
     At 100 TB the same query raises the partition count with the input."""
     from myscaledb_spark.functions.text import tokenize
     from myscaledb_spark.operators.dedup import minhash_dedup_pairs
-    from myscaledb_spark.session import session_settings
+    from myscaledb_spark.session import checkpoint_scoped
 
     docs = load_table(spark, sf_dir, "documents")
     # no size(_toks) pre-filter: the operator excludes short docs via the
@@ -154,10 +154,7 @@ def minhash_lsh_pairs_q(spark, sf_dir):
     pairs = minhash_dedup_pairs(
         toked, "doc_id", F.col("_toks"), 3, NUM_HASHES, BANDS, 0.5
     )
-    with session_settings(
-        spark, **{"spark.sql.shuffle.partitions": "8"}
-    ):
-        return pairs.localCheckpoint(eager=True)
+    return checkpoint_scoped(pairs, **{"spark.sql.shuffle.partitions": "8"})
 
 
 # --- SimHash fingerprints -----------------------------------------------------

@@ -11,7 +11,7 @@ from pyspark.sql import Window
 
 from myscaledb_spark.catalog import load_table
 from myscaledb_spark.operators.relational import asof_join, final_dedup, limit_by
-from myscaledb_spark.session import collect_small, values_relation
+from myscaledb_spark.session import collect_small_relation
 from myscaledb_spark.suite import register
 
 
@@ -97,10 +97,8 @@ def pricing_summary(spark, sf_dir):
     # Gated on the lineitem estimate (session.SMALL_INPUT_BYTES) — at
     # 100 TB the adaptive plan runs unchanged.  Execution confs only;
     # equivalence pinned by
-    # tests/test_opt_r11.py::test_pricing_small_input_scope_equals_adaptive.
-    rows = collect_small(out, li, **{"spark.sql.shuffle.partitions": "8"})
-    local = None if rows is None else values_relation(spark, out.schema, rows)
-    return out if local is None else local
+    # tests/test_small_input.py::test_pricing_small_input_scope_equals_adaptive.
+    return collect_small_relation(out, li, **{"spark.sql.shuffle.partitions": "8"})
 
 
 # --- multi-way join with broadcast dims (HashJoin.cpp / GLOBAL JOIN ≈
@@ -190,7 +188,7 @@ def revenue_by_nation(spark, sf_dir):
     # disabled).  The ≤|nations| rows re-emit as a VALUES LocalRelation
     # (no job on the caller's collect) instead of localCheckpoint, whose
     # materialization + checkpoint-scan cost two more tiny jobs.
-    rows = collect_small(
+    return collect_small_relation(
         out, li,
         **{
             "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -198,8 +196,6 @@ def revenue_by_nation(spark, sf_dir):
             "spark.sql.shuffle.partitions": "8",
         },
     )
-    local = None if rows is None else values_relation(spark, out.schema, rows)
-    return out if local is None else local
 
 
 # --- top-k after join+agg (TakeOrderedAndProject ≈ partial sort + merge with

@@ -23,6 +23,25 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def sql_conf(spark):
+    """``sql_conf(**{key: value})`` sets SQL confs on the shared session for
+    one test; each goes back to its earlier value (or is unset) after it."""
+    saved: dict = {}
+
+    def set_confs(**confs):
+        for k, v in confs.items():
+            saved.setdefault(k, spark.conf.get(k, None))
+            spark.conf.set(k, v)
+
+    yield set_confs
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -140,15 +140,14 @@ def test_minhash_excludes_short_docs_without_prefilter(spark):
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs] == [(1, 2, 1.0)]
 
 
-def test_cosine_neardup_drops_zero_norm_rows_under_ansi(spark):
+def test_cosine_neardup_drops_zero_norm_rows_under_ansi(spark, sql_conf):
     """A zero-norm row has no cosine (a zero divisor): it pairs with nothing,
     where it failed the whole self-join with DIVIDE_BY_ZERO under ANSI."""
     from myscaledb_spark.operators.similarity import cosine_neardup_pairs
-    from myscaledb_spark.session import session_settings
 
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 1.0])], "id int, v array<double>"
     )
-    with session_settings(spark, **{"spark.sql.ansi.enabled": "true"}):
-        pairs = [tuple(r) for r in cosine_neardup_pairs(df, "v", "id", 0.5).collect()]
+    sql_conf(**{"spark.sql.ansi.enabled": "true"})
+    pairs = [tuple(r) for r in cosine_neardup_pairs(df, "v", "id", 0.5).collect()]
     assert pairs == [(1, 3, 0.7071)]

@@ -281,3 +281,26 @@ def test_fts_append_and_fresh_search_job_counts(spark, tmp_path, monkeypatch):
     )
     assert (append_jobs, search_jobs) == (APPEND_JOBS, FRESH_SEARCH_JOBS)
     assert all(r.doc_id >= 100 for r in rows)  # only the batch has 'fresh'
+
+
+def test_frame_cache_empty_prefix_is_noop():
+    """evict_prefix('') must not clear the whole cache (every key
+    startswith(''))."""
+    from myscaledb_spark.plans import frame_cache
+
+    class _Fake:
+        unpersisted = False
+
+        def unpersist(self):
+            self.unpersisted = True
+            return self
+
+    key = ("/tmp/frame_cache_fake_root/idx", "frame")
+    frame_cache._CACHE[key] = _Fake()
+    try:
+        frame_cache.evict_prefix("")
+        assert key in frame_cache._CACHE
+        frame_cache.evict_prefix("/tmp/frame_cache_fake_root")
+        assert key not in frame_cache._CACHE
+    finally:
+        frame_cache._CACHE.pop(key, None)

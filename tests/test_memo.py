@@ -12,6 +12,7 @@ import re
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from myscaledb_spark import memo
@@ -231,8 +232,7 @@ def test_query_log_is_bounded(spark):
 
 def test_input_identity_is_read_only_in_memo():
     """Plan hashes, input file listings and weak session maps belong to
-    memo.py; a module with its own copy is a private memo.  session.py's
-    scope locks are the one other weak map."""
+    memo.py; a module with its own copy is a private memo."""
     stray = []
     for dirpath, _, files in os.walk(PKG):
         for f in files:
@@ -241,8 +241,6 @@ def test_input_identity_is_read_only_in_memo():
             path = os.path.join(dirpath, f)
             for ln, line in enumerate(open(path, encoding="utf-8"), start=1):
                 if not re.search(r"semanticHash\(|inputFiles\(|WeakKeyDictionary", line):
-                    continue
-                if f == "session.py" and line.startswith("_SCOPE_LOCKS"):
                     continue
                 stray.append(f"{os.path.relpath(path, PKG)}:{ln}")
     assert not stray, stray
@@ -285,3 +283,29 @@ def test_text_corpus_has_one_lookup_and_no_persisted_copy():
                     owners.append((rel, max(inner, key=lambda g: g.lineno).name))
     assert set(owners) == {(os.path.join("functions", "text.py"), "_snapshot")}, owners
     assert not persists, persists
+
+
+def test_rank_corr_value_tier_nan_single_tie_group(spark):
+    """A value-tier (low-cardinality) axis containing NaN spread over
+    several cells of the other axis must treat all NaN as ONE tie group
+    (Spark groupBy normalizes NaN; the driver-side dicts must too)."""
+    from myscaledb_spark.operators.stats import rank_corr
+
+    nan = float("nan")
+    # x: 3 distinct values incl. NaN -> value tier; y: unique -> NaN cells
+    # of x span many distinct y cells
+    data = [
+        (1.0, 10.0), (1.0, 20.0), (2.0, 30.0), (2.0, 40.0),
+        (nan, 50.0), (nan, 60.0), (nan, 70.0), (nan, 80.0),
+        (1.0, 90.0), (2.0, 100.0),
+    ]
+    df = spark.createDataFrame(data, "x double, y double")
+    got = rank_corr(df, "x", "y").first().rank_corr
+
+    pdf = df.toPandas()
+    # oracle: average ranks with NaN as a real tie group ranked last —
+    # matches the engine's NULL-first / NaN-last ordering
+    want = (
+        pdf["x"].rank(na_option="bottom").corr(pdf["y"].rank())
+    )
+    assert got == pytest.approx(want, abs=1e-12)

@@ -145,7 +145,7 @@ def test_join_broadcasts_dims(spark, monkeypatch):
     # the r11 small-input scope pre-materializes the ≤25-row result as a
     # VALUES LocalRelation — the join-shape audit is about the underlying
     # plan, so disable the scope for this check (equivalence of the two
-    # executions is pinned by test_opt_r11.py)
+    # executions is pinned by test_small_input.py)
     monkeypatch.setattr(session, "SMALL_INPUT_BYTES", 0)
     try:
         df = m.queries()["revenue_by_nation"](spark, SF_DIR)

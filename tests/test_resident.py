@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from myscaledb_spark import session
 from myscaledb_spark.functions import text as T
 from myscaledb_spark.operators.hybrid import hybrid_search
-from myscaledb_spark.session import session_settings
 from myscaledb_spark.sql_dialect import ch_sql
 
 _WORDS = ("ancient", "artistic", "strategic", "wisdom", "empires", "cultures",
@@ -134,7 +133,8 @@ def test_sql_distance_query_literals_read_as_spark_reads_them(spark, tmp_path, m
         assert _bits(driver) == _bits(want)
 
 
-def test_cosine_zero_norm_row_takes_the_spark_path(spark, tmp_path, monkeypatch):
+def test_cosine_zero_norm_row_takes_the_spark_path(spark, tmp_path, monkeypatch,
+                                                   sql_conf):
     """A zero-norm row has no Cosine distance: under ANSI the Spark plan
     raises DIVIDE_BY_ZERO, so the snapshot hands such a query to it."""
     from myscaledb_spark import sql_dialect
@@ -143,9 +143,9 @@ def test_cosine_zero_norm_row_takes_the_spark_path(spark, tmp_path, monkeypatch)
     monkeypatch.setitem(sql_dialect.TABLE_VS_METRIC, "t_res_zero", "Cosine")
     sql = ("SELECT id, distance(vector, [1.0, 0.5, 0.25, 2.0]) AS d FROM t_res_zero "
            "ORDER BY d LIMIT 5")
-    with session_settings(spark, **{"spark.sql.ansi.enabled": "true"}):
-        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            ch_sql(spark, sql).collect()
+    sql_conf(**{"spark.sql.ansi.enabled": "true"})
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        ch_sql(spark, sql).collect()
 
 
 @pytest.mark.parametrize("operator", ["OR", "AND"])

@@ -1,7 +1,7 @@
-"""The small-input primitives in ``myscaledb_spark.session``: the scoped
-SETTINGS block under concurrency, the VALUES re-emitter's round trip, the
-estimate-gated collect, and a source guard that keeps every optimizer-stats
-read and size gate going through them."""
+"""The small-input primitives in ``myscaledb_spark.session``: scoped
+execution in a cloned session under concurrency, the VALUES re-emitter's
+round trip, the estimate-gated collect, and a source guard that keeps every
+optimizer-stats read and size gate going through them."""
 
 from __future__ import annotations
 
@@ -12,8 +12,11 @@ import re
 import struct
 import sys
 import threading
+import time
+from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -25,7 +28,7 @@ from pyspark.sql.types import (
 )
 
 from myscaledb_spark import session
-from myscaledb_spark.session import collect_small, session_settings, values_relation
+from myscaledb_spark.session import collect_small, values_relation
 from tests.conftest import SF_DIR
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "myscaledb_spark")
@@ -46,64 +49,86 @@ def _jobs(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_overlapping_scopes_restore_every_conf(spark):
-    """Thread B opens a scope while thread A's is still open, and closes it
-    after A's.  Unserialized, B saves A's scoped values as its "previous"
-    ones and restores them last, leaving AQE off for good."""
-    before = {k: spark.conf.get(k) for k in (AQE, PARTS)}
-    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
-    errors: list = []
+@contextmanager
+def _scoped_collect_held_open(spark, tmp_path, **confs):
+    """Runs ``collect_small`` on a thread and yields while that collect is
+    blocked inside a Python UDF; the UDF returns when the block exits.  A
+    Python worker cannot see a driver Event, so the UDF signals through
+    two files."""
+    started, release = str(tmp_path / "started"), str(tmp_path / "release")
 
-    def run(fn):
-        try:
-            fn()
-        except Exception as e:  # pragma: no cover - reported below
-            errors.append(e)
+    @F.udf("long")
+    def hold(x):
+        import os
+        import time
 
-    def a():
-        with session_settings(spark, **{AQE: "false", PARTS: "3"}):
-            a_in.set()
-            b_in.wait(timeout=1)  # B cannot enter while the lock is held
-        a_out.set()
+        open(started, "w").close()
+        deadline = time.monotonic() + 60
+        while not os.path.exists(release) and time.monotonic() < deadline:
+            time.sleep(0.01)
+        return x
 
-    def b():
-        a_in.wait(timeout=10)
-        with session_settings(spark, **{AQE: "false", PARTS: "5"}):
-            b_in.set()
-            a_out.wait(timeout=10)
-
-    threads = [threading.Thread(target=run, args=(f,)) for f in (a, b)]
+    out: dict = {}
+    df = spark.range(1).select(hold("id").alias("id"))
+    t = threading.Thread(target=lambda: out.update(rows=collect_small(df, **confs)))
+    t.start()
     try:
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=30)
-        assert not any(t.is_alive() for t in threads)
-        assert not errors
-        assert {k: spark.conf.get(k) for k in before} == before
+        deadline = time.monotonic() + 60
+        while not os.path.exists(started):
+            assert t.is_alive() and time.monotonic() < deadline
+            time.sleep(0.01)
+        yield
     finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)
+        open(release, "w").close()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert [tuple(r) for r in out["rows"]] == [(0,)]
 
 
-def test_scopes_from_many_threads_see_their_own_confs(spark):
-    """More threads than cores, fast thread switching: inside its scope each
-    thread reads back its own values, and the session ends where it began."""
-    before = {k: spark.conf.get(k) for k in (AQE, PARTS)}
+def test_scoped_collect_leaves_the_session_adaptive(spark, tmp_path):
+    """While one thread's scoped collect (AQE off) is running, another
+    thread's unscoped aggregate on the same session plans adaptively: the
+    scope's confs live in a clone and never reach the caller's session."""
+    with _scoped_collect_held_open(spark, tmp_path, **{PARTS: "3"}):
+        agg = spark.range(100).groupBy((F.col("id") % 3).alias("g")).count()
+        plan = agg._jdf.queryExecution().executedPlan()
+        assert plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    assert sorted(tuple(r) for r in agg.collect()) == [(0, 34), (1, 33), (2, 33)]
+
+
+def test_scoped_collect_sees_runtime_confs_and_writes_none(spark, sql_conf, tmp_path):
+    """The clone carries a conf set on the session at runtime, and the
+    session's confs are the same before, during and after a scoped
+    collect."""
+    sql_conf(**{"spark.sql.session.timeZone": "America/Los_Angeles"})
+    before = spark.conf.getAll
+    rows = collect_small(spark.sql("SELECT current_timezone() AS tz"), **{PARTS: "3"})
+    assert [r["tz"] for r in rows] == ["America/Los_Angeles"]
+    with _scoped_collect_held_open(spark, tmp_path, **{PARTS: "3"}):
+        during = spark.conf.getAll
+    assert before == during == spark.conf.getAll
+
+
+def test_scoped_collects_from_many_threads_see_their_own_confs(spark):
+    """More threads than cores, fast thread switching: each scoped collect
+    plans under its own confs, and the session's confs end where they
+    began."""
+    before = spark.conf.getAll
     seen: list = []
     errors: list = []
 
-    def worker(i):
+    def worker(tz):
         try:
-            for _ in range(4):
-                with session_settings(spark, **{AQE: "false", PARTS: str(100 + i)}):
-                    seen.append((i, spark.conf.get(PARTS), spark.conf.get(AQE)))
+            for _ in range(2):
+                rows = collect_small(spark.sql("SELECT current_timezone() AS tz"),
+                                     **{"spark.sql.session.timeZone": tz})
+                seen.append((tz, rows[0]["tz"]))
         except Exception as e:  # pragma: no cover - reported below
             errors.append(e)
 
     old_interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
-    threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+    threads = [threading.Thread(target=worker, args=(f"Etc/GMT+{i}",)) for i in range(8)]
     try:
         for t in threads:
             t.start()
@@ -111,24 +136,24 @@ def test_scopes_from_many_threads_see_their_own_confs(spark):
             t.join(timeout=60)
     finally:
         sys.setswitchinterval(old_interval)
-    try:
-        assert not any(t.is_alive() for t in threads)
-        assert not errors
-        assert len(seen) == 32
-        assert all(p == str(100 + i) and a == "false" for i, p, a in seen)
-        assert {k: spark.conf.get(k) for k in before} == before
-    finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(seen) == 16 and all(tz == got for tz, got in seen), seen
+    assert spark.conf.getAll == before
 
 
-def test_nested_scopes_on_one_thread(spark):
-    before = spark.conf.get(PARTS)
-    with session_settings(spark, **{PARTS: "3"}):
-        with session_settings(spark, **{PARTS: "5"}):
-            assert spark.conf.get(PARTS) == "5"
-        assert spark.conf.get(PARTS) == "3"
-    assert spark.conf.get(PARTS) == before
+def test_checkpoint_scoped_hands_back_a_caller_frame(spark):
+    """The checkpoint runs under the scope's confs, and a step added on top
+    of the returned frame plans under the caller's (adaptively)."""
+    from myscaledb_spark.session import checkpoint_scoped
+
+    df = spark.range(100).groupBy((F.col("id") % 3).alias("g")).count()
+    done = checkpoint_scoped(df, **{AQE: "false", PARTS: "3"})
+    assert sorted(tuple(r) for r in done.collect()) == [(0, 34), (1, 33), (2, 33)]
+    total = done.groupBy((F.col("g") % 2).alias("h")).sum("count")
+    plan = total._jdf.queryExecution().executedPlan()
+    assert plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    assert sorted(tuple(r) for r in total.collect()) == [(0, 67), (1, 33)]
 
 
 _SCHEMA = StructType([
@@ -159,14 +184,12 @@ def _exact(rows):
 
 
 @pytest.mark.parametrize("escaped", ["false", "true"])
-def test_values_relation_equals_its_frame(spark, escaped):
+def test_values_relation_equals_its_frame(spark, sql_conf, escaped):
     df = spark.createDataFrame(_ROWS, _SCHEMA)
     rows = df.collect()
     assert math.copysign(1.0, rows[3]["d"]) == -1.0  # the input keeps -0.0
-    with session_settings(
-        spark, **{"spark.sql.parser.escapedStringLiterals": escaped}
-    ):
-        local = values_relation(spark, df.schema, rows)
+    sql_conf(**{"spark.sql.parser.escapedStringLiterals": escaped})
+    local = values_relation(spark, df.schema, rows)
     assert [(f.name, f.dataType) for f in local.schema] == [
         (f.name, f.dataType) for f in df.schema
     ]
@@ -238,6 +261,42 @@ def test_stats_reads_and_size_gates_go_through_session():
                 conf_reads.append(f"{os.path.relpath(path, PKG)}:{ln}")
     assert not stray, stray
     assert not conf_reads, conf_reads
+
+
+def _conf_target(node) -> bool:
+    """Whether ``node`` is ``<x>.conf`` or ``<x>.conf()``."""
+    if isinstance(node, ast.Call):
+        node = node.func
+    return isinstance(node, ast.Attribute) and node.attr == "conf"
+
+
+def test_session_confs_are_written_only_in_session():
+    """Per-query confs go through ``session.scoped``, which writes a clone:
+    outside session.py only ``catalog._load`` sets a conf on a session."""
+    allowed = {("catalog.py", "_load")}
+    stray = []
+    for path in _py_files():
+        name = os.path.basename(path)
+        if name == "session.py":
+            continue
+        tree = ast.parse(open(path, encoding="utf-8").read())
+        funcs = [
+            n for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for n in ast.walk(tree):
+            if not (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("set", "unset")
+                and _conf_target(n.func.value)
+            ):
+                continue
+            inner = [f for f in funcs if f.lineno <= n.lineno <= f.end_lineno]
+            owner = max(inner, key=lambda f: f.lineno).name if inner else None
+            if (name, owner) not in allowed:
+                stray.append(f"{os.path.relpath(path, PKG)}:{n.lineno}")
+    assert not stray, stray
 
 
 def test_agg_state_small_input_scope_equals_distributed(spark, monkeypatch):

@@ -3,6 +3,8 @@ DuckDB-computed expectations."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from myscaledb_spark.sql_dialect import ChSqlError, ch_sql, rewrite
@@ -985,3 +987,50 @@ def test_create_function_via_script(spark):
         assert out.first().t == 120.0
     finally:
         drop_sql_function("taxed")
+
+
+def test_div_zero_keywords_not_call_heads():
+    """'(a)/(b)' directly after a clause keyword must wrap only the paren
+    group, never absorb the keyword as a function name."""
+    from myscaledb_spark.sql_dialect import _rewrite_div_zero as rw
+
+    for sql, keyword in [
+        ("SELECT (a+b)/(c-d) FROM t", "SELECT"),
+        ("SELECT x FROM t WHERE (a)/(b) > 1", "WHERE"),
+        ("SELECT x FROM t HAVING (s)/(c) < 2", "HAVING"),
+        ("SELECT a FROM t1 JOIN t2 ON (t1.a)/(t2.b) > 1", "ON"),
+        ("SELECT DISTINCT (a)/(b) FROM t", "DISTINCT"),
+    ]:
+        out = rw(sql)
+        assert "CASE WHEN" in out, sql
+        # the keyword survives as a clause word followed by the wrap —
+        # never glued into a call like `SELECT(...)`-as-function or moved
+        assert f"{keyword} (CASE" in out, f"{sql!r} -> {out!r}"
+
+    # genuine call heads (including word-shaped aggregate names) ARE
+    # absorbed so the aggregate is not pushed inside the per-row CASE
+    out = rw("SELECT any(a)/(b) FROM t")
+    assert "(any(a)) / ((b))" in out and "any((CASE" not in out
+    out = rw("SELECT sum(a)/count() FROM t")
+    assert "(sum(a)) / (count())" in out
+
+
+def test_div_zero_keyword_forms_execute(spark):
+    """End-to-end through the dialect: the rewritten forms must parse and
+    produce ClickHouse IEEE semantics (x/0 = Inf, 0/0 = NaN)."""
+    from myscaledb_spark.sql_dialect import ch_sql
+
+    r = ch_sql(
+        spark,
+        "SELECT (number + 1)/(number - number) AS v FROM numbers(1)",
+    ).first()
+    assert math.isinf(r.v) and r.v > 0
+    # WHERE (a)/(b): the paren group right after WHERE must stay a plain
+    # predicate operand (number=0 row excluded: 0/0=NaN and Spark orders
+    # NaN greatest, a documented comparison deviation from IEEE)
+    rows = ch_sql(
+        spark,
+        "SELECT number FROM numbers(5) "
+        "WHERE (number + number)/(number) > 1 AND number != 0",
+    ).collect()
+    assert [r.number for r in rows] == [1, 2, 3, 4]

@@ -425,6 +425,36 @@ def test_binary_batch_distance_order_by_honored(spark):
     ch_script(spark, "DROP TABLE adv_bin")
 
 
+def test_binary_distance_char_query_ranks_by_hamming(spark):
+    """distance(FixedString column, <bytes expr>) through ch_sql ranks by
+    Hamming over the query's raw bytes, whether the expression evaluates to
+    binary (char(0, 255) is 0x00 0xFF) or to a string ('ab' is 0x61 0x62)."""
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    ch_script(spark, """
+        DROP TABLE IF EXISTS adv_bin_d;
+        CREATE TABLE adv_bin_d (id UInt32, v FixedString(2))
+          ENGINE = MergeTree ORDER BY id;
+        INSERT INTO adv_bin_d VALUES (1, unhex('0000')), (2, unhex('00FF')),
+          (3, unhex('FFFF')), (4, unhex('01FF'))
+    """)
+    try:
+        out = ch_sql(
+            spark,
+            "SELECT id, distance(v, char(0, 255)) AS d FROM adv_bin_d "
+            "WHERE id > 1 ORDER BY d, id LIMIT 3",
+        ).collect()
+        assert [(r.id, r.d) for r in out] == [(2, 0), (4, 1), (3, 8)]
+        out = ch_sql(
+            spark,
+            "SELECT id, distance(v, 'ab') AS d FROM adv_bin_d "
+            "WHERE id > 1 ORDER BY d, id LIMIT 3",
+        ).collect()
+        assert [(r.id, r.d) for r in out] == [(4, 7), (2, 8), (3, 10)]
+    finally:
+        ch_script(spark, "DROP TABLE adv_bin_d")
+
+
 _HS_DOCS = [
     (0, "ancient empires rise and fall", [0.5, 0.0, 1.0]),
     (1, "artistic expressions reflect cultures", [1.0, 1.5, 1.0]),

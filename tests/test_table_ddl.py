@@ -347,3 +347,36 @@ def test_ch_script_index_ddl_and_sleep(spark, tmp_path):
     ch_script(spark, "ALTER TABLE t_sidx DROP VECTOR INDEX v1", artifact_dir=art)
     assert IndexRegistry(art).get("v1")["status"] == "Dropped"
     ch_script(spark, "DROP TABLE t_sidx")
+
+
+def test_conformance_cleanup_pops_nested_registry(spark, tmp_path):
+    """A conformance file that CREATEs a Nested table and never DROPs it
+    must not leave NESTED_TABLES / TABLES entries to contaminate later
+    files' `alias.col` references."""
+    from myscaledb_spark.plans.table_ddl import TABLES as DDL_TABLES
+    from myscaledb_spark.sql_dialect import NESTED_TABLES
+    from tools.conformance import run_file
+
+    f = tmp_path / "nested_no_drop.sql"
+    f.write_text(
+        "CREATE TABLE nst_leak (x UInt32, n Nested(i8 Int8, s String)) "
+        "ENGINE = MergeTree ORDER BY x;\n"
+        "INSERT INTO nst_leak VALUES (1, [1, 2], ['a', 'b']);\n"
+        "SELECT x FROM nst_leak;\n"
+    )
+    status, _ = run_file(spark, str(f))
+    assert status in ("PASS", "RAN")
+    assert "nst_leak" not in NESTED_TABLES
+    assert "nst_leak" not in DDL_TABLES
+    assert not any(
+        t.name.startswith("nst_leak") for t in spark.catalog.listTables()
+    )
+    # a later query using alias `n` with column `i8` must NOT be
+    # backtick-mangled into a nonexistent `n.i8` dotted column
+    from myscaledb_spark.sql_dialect import ch_sql
+
+    r = ch_sql(
+        spark,
+        "SELECT n.i8 FROM (SELECT 42 AS i8) AS n",
+    ).first()
+    assert r[0] == 42

@@ -415,22 +415,20 @@ def test_two_stage_coarse_drops_undefined_rows(spark):
     assert [r["id"] for r in got] == want
 
 
-def test_two_stage_cosine_zero_coarse_prefix_under_ansi(spark):
+def test_two_stage_cosine_zero_coarse_prefix_under_ansi(spark, sql_conf):
     """Under ANSI a zero coarse prefix has no Cosine distance, where it
     raised DIVIDE_BY_ZERO: a zero coarse query ranks by the full vectors, a
     zero-prefix row ranks after the rows that have a coarse distance, and
     both searches equal vector_topk."""
-    from myscaledb_spark.session import session_settings
-
     df = spark.createDataFrame([(1, [0.0, 0.0, 1.0]), (2, [1.0, 0.0, 1.0])],
                                "id int, v array<double>")
-    with session_settings(spark, **{"spark.sql.ansi.enabled": "true"}):
-        for qv in ([0.0, 0.0, 1.0], [1.0, 0.0, 1.0]):
-            want = vector_topk(df, "v", qv, 2, "Cosine", id_col="id").collect()
-            got = two_stage_topk(df, "v", qv, 2, "Cosine", id_col="id",
-                                 coarse_dims=2).collect()
-            assert [tuple(r) for r in got] == [tuple(r) for r in want]
-            assert len(want) == 2
+    sql_conf(**{"spark.sql.ansi.enabled": "true"})
+    for qv in ([0.0, 0.0, 1.0], [1.0, 0.0, 1.0]):
+        want = vector_topk(df, "v", qv, 2, "Cosine", id_col="id").collect()
+        got = two_stage_topk(df, "v", qv, 2, "Cosine", id_col="id",
+                             coarse_dims=2).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want]
+        assert len(want) == 2
 
 
 def test_metric_names_are_case_insensitive(spark):
