@@ -707,9 +707,8 @@ def text_search(
     ``resident`` as ``bm25_scores`` does: the index serves only a global
     top-k, which a filter applied afterwards would thin below k rows.
     Without ``where``, a corpus with a driver snapshot (``resident.py``)
-    answers from its postings and returns a VALUES relation: no Spark job,
-    the same rows and score bits (a column type without a literal takes
-    the direct path)."""
+    answers from its postings and returns a local relation of every
+    column: no Spark job, the same rows and score bits."""
     _check_k(k)
     if artifact_dir is not None and where is None:
         from myscaledb_spark.plans.vector_index import IndexRegistry
@@ -751,9 +750,7 @@ def text_search(
         from myscaledb_spark.resident import emit
 
         pos, scores = res.bm25_top(text_col, terms, k, id_col, tokenizer, spec, operator)
-        out = emit(res, pos, df.columns, score_name, scores)
-        if out is not None:
-            return out
+        return emit(res, pos, df.columns, score_name, scores)
     scored = bm25_scores(
         df, text_col, query, tokenizer, operator, score_name, spec=spec,
         resident=res,

@@ -41,7 +41,7 @@ from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.functions.text import _snapshot, text_search, tokenize_query
 from myscaledb_spark.functions.vector import METRIC_ASCENDING
 from myscaledb_spark.resident import mark_served
-from myscaledb_spark.session import _sort_key, collect_small, values_relation
+from myscaledb_spark.session import _sort_key, collect_small, local_relation, spark_order
 
 DEFAULT_FUSION_K = 60  # src/Core/Settings.h:920
 DEFAULT_FUSION_WEIGHT = 0.5  # src/Core/Settings.h:919
@@ -206,12 +206,11 @@ def _collect_legs(vec_cand: DataFrame, txt_cand: DataFrame, id_col: str,
 
 
 def _spark_ordered(rows: list, descending: bool) -> list:
-    """(id, score) rows by score, then id ascending, in Spark's order: NULL
-    first ascending and last descending, NaN above every double, -0.0 equal
-    to 0.0 (stable sorts, last key first)."""
-    out = sorted(rows, key=lambda r: _sort_key(r[0]))
-    out.sort(key=lambda r: _sort_key(r[1]), reverse=descending)
-    return out
+    """(id, score) rows by score, then id ascending, in Spark's order
+    (``session.spark_order``)."""
+    order = spark_order(len(rows), [([r[1] for r in rows], descending),
+                                    ([r[0] for r in rows], False)])
+    return [rows[i] for i in order]
 
 
 def _rrf_scores(rows: list, ascending: bool, fusion_k: int) -> dict:
@@ -259,8 +258,10 @@ def _fuse_local(
 ) -> DataFrame:
     """RSF/RRF over collected (id, score[, part]) candidate lists: ranks and
     normalization per part, one fused score per id (a missing leg adds
-    0.0), then the global top-k by (score DESC, id ASC) as a VALUES
-    relation.  Every id lives in exactly one part."""
+    0.0), then the global top-k by (score DESC, id ASC) as a
+    ``session.local_relation`` of any id type.  Every id lives in exactly
+    one part."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     asc = METRIC_ASCENDING.get(metric, True)
@@ -285,12 +286,11 @@ def _fuse_local(
             ts.update(_rsf_scores(txt, False, float(fusion_weight)))
     fused = [(i, vs.get(i, 0.0) + ts.get(i, 0.0)) for i in {**vs, **ts}]
     top = _spark_ordered(fused, descending=True)[:k]
-    schema = StructType([
-        StructField(id_col, id_type, True),
-        StructField(score_name, DoubleType(), True),
-    ])
-    local = values_relation(spark, schema, top)
-    return spark.createDataFrame(top, schema) if local is None else local
+    schema = StructType([StructField(id_col, id_type), StructField(score_name, DoubleType())])
+    # the ids are Python values as Spark collects them (a naive datetime is
+    # local time): PySpark's own local-data converter reads them back
+    table = LocalDataToArrowConversion.convert(top, schema, False) if top else None
+    return local_relation(spark, schema, table)
 
 
 def fuse_candidates(
@@ -316,7 +316,7 @@ def fuse_candidates(
     0.0.  ``part_col`` scopes ranking and normalization to each data part
     (candidates must carry it in BOTH frames; every id lives in exactly one
     part); the merge across parts is by fused score.  The result is a
-    VALUES relation: collecting it runs no job."""
+    local relation (``_fuse_local``): collecting it runs no job."""
     ft = fusion_type.lower()
     if ft not in ("rsf", "rrf"):
         raise InvalidSearchQuery(f"fusion_type must be rsf|rrf, got {fusion_type!r}")

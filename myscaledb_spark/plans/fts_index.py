@@ -48,7 +48,7 @@ from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.functions.text import bm25_scores_from_tf, tokenize, tokenize_query
 from myscaledb_spark.plans.frame_cache import cached_parquet, data_files
 from myscaledb_spark.plans.vector_index import IndexRegistry
-from myscaledb_spark.session import observed_metrics
+from myscaledb_spark.session import local_relation, observed_metrics
 
 #: the schema every dfreq dir is written with, so reads skip inference
 _DFREQ_SCHEMA = StructType(
@@ -210,7 +210,7 @@ def _write_postings(toked: DataFrame, path: str, mode: str):
     written = (
         spark.read.schema(postings.schema).parquet(*added)
         if added
-        else spark.createDataFrame([], postings.schema)
+        else local_relation(spark, postings.schema)
     )
     return written, got
 

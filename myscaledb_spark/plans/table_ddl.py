@@ -36,6 +36,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from myscaledb_spark.sql_dialect import (
     ChSqlError,
@@ -58,13 +59,14 @@ _CHECKPOINT_EVERY = 16  # parts before the store lineage is squashed
 
 def _empty_store(spark: SparkSession, fields: str) -> DataFrame:
     """A new table's store: no rows, the DDL ``fields`` plus the insertion
-    sequence and the lightweight-delete mask, as an empty local relation —
-    its size estimate is 0, where an empty RDD's is unknown, so a small
-    table stays within the small-input gates."""
-    from myscaledb_spark.session import values_relation
+    sequence and the lightweight-delete mask, as an empty
+    ``session.local_relation`` — its size estimate is 0, where an empty
+    RDD's is unknown, so a small table stays within the small-input
+    gates."""
+    from myscaledb_spark.session import local_relation
 
     ddl = f"{fields}, {ISEQ} bigint, {EXISTS} boolean"
-    return values_relation(spark, spark.createDataFrame([], ddl).schema, [])
+    return local_relation(spark, T.StructType.fromDDL(ddl))
 
 
 def _refresh_view(spark: SparkSession, table: str) -> None:

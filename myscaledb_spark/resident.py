@@ -21,9 +21,9 @@ hybrid and SQL searches alike), so it never answers from before its input
 was rewritten.  It is the only resident copy of a corpus: a larger one
 streams.  Distance, BM25
 and fusion then run on the driver (``vector.driver_distance``,
-``text.bm25_sum``, ``hybrid._fuse_local``) and return their top-k as a
-VALUES relation: 0 Spark jobs.  Scores and order equal the Spark path's bit
-for bit.
+``text.bm25_sum``, ``hybrid._fuse_local``) and return their top-k through
+``session.local_relation``, whatever the column types: 0 Spark jobs.
+Scores and order equal the Spark path's bit for bit.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from myscaledb_spark.session import _sort_key, _sql_literal, values_relation
+from myscaledb_spark.session import collect_arrow, local_relation, spark_order
 
 #: metrics the driver fold serves (``vector.driver_distance``)
 DRIVER_METRICS = ("L2", "L2Squared", "IP", "Cosine")
@@ -155,10 +155,6 @@ class Snapshot:
     def values(self, col: str, positions) -> list:
         return self.table.column(col).take(pa.array(positions, pa.int64())).to_pylist()
 
-    def emittable(self, cols) -> bool:
-        """Whether ``values_relation`` has a literal for each of ``cols``."""
-        return all(_sql_literal(self.schema[c].dataType) is not None for c in cols)
-
     # -- vectors -------------------------------------------------------------
     def vectors(self, col: str, dim: int):
         """(rows with a ``dim``-element vector without NULL elements, their
@@ -264,7 +260,7 @@ def build(df: DataFrame) -> Snapshot | None:
         if isinstance(f.dataType, T.StringType):
             toks[f.name] = (f"__snap_toks_{i}", f"__snap_dl_{i}")
             toked = _toked(toked, f.name, "simple", None, *toks[f.name])
-    return Snapshot(df, toked.toArrow(), toks)
+    return Snapshot(df, collect_arrow(toked), toks)
 
 
 def top(values: np.ndarray, k: int, descending: bool, tie=None) -> list[int]:
@@ -281,22 +277,20 @@ def top(values: np.ndarray, k: int, descending: bool, tie=None) -> list[int]:
         cand = np.flatnonzero(key <= kth).tolist()
     else:
         cand = list(range(len(values)))
+    keys = [([float(values[i]) for i in cand], descending)]
     if tie is not None:
-        ties = dict(zip(cand, tie(cand)))
-        cand.sort(key=lambda i: _sort_key(ties[i]))
-    cand.sort(key=lambda i: _sort_key(float(values[i])), reverse=descending)
-    return cand[:k]
+        keys.append((tie(cand), False))
+    return [cand[i] for i in spark_order(len(cand), keys)[:k]]
 
 
 def emit(snap: Snapshot, positions: list, cols: list, score_name: str,
-         scores: list) -> DataFrame | None:
-    """Rows ``positions`` of ``cols`` plus ``score_name`` = ``scores`` as a
-    VALUES relation (collecting it runs no job), in the given order; None
-    when a column type has no literal and the caller takes the Spark path."""
-    if not snap.emittable(cols):
-        return None
+         scores: list) -> DataFrame:
+    """Rows ``positions`` of ``cols`` plus ``score_name`` = ``scores``, in
+    the given order, as a ``session.local_relation`` (collecting it runs no
+    job): one Arrow ``take`` on the snapshot's table, any column type."""
     schema = T.StructType([snap.schema[c] for c in cols]
                           + [T.StructField(score_name, T.DoubleType(), True)])
-    data = [snap.values(c, positions) for c in cols] + [scores]
+    table = snap.table.select(cols).take(pa.array(positions, pa.int64())).append_column(
+        score_name, pa.array(scores, pa.float64()))
     mark_served()
-    return values_relation(snap.df.sparkSession, schema, list(zip(*data)))
+    return local_relation(snap.df.sparkSession, schema, table)

@@ -9,16 +9,19 @@ The small-input primitives live here too.  A query whose input the
 optimizer estimates small runs under per-query confs (``scoped``: AQE off,
 fewer shuffle partitions) in a clone of the caller's session, so the
 caller's session is never written; its rows come back to the driver
-(``collect_small``) or as a VALUES relation (``values_relation``).
+(``collect_small``) or as a local relation (``collect_small_relation``).
+Every answer the driver computes leaves through one emitter,
+``local_relation``: Arrow record batches become a Spark ``LocalRelation``
+of any column type, which collects with no Spark job.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import time
 import weakref as _weakref
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -133,52 +136,35 @@ def estimated_bytes(df: DataFrame) -> int:
         return 0
 
 
+def _small_run(df: DataFrame, sized: DataFrame | None, **confs: str) -> DataFrame | None:
+    """``df`` under ``scoped`` with AQE off (plus ``confs``) when the
+    estimate of ``sized`` is in ``(0, SMALL_INPUT_BYTES]``; None otherwise.
+    Without ``sized`` the estimate is the scoped plan's own, so a small
+    query is optimized once, in the clone."""
+    run = scoped(df, **{"spark.sql.adaptive.enabled": "false", **confs})
+    est = estimated_bytes(run if sized is None else sized)
+    return run if 0 < est <= SMALL_INPUT_BYTES else None
+
+
 def collect_small(
     df: DataFrame, sized: DataFrame | None = None, **confs: str
 ) -> list | None:
     """``df.collect()`` under ``scoped`` with AQE off (plus ``confs``) when
-    the estimate of ``sized`` is in ``(0, SMALL_INPUT_BYTES]``; None
-    otherwise, and the caller runs its adaptive plan.  Without ``sized``
-    the estimate is the scoped plan's own, so a small query is optimized
-    once, in the clone.  Execution confs only, so the rows are the ones the
-    adaptive plan returns."""
-    run = scoped(df, **{"spark.sql.adaptive.enabled": "false", **confs})
-    est = estimated_bytes(run if sized is None else sized)
-    return run.collect() if 0 < est <= SMALL_INPUT_BYTES else None
+    the estimate of ``sized`` is small (``_small_run``); None otherwise,
+    and the caller runs its adaptive plan.  Execution confs only, so the
+    rows are the ones the adaptive plan returns."""
+    run = _small_run(df, sized, **confs)
+    return None if run is None else run.collect()
 
 
 def collect_small_relation(
     df: DataFrame, sized: DataFrame | None = None, **confs: str
 ) -> DataFrame:
-    """``collect_small``'s rows re-emitted as a ``values_relation`` (the
-    caller's collect on it runs no job); ``df`` itself when the estimate is
-    above the gate or a field type has no literal emitter."""
-    rows = collect_small(df, sized, **confs)
-    local = None if rows is None else values_relation(df.sparkSession, df.schema, rows)
-    return df if local is None else local
-
-
-_NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
-
-
-def _sql_literal(dtype: T.DataType):
-    """``value -> SQL literal`` for one field type, or None when the type has
-    no emitter.  Strings go through a UTF-8 hex literal, which reads the
-    same under either ``spark.sql.parser.escapedStringLiterals`` setting."""
-    t = dtype.simpleString()
-    if isinstance(dtype, T.StringType):
-        return lambda v: f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return lambda v: f"CAST({int(v)} AS {t})"
-    if isinstance(dtype, T.DoubleType):
-        def double(v):
-            v = float(v)
-            if math.isfinite(v):
-                return f"{v!r}D"  # repr round-trips; -0.0D keeps the sign
-            return f"CAST('{_NON_FINITE[repr(v)]}' AS DOUBLE)"
-
-        return double
-    return None
+    """``df``'s rows collected as Arrow under ``collect_small``'s scope and
+    gate, re-emitted by ``local_relation`` (the caller's collect on it runs
+    no job); ``df`` itself when the estimate is above the gate."""
+    run = _small_run(df, sized, **confs)
+    return df if run is None else local_relation(df.sparkSession, df.schema, collect_arrow(run))
 
 
 def _sort_key(v):
@@ -191,31 +177,87 @@ def _sort_key(v):
     return (1, v)
 
 
-def values_relation(
-    spark: SparkSession, schema: T.StructType, rows: list
-) -> DataFrame | None:
-    """``rows`` (collected from a frame with ``schema``) as a SQL VALUES
-    LocalRelation with the same field names and types.  collect() on it
-    runs no Spark job, where createDataFrame pays a 1-task job and a pickle
-    round trip; its size estimate is known, where an RDD scan's is not.
-    None when a field type of a non-empty ``rows`` has no literal emitter
-    (no rows need none)."""
-    emit = [_sql_literal(f.dataType) for f in schema.fields]
-    if rows and any(e is None for e in emit):
+def spark_order(n: int, keys: list) -> list[int]:
+    """Indices of ``n`` rows sorted as Spark sorts by ``keys``, a list of
+    (values, descending) with one value per row, first key first: ASC NULLS
+    FIRST, DESC NULLS LAST, NaN above every double, -0.0 equal to 0.0; rows
+    that tie on every key keep their order (stable sorts, last key first)."""
+    order = list(range(n))
+    for values, desc in reversed(keys):
+        order.sort(key=lambda i: _sort_key(values[i]), reverse=desc)
+    return order
+
+
+def _relaxed(dt: T.DataType) -> T.DataType:
+    """``dt`` with every struct field nullable, at any depth.  A NULL
+    struct's NOT NULL fields are NULL in Arrow, which an Arrow schema that
+    keeps the NOT NULL refuses."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _relaxed(f.dataType), True, f.metadata)
+                             for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_relaxed(dt.elementType), dt.containsNull)
+    if isinstance(dt, T.MapType):
+        return T.MapType(dt.keyType, _relaxed(dt.valueType), dt.valueContainsNull)
+    return dt
+
+
+def collect_arrow(df: DataFrame) -> pa.Table:
+    """``df``'s rows as one Arrow table, by one ``toArrow`` action; nested
+    struct fields are cast to nullable first (``_relaxed``), so a NULL
+    struct with NOT NULL fields collects.  ``local_relation`` takes the
+    table back with ``df``'s own schema."""
+    if any(_relaxed(f.dataType) != f.dataType for f in df.schema.fields):
+        df = df.to(_relaxed(df.schema))
+    return df.toArrow()
+
+
+def local_rows(df: DataFrame) -> pa.Table | None:
+    """The rows of ``df`` as Arrow, read on the driver with no Spark job,
+    when ``df`` plans to a ``LocalRelation`` (an emitted answer, or a
+    projection of one); None for any other plan.  ``toArrow`` on a local
+    relation would run a job."""
+    qe = df._jdf.queryExecution()
+    leaves = qe.analyzed().collectLeaves()  # checked first: no optimizer run for a scan
+    if leaves.size() != 1 or leaves.head().nodeName() != "LocalRelation":
         return None
-    cols = ", ".join("`" + f.name.replace("`", "``") + "`" for f in schema.fields)
+    plan = qe.optimizedPlan()
+    if plan.nodeName() != "LocalRelation":
+        return None
+    arrow = df.sparkSession._jvm.org.apache.spark.sql.execution.arrow
+    streams = getattr(getattr(arrow, "ArrowConverters$"), "MODULE$").toBatchWithSchemaIterator(
+        plan.data().iterator(), plan.schema(), 0, 1 << 62, "UTC", False, False)
+    tables = [pa.ipc.open_stream(streams.next()).read_all() for _ in iter(streams.hasNext, False)]
+    return pa.concat_tables(tables) if tables else _arrow_schema(df.schema).empty_table()
 
-    def row_sql(r):
-        return "(" + ", ".join(
-            f"CAST(NULL AS {f.dataType.simpleString()})" if v is None else e(v)
-            for f, e, v in zip(schema.fields, emit, r)
-        ) + ")"
 
-    if not rows:
-        nulls = row_sql([None] * len(schema.fields))
-        return spark.sql(f"SELECT * FROM (VALUES {nulls}) AS t({cols}) WHERE FALSE")
-    body = ", ".join(row_sql(r) for r in rows)
-    return spark.sql(f"SELECT * FROM (VALUES {body}) AS t({cols})")
+def _arrow_schema(schema: T.StructType, large: bool = False) -> pa.Schema:
+    """``schema``'s Arrow form with its struct fields nullable (``_relaxed``)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(_relaxed(schema), prefers_large_types=large)
+
+
+def local_relation(
+    spark: SparkSession, schema: T.StructType, table: pa.Table | None = None
+) -> DataFrame:
+    """``table`` (no rows when None) as a Spark ``LocalRelation`` with
+    ``schema``: the one way a driver-computed answer becomes a frame.
+    collect() on it runs no Spark job, its size estimate is known (an RDD
+    scan's is not), and every column type round-trips bit for bit.  The
+    record batches go to the JVM call behind ``createDataFrame(pa.Table)``
+    without its temp file; above Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` of batch bytes the
+    JVM makes it an RDD scan instead.  The table is cast to ``_arrow_schema(schema)``; a
+    record batch carries no nullability, so the frame keeps ``schema``'s
+    own."""
+    target = _arrow_schema(schema, spark._jconf.arrowUseLargeVarTypes())
+    table = target.empty_table() if table is None else table.rename_columns(target.names)
+    jvm = spark._jvm
+    batches = [b.serialize().to_pybytes() for b in table.cast(target).to_batches()]
+    jdf = jvm.PythonSQLUtils.toDataFrame(
+        jvm.PythonUtils.toSeq(batches).iterator(), schema.json(), spark._jsparkSession)
+    return DataFrame(jdf, spark)
 
 
 #: how long observed_metrics waits for an Observation's metrics.  Measured

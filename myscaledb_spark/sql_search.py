@@ -35,12 +35,14 @@ Everything executes as the operators' DataFrame plans — Catalyst sees the
 same declarative shape as the API path; this module is parsing only.  Two
 exceptions run on the driver.  An ORDER BY over an already-local result:
 every hybridsearch shape (binary, per-part, partial fts coverage, default)
-fuses into a VALUES relation, and those rows sort on the driver with
-Spark's ordering (`session._sort_key`).  And a search over a plain table
-with a driver snapshot (`resident.py`, below `session.DRIVER_RESIDENT_BYTES`):
-the flat `distance()` shape, plain-term textsearch and the default
-hybridsearch answer in numpy with the Spark plan's rows and score bits, and
-no Spark job; `ch_sql` logs them as `<driver-resident plan>`.
+fuses into a local relation, whose rows are read back as Arrow and sort on
+the driver with Spark's ordering (`session.spark_order`).  And a search over
+a plain table with a driver snapshot (`resident.py`, below
+`session.DRIVER_RESIDENT_BYTES`): the flat `distance()` shape, plain-term
+textsearch and the default hybridsearch answer in numpy with the Spark
+plan's rows and score bits, and no Spark job, whatever the output column
+types; `ch_sql` logs them as `<driver-resident plan>`.  Both leave through
+`session.local_relation`.
 """
 
 from __future__ import annotations
@@ -504,26 +506,20 @@ def _apply_order(df: DataFrame, alias: str, order_text: str | None, id_col: str)
 
 def _sorted_local(df: DataFrame, keys: list) -> DataFrame | None:
     """``df`` sorted by ``keys`` [(column, descending)] on the driver and
-    re-emitted as a VALUES relation, when ``df`` is already a local relation
-    (the fused rows of a hybrid search) — Spark would plan an adaptive
-    range-partitioned sort of ≤k rows, three jobs.  Ordering is Spark's:
-    ASC NULLS FIRST, DESC NULLS LAST, NaN largest, -0.0 equal to 0.0; rows
-    that tie on every key keep their order.  None when ``df`` is not local
-    or a key is not one of its string/integral/double columns."""
-    from myscaledb_spark.session import _sort_key, values_relation
+    re-emitted as a local relation, when ``df`` is already one (the fused
+    rows of a hybrid search; ``session.local_rows`` reads them with no job)
+    — Spark would plan an adaptive range-partitioned sort of ≤k rows, three
+    jobs.  Ordering is Spark's (``session.spark_order``); rows that tie on
+    every key keep their order.  None when ``df`` is not local or a key is
+    not one of its string/integral/double columns."""
     from pyspark.sql import types as T
 
-    try:
-        qe = df._jdf.queryExecution()
-        # the analyzed plan's one leaf first: no optimizer run for a scan
-        leaves = qe.analyzed().collectLeaves()
-        if leaves.size() != 1 or leaves.head().nodeName() != "LocalRelation":
-            return None
-        if qe.optimizedPlan().nodeName() != "LocalRelation":
-            return None
-    except Exception:
+    from myscaledb_spark.session import local_relation, local_rows, spark_order
+
+    table = local_rows(df)
+    if table is None:
         return None
-    names = df.columns
+    names = table.column_names
     sortable = (T.StringType, T.ByteType, T.ShortType, T.IntegerType,
                 T.LongType, T.DoubleType)
     if len(set(names)) != len(names) or any(
@@ -531,28 +527,24 @@ def _sorted_local(df: DataFrame, keys: list) -> DataFrame | None:
         for c, _ in keys
     ):
         return None
-    rows = df.collect()
-    for c, desc in reversed(keys):  # stable sorts, last key first
-        i = names.index(c)
-        rows.sort(key=lambda r: _sort_key(r[i]), reverse=desc)
-    return values_relation(df.sparkSession, df.schema, rows)
+    order = spark_order(table.num_rows, [(table.column(c).to_pylist(), d) for c, d in keys])
+    return local_relation(df.sparkSession, df.schema, table.take(order))
 
 
 def _resident_answer(snap, pos: list, scores: list, cols: list, alias: str,
                      keys: list) -> DataFrame | None:
     """A search answered from a driver snapshot: rows ``pos`` of ``cols``
     plus the score ``alias``, sorted by ``keys`` as ``_sorted_local`` sorts,
-    as a VALUES relation; None when a key is not an output column or a
-    column has no literal (the caller runs the Spark path)."""
+    as a local relation (``resident.emit``); None when a key is not an
+    output column (the caller runs the Spark path)."""
     from myscaledb_spark.resident import emit
-    from myscaledb_spark.session import _sort_key
+    from myscaledb_spark.session import spark_order
 
-    if any(c not in cols + [alias] for c, _ in keys) or not snap.emittable(cols):
+    if any(c not in cols + [alias] for c, _ in keys):
         return None
-    order = list(range(len(pos)))
-    for c, desc in reversed(keys):  # stable sorts, last key first
-        v = scores if c == alias else snap.values(c, pos)
-        order.sort(key=lambda i: _sort_key(v[i]), reverse=desc)
+    order = spark_order(len(pos), [
+        (scores if c == alias else snap.values(c, pos), desc) for c, desc in keys
+    ])
     return emit(snap, [pos[i] for i in order], cols, alias, [scores[i] for i in order])
 
 

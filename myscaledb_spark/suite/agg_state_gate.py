@@ -94,7 +94,7 @@ def agg_state_merge_orders(spark, sf_dir):
     the plan runs under AQE unchanged.  Results are identical either way
     — the scope changes execution confs only, and every state column is
     partitioning-insensitive (sorted arrays, untied min_by/max_by).  The
-    ≤|status| rows re-emit as a VALUES LocalRelation: the r10
+    ≤|status| rows re-emit as a local relation: the r10
     localCheckpoint shape paid one more job for the checkpoint scan on
     the caller's collect (2 jobs → 1).
     """

@@ -185,7 +185,7 @@ def revenue_by_nation(spark, sf_dir):
     # (session.SMALL_INPUT_BYTES) — at 100 TB the estimate exceeds the
     # gate and the adaptive dims-first plan runs unchanged
     # (plans/r11/revenue_by_nation_after.txt captures it with the scope
-    # disabled).  The ≤|nations| rows re-emit as a VALUES LocalRelation
+    # disabled).  The ≤|nations| rows re-emit as a local relation
     # (no job on the caller's collect) instead of localCheckpoint, whose
     # materialization + checkpoint-scan cost two more tiny jobs.
     return collect_small_relation(

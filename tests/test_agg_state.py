@@ -309,3 +309,19 @@ def test_dialect_if_state_composition(spark, orders):
     ).collect()[0]
     assert out["s"] == direct["s"] and float(out["a"]) == float(direct["a"])
     assert out["ndv"] == direct["ndv"]
+
+
+def test_uniq_state_all_null_group_surfaces(spark):
+    from myscaledb_spark.operators.agg_state import uniq_finalize, uniq_state
+
+    df = spark.createDataFrame(
+        [("a", "x"), ("a", "y"), ("b", None), ("b", None)],
+        "k string, v string",
+    )
+    st = uniq_state(df, ["k"], "v")
+    rows = {r.k: r.state for r in st.collect()}
+    assert set(rows) == {"a", "b"}          # the all-NULL group is present
+    assert all(x == 0 for x in rows["b"])    # with an all-zero register set
+    est = {r.k: r.est for r in
+           st.select("k", uniq_finalize("state").alias("est")).collect()}
+    assert est["b"] == 0 and round(est["a"]) == 2

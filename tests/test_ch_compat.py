@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from myscaledb_spark.functions import ch_compat as ch
+from myscaledb_spark.sql_dialect import ch_sql
 
 
 def test_math_family(spark):
@@ -340,3 +341,20 @@ def test_ngram_null_haystack_is_null(spark):
         ngramDistance("s", "abcdef").alias("dist"),
     ).collect()
     assert r.sim is None and r.dist is None
+
+
+def test_unbin_pads_to_byte_boundary(spark):
+    # 3-bit input → one byte 0x05 (reference unbin('101') = '\x05')
+    row = ch_sql(spark, "SELECT hex(unbin('101')) AS h").first()
+    assert row.h == "05"
+    # 9 bits → two bytes, high bit in the first byte (reference pads left)
+    row = ch_sql(spark, "SELECT hex(unbin('100000001')) AS h").first()
+    assert row.h == "0101"
+    # exact byte multiple unchanged
+    row = ch_sql(spark, "SELECT hex(unbin('0000010100000101')) AS h").first()
+    assert row.h == "0505"
+
+
+def test_unbin_refuses_over_64_bits(spark):
+    with pytest.raises(Exception, match="64 bits"):
+        ch_sql(spark, f"SELECT unbin('{'1' * 65}') AS b").collect()

@@ -207,3 +207,36 @@ def test_explain_ast_join_union_cte(spark):
     ).collect())
     assert "TableExpression (children 1)" in joined
     assert "Subquery (children 1)" in joined
+
+
+def test_explain_syntax_falls_back_beyond_pinned_shape(spark):
+    ch_script(spark, """
+        DROP TABLE IF EXISTS adv7_vec;
+        CREATE TABLE adv7_vec (id UInt32, label String, v UInt32)
+          ENGINE = MergeTree ORDER BY id;
+        INSERT INTO adv7_vec SELECT number, 'x', number FROM numbers(10)
+    """)
+    try:
+        # three conjuncts: beyond the 00024 two-single-column-conjunct
+        # heuristic — the print must NOT fabricate a PREWHERE
+        out = [
+            r[0]
+            for r in ch_script(
+                spark,
+                "EXPLAIN SYNTAX SELECT id FROM adv7_vec "
+                "WHERE id > 1 AND label = 'x' AND v < 9",
+            ).collect()
+        ]
+        assert not any("PREWHERE" in line for line in out)
+        # the pinned two-conjunct shape still prints the 00024 form
+        out2 = [
+            r[0]
+            for r in ch_script(
+                spark,
+                "EXPLAIN SYNTAX SELECT id FROM adv7_vec "
+                "WHERE id > 1 AND label = 'x'",
+            ).collect()
+        ]
+        assert "PREWHERE id > 1" in out2
+    finally:
+        ch_script(spark, "DROP TABLE adv7_vec")

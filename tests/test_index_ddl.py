@@ -286,3 +286,21 @@ def test_every_index_type_serves_search_index_and_hybrid(spark, tmp_path, ddl_ty
         index_name="v", fts_name="fts",
     ).collect()
     assert len(fused) == 5
+
+
+def test_compound_alter_rejects_leading_non_index_action(spark, tmp_path):
+    from myscaledb_spark.errors import InvalidSearchQuery
+    from myscaledb_spark.plans.ddl import alter_index_ddl
+
+    df = spark.range(10).select(
+        F.col("id"), F.array(F.rand(1), F.rand(2)).alias("vec")
+    )
+    with pytest.raises(InvalidSearchQuery, match="compound ALTER"):
+        alter_index_ddl(
+            spark,
+            "ALTER TABLE t MODIFY SETTING x = 1, "
+            "ADD VECTOR INDEX vi vec TYPE FLAT",
+            df,
+            "id",
+            str(tmp_path),
+        )

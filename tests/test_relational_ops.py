@@ -90,3 +90,18 @@ def test_window_groups_frame(spark):
     assert got[("a", 2, 5.0)] == 35.0
     assert got[("a", 4, 1.0)] == 6.0
     assert got[("b", 7, 100.0)] == 100.0
+
+
+def test_with_fill_api_computed_interpolate(spark):
+    from myscaledb_spark.operators.relational import with_fill
+
+    df = spark.createDataFrame(
+        [(1, 10.0), (5, 80.0)], "x int, v double"
+    )
+    rows = {
+        r.x: r.v
+        for r in with_fill(
+            df, "x", 1, interpolate={"v": lambda c: c * 2}
+        ).collect()
+    }
+    assert rows == {1: 10.0, 2: 20.0, 3: 40.0, 4: 80.0, 5: 80.0}

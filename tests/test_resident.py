@@ -62,8 +62,13 @@ def _jobs(spark, fn):
 
 
 def _bits(rows):
-    return [tuple(struct.pack(">d", v).hex() if isinstance(v, float) else v for v in r)
-            for r in rows]
+    """Rows with every double, in a list too, as its bit pattern."""
+    def bits(v):
+        if isinstance(v, float):
+            return struct.pack(">d", v).hex()
+        return [bits(x) for x in v] if isinstance(v, list) else v
+
+    return [tuple(bits(v) for v in r) for r in rows]
 
 
 def _tie_groups(rows):
@@ -151,13 +156,16 @@ def test_cosine_zero_norm_row_takes_the_spark_path(spark, tmp_path, monkeypatch,
 @pytest.mark.parametrize("operator", ["OR", "AND"])
 def test_text_search_equals_spark_plan(spark, tmp_path, monkeypatch, operator):
     """text_search over a snapshot equals the streaming plan: full rows and
-    score bits, with NULL, empty and token-less docs and an absent term."""
-    df = _view(spark, tmp_path, "t_res_text", _rows()).select("id", "doc")
-    for q in ("ancient wisdom", "military zzqabsent", "rise"):
-        driver, want = _driver_then_spark(spark, monkeypatch, lambda: T.text_search(
-            df, "doc", q, 12, id_col="id", operator=operator).collect())
-        assert _bits(driver) == _bits(want)
-    assert driver
+    score bits, with NULL, empty and token-less docs and an absent term,
+    over the full view (an array<float> column included) and over a
+    projection of it."""
+    full = _view(spark, tmp_path, "t_res_text", _rows())
+    for df in (full, full.select("id", "doc")):
+        for q in ("ancient wisdom", "military zzqabsent", "rise"):
+            driver, want = _driver_then_spark(spark, monkeypatch, lambda: T.text_search(
+                df, "doc", q, 12, id_col="id", operator=operator).collect())
+            assert _bits(driver) == _bits(want)
+        assert driver
 
 
 @pytest.mark.parametrize("metric", ["L2", "IP", "Cosine"])
@@ -173,6 +181,31 @@ def test_hybrid_search_equals_spark_plan(spark, tmp_path, monkeypatch, metric, f
             fusion_type=fusion, metric=metric).collect())
         assert _bits(driver) == _bits(want)
     assert driver
+
+
+def test_null_struct_with_not_null_fields_is_served(spark, tmp_path, monkeypatch):
+    """A NULL struct whose fields are NOT NULL has NULL fields in Arrow: the
+    snapshot collects it and the answers carry it back with its schema.
+    text_search, hybrid_search and SQL distance() over such a frame equal
+    the Spark path and run no job once the snapshot is built."""
+    base = _view(spark, tmp_path, "t_res_struct_src", _rows(60))
+    st = F.struct(F.lit(1).alias("x"), F.lit("a").alias("y"))
+    df = base.withColumn("st", F.when(F.col("id") % 3 == 0, F.lit(None)).otherwise(st))
+    assert not df.schema["st"].dataType["x"].nullable and df.schema["st"].nullable
+    df.createOrReplaceTempView("t_res_struct")
+    sql = ("SELECT id, st, distance(vector, [0.5, -1.0, 0.25, 2.0]) AS d FROM t_res_struct "
+           "ORDER BY d LIMIT 9")
+    for fn in (
+        lambda: T.text_search(df, "doc", "ancient wisdom", 9, id_col="id").collect(),
+        lambda: hybrid_search(df, "vector", "doc", [0.5, -1.0, 0.25, 2.0],
+                              "ancient cultures", 9, "id").collect(),
+        lambda: ch_sql(spark, sql).collect(),
+    ):
+        driver, want = _driver_then_spark(spark, monkeypatch, fn)
+        assert _tie_groups(driver) == _tie_groups(want)
+        assert driver
+        if "st" in driver[0].__fields__:  # NULL and non-NULL structs came back
+            assert {r["st"] is None for r in driver} == {True, False}
 
 
 def test_snapshot_idf_log_equals_spark_log(spark):

@@ -1,7 +1,8 @@
 """The small-input primitives in ``myscaledb_spark.session``: scoped
-execution in a cloned session under concurrency, the VALUES re-emitter's
-round trip, the estimate-gated collect, and a source guard that keeps every
-optimizer-stats read and size gate going through them."""
+execution in a cloned session under concurrency, the Arrow LocalRelation
+emitter's round trip, the estimate-gated collect, and source guards that
+keep every optimizer-stats read, size gate and driver-served answer going
+through them."""
 
 from __future__ import annotations
 
@@ -15,10 +16,10 @@ import threading
 import time
 from contextlib import contextmanager
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
     IntegerType,
     LongType,
@@ -28,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from myscaledb_spark import session
-from myscaledb_spark.session import collect_small, values_relation
+from myscaledb_spark.session import collect_arrow, collect_small, local_relation, local_rows
 from tests.conftest import SF_DIR
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "myscaledb_spark")
@@ -183,37 +184,76 @@ def _exact(rows):
     ]
 
 
-@pytest.mark.parametrize("escaped", ["false", "true"])
-def test_values_relation_equals_its_frame(spark, sql_conf, escaped):
+def _table(rows, schema):
+    """``rows`` as an Arrow table with ``schema``'s names; ``local_relation``
+    casts the inferred column types to ``schema``'s."""
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    return pa.table([list(c) for c in cols], names=schema.names)
+
+
+def _plan_node(df):
+    return df._jdf.queryExecution().optimizedPlan().nodeName()
+
+
+def test_local_relation_equals_its_frame(spark):
     df = spark.createDataFrame(_ROWS, _SCHEMA)
     rows = df.collect()
     assert math.copysign(1.0, rows[3]["d"]) == -1.0  # the input keeps -0.0
-    sql_conf(**{"spark.sql.parser.escapedStringLiterals": escaped})
-    local = values_relation(spark, df.schema, rows)
+    local = local_relation(spark, df.schema, collect_arrow(df))
     assert [(f.name, f.dataType) for f in local.schema] == [
         (f.name, f.dataType) for f in df.schema
     ]
     assert _exact(local.collect()) == _exact(rows)
 
 
-def test_values_relation_empty_keeps_schema_and_runs_no_job(spark):
-    local = values_relation(spark, _SCHEMA, [])
+def test_local_relation_empty_keeps_schema_and_runs_no_job(spark):
+    local = local_relation(spark, _SCHEMA)
     assert [(f.name, f.dataType) for f in local.schema] == [
         (f.name, f.dataType) for f in _SCHEMA
     ]
-    rows, jobs = _jobs(spark, "values-empty", local.collect)
+    assert _plan_node(local) == "LocalRelation"
+    rows, jobs = _jobs(spark, "local-empty", local.collect)
     assert rows == [] and jobs == 0
     rows, jobs = _jobs(
-        spark, "values-rows", values_relation(spark, _SCHEMA, _ROWS[:2]).collect
+        spark, "local-rows", local_relation(spark, _SCHEMA, _table(_ROWS[:2], _SCHEMA)).collect
     )
-    assert len(rows) == 2 and jobs == 0
+    assert _exact(rows) == _exact(_ROWS[:2]) and jobs == 0
+    ten = StructType([StructField("id", LongType()), StructField("score", DoubleType())])
+    local = local_relation(spark, ten, _table([(i, i / 3) for i in range(10)], ten))
+    assert _plan_node(local) == "LocalRelation"
+    rows, jobs = _jobs(spark, "local-ten", local.collect)
+    assert [tuple(r) for r in rows] == [(i, i / 3) for i in range(10)] and jobs == 0
 
 
-def test_values_relation_declines_unknown_types(spark):
-    schema = StructType([StructField("a", StringType()), StructField("b", IntegerType())])
-    assert values_relation(spark, schema, [("a", 1)]) is not None
-    odd = StructType([StructField("v", ArrayType(DoubleType()))])
-    assert values_relation(spark, odd, [([1.0],)]) is None
+def test_local_relation_round_trips_every_type(spark, sql_conf):
+    """Every column type leaves the driver exactly: floats with -0.0, NaN
+    and ±Infinity, decimal, date, binary, tinyint, boolean, a timestamp in
+    a DST gap of the session time zone, timestamp_ntz, an array with a
+    NULL element, a map, a nullable struct, a NULL struct whose field is
+    NOT NULL and a string with quotes, backslashes and non-ASCII text;
+    from a collect and from a local read, as a LocalRelation that collects
+    with no job."""
+    sql_conf(**{"spark.sql.session.timeZone": "America/Los_Angeles"})
+    df = spark.sql(r"""SELECT *, IF(bo, named_struct('x', 1), NULL) AS nn FROM VALUES
+      (CAST(1.5 AS FLOAT), -0.0D, CAST(1.234 AS DECIMAL(5,3)), DATE'2024-03-10',
+       X'00FF', CAST(-7 AS TINYINT), true, TIMESTAMP'2024-03-10 02:30:00',
+       TIMESTAMP_NTZ'2024-03-10 02:30:00', array(1, NULL, 3), map('a', 1),
+       named_struct('x', 1, 'y', 'a'), 'é 漢字 \' " \\'),
+      (CAST('NaN' AS FLOAT), CAST('Infinity' AS DOUBLE), NULL, NULL, NULL, NULL,
+       NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+      (CAST('-Infinity' AS FLOAT), CAST('NaN' AS DOUBLE), NULL, NULL, NULL, NULL,
+       false, NULL, NULL, array(), map(), NULL, '')
+      AS t(f, d, dec, dt, b, ti, bo, ts, tsn, arr, m, st, s)""")
+    want = df.collect()
+    assert math.copysign(1.0, want[0]["d"]) == -1.0
+    assert not df.schema["nn"].dataType["x"].nullable and want[1]["nn"] is None
+    for table in (collect_arrow(df), local_rows(df)):
+        local = local_relation(spark, df.schema, table)
+        assert local.schema == df.schema and _plan_node(local) == "LocalRelation"
+        rows, jobs = _jobs(spark, "local-types", local.collect)
+        assert repr(rows) == repr(want) and jobs == 0
+    _, jobs = _jobs(spark, "local-read", lambda: local_rows(df))
+    assert jobs == 0
 
 
 def test_collect_small_gate_and_restore(spark, monkeypatch):
@@ -297,6 +337,29 @@ def test_session_confs_are_written_only_in_session():
             if (name, owner) not in allowed:
                 stray.append(f"{os.path.relpath(path, PKG)}:{n.lineno}")
     assert not stray, stray
+
+
+def test_driver_answers_leave_through_local_relation():
+    """One emitter for driver-served answers: no module names the deleted
+    SQL-literal emitter or its type check, ``PythonSQLUtils`` (the JVM entry
+    of ``session.local_relation``) appears only in session.py, and the
+    driver-served search modules build no frame from VALUES text or
+    ``createDataFrame``."""
+    served = {"resident.py", "sql_search.py", os.path.join("operators", "hybrid.py"),
+              os.path.join("functions", "text.py")}
+    stray = []
+    for path in _py_files():
+        rel = os.path.relpath(path, PKG)
+        src = open(path, encoding="utf-8").read()
+        if re.search(r"\b(values_relation|emittable)\b|session\._sql_literal|"
+                     r"session import[^\n]*\b_sql_literal\b", src):
+            stray.append(f"{rel}: deleted emitter")
+        if "PythonSQLUtils" in src and rel != "session.py":
+            stray.append(f"{rel}: PythonSQLUtils")
+        if rel in served and ("(VALUES" in src or "createDataFrame(" in src):
+            stray.append(f"{rel}: VALUES/createDataFrame")
+    assert not stray, stray
+    assert "def _sql_literal" not in open(os.path.join(PKG, "session.py"), encoding="utf-8").read()
 
 
 def test_agg_state_small_input_scope_equals_distributed(spark, monkeypatch):

@@ -4,6 +4,7 @@ mandatory LIMIT, ORDER BY direction, unknown params)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -201,8 +202,8 @@ def test_sql_searches_run_no_job_after_the_first(spark, tmp_path):
     """The first search on a table builds its driver snapshot in at most one
     Spark job; then SQL distance, textsearch and hybridsearch with fresh
     queries each run none: numpy over the snapshot, rows emitted as a
-    VALUES relation.  (Before the snapshot they ran 1 job each, and before
-    the resident corpus 4, then 3 and 8.)"""
+    local relation, a selected vector column too.  (Before the snapshot
+    they ran 1 job each, and before the resident corpus 4, then 3 and 8.)"""
     _pin_view(spark, "t_pin_jobs", str(tmp_path / "t_pin_jobs"))
     first, n_first = _jobs(
         spark, "pin-first",
@@ -215,10 +216,12 @@ def test_sql_searches_run_no_job_after_the_first(spark, tmp_path):
             _distance_sql("t_pin_jobs"),
             _textsearch_sql("t_pin_jobs", "wisdom rise"),
             _hybridsearch_sql("t_pin_jobs", "military cultures"),
+            _textsearch_sql("t_pin_jobs", "ancient rise").replace("id,", "id, vector,", 1),
+            _distance_sql("t_pin_jobs", "[0.5, 1.0, 2.0]").replace("id,", "id, vector,", 1),
         ])
     ]
     assert all(rows for rows, _ in steady)
-    assert [n for _, n in steady] == [0, 0, 0]
+    assert [n for _, n in steady] == [0, 0, 0, 0, 0]
 
 
 def _key_groups(rows, idx):
@@ -240,10 +243,10 @@ def _key_groups(rows, idx):
 def test_driver_order_by_equals_spark_sort(spark):
     """_apply_order over a local relation sorts on the driver with Spark's
     ordering (ASC NULLS FIRST, DESC NULLS LAST, NaN largest, -0.0 == 0.0)
-    and runs no job; the rows equal Spark's Sort of the same VALUES rows."""
+    and runs no job; the rows equal Spark's Sort of the same rows."""
     from pyspark.sql import types as T
 
-    from myscaledb_spark.session import values_relation
+    from myscaledb_spark.session import local_relation
     from myscaledb_spark.sql_search import _apply_order
 
     schema = T.StructType([
@@ -255,7 +258,7 @@ def test_driver_order_by_equals_spark_sort(spark):
             (5, 0.0, "e"), (4, None, "f"), (7, 1.0, "g"), (6, nan, "h"),
             (None, None, "i"), (8, 2.5, "é"), (9, -3.0, "a"), (10, 1.0, None),
             (None, nan, "k"), (-1, 0.0, "d")]
-    local = values_relation(spark, schema, rows)
+    local = local_relation(spark, schema, pa.table([list(c) for c in zip(*rows)], names=schema.names))
     for order, keys in [
         ("s DESC", [("s", True)]),
         ("s DESC, id", [("s", True), ("id", False)]),

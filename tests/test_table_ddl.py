@@ -5,7 +5,13 @@ from __future__ import annotations
 
 import pytest
 
-from myscaledb_spark.plans.table_ddl import ch_ddl, ch_type_to_spark
+from myscaledb_spark.plans.table_ddl import (
+    SESSION_SETTINGS,
+    ch_ddl,
+    ch_type_to_spark,
+    reset_session_settings,
+    set_statement,
+)
 from myscaledb_spark.sql_dialect import ChSqlError, ch_sql
 
 
@@ -380,3 +386,12 @@ def test_conformance_cleanup_pops_nested_registry(spark, tmp_path):
         "SELECT n.i8 FROM (SELECT 42 AS i8) AS n",
     ).first()
     assert r[0] == 42
+
+
+def test_session_settings_reset():
+    set_statement("SET optimize_move_to_prewhere_for_vector_search = 0")
+    assert (
+        SESSION_SETTINGS["optimize_move_to_prewhere_for_vector_search"] == "0"
+    )
+    reset_session_settings()
+    assert "optimize_move_to_prewhere_for_vector_search" not in SESSION_SETTINGS

@@ -10,6 +10,7 @@ import math
 import re
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -757,13 +758,15 @@ def test_fuse_local_equals_fuse_candidates(spark, kind):
     from pyspark.sql import types as T
 
     from myscaledb_spark.operators.hybrid import _fuse_local, fuse_candidates
-    from myscaledb_spark.session import values_relation
+    from myscaledb_spark.session import local_relation
 
     def frame(rows, score, part=False):
         fields = [T.StructField("id", T.LongType()), T.StructField(score, T.DoubleType())]
         if part:
             fields.append(T.StructField("_part", T.IntegerType()))
-        return values_relation(spark, T.StructType(fields), rows)
+        cols = list(zip(*rows)) or [()] * len(fields)
+        names = [f.name for f in fields]
+        return local_relation(spark, T.StructType(fields), pa.table([list(c) for c in cols], names=names))
 
     def bits(rows):
         return [(r[0], struct.pack(">d", r[1]).hex()) for r in rows]
