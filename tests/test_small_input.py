@@ -195,10 +195,14 @@ def _plan_node(df):
     return df._jdf.queryExecution().optimizedPlan().nodeName()
 
 
-def test_local_relation_equals_its_frame(spark):
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_values_relation_equals_its_frame(spark, sql_conf, escaped):
+    """The driver-built relation equals its frame whatever the SQL parser's
+    string-literal setting: no value passes through SQL text."""
     df = spark.createDataFrame(_ROWS, _SCHEMA)
     rows = df.collect()
     assert math.copysign(1.0, rows[3]["d"]) == -1.0  # the input keeps -0.0
+    sql_conf(**{"spark.sql.parser.escapedStringLiterals": escaped})
     local = local_relation(spark, df.schema, collect_arrow(df))
     assert [(f.name, f.dataType) for f in local.schema] == [
         (f.name, f.dataType) for f in df.schema
