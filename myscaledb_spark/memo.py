@@ -67,6 +67,25 @@ def has(spark: SparkSession, ns: str, key) -> bool:
         return (ns, key) in _STORES.get(spark, {})
 
 
+def peek(spark: SparkSession, ns: str, key):
+    """(fingerprint, value) of (``ns``, ``key``) as stored, under any
+    fingerprint, or None; neither releases nor reorders it.  A caller that
+    can extend a stale value (a directory that only gained files) reads it
+    here before ``get`` releases it."""
+    with _LOCK:
+        return _STORES.get(spark, {}).get((ns, key))
+
+
+def drop(ns: str, match) -> None:
+    """Release every entry of ``ns`` whose key satisfies ``match(key)``, in
+    every session (DETACH / DROP / TRUNCATE expire an index this way)."""
+    with _LOCK:
+        gone = [store.pop(k) for store in list(_STORES.values())
+                for k in [k for k in store if k[0] == ns and match(k[1])]]
+    for e in gone:
+        _release(e)
+
+
 def get(spark: SparkSession, ns: str, key, fp, build=None, slots: int = 8):
     """The value of (``ns``, ``key``) under fingerprint ``fp``, built with
     ``build()`` and stored when missing.  An entry under another fingerprint

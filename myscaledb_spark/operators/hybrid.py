@@ -22,7 +22,8 @@ happens, and it reuses the single-search primitives.  The default path
 over the driver snapshot that text search keeps, with no Spark job, and
 streams both legs over a corpus too large for one; the indexed path
 (`hybrid_search_indexed`) takes its vector leg from any registered ANN
-index (`ddl.search_index`) and its text leg from the FTS artifact; the SQL
+index (`ddl.search_index`) and its text leg from the FTS artifact — with
+no Spark job when both artifacts are held on the driver; the SQL
 hybridsearch shapes (`sql_search`) build their own legs, per part where the
 table has several.  Every path fuses
 through `_fuse_local` on the driver, as the reference fuses in memory on
@@ -41,7 +42,9 @@ from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.functions.text import _snapshot, text_search, tokenize_query
 from myscaledb_spark.functions.vector import METRIC_ASCENDING
 from myscaledb_spark.resident import mark_served
-from myscaledb_spark.session import _sort_key, collect_small, local_relation, spark_order
+from myscaledb_spark.session import (
+    _sort_key, collect_small, local_relation, local_rows, spark_order,
+)
 
 DEFAULT_FUSION_K = 60  # src/Core/Settings.h:920
 DEFAULT_FUSION_WEIGHT = 0.5  # src/Core/Settings.h:919
@@ -171,38 +174,41 @@ def _filtered(df: DataFrame) -> bool:
 def _collect_legs(vec_cand: DataFrame, txt_cand: DataFrame, id_col: str,
                   part_col: str | None = None):
     """(id type, [(id, _vdist[, part])], [(id, _bm25[, part])]) of two
-    candidate frames, collected by ONE job.  The legs are tiny top-k
-    subtrees; collecting them separately paid two job schedulings and two
-    py4j round trips per query.  A tagged union keeps each leg's own top-k
-    (rows are re-split by the tag), so the two lists are exactly what two
-    collects return.  Below the small-input gate the job runs with AQE off
-    and one shuffle partition, in a clone of the session
-    (``session.collect_small``): AQE's per-stage re-planning jobs cost more
-    than a ≤2k′-row result's whole data path, and the caller's session is
-    never written, so clients sharing it run their legs concurrently.
-    Above the gate the adaptive plan runs unchanged."""
+    candidate frames.  When both legs plan to a local relation (a search
+    answered on the driver), their rows are read with
+    ``session.local_rows``: no job.  Otherwise ONE job collects them: the
+    legs are tiny top-k subtrees, and collecting them separately paid two
+    job schedulings and two py4j round trips per query.  A tagged union
+    keeps each leg's own top-k (rows are re-split by the tag), so the two
+    lists are exactly what two collects return.  Below the small-input gate
+    the job runs with AQE off and one shuffle partition, in a clone of the
+    session (``session.collect_small``): AQE's per-stage re-planning jobs
+    cost more than a ≤2k′-row result's whole data path, and the caller's
+    session is never written, so clients sharing it run their legs
+    concurrently.  Above the gate the adaptive plan runs unchanged."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
     id_type = vec_cand.schema[id_col].dataType
     part = [F.col(part_col)] if part_col else []
-    tagged = vec_cand.select(
-        F.col(id_col).alias("_id"),
-        F.col("_vdist").alias("_score"),
-        F.lit(0).alias("_leg"),
-        *part,
-    ).unionAll(
-        txt_cand.select(
-            F.col(id_col).cast(id_type).alias("_id"),
-            F.col("_bm25").alias("_score"),
-            F.lit(1).alias("_leg"),
-            *part,
-        )
-    )
-    rows = collect_small(tagged, **{"spark.sql.shuffle.partitions": "1"})
-    if rows is None:
-        rows = tagged.collect()
-    legs: tuple = ([], [])
+    legs = [
+        vec_cand.select(F.col(id_col).alias("_id"), F.col("_vdist").alias("_score"),
+                        F.lit(0).alias("_leg"), *part),
+        txt_cand.select(F.col(id_col).cast(id_type).alias("_id"),
+                        F.col("_bm25").alias("_score"), F.lit(1).alias("_leg"), *part),
+    ]
+    local = [local_rows(leg) for leg in legs]
+    if any(t is None for t in local):
+        tagged = legs[0].unionAll(legs[1])
+        rows = collect_small(tagged, **{"spark.sql.shuffle.partitions": "1"})
+        if rows is None:
+            rows = tagged.collect()
+    else:
+        rows = [r for t, leg in zip(local, legs)
+                for r in ArrowTableToRowsConversion.convert(t, leg.schema)]
+    split: tuple = ([], [])
     for r in rows:
-        legs[r[2]].append((r[0], r[1], *r[3:]))
-    return id_type, legs[0], legs[1]
+        split[r[2]].append((r[0], r[1], *r[3:]))
+    return id_type, split[0], split[1]
 
 
 def _spark_ordered(rows: list, descending: bool) -> list:

@@ -21,11 +21,17 @@ Artifact layout (parquet):
 An artifact without dfreq/ or without total_dl predates this layout;
 searches and appends refuse it with one "rebuild the index" error.
 
-Query path (`fts_search`) scores through the same
-``text.bm25_scores_from_tf`` as the direct path, but takes tf and dl from
-ONLY the query terms' postings (predicate pushed to the parquet scan)
-instead of re-tokenizing the corpus — at 100 TB this is
-the difference between touching ~kB of postings and re-scanning the table.
+Query path (`fts_search`): below ``session.DRIVER_RESIDENT_BYTES`` of Arrow
+the postings and dfreq directories are held on the driver
+(``frame_cache.resident_parquet``, read with pyarrow, keyed on their file
+listing; an append's new postings files are read alone and concatenated)
+and the search runs in numpy over their CSR form (``resident.Postings``)
+with the scorer's own expression (``text.bm25_sum``): no Spark job, the
+Spark plan's rows and score bits.  Above the gate it scores through the
+same ``text.bm25_scores_from_tf`` as the direct path, but takes tf and dl
+from ONLY the query terms' postings (predicate pushed to the parquet scan)
+instead of re-tokenizing the corpus — at 100 TB this is the difference
+between touching ~kB of postings and re-scanning the table.
 Incremental maintenance (`append_to_fts_index`, ≈ VIBuilderUpdater on new
 parts, foreachBatch in streaming ingestion) costs O(batch + vocabulary), not
 O(index): the batch is tokenized once, its postings are appended, dfreq is
@@ -39,14 +45,18 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType,
+)
 
 from myscaledb_spark import memo
 from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.functions.text import bm25_scores_from_tf, tokenize, tokenize_query
-from myscaledb_spark.plans.frame_cache import cached_parquet, data_files
+from myscaledb_spark.plans.frame_cache import cached_parquet, data_files, resident_parquet
 from myscaledb_spark.plans.vector_index import IndexRegistry
 from myscaledb_spark.session import local_relation, observed_metrics
 
@@ -54,6 +64,10 @@ from myscaledb_spark.session import local_relation, observed_metrics
 _DFREQ_SCHEMA = StructType(
     [StructField("term", StringType()), StructField("df", LongType())]
 )
+
+#: doc id types the driver search serves: its doc grouping is Arrow's value
+#: equality, Spark's for these
+_DRIVER_ID_TYPES = (ByteType, ShortType, IntegerType, LongType, StringType)
 
 #: Retired: the artifact frames live in ``frame_cache._CACHE`` with every
 #: other index's.  The name stays, always empty, for tools that count the
@@ -245,7 +259,9 @@ def fts_search(
     """Index-backed BM25 top-k. Same scores as the direct path (table-global
     stats), but the scan touches only the query terms' postings.
 
-    One groupBy over the term-pruned postings pivots each doc's tf per
+    Below the driver gate the answer comes from the artifact held on the
+    driver (``_driver_search``) as a local relation, with no Spark job.
+    Above it, one groupBy over the term-pruned postings pivots each doc's tf per
     query term, in query-term order, and takes its dl; df comes from the
     dfreq memo and N and avgdl from stats.json, all as literals into
     ``bm25_scores_from_tf`` — the direct path's scorer, so indexed and
@@ -262,6 +278,9 @@ def fts_search(
     )
     if not terms:
         raise InvalidSearchQuery("empty text-search query after tokenization")
+    out = _driver_search(spark, base, stats, terms, k, operator, score_name)
+    if out is not None:
+        return out
     all_postings, dfreq = _cached_index_frames(spark, base)
     dfmap = _cached_dfmap(dfreq, base, terms)
     # term filter prunes the cached columnar batches (min/max per batch;
@@ -279,6 +298,35 @@ def fts_search(
         .orderBy(F.col(score_name).desc(), F.col("doc_id").asc())
         .limit(k)
     )
+
+
+def _driver_search(spark, base: str, stats: dict, terms: list, k: int, operator: str,
+                   score_name: str) -> DataFrame | None:
+    """``fts_search``'s answer from the postings and dfreq held on the
+    driver (``frame_cache.resident_parquet``), with no Spark job: the
+    postings as CSR (``Snapshot.index_postings``: tf summed per (doc,
+    term), a doc's length its largest dl among the query terms' postings,
+    a duplicated doc id one doc), df from dfreq, N and avgdl from
+    stats.json, scored by ``Postings.bm25`` (``text.bm25_sum``, each idf's
+    log from ``StrictMath.log``) and ordered by (score DESC, doc_id ASC) —
+    the Spark plan's rows and score bits.  None when either directory is
+    not held or doc ids are neither integers nor strings."""
+    from myscaledb_spark.resident import emit_rows, top
+
+    post = resident_parquet(spark, os.path.join(base, "postings"))
+    if post is None or not isinstance(post.schema["doc_id"].dataType, _DRIVER_ID_TYPES):
+        return None
+    dfreq = resident_parquet(spark, os.path.join(base, "dfreq"))
+    if dfreq is None:
+        return None
+    found = dfreq.table.filter(pc.is_in(dfreq.table.column("term"), pa.array(terms, pa.string())))
+    dfs = dict(zip(found.column("term").to_pylist(), found.column("df").to_pylist()))
+    inv = post.index_postings()
+    cand, scores = inv.bm25(terms, operator, float(stats["n_docs"]), float(stats["avgdl"]),
+                            [float(dfs.get(t, 0.0)) for t in terms])
+    best = top(scores, k, True, lambda i: inv.ids.take(pa.array(cand[i])).to_pylist())
+    return emit_rows(spark, StructType([post.schema["doc_id"]]), pa.table({"doc_id": inv.ids}),
+                     cand[best].tolist(), score_name, scores[best].tolist())
 
 
 def append_to_fts_index(

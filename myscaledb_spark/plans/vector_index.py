@@ -17,6 +17,16 @@ Search (`ivf_search`) mirrors `MergeTreeVSManager::vectorScan`:
      (optionally pre-filtered — filter applies before top-k like the
      reference's filtered search).
 
+Below ``session.DRIVER_RESIDENT_BYTES`` of Arrow, a search without a filter
+or a delete mask answers from the inverted lists held on the driver
+(``frame_cache.resident_parquet``: read with pyarrow, keyed on the file
+listing, an append's new files read alone) — the reference's in-memory
+index cache (VICacheManager): the probed lists' rows are ranked in numpy by
+the distance kernel's own fold (``resident.Snapshot.nearest``), bit for bit
+``vector_topk``'s answer, with no Spark job.  Above the gate, and for the
+other shapes, the persisted frame (``frame_cache.cached_parquet``) is
+scanned.
+
 At 100 TB: the build is one KMeans pass + one partitioned write (linear, no
 driver bottleneck — assignment happens executor-side); queries read
 nprobe/num_centroids of the data. Recall is controlled by nprobe like the
@@ -36,8 +46,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.functions.vector import distance_sql, double_array_sql, vector_sql
-from myscaledb_spark.operators.topk import vector_topk
+from myscaledb_spark.operators.topk import _validate_k, vector_topk
 
 
 _LAST_EVENT_T = [0.0]
@@ -357,6 +368,8 @@ def append_to_ivf_index(
     Python."""
     reg = IndexRegistry(artifact_dir)
     rec = reg.built(name)
+    if rec.get("index_type") == "FLAT":
+        return rec  # no artifact to maintain: ddl.search_index scans the table
     centroids = json.load(open(rec["centroids"]))
     assigned = _with_list_id(new_df, vec_col, centroids)
     assigned.write.mode("append").partitionBy("list_id").parquet(rec["inverted"])
@@ -418,7 +431,9 @@ def ivf_search(
     exclude_ids: DataFrame | None = None,
 ) -> DataFrame:
     """ANN top-k via the IVF artifact. Reads only nprobe inverted lists
-    (partition-pruned scan), exact-ranks candidates.
+    (partition-pruned scan), exact-ranks candidates; without ``where`` and
+    ``exclude_ids`` and below the driver gate, from the lists held on the
+    driver (``_driver_search``), with no Spark job.
 
     exclude_ids: a DataFrame whose first column holds ids masked out of the
     search — the lightweight-DELETE interaction (the reference feeds the
@@ -428,8 +443,17 @@ def ivf_search(
     top-k, so deleted rows can never surface and the index needs no
     rebuild until compaction."""
     rec = IndexRegistry(artifact_dir).built(name)
+    if rec.get("index_type") == "FLAT":  # built over fewer than 2 rows
+        raise InvalidSearchQuery(
+            f"index {name!r} is a FLAT stand-in record (built over fewer than 2 "
+            "rows, no IVF artifact): search it with ddl.search_index(df=, vec_col=)"
+        )
     centroids = json.load(open(rec["centroids"]))
     probe = _nearest_lists(centroids, qvec, nprobe, metric)
+    if where is None and exclude_ids is None:
+        out = _driver_search(spark, rec["inverted"], qvec, k, probe, metric, id_col, vec_col)
+        if out is not None:
+            return out
     from myscaledb_spark.plans.frame_cache import cached_parquet
 
     inv = cached_parquet(spark, rec["inverted"])
@@ -438,6 +462,30 @@ def ivf_search(
         mask = exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col))
         cands = cands.join(F.broadcast(mask), id_col, "anti")
     return vector_topk(cands, vec_col, qvec, k, metric, where, id_col)
+
+
+def _driver_search(spark, inverted: str, qvec, k, probe, metric, id_col, vec_col):
+    """``ivf_search``'s answer from the inverted lists held on the driver
+    (``frame_cache.resident_parquet``): the rows of the probed lists
+    ranked by ``Snapshot.nearest`` — ``vector_topk``'s rows and distance
+    bits — and emitted as a local relation, with no Spark job.  None when
+    the lists are not held, a column is missing or the driver fold does
+    not serve the metric or the vector type."""
+    from myscaledb_spark.functions.vector import canonical_metric
+    from myscaledb_spark.plans.frame_cache import resident_parquet
+    from myscaledb_spark.resident import DRIVER_METRICS, emit
+
+    _validate_k(k)
+    if canonical_metric(metric) not in DRIVER_METRICS:
+        return None
+    snap = resident_parquet(spark, inverted, {"list_id": IntegerType()})
+    if snap is None or not {id_col, vec_col} <= set(snap.schema.names):
+        return None
+    among = np.isin(snap.table.column("list_id").to_numpy(), probe)
+    got = snap.nearest(vec_col, qvec, k, metric, id_col, among)
+    if got is None:
+        return None
+    return emit(snap, got[0], snap.schema.names, "dist", got[1])
 
 
 def ann_recall(

@@ -24,6 +24,12 @@ and fusion then run on the driver (``vector.driver_distance``,
 ``text.bm25_sum``, ``hybrid._fuse_local``) and return their top-k through
 ``session.local_relation``, whatever the column types: 0 Spark jobs.
 Scores and order equal the Spark path's bit for bit.
+
+The same class holds an index artifact's directory, read by
+``frame_cache.resident_parquet`` without Spark: an IVF index's inverted
+lists (``Snapshot.nearest`` over the probed lists) and an FTS index's
+postings (``Snapshot.index_postings``, CSR ``Postings`` built from its
+rows), which ``ivf_search`` and ``fts_search`` answer from.
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ import threading
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from myscaledb_spark.session import collect_arrow, local_relation, spark_order
@@ -56,47 +62,79 @@ def mark_served() -> None:
 
 
 class Postings:
-    """One text column's tokens as CSR postings: the docs holding term t are
-    ``docs[ptr[t]:ptr[t + 1]]`` (ascending), with their ``tf``; ``dl`` is
-    each doc's ``_dl`` as Spark computed it (NaN where NULL)."""
+    """Postings in CSR form: the docs holding term t are
+    ``docs[ptr[t]:ptr[t + 1]]`` (ascending doc indices), each with its
+    ``tf`` and its doc length ``dl``.  Built from one row per posting
+    (term id, doc index, tf, dl); rows that repeat a (term, doc) pair are
+    one posting whose tf is their sum and whose dl is their largest —
+    Spark's ``sum(tf)`` and ``max(dl)`` over a group by doc.  ``n_docs``
+    and ``avgdl`` are the corpus statistics when the postings know them
+    (a snapshot's tokens), else None (an FTS artifact's, which the search
+    passes from stats.json)."""
 
-    def __init__(self, tokens: pa.ChunkedArray, dl: np.ndarray, log):
-        lists = tokens.combine_chunks()
-        n = len(lists)
-        lengths = pc.list_value_length(lists).fill_null(0).to_numpy()
-        doc = np.repeat(np.arange(n, dtype=np.int32), lengths)
-        enc = pc.dictionary_encode(lists.flatten())
-        tid = enc.indices.to_numpy(zero_copy_only=False)
-        order = np.argsort(tid, kind="stable")  # docs stay ascending per term
+    def __init__(self, tid, doc, tf, dl, vocab: list, n_docs, avgdl, log):
+        order = np.lexsort((doc, tid))
         t, d = tid[order], doc[order]
         first = np.ones(len(t), bool)
         first[1:] = (t[1:] != t[:-1]) | (d[1:] != d[:-1])
         starts = np.flatnonzero(first)
-        self.tf = np.diff(np.append(starts, len(t))).astype(np.float64)
+        self.tf = np.add.reduceat(tf[order], starts).astype(np.float64)
+        self.dl = np.maximum.reduceat(dl[order], starts).astype(np.float64)
         self.docs = d[starts]
-        self.ptr = np.searchsorted(t[starts], np.arange(len(enc.dictionary) + 1))
-        self.index = {w: i for i, w in enumerate(enc.dictionary.to_pylist())}
-        self.dl = dl
-        counted = dl[~np.isnan(dl)]
-        # avg(_dl): Spark's sum over integer lengths is exact in any order
-        self.n_docs = float(n)
-        self.avgdl = float(counted.sum()) / float(len(counted)) if len(counted) else None
+        self.ptr = np.searchsorted(t[starts], np.arange(len(vocab) + 1))
+        self.index = {w: i for i, w in enumerate(vocab)}
+        self.n_docs, self.avgdl = n_docs, avgdl
         self._log = log
         self._idf: dict = {}
         #: phrase clause -> df, the per-term memo of ``text._resident_stats``
         self.phrase_df: dict = {}
+
+    @classmethod
+    def of_tokens(cls, tokens: pa.ChunkedArray, dl: np.ndarray, log) -> "Postings":
+        """One text column's postings: ``tokens`` are its token arrays and
+        ``dl`` each doc's ``_dl`` as Spark computed it (NaN where NULL)."""
+        lists = tokens.combine_chunks()
+        n = len(lists)
+        lengths = pc.list_value_length(lists).fill_null(0).to_numpy()
+        doc = np.repeat(np.arange(n, dtype=np.int64), lengths)
+        enc = pc.dictionary_encode(lists.flatten())
+        tid = enc.indices.to_numpy(zero_copy_only=False)
+        counted = dl[~np.isnan(dl)]
+        # avg(_dl): Spark's sum over integer lengths is exact in any order
+        avgdl = float(counted.sum()) / float(len(counted)) if len(counted) else None
+        return cls(tid, doc, np.ones(len(tid), np.int64), dl[doc],
+                   enc.dictionary.to_pylist(), float(n), avgdl, log)
+
+    @classmethod
+    def of_rows(cls, table: pa.Table, log) -> "Postings":
+        """The postings of an FTS artifact's rows (term, doc_id, tf, dl): a
+        doc index per distinct doc_id (NULL included), whose id is
+        ``ids[index]``."""
+        terms = pc.dictionary_encode(table.column("term").combine_chunks())
+        ids = pc.dictionary_encode(table.column("doc_id").combine_chunks(),
+                                   null_encoding="encode")
+        post = cls(
+            terms.indices.to_numpy(zero_copy_only=False),
+            ids.indices.to_numpy(zero_copy_only=False),
+            table.column("tf").to_numpy(),
+            table.column("dl").to_numpy().astype(np.float64),
+            terms.dictionary.to_pylist(), None, None, log,
+        )
+        post.ids = ids.dictionary
+        return post
 
     def df(self, term: str) -> float:
         """Docs holding ``term``: Σ [tf > 0], 0.0 for an absent term."""
         t = self.index.get(term)
         return 0.0 if t is None else float(self.ptr[t + 1] - self.ptr[t])
 
-    def term(self, term: str) -> tuple[np.ndarray, np.ndarray]:
+    def term(self, term: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(doc indices, tf, dl) of ``term``'s postings."""
         t = self.index.get(term)
         if t is None:
-            return np.empty(0, np.int64), np.empty(0)
+            return np.empty(0, np.int64), np.empty(0), np.empty(0)
         lo, hi = self.ptr[t], self.ptr[t + 1]
-        return self.docs[lo:hi], self.tf[lo:hi]
+        return self.docs[lo:hi], self.tf[lo:hi], self.dl[lo:hi]
 
     def log(self, x: float) -> float:
         """Spark's ``log`` of one idf argument (memoized)."""
@@ -104,52 +142,63 @@ class Postings:
             self._idf[x] = self._log(x)
         return self._idf[x]
 
-    def bm25(self, terms: list[str], operator: str):
+    def bm25(self, terms: list[str], operator: str, n_docs=None, avgdl=None, dfs=None):
         """(matching doc indices ascending, their BM25 scores) — OR: a doc
-        holding any term, AND: every term."""
+        holding any term, AND: every term.  A doc's length is its largest
+        dl among the query terms' postings (``_dl = max(dl)``).  The
+        statistics default to the postings' own; ``dfs`` has one df per
+        term."""
         from myscaledb_spark.functions.text import bm25_sum
 
         lists = [self.term(t) for t in terms]
         if operator.upper() == "AND":
             cand = lists[0][0]
-            for docs, _ in lists[1:]:
+            for docs, _, _ in lists[1:]:
                 cand = np.intersect1d(cand, docs, assume_unique=True)
         else:
-            cand = np.unique(np.concatenate([docs for docs, _ in lists]))
+            cand = np.unique(np.concatenate([docs for docs, _, _ in lists]))
         if not len(cand):
             return cand, np.empty(0)
-        tfs = []
-        for docs, tf in lists:
+        tfs, dl = [], np.full(len(cand), -np.inf)
+        for docs, tf, dls in lists:
             dense = np.zeros(len(cand))
             at = np.searchsorted(cand, docs)
             hit = at < len(cand)
             hit[hit] = cand[at[hit]] == docs[hit]
             dense[at[hit]] = tf[hit]
+            dl[at[hit]] = np.maximum(dl[at[hit]], dls[hit])
             tfs.append(dense)
         scores = bm25_sum(
-            tfs, self.dl[cand], self.n_docs, self.avgdl,
-            [self.df(t) for t in terms], 0.0, self.log,
+            tfs, dl, self.n_docs if n_docs is None else n_docs,
+            self.avgdl if avgdl is None else avgdl,
+            [self.df(t) for t in terms] if dfs is None else dfs, 0.0, self.log,
             lambda c, v: np.where(c, v, 0.0),
         )
         return cand, scores
 
 
 class Snapshot:
-    """One input's rows on the driver (see the module docstring).  Built by
-    ``build``; vectors and postings are derived on first use."""
+    """Rows held on the driver as one Arrow table with their Spark
+    ``schema`` (see the module docstring): a corpus collected by ``build``,
+    or an index artifact read by ``frame_cache.resident_parquet``.  Vectors
+    and postings are derived on first use.  ``toks`` names the collected
+    token and length columns of each text column; ``df``, the frame a
+    corpus was collected from, serves another analyzer's tokens."""
 
-    def __init__(self, df: DataFrame, table: pa.Table, toks: dict):
+    def __init__(self, spark: SparkSession, schema: T.StructType, table: pa.Table,
+                 toks: dict | None = None, df: DataFrame | None = None):
+        self.spark = spark
         self.df = df
-        self.schema = df.schema
-        self.table = table.select(df.columns)
+        self.schema = schema
+        self.table = table.select(schema.names)
         self.n = table.num_rows
         #: text column -> (tokens, lengths) of the default analyzer, until
         #: its postings are built
-        self._tokens = {c: (table.column(t), table.column(d)) for c, (t, d) in toks.items()}
+        self._tokens = {c: (table.column(t), table.column(d))
+                        for c, (t, d) in (toks or {}).items()}
         self._vectors: dict = {}
         self._postings: dict = {}
-        jvm = df.sparkSession._jvm
-        self._log = jvm.java.lang.StrictMath.log
+        self._log = spark._jvm.java.lang.StrictMath.log
 
     # -- columns -------------------------------------------------------------
     def values(self, col: str, positions) -> list:
@@ -198,16 +247,24 @@ class Snapshot:
                 extra = _toked(self.df.select(col), col, tokenizer, spec)
                 extra = extra.select("_toks", "_dl").toArrow()
                 got = extra.column("_toks"), extra.column("_dl")
-            self._postings[key] = Postings(
+            self._postings[key] = Postings.of_tokens(
                 got[0], got[1].to_numpy().astype(np.float64), self._log
             )
         return self._postings[key]
 
+    def index_postings(self) -> Postings:
+        """This snapshot's rows, an FTS artifact's postings (term, doc_id,
+        tf, dl), as CSR postings (``Postings.of_rows``), built once."""
+        if None not in self._postings:
+            self._postings[None] = Postings.of_rows(self.table, self._log)
+        return self._postings[None]
+
     # -- searches ----------------------------------------------------------
-    def distances(self, col: str, qvec, metric: str):
+    def distances(self, col: str, qvec, metric: str, among=None):
         """(rows with a ``metric`` distance to ``qvec`` by structure, their
         distances, which of those have a zero Cosine divisor), or None when
-        the driver fold does not serve ``col`` or ``metric``."""
+        the driver fold does not serve ``col`` or ``metric``.  ``among``, a
+        boolean mask over the rows, keeps only the rows it marks."""
         from myscaledb_spark.functions.vector import (
             canonical_metric,
             driver_defined,
@@ -219,15 +276,19 @@ class Snapshot:
         if got is None:
             return None
         pos, rows = got
+        if among is not None:
+            keep = among[pos]
+            pos, rows = pos[keep], rows[keep]
         return pos, driver_distance(rows, qvec, m), ~driver_defined(rows, qvec, m)
 
-    def nearest(self, col: str, qvec, k: int, metric: str, id_col: str):
+    def nearest(self, col: str, qvec, k: int, metric: str, id_col: str, among=None):
         """``vector_topk``'s rows: (positions, distances) of the ``k`` rows
-        with a distance (``vector.distance_defined``), by (distance in the
-        metric's direction, ``id_col`` ascending); None when not served."""
+        (of those ``among`` marks) with a distance
+        (``vector.distance_defined``), by (distance in the metric's
+        direction, ``id_col`` ascending); None when not served."""
         from myscaledb_spark.functions.vector import METRIC_ASCENDING, canonical_metric
 
-        got = self.distances(col, qvec, metric)
+        got = self.distances(col, qvec, metric, among)
         if got is None:
             return None
         pos, d, zero = got
@@ -260,7 +321,7 @@ def build(df: DataFrame) -> Snapshot | None:
         if isinstance(f.dataType, T.StringType):
             toks[f.name] = (f"__snap_toks_{i}", f"__snap_dl_{i}")
             toked = _toked(toked, f.name, "simple", None, *toks[f.name])
-    return Snapshot(df, collect_arrow(toked), toks)
+    return Snapshot(df.sparkSession, df.schema, collect_arrow(toked), toks, df)
 
 
 def top(values: np.ndarray, k: int, descending: bool, tie=None) -> list[int]:
@@ -288,9 +349,15 @@ def emit(snap: Snapshot, positions: list, cols: list, score_name: str,
     """Rows ``positions`` of ``cols`` plus ``score_name`` = ``scores``, in
     the given order, as a ``session.local_relation`` (collecting it runs no
     job): one Arrow ``take`` on the snapshot's table, any column type."""
-    schema = T.StructType([snap.schema[c] for c in cols]
-                          + [T.StructField(score_name, T.DoubleType(), True)])
-    table = snap.table.select(cols).take(pa.array(positions, pa.int64())).append_column(
+    return emit_rows(snap.spark, T.StructType([snap.schema[c] for c in cols]),
+                     snap.table.select(cols), positions, score_name, scores)
+
+
+def emit_rows(spark: SparkSession, schema: T.StructType, table: pa.Table,
+              positions: list, score_name: str, scores: list) -> DataFrame:
+    """``emit`` over any Arrow ``table`` with the Spark ``schema``."""
+    schema = T.StructType(schema.fields + [T.StructField(score_name, T.DoubleType(), True)])
+    table = table.take(pa.array(positions, pa.int64())).append_column(
         score_name, pa.array(scores, pa.float64()))
     mark_served()
-    return local_relation(snap.df.sparkSession, schema, table)
+    return local_relation(spark, schema, table)

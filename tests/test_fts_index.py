@@ -6,8 +6,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from myscaledb_spark import resident, session
 from myscaledb_spark.functions.text import text_search
 from myscaledb_spark.plans.fts_index import append_to_fts_index, build_fts_index, fts_search
+from tests.test_resident import _served_and_spark
 
 QUERY = "vector search fast"
 
@@ -44,13 +46,16 @@ def test_and_operator(spark, fts_dir):
     assert [r.doc_id for r in via_index] == [r.doc_id for r in direct]
 
 
-def test_term_pruned_scan(spark, fts_dir):
-    plan = (
-        fts_search(spark, fts_dir, QUERY, 5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_term_pruned_scan(spark, fts_dir, monkeypatch):
+    """Above the driver gate the search scans only the query terms'
+    postings; below it the answer is a local relation."""
+    assert _executed(fts_search(spark, fts_dir, QUERY, 5)).startswith("LocalTableScan")
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
+    plan = _executed(fts_search(spark, fts_dir, QUERY, 5))
     assert "PushedFilters" in plan and "term" in plan
 
 
@@ -103,10 +108,11 @@ def test_index_with_tokenizer_spec_equals_direct(spark, tmp_path_factory):
     ]
 
 
-def test_text_search_auto_routes_to_postings(spark, tmp_path):
+def test_text_search_auto_routes_to_postings(spark, tmp_path, monkeypatch):
     """text_search(artifact_dir=...) consults the registry and serves from
     the postings artifact: same rows/scores as the direct path, corpus never
-    tokenized (no split/explode over text in the plan), postings scanned."""
+    tokenized (no split/explode over text in the plan), postings held on
+    the driver, or scanned above the driver gate."""
     from myscaledb_spark.functions.text import text_search
     from myscaledb_spark.plans.fts_index import build_fts_index
 
@@ -123,14 +129,25 @@ def test_text_search_auto_routes_to_postings(spark, tmp_path):
     build_fts_index(docs, "text", "doc_id", art, name="fts")
 
     direct = text_search(docs, "text", "ancient wisdom", 3, id_col="doc_id")
+    served = resident.served()
     routed = text_search(
         docs, "text", "ancient wisdom", 3, id_col="doc_id", artifact_dir=art
     )
+    assert resident.served() == served + 1  # the postings held on the driver
     assert routed.columns == direct.columns
     assert [tuple(r) for r in routed.collect()] == [
         tuple(r) for r in direct.collect()
     ]
-    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "split(" not in routed._jdf.queryExecution().executedPlan().toString()
+    with monkeypatch.context() as m:
+        m.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
+        routed = text_search(
+            docs, "text", "ancient wisdom", 3, id_col="doc_id", artifact_dir=art
+        )
+        assert [tuple(r) for r in routed.collect()] == [
+            tuple(r) for r in direct.collect()
+        ]
+        plan = routed._jdf.queryExecution().executedPlan().toString()
     assert "/fts" in plan                # the artifact scan (paths truncate)
     assert "split(" not in plan          # corpus never tokenized
     # unbuilt index name → silent fallback to the direct path
@@ -161,3 +178,60 @@ def test_index_routed_text_search_with_where_returns_direct_rows(spark, tmp_path
     want = [tuple(r) for r in direct.collect()]
     assert len(want) == 5
     assert [tuple(r) for r in routed.collect()] == want
+
+
+# -- the driver search equals the Spark plan ------------------------------------
+
+_WORDS = ("ancient", "wisdom", "empires", "rise", "military", "cultures", "fall")
+
+
+def _docs(spark, lo, hi):
+    """Docs ``lo``..``hi`` - 1; every fifth repeats the text of the one
+    before it (tied scores), every seventh has no text."""
+    rows = []
+    for i in range(lo, hi):
+        j = i - 1 if i % 5 == 0 else i
+        words = [_WORDS[(j * 3 + n) % len(_WORDS)] for n in range(1 + j % 4)]
+        rows.append((i, None if i % 7 == 0 else " ".join(words)))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("operator", ["OR", "AND"])
+def test_driver_search_equals_spark_plan_after_appends(spark, tmp_path, monkeypatch, operator):
+    """fts_search from the postings held on the driver equals the Spark
+    plan bit for bit (rows, scores, order, schema) after 0, 1 and 2 appends:
+    tied scores, an absent term, a repeated query term and k past the
+    matches included.  No search runs a Spark job, also the first one
+    after an append."""
+    d = str(tmp_path / "fts_driver")
+    build_fts_index(_docs(spark, 0, 40), "text", "doc_id", d)
+    for lo in (40, 60, None):
+        for q, k in (("ancient wisdom", 6), ("military zzqabsent", 200),
+                     ("rise rise empires", 9), ("zzqabsent", 5)):
+            driver, want = _served_and_spark(
+                spark, monkeypatch, lambda: fts_search(spark, d, q, k, operator=operator))
+            assert driver == want
+        if lo is not None:
+            append_to_fts_index(_docs(spark, lo, lo + 20), "text", "doc_id", d)
+    assert driver == [] and want == []  # the absent term
+    ties = [r[1] for r in _served_and_spark(
+        spark, monkeypatch, lambda: fts_search(spark, d, "wisdom", 200))[0]]
+    assert len(ties) > len(set(ties))  # tied scores, ordered by doc_id
+
+
+def test_duplicated_id_append_scores_one_merged_doc(spark, tmp_path, monkeypatch):
+    """An appended doc id already in the artifact scores as one doc on both
+    paths: tf summed over its copies, its length the longest copy's, df
+    counting each copy (dfreq)."""
+    d = str(tmp_path / "fts_dup")
+    build_fts_index(spark.createDataFrame(
+        [(1, "vector search"), (2, "fast vector"), (3, "search engine index")],
+        "doc_id long, text string"), "text", "doc_id", d)
+    append_to_fts_index(spark.createDataFrame(
+        [(1, "vector fast fast")], "doc_id long, text string"), "text", "doc_id", d)
+    driver, want = _served_and_spark(
+        spark, monkeypatch, lambda: fts_search(spark, d, "vector fast", 5))
+    assert driver == want
+    rows = fts_search(spark, d, "vector fast", 5).collect()
+    assert [r.doc_id for r in rows].count(1) == 1
+    assert round(rows[0].bm25_score, 5) == 1.36663 and rows[0].doc_id == 1

@@ -13,6 +13,7 @@ import time
 import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from myscaledb_spark import session
 from myscaledb_spark.functions.text import tokenize
@@ -253,13 +254,25 @@ def test_frame_cache_rebuild_with_new_schema_is_not_served_old_schema(spark, tmp
 # -- job-count guard ------------------------------------------------------------
 
 #: Spark jobs of append_to_fts_index on a tiny artifact plus the first
-#: fts_search after it (collected).  Job counts repeat exactly run to run;
-#: a change here is a change in how many jobs maintenance or the reopen pays.
+#: fts_search after it (collected): from the postings held on the driver,
+#: and on the Spark path (the driver gate at 0).  Job counts repeat exactly
+#: run to run; a change here is a change in how many jobs maintenance or
+#: the reopen pays.
 APPEND_JOBS = 4
-FRESH_SEARCH_JOBS = 4
+FRESH_SEARCH_JOBS = 0
+FRESH_SPARK_SEARCH_JOBS = 4
 
 
 def test_fts_append_and_fresh_search_job_counts(spark, tmp_path, monkeypatch):
+    _append_then_fresh_search(spark, tmp_path, monkeypatch, session.DRIVER_RESIDENT_BYTES,
+                              FRESH_SEARCH_JOBS)
+
+
+def test_fts_append_and_fresh_spark_search_job_counts(spark, tmp_path, monkeypatch):
+    _append_then_fresh_search(spark, tmp_path, monkeypatch, 0, FRESH_SPARK_SEARCH_JOBS)
+
+
+def _append_then_fresh_search(spark, tmp_path, monkeypatch, gate, fresh_jobs):
     d = str(tmp_path / "jobs")
     base = spark.createDataFrame(
         [(i, f"vector search number {i} fast engine") for i in range(40)],
@@ -271,16 +284,112 @@ def test_fts_append_and_fresh_search_job_counts(spark, tmp_path, monkeypatch):
     )
     # a slow listener bus must not send the append down the collect fallback
     monkeypatch.setattr(session, "_OBSERVE_TIMEOUT_S", 60.0)
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", gate)
     build_fts_index(base, "text", "doc_id", d)
     fts_search(spark, d, "fresh vector", 5).collect()  # frames resident before the append
     _, append_jobs = _jobs(
-        spark, "fts_append", lambda: append_to_fts_index(batch, "text", "doc_id", d)
+        spark, f"fts_append_{gate}", lambda: append_to_fts_index(batch, "text", "doc_id", d)
     )
     rows, search_jobs = _jobs(
-        spark, "fts_fresh_search", lambda: fts_search(spark, d, "fresh vector", 5).collect()
+        spark, f"fts_fresh_search_{gate}",
+        lambda: fts_search(spark, d, "fresh vector", 5).collect(),
     )
-    assert (append_jobs, search_jobs) == (APPEND_JOBS, FRESH_SEARCH_JOBS)
+    assert (append_jobs, search_jobs) == (APPEND_JOBS, fresh_jobs)
     assert all(r.doc_id >= 100 for r in rows)  # only the batch has 'fresh'
+
+
+# -- artifact directories held on the driver ------------------------------------
+
+
+def test_resident_parquet_reads_only_appended_files(spark, tmp_path, monkeypatch):
+    """A directory that only gained files reads just those and concatenates
+    them to the held table; a rewrite reads it whole.  The schema is the
+    one spark.read gives (every field nullable), partition columns last."""
+    from myscaledb_spark.plans import frame_cache
+
+    p = str(tmp_path / "held")
+    spark.createDataFrame([(1, [1.0], 0)], "a int not null, v array<double>, part int") \
+        .write.partitionBy("part").parquet(p)
+    reads = []
+    read = frame_cache._read
+    monkeypatch.setattr(frame_cache, "_read", lambda path, rels, *a: reads.append(rels)
+                        or read(path, rels, *a))
+    held = frame_cache.resident_parquet(spark, p, {"part": IntegerType()})
+    assert held.schema == spark.read.parquet(p).schema
+    assert frame_cache.resident_parquet(spark, p, {"part": IntegerType()}) is held
+    spark.createDataFrame([(2, None, 1)], held.schema).write.mode("append") \
+        .partitionBy("part").parquet(p)
+    grown = frame_cache.resident_parquet(spark, p, {"part": IntegerType()})
+    assert [len(r) for r in reads] == [1, 1] and reads[1][0].startswith("part=1")
+    assert sorted(grown.table.to_pylist(), key=str) == sorted(
+        (r.asDict() for r in spark.read.parquet(p).collect()), key=str)
+    spark.createDataFrame([(3, [2.0], 0)], held.schema).write.mode("overwrite") \
+        .partitionBy("part").parquet(p)
+    assert frame_cache.resident_parquet(spark, p, {"part": IntegerType()}).n == 1
+    assert len(reads) == 3 and len(reads[2]) == 1
+
+
+def test_resident_parquet_gate_and_eviction(spark, tmp_path, monkeypatch):
+    """A directory is held only while its Arrow bytes are within
+    session.DRIVER_RESIDENT_BYTES (checked from the footers before reading
+    and on the table after), comes back once the gate allows it, and
+    evict_prefix releases it; a file without Spark's schema is never held."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from myscaledb_spark.plans import frame_cache
+
+    p = str(tmp_path / "art" / "idx" / "gated")
+    spark.range(1000).selectExpr("id", "repeat('x', 50) AS s").write.parquet(p)
+    held = frame_cache.resident_parquet(spark, p)
+    size = held.table.nbytes
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", size - 1)
+    assert frame_cache.resident_parquet(spark, p) is None
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", size)
+    assert frame_cache.resident_parquet(spark, p) is held
+    frame_cache.evict_prefix(str(tmp_path / "art"))
+    again = frame_cache.resident_parquet(spark, p)
+    assert again is not held and again.table.equals(held.table)
+    foreign = str(tmp_path / "foreign")
+    os.makedirs(foreign)
+    pq.write_table(pa.table({"a": [1]}), os.path.join(foreign, "part-0.parquet"))
+    assert frame_cache.resident_parquet(spark, foreign) is None
+
+
+# -- source guards --------------------------------------------------------------
+
+_PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "myscaledb_spark")
+
+
+def test_driver_searches_read_artifacts_only_through_the_loader():
+    """pyarrow.parquet is imported by frame_cache alone, and the driver
+    paths of ivf_search and fts_search start no Spark action or read."""
+    import inspect
+
+    from myscaledb_spark.plans import fts_index, vector_index
+
+    stray = []
+    for d, _, fs in os.walk(_PKG):
+        for f in fs:
+            path = os.path.join(d, f)
+            if f.endswith(".py") and "pyarrow.parquet" in open(path, encoding="utf-8").read():
+                stray.append(os.path.relpath(path, _PKG))
+    assert stray == [os.path.join("plans", "frame_cache.py")]
+    for fn in (vector_index._driver_search, fts_index._driver_search):
+        src = inspect.getsource(fn)
+        assert not [s for s in (".collect(", ".toArrow(", "spark.read") if s in src], fn
+
+
+def test_names_the_benchmark_reads_still_exist():
+    """perfbench's tracer and runner import or wrap these names; its
+    ``Tracer.install`` raises AttributeError on a missing one."""
+    from myscaledb_spark import introspection
+    from myscaledb_spark.plans import frame_cache, fts_index
+
+    for owner, name in ((frame_cache, "_CACHE"), (frame_cache, "cached_parquet"),
+                        (fts_index, "_FRAMES_CACHE"), (fts_index, "_cached_index_frames"),
+                        (introspection, "QUERY_LOG")):
+        assert hasattr(owner, name), name
 
 
 def test_frame_cache_empty_prefix_is_noop():

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from myscaledb_spark import session
+from myscaledb_spark import resident, session
 from myscaledb_spark.functions import text as T
 from myscaledb_spark.operators.hybrid import hybrid_search
 from myscaledb_spark.sql_dialect import ch_sql
@@ -91,6 +91,27 @@ def _driver_then_spark(spark, monkeypatch, fn):
     with monkeypatch.context() as m:
         m.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
         return driver, fn()
+
+
+def _served_and_spark(spark, monkeypatch, fn):
+    """(rows of the frame ``fn()`` answers from the driver, rows of it on
+    the Spark path), as bit patterns, after checking that the driver answer
+    ran no Spark job (held or loaded), counted in ``resident.served`` and
+    has the Spark plan's schema."""
+    def run():
+        df = fn()
+        return df, df.collect()
+
+    served = resident.served()
+    (driver, rows), jobs = _jobs(spark, run)
+    assert jobs == 0 and resident.served() == served + 1
+    with monkeypatch.context() as m:
+        m.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
+        plan = fn()
+        assert plan.schema == driver.schema
+        want = plan.collect()
+    assert resident.served() == served + 1
+    return _bits(rows), _bits(want)
 
 
 def _qvec_sql(rng, dim):
@@ -248,3 +269,42 @@ def test_snapshot_hit_is_not_sized(spark, tmp_path, monkeypatch):
     stated.clear()
     assert T._snapshot(spark.table("t_res_hit").filter("id > 3")) is None
     assert stated == []
+
+
+@pytest.mark.parametrize("fusion", ["rsf", "rrf"])
+def test_hybrid_search_indexed_equals_spark_plan(spark, tmp_path, monkeypatch, fusion):
+    """hybrid_search_indexed over IVF and FTS artifacts held on the driver
+    (``frame_cache.resident_parquet``) reads both legs with
+    ``session.local_rows`` and runs no Spark job, also on the first search
+    after an append; it equals the Spark legs fused by ``fuse_candidates``
+    bit for bit.  The appended rows hold NULL, short, NULL-element and
+    zero-norm vectors and NULL, empty and token-less texts."""
+    from myscaledb_spark.operators.hybrid import hybrid_search_indexed
+    from myscaledb_spark.plans.fts_index import append_to_fts_index, build_fts_index
+    from myscaledb_spark.plans.vector_index import append_to_ivf_index, build_ivf_index
+
+    rows = _rows()
+    clean = [r for r in rows if r[2] and len(r[2]) == 4 and None not in r[2]
+             and all(x == x for x in r[2]) and any(r[2])]
+    schema = "id long, doc string, vector array<float>"
+    art = str(tmp_path / "art")
+    build_ivf_index(spark.createDataFrame(clean[:60], schema), "vector", "id", art,
+                    num_centroids=3)
+    build_fts_index(spark.createDataFrame(clean[:60], schema), "doc", "id", art)
+    rest = spark.createDataFrame([r for r in rows if r not in clean[:60]], schema)
+    append_to_ivf_index(rest, "vector", "id", art)
+    append_to_fts_index(rest, "doc", "id", art)
+
+    def search():
+        return hybrid_search_indexed(
+            spark, art, None, None, [0.5, -1.0, 0.25, 2.0], "ancient cultures zzqabsent", 9,
+            "id", fts_name="fts", fusion_type=fusion, nprobe=2, vec_col="vector")
+
+    served = resident.served()
+    driver, jobs = _jobs(spark, lambda: search().collect())
+    assert jobs == 0 and resident.served() == served + 2
+    with monkeypatch.context() as m:
+        m.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
+        want = search().collect()
+    assert resident.served() == served + 2
+    assert _bits(driver) == _bits(want) and len(driver) == 9

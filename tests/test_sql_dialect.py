@@ -1167,3 +1167,157 @@ def test_groups_frame_multiple_window_specs(spark, duck):
         """
     ).fetchall()
     assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
+
+
+# -- SELECT surface: LIMIT BY spellings, WITH TIES, WITH FILL, replaceRegexpOne
+# (00939_limit_by_offset, 00583_limit_by_expressions, 00743_limit_by_not_found_column)
+
+
+def test_limit_by_offset_comma_form(spark):
+    spark.sql(
+        "SELECT * FROM VALUES (1,100),(1,110),(1,120),(1,130),"
+        "(2,200),(2,210),(2,220),(3,300) AS t(id, val)"
+    ).createOrReplaceTempView("_lbo")
+    got = [
+        tuple(r)
+        for r in ch_sql(
+            spark, "SELECT id, val FROM _lbo ORDER BY id, val LIMIT 2, 2 BY id"
+        ).collect()
+    ]
+    # offset-first: skip 2, take 2 per id group (00939 semantics)
+    assert got == [(1, 120), (1, 130), (2, 220)]
+
+
+def test_limit_by_without_order_by_keeps_input_order(spark):
+    got = [
+        r[0]
+        for r in ch_sql(
+            spark, "SELECT number FROM numbers(10) LIMIT 2 BY number % 2"
+        ).collect()
+    ]
+    assert got == [0, 1, 2, 3]
+
+
+def test_limit_by_nested_in_subquery(spark):
+    spark.sql(
+        "SELECT * FROM VALUES (1,'a'),(1,'b'),(2,'c') AS t(k, s)"
+    ).createOrReplaceTempView("_lbn")
+    got = ch_sql(
+        spark,
+        "SELECT count(*) AS total FROM "
+        "(SELECT k, s FROM _lbn ORDER BY k, s LIMIT 1 BY k)",
+    ).collect()
+    assert got == [(2,)]
+
+
+def test_limit_with_ties(spark):
+    spark.sql(
+        "SELECT * FROM VALUES (1),(4),(4),(7) AS t(x)"
+    ).createOrReplaceTempView("_lwt")
+    got = [
+        r[0]
+        for r in ch_sql(
+            spark, "SELECT x FROM _lwt ORDER BY x LIMIT 2 WITH TIES"
+        ).collect()
+    ]
+    # the 2nd row's key (4) is tied with the 3rd — ties survive
+    assert got == [1, 4, 4]
+    with pytest.raises(ChSqlError, match="ORDER BY"):
+        rewrite("SELECT x FROM t LIMIT 2 WITH TIES")
+
+
+def test_replace_one_and_regexp_one(spark):
+    r = ch_sql(
+        spark,
+        "SELECT replaceRegexpOne('t3_ab t5_cd', 't[0-9]_', '') AS a, "
+        "replaceOne('aXbXc', 'X', '-') AS b, "
+        "replaceRegexpOne('hello', '(l+)', '<\\\\1>') AS c, "
+        "replaceRegexpOne('none', 'zz', 'y') AS d",
+    ).collect()[0]
+    assert (r.a, r.b, r.c, r.d) == ("ab t5_cd", "a-bXc", "he<ll>o", "none")
+
+
+def test_with_fill_float_grid_and_defaults(spark):
+    # Spark's sequence() rejects fractional types — the schema-aware grid
+    # builds from + i*step instead (01614's Float32 fill), and fill rows
+    # take CH column defaults ('' for String), not NULLs
+    spark.sql(
+        "SELECT * FROM VALUES (CAST(1.0 AS FLOAT),'o'),"
+        "(CAST(4.0 AS FLOAT),'o') AS t(n, source)"
+    ).createOrReplaceTempView("_wff")
+    got = [
+        tuple(r)
+        for r in ch_sql(
+            spark, "SELECT n, source FROM _wff ORDER BY n WITH FILL STEP 1"
+        ).collect()
+    ]
+    assert got == [(1.0, "o"), (2.0, ""), (3.0, ""), (4.0, "o")]
+
+
+def test_with_fill_timestamp_numeric_step(spark):
+    # DateTime fill with STEP in seconds (01145: STEP 1800); explicit TO
+    # is exclusive
+    got = [
+        r[0].isoformat()
+        for r in ch_sql(
+            spark,
+            "WITH toDateTime('2020-06-16 03:00:00') AS dt "
+            "SELECT dt ORDER BY dt ASC WITH FILL "
+            "FROM toDateTime('2020-06-16 02:00:00') "
+            "TO toDateTime('2020-06-16 04:00:00') STEP 1800",
+        ).collect()
+    ]
+    assert got == [
+        "2020-06-16T02:00:00",
+        "2020-06-16T02:30:00",
+        "2020-06-16T03:00:00",
+        "2020-06-16T03:30:00",
+    ]
+
+
+def test_scalar_with_alias_names_output_column(spark):
+    out = ch_sql(spark, "WITH 40 + 2 AS answer SELECT answer")
+    assert out.columns == ["answer"]
+    assert out.collect() == [(42,)]
+
+
+def test_with_fill_date_grid(spark):
+    spark.sql(
+        "SELECT * FROM VALUES (DATE'2019-05-01', 1), (DATE'2019-05-04', 2) "
+        "AS t(d, v)"
+    ).createOrReplaceTempView("_wfd")
+    got = [
+        (r.d.isoformat(), r.v)
+        for r in ch_sql(
+            spark, "SELECT d, v FROM _wfd ORDER BY d WITH FILL"
+        ).collect()
+    ]
+    # Int default 0 on fill rows, 1-day step on a Date column
+    assert got == [
+        ("2019-05-01", 1),
+        ("2019-05-02", 0),
+        ("2019-05-03", 0),
+        ("2019-05-04", 2),
+    ]
+
+
+def test_empty_array_and_to_nullable(spark):
+    r = ch_sql(
+        spark,
+        "SELECT emptyArrayString() AS a, emptyArrayUInt32() AS b, "
+        "toNullable(7) AS c",
+    ).collect()[0]
+    assert (r.a, r.b, r.c) == ([], [], 7)
+
+
+def test_lag_lead_in_frame(spark):
+    spark.sql("SELECT * FROM VALUES (1),(2),(3) AS t(x)").createOrReplaceTempView("_lif")
+    got = [
+        tuple(r)
+        for r in ch_sql(
+            spark,
+            "SELECT x, lagInFrame(x) OVER (ORDER BY x) AS p, "
+            "leadInFrame(x) OVER (ORDER BY x) AS n FROM _lif ORDER BY x",
+        ).collect()
+    ]
+    assert got == [(1, None, 2), (2, 1, 3), (3, 2, None)]

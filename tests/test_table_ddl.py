@@ -395,3 +395,58 @@ def test_session_settings_reset():
     )
     reset_session_settings()
     assert "optimize_move_to_prewhere_for_vector_search" not in SESSION_SETTINGS
+
+
+# -- SELECT surface through ch_script: system.one, system.numbers, juxtaposed
+# INSERT VALUES tuples, CREATE TEMPORARY TABLE
+
+
+def test_limit_by_constant_and_aliased_items(spark):
+    # system.X binds through the ch_script surface (the conformance path)
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    assert ch_script(
+        spark, "SELECT 1 FROM system.one LIMIT 1 BY 1"
+    ).collect() == [(1,)]
+    assert ch_script(
+        spark, "SELECT 1 as one FROM system.one LIMIT 1 BY 1 AS one"
+    ).collect() == [(1,)]
+
+
+def test_system_one_shape(spark):
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    rows = ch_script(spark, "SELECT dummy FROM system.one").collect()
+    assert [tuple(r) for r in rows] == [(0,)]
+
+
+def test_insert_values_juxtaposed_tuples(spark):
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    ch_script(spark, "DROP TABLE IF EXISTS jux_r7")
+    ch_script(spark, "CREATE TABLE jux_r7 (a Int32, b String) ENGINE = Memory")
+    ch_script(spark, "INSERT INTO jux_r7 VALUES (1, 'x')(2, 'y(')(3, ')z'), (4, 'w')")
+    got = sorted(
+        tuple(r) for r in ch_sql(spark, "SELECT a, b FROM jux_r7").collect()
+    )
+    assert got == [(1, "x"), (2, "y("), (3, ")z"), (4, "w")]
+    ch_script(spark, "DROP TABLE jux_r7")
+
+
+def test_create_temporary_table_defaults_to_memory(spark):
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    ch_script(spark, "DROP TABLE IF EXISTS tmp_r7")
+    ch_script(spark, "CREATE TEMPORARY TABLE tmp_r7 (x UInt64, s String)")
+    ch_script(spark, "INSERT INTO tmp_r7 VALUES (1, 'a')")
+    assert ch_sql(spark, "SELECT x, s FROM tmp_r7").collect() == [(1, "a")]
+    ch_script(spark, "DROP TABLE tmp_r7")
+
+
+def test_system_numbers_limit(spark):
+    from myscaledb_spark.plans.table_ddl import ch_script
+
+    got = [r[0] for r in ch_script(
+        spark, "SELECT number FROM system.numbers LIMIT 5"
+    ).collect()]
+    assert got == [0, 1, 2, 3, 4]

@@ -3,16 +3,22 @@ recall vs exact oracle."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from myscaledb_spark import session
+from myscaledb_spark.errors import InvalidSearchQuery
 from myscaledb_spark.plans.vector_index import (
     IndexRegistry,
     ann_recall,
+    append_to_ivf_index,
     build_ivf_index,
     ivf_search,
 )
+from tests.test_resident import _served_and_spark
 
 
 @pytest.fixture(scope="module")
@@ -72,11 +78,16 @@ def test_filtered_ivf_search(spark, ivf_dir):
     assert len(out) == 5
 
 
-def test_partition_pruning_in_plan(spark, ivf_dir):
-    """The probed scan must read only the selected list_id partitions."""
-    df = ivf_search(spark, ivf_dir, _q(), 5, nprobe=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or "list_id" in plan
+def test_partition_pruning_in_plan(spark, ivf_dir, monkeypatch):
+    """Above the driver gate the probed scan must read only the selected
+    list_id partitions; below it the answer is a local relation."""
+    def plan():
+        df = ivf_search(spark, ivf_dir, _q(), 5, nprobe=2)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert plan().startswith("LocalTableScan")
+    monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
+    assert "PartitionFilters" in plan() or "list_id" in plan()
 
 
 def test_incremental_append_serves_new_rows(spark, tmp_path_factory):
@@ -187,6 +198,104 @@ def test_mllib_build_path_full_probe_equals_exact(spark, tmp_path, monkeypatch):
     got = ivf_search(spark, d, _q(7), 10, nprobe=8).select("vec_id", "dist").collect()
     want = vector_topk(emb, "embedding", _q(7), 10, "L2", None, "vec_id")
     assert got == want.select("vec_id", "dist").collect()
+
+
+# -- the driver search equals the Spark plan ------------------------------------
+
+
+def _vectors(spark, lo, hi, dim=4, defined=True):
+    """Rows ``lo``..``hi`` - 1 of (id, label, vector); every ninth repeats the
+    vector before it (tied distances).  Unless ``defined``, they also hold
+    NULL, short, NULL-element and zero-norm vectors."""
+    rng = np.random.default_rng(lo)
+    rows, prev = [], None
+    for i in range(lo, hi):
+        v = prev if i % 9 == 0 and prev else [float(x) for x in rng.standard_normal(dim)]
+        prev = v
+        if not defined:
+            v = (None if i % 5 == 0 else v[:-1] if i % 5 == 1
+                 else [v[0], None, *v[2:]] if i % 5 == 2 else [0.0] * dim if i % 5 == 3 else v)
+        rows.append((i, i % 3, v))
+    return spark.createDataFrame(rows, "id long, label int, vector array<float>")
+
+
+@pytest.mark.parametrize("metric", ["L2", "IP", "Cosine"])
+def test_driver_search_equals_spark_plan_after_appends(spark, tmp_path, monkeypatch, metric):
+    """ivf_search from the inverted lists held on the driver equals the
+    Spark plan bit for bit (rows, distances, order, schema) after 0, 1 and
+    2 appends, with no Spark job, also on the first search after an append:
+    NULL, short, NULL-element and zero-norm vectors in the lists, tied
+    distances, a partial and a full probe, and k past the rows."""
+    d = str(tmp_path / "ivf_driver")
+    build_ivf_index(_vectors(spark, 0, 60), "vector", "id", d, num_centroids=3)
+    q = [0.5, -1.0, 0.25, 2.0]
+    for batch in (_vectors(spark, 60, 90, defined=False), _vectors(spark, 90, 120), None):
+        for nprobe, k in ((1, 7), (3, 500)):
+            driver, want = _served_and_spark(spark, monkeypatch, lambda: ivf_search(
+                spark, d, q, k, nprobe=nprobe, metric=metric, id_col="id", vec_col="vector"))
+            assert driver == want
+        if batch is not None:
+            append_to_ivf_index(batch, "vector", "id", d)
+    assert len(driver) == 120 - 18 - 6 * (metric == "Cosine")  # rows with a distance
+    dists = [r[-1] for r in driver]
+    assert len(dists) > len(set(dists))  # tied distances, ordered by id
+
+
+def test_driver_search_carries_every_column_type(spark, tmp_path, monkeypatch):
+    """The lists held on the driver keep every column type the Spark read
+    gives: floats with -0.0 and NaN, decimal, date, binary, tinyint,
+    boolean, INT96 timestamps in years 1 and 9999, timestamp_ntz, an array
+    with a NULL element, a map, a struct, a NULL struct whose field is NOT
+    NULL and a string with a quote and non-ASCII text."""
+    df = spark.sql(r"""SELECT id, array(CAST(id AS FLOAT), 1.0F) AS vector, f, d, dec, dt, b,
+        ti, bo, ts, tsn, arr, m, st, IF(bo, named_struct('x', 1), NULL) AS nn, s FROM VALUES
+      (1L, CAST(1.5 AS FLOAT), -0.0D, CAST(1.234 AS DECIMAL(5,3)), DATE'2024-03-10', X'00FF',
+       CAST(-7 AS TINYINT), true, TIMESTAMP'0001-01-02 12:00:00',
+       TIMESTAMP_NTZ'2024-03-10 02:30:00', array(1, NULL, 3), map('a', 1),
+       named_struct('x', 1, 'y', 'a'), 'é 漢字 " ,)'),
+      (2L, CAST('NaN' AS FLOAT), CAST('Infinity' AS DOUBLE), NULL, NULL, NULL, NULL, NULL,
+       TIMESTAMP'9999-12-31 23:59:59.999999', NULL, NULL, NULL, NULL, NULL),
+      (3L, CAST('-Infinity' AS FLOAT), CAST('NaN' AS DOUBLE), NULL, DATE'0001-01-01', X'',
+       NULL, false, NULL, TIMESTAMP_NTZ'9999-12-31 23:59:59', array(), map(), NULL, '')
+      AS t(id, f, d, dec, dt, b, ti, bo, ts, tsn, arr, m, st, s)""")
+    d = str(tmp_path / "ivf_types")
+    build_ivf_index(df, "vector", "id", d, num_centroids=2)
+    driver, want = _served_and_spark(spark, monkeypatch, lambda: ivf_search(
+        spark, d, [0.0, 0.0], 3, nprobe=2, id_col="id", vec_col="vector"))
+    assert repr(driver) == repr(want) and len(driver) == 3
+
+
+def test_flat_stand_in_append_is_a_noop_and_search_names_it(spark, tmp_path):
+    """An IVF index declared over fewer than 2 rows records a FLAT stand-in
+    with no artifact: an append returns the record unchanged (ddl.search_index
+    scans the table for it), and ivf_search refuses it by name."""
+    d = str(tmp_path / "ivf_flat")
+    rec = build_ivf_index(_vectors(spark, 0, 1), "vector", "id", d)
+    assert rec["index_type"] == "FLAT"
+    again = append_to_ivf_index(_vectors(spark, 1, 3), "vector", "id", d)
+    assert again == rec
+    with pytest.raises(InvalidSearchQuery, match="'ivf' is a FLAT stand-in"):
+        ivf_search(spark, d, [0.0] * 4, 2, id_col="id", vec_col="vector")
+
+
+def test_first_search_after_cache_expire_logs_the_load(spark, tmp_path):
+    """DETACH's CacheExpire releases the lists held on the driver; the next
+    search loads them again and logs LoadStart/LoadSucceed, once."""
+    from myscaledb_spark.plans import frame_cache
+
+    d = str(tmp_path / "ivf_expire")
+    build_ivf_index(_vectors(spark, 0, 30), "vector", "id", d, num_centroids=2)
+    reg = IndexRegistry(d)
+
+    def search():
+        ivf_search(spark, d, [0.0] * 4, 3, id_col="id", vec_col="vector").collect()
+        return [e["status"] for e in reg.get("ivf")["events"]]
+
+    before = search()
+    frame_cache.evict_prefix(os.path.join(d, "ivf"))
+    reg.add_event("ivf", "CacheExpire", cache_resident=False)
+    assert search() == before + ["CacheExpire", "LoadStart", "LoadSucceed"]
+    assert search() == before + ["CacheExpire", "LoadStart", "LoadSucceed"]
 
 
 #: modules of the ANN index family under myscaledb_spark/plans
