@@ -1,4 +1,5 @@
-"""Shared in-memory caches for index-artifact parquet directories.
+"""Shared in-memory caches for index-artifact parquet directories, and their
+writer.
 
 The reference keeps built indexes resident (its vector index cache /
 TantivyIndexStoreFactory LRU).  Two analogs here:
@@ -23,6 +24,11 @@ the directory itself may also pass its fixed schema.  Any other change (a
 rebuild or a rewrite) infers the schema again, so no frame outlives its data
 or its schema.
 
+The one writer, ``append_part``, adds a driver-computed Arrow table to such a
+directory as a new data file in the layout Spark writes (the directory's
+Spark schema under Spark's footer key, snappy), so both readers take it as
+one of Spark's own files and a held copy reads just that file.
+
 Partition-pruning note: a cached relation filters by the cache batches'
 min/max stats instead of the parquet source's directory pruning — for the
 list_id/leaf-partitioned layouts both prune to the probed lists.
@@ -33,6 +39,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -50,6 +57,11 @@ _RESIDENT_SLOTS = 8
 
 #: the footer key under which Spark's parquet writer stores its schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: Spark types ``append_part`` writes as Spark would: ones whose parquet form
+#: needs no writer option (dates, timestamps and decimals do)
+_WRITABLE = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
+             T.DoubleType, T.StringType, T.BooleanType)
 
 #: Arrow bytes per row of a variable-width column beyond its footer size:
 #: its int32 offsets
@@ -194,6 +206,55 @@ def _read(path: str, rels: list, partitions: dict, budget: int):
             tables.append(table.cast(target))
     table = pa.concat_tables(tables)
     return schema, table if table.nbytes <= budget else None, table.nbytes
+
+
+def writable(dt: T.DataType) -> bool:
+    """Whether ``append_part`` writes a column of type ``dt``: an integer,
+    float, double, string or boolean, or an array of one."""
+    if isinstance(dt, T.ArrayType):
+        dt = dt.elementType
+    return isinstance(dt, _WRITABLE)
+
+
+def part_footer(path: str, columns: T.StructType):
+    """(Spark schema as ``spark.read`` gives it, the footer's schema JSON) of
+    the first data file under the parquet directory ``path``, for
+    ``append_part``; None when there is no such file, it carries no Spark
+    schema, or its columns are not ``columns``' names and types (in any
+    order, nullability aside)."""
+    rels = sorted(f for f, _, _ in data_files(path)) if os.path.isdir(path) else []
+    if not rels:
+        return None
+    raw = (pq.read_metadata(os.path.join(path, rels[0])).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    schema = _nullable(T.StructType.fromJson(json.loads(raw)))
+    same = ({f.name: f.dataType for f in schema.fields}
+            == {f.name: _nullable(f.dataType) for f in columns.fields})
+    return (schema, raw) if same else None
+
+
+def append_part(path: str, table: pa.Table, footer) -> None:
+    """Add ``table`` to the parquet directory ``path`` (made when missing) as
+    one new data file, in the layout Spark writes: cast to the Arrow form of
+    ``footer``'s schema (``part_footer`` of the directory), with that
+    schema's JSON under Spark's footer key, snappy.  It is written under a
+    hidden name and renamed, so a listing only ever gains whole files and no
+    file already there is touched."""
+    from myscaledb_spark.session import _arrow_schema
+
+    schema, raw = footer
+    table = table.select(schema.names).cast(_arrow_schema(schema))
+    # floats seldom repeat, so a dictionary only adds bytes to them (Spark's
+    # writer drops a dictionary that does not pay; pyarrow's keeps it)
+    dictionary = [f.name for f in table.schema
+                  if not pa.types.is_floating(getattr(f.type, "value_type", f.type))]
+    os.makedirs(path, exist_ok=True)
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    tmp = os.path.join(path, "." + name)
+    pq.write_table(table.replace_schema_metadata({_SPARK_SCHEMA_KEY: raw}), tmp,
+                   compression="snappy", use_dictionary=dictionary)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def _variable_width(t: pa.DataType) -> bool:

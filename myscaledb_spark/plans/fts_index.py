@@ -8,8 +8,11 @@ Artifact layout (parquet):
                             stores per-doc norms with the index the same
                             way) so scoring needs no doc-length join
   <root>/<name>/dfreq/      (term: string, df: bigint)  per-term doc
-                            frequency — the reference's tantivy index stores
-                            term dictionaries with doc counts likewise
+                            frequency, one part per build or append (each
+                            the per-term counts of its docs), so a term's
+                            df is the sum of its rows — the reference's
+                            tantivy index stores term dictionaries with doc
+                            counts likewise, one per part
   <root>/<name>/stats.json  {n_docs, avgdl, total_dl, dl_docs, tokenizer,
                             spec}: total_dl is the integer sum of the doc
                             lengths over the dl_docs docs that have one
@@ -26,25 +29,28 @@ the postings and dfreq directories are held on the driver
 (``frame_cache.resident_parquet``, read with pyarrow, keyed on their file
 listing; an append's new postings files are read alone and concatenated)
 and the search runs in numpy over their CSR form (``resident.Postings``)
-with the scorer's own expression (``text.bm25_sum``): no Spark job, the
-Spark plan's rows and score bits.  Above the gate it scores through the
+with the scorer's own expression (``text.bm25_sum``), each df summed over
+the dfreq parts: no Spark job, the Spark plan's rows and score bits.  Above
+the gate it scores through the
 same ``text.bm25_scores_from_tf`` as the direct path, but takes tf and dl
 from ONLY the query terms' postings (predicate pushed to the parquet scan)
 instead of re-tokenizing the corpus — at 100 TB this is the difference
 between touching ~kB of postings and re-scanning the table.
 Incremental maintenance (`append_to_fts_index`, ≈ VIBuilderUpdater on new
-parts, foreachBatch in streaming ingestion) costs O(batch + vocabulary), not
-O(index): the batch is tokenized once, its postings are appended, dfreq is
-the old dfreq plus the batch's per-term counts, and the global stats are
-updated from the batch's counts.
+parts, foreachBatch in streaming ingestion) costs O(batch), not O(index): the
+batch is tokenized once, its postings and its per-term counts are added as
+new files of postings/ and dfreq/ (no file already written is rewritten),
+and the global stats are updated from the batch's counts.  Below the driver
+gate the batch's tokens come from its driver snapshot and both parts are
+written with pyarrow (``_driver_append``); otherwise Spark writes them.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -106,13 +112,22 @@ def _cached_dfmap(dfreq, base: str, terms: list[str]) -> dict:
     job per search just to fetch ≤|terms| floats."""
 
     def fetch(need):
-        got = {r["term"]: float(r["df"])
-               for r in dfreq.filter(F.col("term").isin(need)).collect()}
-        return {t: got.get(t, 0.0) for t in need}
+        rows = dfreq.filter(F.col("term").isin(need)).collect()
+        got = _summed((r["term"], r["df"]) for r in rows)
+        return {t: float(got.get(t, 0)) for t in need}
 
     mtime = os.path.getmtime(os.path.join(base, "stats.json"))
     table = memo.get(dfreq.sparkSession, "fts_dfmap", base, mtime, dict, slots=16)
     return memo.terms(table, terms, fetch)
+
+
+def _summed(pairs) -> dict:
+    """{term: df} from (term, df) rows of dfreq: a term has one row in each
+    part that counts it, and its df is their sum."""
+    out: dict = {}
+    for t, n in pairs:
+        out[t] = out.get(t, 0) + n
+    return out
 
 
 def _spec_to_json(spec) -> dict | None:
@@ -155,9 +170,7 @@ def build_fts_index(
     base = os.path.join(artifact_dir, name)
     toked = _tokenized(df, text_col, id_col, tokenizer, spec)
     written, totals = _write_postings(toked, os.path.join(base, "postings"), "overwrite")
-    _dfreq_rows(written).groupBy("term").agg(F.sum("df").alias("df")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "dfreq"))
+    _write_dfreq(written, os.path.join(base, "dfreq"), "overwrite")
     _write_stats(base, {"tokenizer": tokenizer, "spec": _spec_to_json(spec)},
                  totals["n_docs"], totals["total_dl"], totals["dl_docs"])
     reg.set_status(name, "Built", base=base)
@@ -209,7 +222,9 @@ def _write_postings(toked: DataFrame, path: str, mode: str):
     """Write the postings of one tokenized batch to ``path``; return (the
     postings this write added, read back from its own files with their
     known schema, and the batch's totals).  A 1-row collect is the
-    fallback when the observed totals do not arrive in time."""
+    fallback when the observed totals do not arrive in time.  An append of
+    no docs removes the empty file its write added and returns no
+    postings, so the listing is left as it was."""
     spark = toked.sparkSession
     before = data_files(path) if mode == "append" and os.path.isdir(path) else frozenset()
     postings, obs = _postings(toked)
@@ -221,6 +236,12 @@ def _write_postings(toked: DataFrame, path: str, mode: str):
     ).first().asDict()
     got = {k: v or 0 for k, v in got.items()}  # SUM over no rows is NULL
     added = sorted(os.path.join(path, f) for f, _, _ in data_files(path) - before)
+    if mode == "append" and not got["n_docs"]:
+        for f in added:  # with the checksum file Hadoop's local FS writes beside it
+            for gone in (f, os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")):
+                if os.path.exists(gone):
+                    os.remove(gone)
+        return None, got
     written = (
         spark.read.schema(postings.schema).parquet(*added)
         if added
@@ -229,9 +250,10 @@ def _write_postings(toked: DataFrame, path: str, mode: str):
     return written, got
 
 
-def _dfreq_rows(postings: DataFrame) -> DataFrame:
-    # one (term, 1) row per posting: a term's df is its number of postings
-    return postings.select("term", F.lit(1).cast("long").alias("df"))
+def _write_dfreq(postings: DataFrame, path: str, mode: str) -> None:
+    """Write the per-term counts of ``postings`` to ``path`` as one dfreq
+    part: a term's df in a part is its number of postings there."""
+    postings.groupBy("term").agg(F.count(F.lit(1)).alias("df")).write.mode(mode).parquet(path)
 
 
 def _write_stats(base: str, stats: dict, n_docs: int, total_dl: int, dl_docs: int) -> None:
@@ -320,7 +342,7 @@ def _driver_search(spark, base: str, stats: dict, terms: list, k: int, operator:
     if dfreq is None:
         return None
     found = dfreq.table.filter(pc.is_in(dfreq.table.column("term"), pa.array(terms, pa.string())))
-    dfs = dict(zip(found.column("term").to_pylist(), found.column("df").to_pylist()))
+    dfs = _summed(zip(found.column("term").to_pylist(), found.column("df").to_pylist()))
     inv = post.index_postings()
     cand, scores = inv.bm25(terms, operator, float(stats["n_docs"]), float(stats["avgdl"]),
                             [float(dfs.get(t, 0.0)) for t in terms])
@@ -337,32 +359,71 @@ def append_to_fts_index(
     name: str = "fts",
 ) -> dict:
     """Incremental maintenance (≈ index build on a freshly inserted part) in
-    O(batch + vocabulary): append the batch's postings, merge its per-term
-    counts into dfreq, and update the global stats from its totals.  Write
-    order: postings, then dfreq (tmp + rename), then stats.json last as the
-    commit point."""
+    O(batch): add the batch's postings and its per-term counts as new files
+    of postings/ and dfreq/, then update the global stats from its totals.
+    stats.json is written last, as the commit point.  Below the driver gate
+    the driver writes both parts (``_driver_append``); any batch it
+    declines is tokenized, counted and written by Spark.  An empty batch
+    writes nothing and returns the record as it was."""
     base, stats = _built(artifact_dir, name)
-    toked = _tokenized(
-        new_docs, text_col, id_col, stats["tokenizer"], _spec_from_json(stats.get("spec"))
-    )
-    written, totals = _write_postings(toked, os.path.join(base, "postings"), "append")
-    dfreq_path = os.path.join(base, "dfreq")
-    merged = (
-        new_docs.sparkSession.read.schema(_DFREQ_SCHEMA).parquet(dfreq_path)
-        .unionByName(_dfreq_rows(written))
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-    )
-    tmp = os.path.join(base, "dfreq_next")
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(dfreq_path)
-    os.rename(tmp, dfreq_path)
-    _write_stats(
-        base, stats,
-        stats["n_docs"] + totals["n_docs"],
-        stats["total_dl"] + totals["total_dl"],
-        stats["dl_docs"] + totals["dl_docs"],
-    )
+    spec = _spec_from_json(stats.get("spec"))
+    totals = _driver_append(new_docs, text_col, id_col, base, stats["tokenizer"], spec)
+    if totals is None:
+        toked = _tokenized(new_docs, text_col, id_col, stats["tokenizer"], spec)
+        written, totals = _write_postings(toked, os.path.join(base, "postings"), "append")
+        if written is not None:
+            _write_dfreq(written, os.path.join(base, "dfreq"), "append")
     reg = IndexRegistry(artifact_dir)
-    reg.set_status(name, "Built", base=base)
+    if totals["n_docs"]:
+        _write_stats(
+            base, stats,
+            stats["n_docs"] + totals["n_docs"],
+            stats["total_dl"] + totals["total_dl"],
+            stats["dl_docs"] + totals["dl_docs"],
+        )
+        reg.set_status(name, "Built", base=base)
     return reg.get(name)
+
+
+def _driver_append(new_docs: DataFrame, text_col: str, id_col: str, base: str,
+                   tokenizer: str, spec) -> dict | None:
+    """Append ``new_docs`` from the driver: the batch held by
+    ``vector_index._driver_batch`` (the same snapshot an IVF append of it
+    took), its postings rows (term, doc_id, tf bigint, dl int, as
+    ``_postings`` types them) from ``Snapshot.postings`` under the index's
+    analyzer, and its per-term counts, each written as one new file
+    (``frame_cache.append_part``).  Returns the batch's totals {n_docs,
+    total_dl, dl_docs}, counted from the doc lengths Spark computed with the
+    tokens as ``_postings`` counts them, so the NULL-text rule stays
+    Spark's; or None, having written nothing, when the batch is not held,
+    the text is not a string, the ids are typed otherwise than the
+    postings', or a directory has no file to take Spark's schema from."""
+    from myscaledb_spark.plans.frame_cache import append_part, part_footer
+    from myscaledb_spark.plans.vector_index import _driver_batch
+
+    snap = _driver_batch(new_docs, id_col, text_col)
+    if snap is None or not isinstance(snap.schema[text_col].dataType, StringType):
+        return None
+    post_dir, dfreq_dir = os.path.join(base, "postings"), os.path.join(base, "dfreq")
+    post_footer = part_footer(post_dir, StructType([
+        StructField("term", StringType()), StructField("doc_id", snap.schema[id_col].dataType),
+        StructField("tf", LongType()), StructField("dl", IntegerType())]))
+    dfreq_footer = part_footer(dfreq_dir, _DFREQ_SCHEMA)
+    if post_footer is None or dfreq_footer is None:
+        return None
+    if not snap.n:
+        return {"n_docs": 0, "total_dl": 0, "dl_docs": 0}
+    post = snap.postings(text_col, tokenizer, spec)
+    counts = np.diff(post.ptr)
+    vocab = pa.array(post.vocab, pa.string())
+    if len(post.docs):
+        append_part(post_dir, pa.table({
+            "term": vocab.take(pa.array(np.repeat(np.arange(len(counts)), counts))),
+            "doc_id": snap.table.column(id_col).take(pa.array(post.docs)),
+            "tf": post.tf.astype(np.int64),
+            "dl": post.dl.astype(np.int32),
+        }), post_footer)
+        append_part(dfreq_dir, pa.table({"term": vocab, "df": counts.astype(np.int64)}),
+                    dfreq_footer)
+    counted = post.lengths[~np.isnan(post.lengths)]
+    return {"n_docs": snap.n, "total_dl": int(counted.sum()), "dl_docs": len(counted)}

@@ -41,7 +41,8 @@ import time
 from collections.abc import Sequence
 
 import numpy as np
-
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -360,21 +361,93 @@ def append_to_ivf_index(
     """Incremental maintenance — the reference's decoupled-parts semantics
     (`MergeTreeSettings.h:179` enable_decouple_vector_index): freshly
     inserted rows are assigned to the EXISTING centroids and appended to the
-    inverted lists, so search serves old+new data immediately; a periodic
-    full rebuild (build_ivf_index) re-trains centroids like a part merge
-    rebuild.  Cost is O(batch), linear in the number of lists.
+    inverted lists as new files, so search serves old+new data immediately
+    and no file already written is rewritten; a periodic full rebuild
+    (build_ivf_index) re-trains centroids like a part merge rebuild.  Cost
+    is O(batch), linear in the number of lists.  An empty batch writes
+    nothing.
 
-    Assignment (``_with_list_id``) is one JVM pass over the batch, no
-    Python."""
+    Below ``session.DRIVER_RESIDENT_BYTES`` the batch is collected once as
+    Arrow (``_driver_batch``, the snapshot a following FTS append of the
+    same batch reuses), assigned in numpy (``_list_ids``) and written per
+    list with pyarrow (``_driver_append``).  Any batch that path declines
+    is assigned by ``_with_list_id``, one JVM pass, and written by Spark;
+    both give each row the same list."""
     reg = IndexRegistry(artifact_dir)
     rec = reg.built(name)
     if rec.get("index_type") == "FLAT":
         return rec  # no artifact to maintain: ddl.search_index scans the table
     centroids = json.load(open(rec["centroids"]))
-    assigned = _with_list_id(new_df, vec_col, centroids)
-    assigned.write.mode("append").partitionBy("list_id").parquet(rec["inverted"])
-    reg.set_status(name, "Built")
+    written = _driver_append(new_df, vec_col, id_col, rec["inverted"], centroids)
+    if written is None:
+        assigned = _with_list_id(new_df, vec_col, centroids)
+        assigned.write.mode("append").partitionBy("list_id").parquet(rec["inverted"])
+    if written != 0:  # an empty batch leaves the record as it was
+        reg.set_status(name, "Built")
     return reg.get(name)
+
+
+def _driver_batch(df: DataFrame, id_col: str, *cols: str):
+    """``df``'s driver snapshot (``text._snapshot``, built by one Arrow
+    collect and shared by the IVF and FTS appends of one batch) when the
+    driver may append it, else None and the caller runs the Spark append:
+    ``id_col`` and ``cols`` are among its column names as written, every
+    column is of a type ``frame_cache.append_part`` writes, the snapshot is
+    within the gate, and its ids are neither NULL nor repeated (Spark's
+    ``first(dl)`` over a merged id is not deterministic)."""
+    from myscaledb_spark.functions.text import _snapshot
+    from myscaledb_spark.plans.frame_cache import writable
+
+    if not ({id_col, *cols} <= set(df.columns)
+            and all(writable(f.dataType) for f in df.schema.fields)):
+        return None
+    snap = _snapshot(df)
+    if snap is None:
+        return None
+    ids = snap.table.column(id_col)
+    if ids.null_count or pc.count_distinct(ids).as_py() != len(ids):
+        return None
+    return snap
+
+
+def _driver_append(new_df: DataFrame, vec_col: str, id_col: str, inverted: str,
+                   centroids: list) -> int | None:
+    """Append ``new_df`` to the inverted lists from the driver: its rows,
+    held by ``_driver_batch``, go to ``_list_ids``' lists, each list's rows
+    one new file under ``list_id=<l>/`` (``frame_cache.append_part``).
+    Returns the rows written, or None, having written nothing, when the
+    batch is not held, its columns differ from the lists', the lists have
+    no file to take Spark's schema from, or a vector is NULL, short or
+    holds a NULL element (the Spark append runs)."""
+    from myscaledb_spark.plans.frame_cache import append_part, part_footer
+
+    snap = _driver_batch(new_df, id_col, vec_col)
+    footer = None if snap is None else part_footer(inverted, snap.schema)
+    if footer is None:
+        return None
+    got = snap.vectors(vec_col, len(centroids[0]))
+    if got is None or len(got[0]) != snap.n:
+        return None
+    lists = _list_ids(got[1], centroids)
+    for lid in np.unique(lists):
+        append_part(os.path.join(inverted, f"list_id={lid}"),
+                    snap.table.filter(pa.array(lists == lid)), footer)
+    return snap.n
+
+
+def _list_ids(rows: np.ndarray, centroids: list) -> np.ndarray:
+    """``_with_list_id``'s list of each of ``rows`` (column-major float64,
+    as ``Snapshot.vectors`` holds them), in numpy: the squared L2 distance
+    to each centroid by the kernel's own fold (``vector.driver_distance``),
+    the first minimum winning, NaN above +inf (Spark's double ordering) and
+    a row whose distances are all NaN in list 0, where ``array_position``
+    finds ``array_min``'s NaN."""
+    from myscaledb_spark.functions.vector import driver_distance
+
+    with np.errstate(invalid="ignore", over="ignore"):  # inf - inf, as Spark's NaN
+        d = np.column_stack([driver_distance(rows, c, "L2Squared") for c in centroids])
+    least = np.where(np.isnan(d), np.inf, d).min(axis=1)
+    return np.argmax(d == least[:, None], axis=1)
 
 
 def _with_list_id(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:

@@ -70,7 +70,8 @@ class Postings:
     Spark's ``sum(tf)`` and ``max(dl)`` over a group by doc.  ``n_docs``
     and ``avgdl`` are the corpus statistics when the postings know them
     (a snapshot's tokens), else None (an FTS artifact's, which the search
-    passes from stats.json)."""
+    passes from stats.json).  ``vocab`` lists the terms by id; postings of
+    a snapshot's tokens also keep each doc's ``lengths``."""
 
     def __init__(self, tid, doc, tf, dl, vocab: list, n_docs, avgdl, log):
         order = np.lexsort((doc, tid))
@@ -82,6 +83,7 @@ class Postings:
         self.dl = np.maximum.reduceat(dl[order], starts).astype(np.float64)
         self.docs = d[starts]
         self.ptr = np.searchsorted(t[starts], np.arange(len(vocab) + 1))
+        self.vocab = vocab
         self.index = {w: i for i, w in enumerate(vocab)}
         self.n_docs, self.avgdl = n_docs, avgdl
         self._log = log
@@ -102,8 +104,10 @@ class Postings:
         counted = dl[~np.isnan(dl)]
         # avg(_dl): Spark's sum over integer lengths is exact in any order
         avgdl = float(counted.sum()) / float(len(counted)) if len(counted) else None
-        return cls(tid, doc, np.ones(len(tid), np.int64), dl[doc],
+        post = cls(tid, doc, np.ones(len(tid), np.int64), dl[doc],
                    enc.dictionary.to_pylist(), float(n), avgdl, log)
+        post.lengths = dl
+        return post
 
     @classmethod
     def of_rows(cls, table: pa.Table, log) -> "Postings":

@@ -3,12 +3,16 @@ global stats correct."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from myscaledb_spark import resident, session
 from myscaledb_spark.functions.text import text_search
 from myscaledb_spark.plans.fts_index import append_to_fts_index, build_fts_index, fts_search
+from myscaledb_spark.plans.frame_cache import data_files
+from tests.test_index_maintenance import _writers, local_batch
 from tests.test_resident import _served_and_spark
 
 QUERY = "vector search fast"
@@ -235,3 +239,24 @@ def test_duplicated_id_append_scores_one_merged_doc(spark, tmp_path, monkeypatch
     rows = fts_search(spark, d, "vector fast", 5).collect()
     assert [r.doc_id for r in rows].count(1) == 1
     assert round(rows[0].bm25_score, 5) == 1.36663 and rows[0].doc_id == 1
+
+
+def test_driver_append_declines_repeated_and_null_ids(spark, tmp_path, monkeypatch):
+    """A batch that repeats an id, or holds a NULL one, is appended by Spark
+    (its files are parquet-mr's; Spark's first(dl) over a merged id is not
+    deterministic), a batch of distinct ids by the driver; searches still
+    equal the Spark plan."""
+    d = str(tmp_path / "fts_decline")
+    schema = "doc_id long, text string"
+    build_fts_index(_docs(spark, 0, 20), "text", "doc_id", d)
+    post = os.path.join(d, "fts", "postings")
+    for rows, writer in (([(30, "ancient wisdom"), (31, "rise")], "parquet-cpp-arrow"),
+                         ([(40, "ancient rise"), (40, "wisdom")], "parquet-mr"),
+                         ([(50, "military rise"), (None, "fall")], "parquet-mr")):
+        before = data_files(post)
+        append_to_fts_index(local_batch(spark, rows, schema), "text", "doc_id", d)
+        assert _writers(post, before) == {writer}, rows
+    driver, want = _served_and_spark(
+        spark, monkeypatch, lambda: fts_search(spark, d, "ancient wisdom rise fall", 50))
+    assert driver == want and {r[0] for r in driver} >= {30, 31, 40, 50, None}
+

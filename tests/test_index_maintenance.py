@@ -10,6 +10,9 @@ import shutil
 import struct
 import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
@@ -18,7 +21,7 @@ from pyspark.sql.types import IntegerType
 from myscaledb_spark import session
 from myscaledb_spark.functions.text import tokenize
 from myscaledb_spark.functions.vector import double_array_sql
-from myscaledb_spark.plans.frame_cache import cached_parquet
+from myscaledb_spark.plans.frame_cache import cached_parquet, data_files, resident_parquet
 from myscaledb_spark.plans.fts_index import (
     _postings,
     _tokenized,
@@ -26,8 +29,15 @@ from myscaledb_spark.plans.fts_index import (
     build_fts_index,
     fts_search,
 )
-from myscaledb_spark.plans.vector_index import _with_list_id
+from myscaledb_spark.plans.vector_index import (
+    _list_ids,
+    _with_list_id,
+    append_to_ivf_index,
+    build_ivf_index,
+    ivf_search,
+)
 from myscaledb_spark.session import observed_metrics
+from tests.test_resident import _served_and_spark
 
 QUERY = "vector search fast"
 
@@ -50,7 +60,9 @@ def _stats(d: str) -> dict:
 
 
 def _dfreq(spark, d: str) -> list:
-    return sorted(spark.read.parquet(os.path.join(d, "fts", "dfreq")).collect())
+    """(term, df) of an artifact, each df summed over the dfreq parts."""
+    return sorted(spark.read.parquet(os.path.join(d, "fts", "dfreq"))
+                  .groupBy("term").agg(F.sum("df").alias("df")).collect())
 
 
 def _docs_with_gaps(spark):
@@ -164,6 +176,192 @@ def test_old_format_artifact_is_refused_with_rebuild_error(spark, tmp_path):
             append_to_fts_index(docs, "text", "doc_id", d)
 
 
+# -- driver appends equal Spark appends and a build over the union --------------
+
+_WORDS = ("vector", "search", "fast", "engine", "index", "rows", "fresh")
+_SCHEMA = "id long, vector array<float>, doc string"
+_PARTS = ("ivf/inverted", "fts/postings", "fts/dfreq")
+
+
+def local_batch(spark, rows, schema: str = _SCHEMA):
+    """``rows`` as a LocalRelation: the optimizer knows its size, so the
+    driver can snapshot it (``createDataFrame`` of Python rows is an RDD
+    scan of unknown size, which it never holds)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    sch = _parse_datatype_string(schema)
+    table = pa.Table.from_pylist([dict(zip(sch.names, r)) for r in rows],
+                                 session._arrow_schema(sch))
+    return session.local_relation(spark, sch, table)
+
+
+def _rows(lo, hi, special=False):
+    """(id, vector, doc) rows ``lo``..``hi`` - 1.  With ``special`` they also
+    hold NaN, +inf and -inf vector elements, a NULL text, an empty text and
+    a text without tokens."""
+    rows = []
+    for i in range(lo, hi):
+        v = np.random.default_rng(i).standard_normal(4).astype(np.float32).tolist()
+        doc = " ".join(_WORDS[(i * k) % len(_WORDS)] for k in range(1, 2 + i % 4))
+        if special:
+            j = i % 6
+            if j < 3:
+                v[j] = (float("nan"), float("inf"), float("-inf"))[j]
+            else:
+                doc = (None, "", "!! --")[j - 3]
+        rows.append((i, v, doc))
+    return rows
+
+
+def _writers(d: str, before: frozenset) -> set:
+    """The writer (``created_by``'s first word) of each data file added
+    under ``d`` since the listing ``before``: parquet-cpp-arrow for the
+    driver append, parquet-mr for Spark's."""
+    return {pq.read_metadata(os.path.join(d, f)).created_by.split()[0]
+            for f, _, _ in data_files(d) - before}
+
+
+def _state(spark, d: str, ivf: bool = True) -> dict:
+    """An artifact's IVF rows with their lists, FTS postings rows (as sorted
+    reprs, so NaN equals NaN and -0.0 differs from 0.0), df per term summed
+    over the dfreq parts, and stats.json."""
+    def rows(sub):
+        return sorted(repr(tuple(r)) for r in spark.read.parquet(os.path.join(d, sub)).collect())
+
+    return {"ivf": rows("ivf/inverted") if ivf else None, "postings": rows("fts/postings"),
+            "dfreq": _dfreq(spark, d), "stats": _stats(d)}
+
+
+def _ivf_rows(spark, d: str) -> list:
+    """An artifact's IVF rows without their list, as sorted reprs."""
+    inv = spark.read.parquet(os.path.join(d, "ivf", "inverted")).drop("list_id")
+    return sorted(repr(tuple(r)) for r in inv.collect())
+
+
+#: the appended batches: special values, plain rows, then ids 3 and 4 of the
+#: base again with other texts beside new ids
+_BATCHES = (_rows(40, 60, special=True), _rows(60, 72),
+            [(i, [0.5, 0.5, 0.5, 0.5], "fresh fresh rows") for i in (3, 4)] + _rows(72, 74))
+
+
+@pytest.fixture(scope="module")
+def appended(spark, tmp_path_factory):
+    """IVF and FTS artifacts over docs 0..39, appended to batch by batch on
+    the driver path and on the Spark path (the driver gate at 0), with each
+    one's state and the writers of its new files after every append; and
+    the state of an FTS build over the union after the first two, with the
+    driver path's IVF rows then."""
+    root = tmp_path_factory.mktemp("appended")
+    base = _rows(0, 40)
+    out = {"dirs": {}, "states": {}, "writers": {}, "union": [], "ivf_rows": []}
+    for path in ("driver", "spark"):
+        d = out["dirs"][path] = str(root / path)
+        build_ivf_index(local_batch(spark, base), "vector", "id", d, num_centroids=3)
+        build_fts_index(local_batch(spark, base), "doc", "id", d)
+        states, writers = [], []
+        for rows in _BATCHES:
+            before = {p: data_files(os.path.join(d, p)) for p in _PARTS}
+            with pytest.MonkeyPatch.context() as m:
+                if path == "spark":
+                    m.setattr(session, "DRIVER_RESIDENT_BYTES", 0)
+                batch = local_batch(spark, rows)
+                append_to_ivf_index(batch, "vector", "id", d)
+                append_to_fts_index(batch, "doc", "id", d)
+            states.append(_state(spark, d))
+            if path == "driver":
+                out["ivf_rows"].append(_ivf_rows(spark, d))
+            writers.append(set().union(*(_writers(os.path.join(d, p), before[p])
+                                          for p in _PARTS)))
+        out["states"][path], out["writers"][path] = states, writers
+    for n in (1, 2):
+        d = str(root / f"union{n}")
+        build_fts_index(local_batch(spark, base + [r for b in _BATCHES[:n] for r in b]),
+                        "doc", "id", d)
+        out["union"].append(_state(spark, d, ivf=False))
+    return out
+
+
+def _same_state(a: dict, b: dict, keys=("ivf", "postings", "dfreq")) -> None:
+    for k in keys:
+        assert a[k] == b[k], k
+    for k in ("n_docs", "total_dl", "dl_docs"):
+        assert a["stats"][k] == b["stats"][k], k
+    assert a["stats"]["avgdl"].hex() == b["stats"]["avgdl"].hex()
+
+
+def test_driver_append_equals_spark_append(appended):
+    """After each of three appends (NaN and ±inf vector elements, NULL,
+    empty and token-less texts, then ids the artifact already holds) the
+    driver path leaves the IVF rows in the same lists, the same postings
+    rows, df sums and stats as the Spark path; every file it added is
+    pyarrow's, every file the Spark path added Spark's."""
+    for got, want in zip(appended["states"]["driver"], appended["states"]["spark"]):
+        _same_state(got, want)
+    assert appended["writers"]["driver"] == [{"parquet-cpp-arrow"}] * 3
+    assert appended["writers"]["spark"] == [{"parquet-mr"}] * 3
+
+
+def test_driver_append_equals_build_over_union(appended):
+    """After one and two appends the FTS artifact holds the postings, df
+    sums and stats of a build over the union, and the IVF lists hold every
+    row once."""
+    for n, union in enumerate(appended["union"]):
+        _same_state(appended["states"]["driver"][n], union, keys=("postings", "dfreq"))
+        want = _rows(0, 40) + [r for b in _BATCHES[:n + 1] for r in b]
+        assert appended["ivf_rows"][n] == sorted(repr(r) for r in want)
+
+
+def test_searches_after_appends_equal_on_both_paths(spark, monkeypatch, appended):
+    """ivf_search and fts_search over the driver-appended and the
+    Spark-appended artifact give the same rows and score bits, each from
+    the driver (no job, also on the first search after the appends) and
+    from the Spark plan."""
+    dirs = [appended["dirs"]["driver"], appended["dirs"]["spark"]]
+    q = [0.5, -1.0, 0.25, 2.0]
+    searches = [lambda d, nprobe=nprobe, k=k: ivf_search(
+        spark, d, q, k, nprobe=nprobe, id_col="id", vec_col="vector")
+        for nprobe, k in ((1, 7), (3, 500))]
+    searches += [lambda d, query=query, k=k: fts_search(spark, d, query, k)
+                 for query, k in (("fresh rows", 6), ("vector zzqabsent", 200), ("fast", 9))]
+    for search in searches:
+        got = [_served_and_spark(spark, monkeypatch, lambda d=d: search(d)) for d in dirs]
+        assert got[0][0] == got[0][1] == got[1][0] == got[1][1]
+        assert got[0][0]
+
+
+@pytest.fixture(scope="module")
+def small_art(spark, tmp_path_factory):
+    """IVF and FTS artifacts over docs 0..39 that tests append to."""
+    d = str(tmp_path_factory.mktemp("small_art"))
+    build_ivf_index(local_batch(spark, _rows(0, 40)), "vector", "id", d, num_centroids=3)
+    build_fts_index(local_batch(spark, _rows(0, 40)), "doc", "id", d)
+    return d
+
+
+@pytest.mark.parametrize("gate", [None, 0])
+def test_empty_batch_writes_nothing(spark, monkeypatch, small_art, gate):
+    """An empty batch leaves every artifact file and stats.json as they were
+    on both paths, so the held copies stay the same objects."""
+    d = small_art
+    if gate is not None:
+        monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", gate)
+
+    def held():
+        return [resident_parquet(spark, os.path.join(d, p),
+                                 {"list_id": IntegerType()} if p.startswith("ivf") else None)
+                for p in _PARTS]
+
+    before, stats, snaps = ({p: data_files(os.path.join(d, p)) for p in _PARTS},
+                            os.stat(os.path.join(d, "fts", "stats.json")), held())
+    empty = local_batch(spark, [])
+    append_to_ivf_index(empty, "vector", "id", d)
+    append_to_fts_index(empty, "doc", "id", d)
+    assert {p: data_files(os.path.join(d, p)) for p in _PARTS} == before
+    assert os.stat(os.path.join(d, "fts", "stats.json")).st_mtime_ns == stats.st_mtime_ns
+    assert all(a is b for a, b in zip(held(), snaps))
+    assert (None in snaps) == (gate == 0)  # held below the gate, on the driver path
+
+
 # -- IVF assignment equals the nested-when expression it replaced -------------
 
 
@@ -217,6 +415,26 @@ def test_ivf_list_assignment_equals_nested_when(spark):
     assert len(out) == len(rows)
 
 
+def test_driver_list_assignment_equals_the_spark_expression(spark):
+    """``_list_ids``, the driver append's assignment, gives every row the list
+    ``_with_list_id`` gives it: the first minimum wins, NaN counts above
+    +inf, and a row whose distances are all NaN goes to list 0."""
+    nan, inf = float("nan"), float("inf")
+    cases = [
+        ([[5.0, 5.0], [1.0, 0.0], [-1.0, 0.0], [0.0, -1.0]],
+         [[0.0, 0.0], [5.0, 5.0], [-0.5, -0.5], [nan, 1.0], [inf, 0.0], [-inf, 2.0], [0.7, 3.1]]),
+        # distances NaN, +inf and finite in one row
+        ([[nan, 0.0], [inf, 0.0], [1e200, 0.0], [-1e200, 0.0]],
+         [[0.0, 0.0], [inf, 0.0], [-inf, 0.0], [nan, 0.0], [1.0, nan]]),
+    ]
+    for centroids, rows in cases:
+        df = spark.createDataFrame(list(enumerate(rows)), "id int, v array<double>")
+        want = [r.list_id for r in _with_list_id(df, "v", centroids).orderBy("id").collect()]
+        got = _list_ids(np.asfortranarray(rows, dtype=np.float64), centroids)
+        assert got.tolist() == want
+    assert want == [1, 2, 1, 0, 0]
+
+
 def test_ivf_list_assignment_nan_distance_counts_largest(spark):
     # a NaN centroid component makes that one distance NaN: it never wins
     centroids = [[float("nan"), 0.0], [9.0, 9.0]]
@@ -253,48 +471,72 @@ def test_frame_cache_rebuild_with_new_schema_is_not_served_old_schema(spark, tmp
 
 # -- job-count guard ------------------------------------------------------------
 
-#: Spark jobs of append_to_fts_index on a tiny artifact plus the first
-#: fts_search after it (collected): from the postings held on the driver,
-#: and on the Spark path (the driver gate at 0).  Job counts repeat exactly
-#: run to run; a change here is a change in how many jobs maintenance or
-#: the reopen pays.
-APPEND_JOBS = 4
+#: Spark jobs of append_to_fts_index of a 10-doc local batch on a tiny
+#: artifact plus the first fts_search after it (collected): on the driver
+#: path (the append's one job is the batch's snapshot collect; the search
+#: reads the held postings) and on the Spark path (the driver gate at 0:
+#: the postings write and the dfreq part write, 2 jobs each).  Job counts
+#: repeat exactly run to run; a change here is a change in how many jobs
+#: maintenance or the reopen pays.
+DRIVER_APPEND_JOBS = 1
+SPARK_APPEND_JOBS = 4
 FRESH_SEARCH_JOBS = 0
 FRESH_SPARK_SEARCH_JOBS = 4
+
+#: Spark jobs of append_to_ivf_index of a 10-row local batch: the snapshot
+#: collect on the driver path (an FTS append of the same plan then runs
+#: none), the partitioned write on the Spark path
+DRIVER_IVF_APPEND_JOBS = 1
+SPARK_IVF_APPEND_JOBS = 1
 
 
 def test_fts_append_and_fresh_search_job_counts(spark, tmp_path, monkeypatch):
     _append_then_fresh_search(spark, tmp_path, monkeypatch, session.DRIVER_RESIDENT_BYTES,
-                              FRESH_SEARCH_JOBS)
+                              DRIVER_APPEND_JOBS, FRESH_SEARCH_JOBS)
 
 
 def test_fts_append_and_fresh_spark_search_job_counts(spark, tmp_path, monkeypatch):
-    _append_then_fresh_search(spark, tmp_path, monkeypatch, 0, FRESH_SPARK_SEARCH_JOBS)
+    _append_then_fresh_search(spark, tmp_path, monkeypatch, 0, SPARK_APPEND_JOBS,
+                              FRESH_SPARK_SEARCH_JOBS)
 
 
-def _append_then_fresh_search(spark, tmp_path, monkeypatch, gate, fresh_jobs):
+@pytest.mark.parametrize("gate, jobs", [(None, (DRIVER_IVF_APPEND_JOBS, 0)),
+                                        (0, (SPARK_IVF_APPEND_JOBS, SPARK_APPEND_JOBS))])
+def test_ivf_then_fts_append_job_counts(spark, monkeypatch, small_art, gate, jobs):
+    """An IVF append and then an FTS append of the same plan: on the driver
+    path the IVF append's snapshot collect is the one job of both."""
+    monkeypatch.setattr(session, "_OBSERVE_TIMEOUT_S", 60.0)
+    if gate is not None:
+        monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", gate)
+    lo = 100 if gate is None else 200
+    _, ivf_jobs = _jobs(spark, f"ivf_append_{gate}", lambda: append_to_ivf_index(
+        local_batch(spark, _rows(lo, lo + 10)), "vector", "id", small_art))
+    _, fts_jobs = _jobs(spark, f"fts_after_ivf_append_{gate}", lambda: append_to_fts_index(
+        local_batch(spark, _rows(lo, lo + 10)), "doc", "id", small_art))
+    assert (ivf_jobs, fts_jobs) == jobs
+
+
+def _append_then_fresh_search(spark, tmp_path, monkeypatch, gate, append_jobs, fresh_jobs):
     d = str(tmp_path / "jobs")
     base = spark.createDataFrame(
         [(i, f"vector search number {i} fast engine") for i in range(40)],
         "doc_id long, text string",
     )
-    batch = spark.createDataFrame(
-        [(100 + i, f"fresh vector rows {i}") for i in range(10)],
-        "doc_id long, text string",
-    )
+    batch = local_batch(spark, [(100 + i, f"fresh vector rows {i}") for i in range(10)],
+                        "doc_id long, text string")
     # a slow listener bus must not send the append down the collect fallback
     monkeypatch.setattr(session, "_OBSERVE_TIMEOUT_S", 60.0)
     monkeypatch.setattr(session, "DRIVER_RESIDENT_BYTES", gate)
     build_fts_index(base, "text", "doc_id", d)
     fts_search(spark, d, "fresh vector", 5).collect()  # frames resident before the append
-    _, append_jobs = _jobs(
+    _, jobs = _jobs(
         spark, f"fts_append_{gate}", lambda: append_to_fts_index(batch, "text", "doc_id", d)
     )
     rows, search_jobs = _jobs(
         spark, f"fts_fresh_search_{gate}",
         lambda: fts_search(spark, d, "fresh vector", 5).collect(),
     )
-    assert (append_jobs, search_jobs) == (APPEND_JOBS, fresh_jobs)
+    assert (jobs, search_jobs) == (append_jobs, fresh_jobs)
     assert all(r.doc_id >= 100 for r in rows)  # only the batch has 'fresh'
 
 
@@ -334,9 +576,6 @@ def test_resident_parquet_gate_and_eviction(spark, tmp_path, monkeypatch):
     session.DRIVER_RESIDENT_BYTES (checked from the footers before reading
     and on the table after), comes back once the gate allows it, and
     evict_prefix releases it; a file without Spark's schema is never held."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from myscaledb_spark.plans import frame_cache
 
     p = str(tmp_path / "art" / "idx" / "gated")
@@ -362,8 +601,9 @@ _PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "myscaledb_spark
 
 
 def test_driver_searches_read_artifacts_only_through_the_loader():
-    """pyarrow.parquet is imported by frame_cache alone, and the driver
-    paths of ivf_search and fts_search start no Spark action or read."""
+    """pyarrow.parquet is imported by frame_cache alone, the driver paths of
+    ivf_search and fts_search start no Spark action or read, and the driver
+    appends no Spark write either."""
     import inspect
 
     from myscaledb_spark.plans import fts_index, vector_index
@@ -378,6 +618,13 @@ def test_driver_searches_read_artifacts_only_through_the_loader():
     for fn in (vector_index._driver_search, fts_index._driver_search):
         src = inspect.getsource(fn)
         assert not [s for s in (".collect(", ".toArrow(", "spark.read") if s in src], fn
+    # the driver appends take the batch from its snapshot and write with
+    # pyarrow: no Spark write, read or collect of their own
+    for fn in (vector_index._driver_batch, vector_index._driver_append,
+               fts_index._driver_append):
+        src = inspect.getsource(fn)
+        assert not [s for s in (".write", "spark.read", ".collect(", ".toArrow(")
+                    if s in src], fn
 
 
 def test_names_the_benchmark_reads_still_exist():

@@ -18,6 +18,8 @@ from myscaledb_spark.plans.vector_index import (
     build_ivf_index,
     ivf_search,
 )
+from myscaledb_spark.plans.frame_cache import data_files
+from tests.test_index_maintenance import _rows, _writers, local_batch
 from tests.test_resident import _served_and_spark
 
 
@@ -332,3 +334,48 @@ def test_index_family_keeps_one_built_check_and_one_graph_search():
                     and n.attr == "applyInPandas"):
                 stray.append(f"{mod}:{n.lineno} applyInPandas")
     assert not stray, stray
+
+
+# -- driver appends decline what they cannot write as Spark would ----------------
+
+
+def _append_writers(spark, d: str, rows: list, schema: str) -> set:
+    """The writers of the files an IVF append of ``rows`` adds."""
+    inv = os.path.join(d, "ivf", "inverted")
+    before = data_files(inv)
+    append_to_ivf_index(local_batch(spark, rows, schema), "vector", "id", d)
+    return _writers(inv, before)
+
+
+def test_driver_append_declines_null_and_short_vectors(spark, tmp_path):
+    """A batch with a NULL vector, a short one or a NULL element is appended
+    by Spark (its files are parquet-mr's); a batch of whole vectors by the
+    driver.  Every row is searchable after either."""
+    d = str(tmp_path / "ivf_decline")
+    schema = "id long, vector array<float>, doc string"
+    build_ivf_index(local_batch(spark, _rows(0, 30), schema), "vector", "id", d,
+                    num_centroids=2)
+    assert _append_writers(spark, d, _rows(30, 34), schema) == {"parquet-cpp-arrow"}
+    for lo, bad in ((40, None), (50, [1.0, 2.0, 3.0]), (60, [1.0, None, 3.0, 4.0])):
+        rows = _rows(lo, lo + 4) + [(lo + 4, bad, "vector")]
+        assert _append_writers(spark, d, rows, schema) == {"parquet-mr"}, bad
+    ids = {r.id for r in ivf_search(spark, d, [0.0] * 4, 100, nprobe=2, id_col="id",
+                                     vec_col="vector").collect()}
+    assert ids == set(range(34)) | {i for lo in (40, 50, 60) for i in range(lo, lo + 4)}
+
+
+def test_driver_append_declines_a_timestamp_column(spark, tmp_path):
+    """A column type the driver writer does not write as Spark would (a
+    timestamp) sends the batch to the Spark append."""
+    import datetime
+
+    d = str(tmp_path / "ivf_ts")
+    schema = "id long, vector array<float>, ts timestamp"
+    at = datetime.datetime(2024, 3, 10, 2, 30)
+    build_ivf_index(local_batch(spark, [(i, v, at) for i, v, _ in _rows(0, 10)], schema),
+                    "vector", "id", d, num_centroids=2)
+    rows = [(i, v, at) for i, v, _ in _rows(10, 14)]
+    assert _append_writers(spark, d, rows, schema) == {"parquet-mr"}
+    got = spark.read.parquet(os.path.join(d, "ivf", "inverted")).filter("id >= 10")
+    assert sorted((r.id, r.ts) for r in got.collect()) == [(i, at) for i in range(10, 14)]
+
